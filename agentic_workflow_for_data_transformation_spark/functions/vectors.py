@@ -24,42 +24,34 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import memo
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
 
 
-# (session id, plan semantic hash, column) -> width. Embedding width is
-# a table constant, so one probe per distinct source plan per session is
-# enough; repeated registry/bench invocations reuse the memo instead of
-# launching a hidden one-row job per query construction.
-_DIM_MEMO: dict[tuple[int, int, str], int] = {}
-
-
 def probe_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
     """Vector width for ``vec_col``: the explicit ``dim`` when the
     caller knows it (the scale path — no job at all), else one
-    memoized single-row probe per (session, source plan)."""
+    memoized single-row probe per (application, source plan).
+    Embedding width is a table constant, so repeated registry/bench
+    invocations reuse the memo instead of launching a hidden one-row
+    job per query construction. A width of 0 (empty input) is never
+    memoized."""
     if dim is not None:
         return dim
+
+    def probe() -> int | None:
+        row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+        return (int(row["d"]) if row else 0) or None
+
     try:
-        key = (
-            id(df.sparkSession),
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            vec_col,
-        )
+        key = (int(df._jdf.queryExecution().analyzed().semanticHash()), vec_col)
     except Exception:  # semanticHash unavailable: fall back to probing
-        key = None
-    if key is not None and key in _DIM_MEMO:
-        return _DIM_MEMO[key]
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    d = int(row["d"]) if row else 0
-    if key is not None and d:
-        if len(_DIM_MEMO) > 256:  # bounded: registry corpora are small
-            _DIM_MEMO.clear()
-        _DIM_MEMO[key] = d
-    return d
+        return probe() or 0
+    return memo(df.sparkSession, "dim", key, probe) or 0
 
 
 def dot(a: Column, b: Column) -> Column:

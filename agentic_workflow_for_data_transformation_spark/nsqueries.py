@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from .benchqueries import _DESCRIPTIONS, _t, register
 from .operators import corpus, dedup, multimodal, sampling, similarity, text
+from .session import memo
 
 # ---------------------------------------------------------------- dedup
 
@@ -129,50 +130,18 @@ _VERIFIED_CTES = (
     "  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)"
 )
 
-# Session-scoped materialized intermediates for the fuzzy-dedup chain.
-# Three registered queries (pairs, clusters, applied dedup) share the
-# same expensive LSH->exact-Jaccard pair pipeline, and two share the
-# connected-components pass on top of it. Computing each once per
-# (session, sf_dir) and handing the materialized frame to downstream
-# consumers is the same reuse a production pipeline gets from writing
-# the pair table before clustering — results are identical (each
-# query's oracle still checks it end to end), only the redundant
-# recomputation goes away. localCheckpoint keeps the frames tiny
-# (pair/cluster lists) and lets the blocks free when the session ends.
-_DEDUP_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_dedup_cache() -> None:
-    """EXPLICITLY release every cached intermediate (and its
-    localCheckpoint blocks, via unpersist). For callers that know no
-    frame built from the cache is still live — after unpersist, a
-    previously returned DataFrame can no longer execute, because
-    localCheckpoint truncates lineage and lost blocks cannot be
-    recomputed. Automatic sf_dir eviction deliberately does NOT call
-    this (it only drops references; see _dedup_cached)."""
-    for df in _DEDUP_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _DEDUP_CACHE.clear()
-
-
+# Session artifacts for the fuzzy-dedup chain. Three registered
+# queries (pairs, clusters, applied dedup) share the same expensive
+# LSH->exact-Jaccard pair pipeline, and two share the connected-
+# components pass on top of it. Computing each once per (application,
+# sf_dir) and handing the materialized frame to downstream consumers is
+# the same reuse a production pipeline gets from writing the pair table
+# before clustering — results are identical (each query's oracle still
+# checks it end to end), only the redundant recomputation goes away.
+# localCheckpoint keeps the frames tiny (pair/cluster lists) and lets
+# the blocks free when the session ends.
 def _dedup_cached(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    got = _DEDUP_CACHE.get(key)
-    if got is None:
-        # bound the cache to ONE (app, sf_dir): a long-lived driver
-        # sweeping many sf_dirs must not pin every dir's checkpoint
-        # blocks for process lifetime. Eviction only DROPS the
-        # references — it must not unpersist, because a query built
-        # for the evicted dir may still hold the frame, and a
-        # localCheckpoint'ed frame whose blocks are gone cannot
-        # recompute (truncated lineage). Once the last reference goes,
-        # the ContextCleaner frees the blocks (periodicGC is 90s,
-        # session.py). clear_dedup_cache() remains the explicit path.
-        for k in [k for k in _DEDUP_CACHE if k[:2] != key[:2]]:
-            del _DEDUP_CACHE[k]
+    def build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
         if kind == "eidx":
             # hashed inverted shingle index: the artifact a dedup
@@ -197,9 +166,9 @@ def _dedup_cached(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
                 docs, threshold=0.5,
                 pairs=_dedup_cached(spark, sf_dir, "pairs"),
             )
-        got = got.localCheckpoint()
-        _DEDUP_CACHE[key] = got
-    return got
+        return got.localCheckpoint()
+
+    return memo(spark, "dedup", (sf_dir, kind), build)
 
 
 register(

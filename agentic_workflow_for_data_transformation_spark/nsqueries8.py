@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .benchqueries import _t, register
 from .operators import corpus, quality, similarity, stats, text
+from .session import memo
 
 register(
     "ns_sim_silhouette",
@@ -457,28 +458,18 @@ register(
 )
 
 
-# Session-scoped trained-weights memo: calibration and AUC evaluate the
-# SAME deterministic trainer (d=8, n_iter=8, lr=0.5) — a production
-# pipeline trains once and evaluates many ways, so the registry does
-# too. Keyed by (app, sf_dir, params); weights are d+1 floats of
-# driver state, so unlike the DataFrame caches there is nothing to
-# unpersist and keeping every key is safe.
-_LOGREG_W_CACHE: dict[tuple, dict[str, float]] = {}
-
-
+# Session artifact: calibration and AUC evaluate the SAME
+# deterministic trainer (d=8, n_iter=8, lr=0.5) — a production pipeline
+# trains once and evaluates many ways, so the registry does too. Keyed
+# by (sf_dir, params); the weights are d+1 floats of driver state.
 def _trained_weights(spark, sf_dir: str, d: int = 8, n_iter: int = 8,
                      lr: float = 0.5) -> dict[str, float]:
-    key = (spark.sparkContext.applicationId, sf_dir, d, n_iter, lr)
-    w = _LOGREG_W_CACHE.get(key)
-    if w is None:
-        w = {
-            r["term"]: float(r["value"])
-            for r in stats.train_logreg_hashed_bow(
-                _t(spark, sf_dir, "documents"), d=d, n_iter=n_iter, lr=lr
-            ).filter("term <> 'train_acc'").collect()
-        }
-        _LOGREG_W_CACHE[key] = w
-    return w
+    return memo(spark, "logreg_w", (sf_dir, d, n_iter, lr), lambda: {
+        r["term"]: float(r["value"])
+        for r in stats.train_logreg_hashed_bow(
+            _t(spark, sf_dir, "documents"), d=d, n_iter=n_iter, lr=lr
+        ).filter("term <> 'train_acc'").collect()
+    })
 
 
 register(

@@ -26,7 +26,6 @@ on id so results are total-ordered and engine-reproducible.
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 from pyspark.sql import DataFrame, Window
@@ -38,19 +37,8 @@ from ..functions.vectors import (
     l2_norm,
     probe_dim,
 )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """dedup.spread_small_input re-exported for the vector operators:
-    round-robin repartition for tiny (<= 4 file) scans only, so the
-    posexplode fan-outs below — d rows per vector, times the label or
-    centroid count after their broadcast joins — never run as one
-    task just because the input is a single small parquet file. A
-    no-op for real multi-file tables; every consumer's sums are
-    decimal/integer-exact, so partitioning cannot move a digit."""
-    from .dedup import spread_small_input
-
-    return spread_small_input(df)
+from ..session import input_fingerprint, memo
+from .dedup import spread_small_input
 
 
 def _salt_ways(df: DataFrame, n_blocks: int) -> int:
@@ -119,61 +107,18 @@ def sign_bucket(vec: str | F.Column, bits: int = 8) -> F.Column:
     )
 
 
-_COUNT_CACHE: dict[tuple[str, int, str], int] = {}
-
-# kmeans_assign results per (applicationId, plan hash, file
-# fingerprint, params) — see the docstring inside kmeans_assign.
-# Eviction on application change only DROPS references (never
-# unpersists — a query built earlier may still hold the frame).
-_KMEANS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _input_fingerprint(df: DataFrame) -> str:
-    """Content-sensitive fingerprint of a frame's input files: the
-    sorted paths plus (size, mtime) for every stat-able local file, so
-    an in-place rewrite UNDER THE SAME NAME within one application
-    misses the session caches instead of serving stale results.
-    Non-local URIs contribute path-only (the bench/oracle inputs are
-    immutable local parquet, where size+mtime is exact)."""
-    import os
-
-    parts = []
-    for f in sorted(df.inputFiles()):
-        p = f
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-        try:
-            st = os.stat(p)
-            parts.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f)
-    return hashlib.md5("\x00".join(parts).encode()).hexdigest()
-
-
 def cached_count(df: DataFrame) -> int:
     """df.count() memoized per (applicationId, semantic plan hash,
     input-file fingerprint): the bits=None operators need the input
     cardinality at construction time, and a benchmark harness
     constructs each query several times — without the memo every
     construction pays a full scan. semanticHash distinguishes
-    filtered/derived frames from the raw table; the _input_fingerprint
+    filtered/derived frames from the raw table; the input fingerprint
     (paths + local size/mtime) guards a long-lived application whose
     table is rewritten — even in place under the same file names — so
     the memo can never serve a stale cardinality."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        _input_fingerprint(df),
-    )
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        if len(_COUNT_CACHE) > 256:  # bound for very long-lived drivers
-            _COUNT_CACHE.clear()
-        n = df.count()
-        _COUNT_CACHE[key] = n
-    return n
+    key = (df.semanticHash(), input_fingerprint(df))
+    return memo(df.sparkSession, "count", key, df.count)
 
 
 def auto_bits(n: int, target_bucket: int = 200, lo: int = 2, hi: int = 16) -> int:
@@ -577,36 +522,26 @@ def kmeans_assign(df: DataFrame, n_centroids: int = 8, n_iter: int = 1,
     is one explode-aggregate plus one broadcast join — no shuffle of
     the corpus beyond the assignment aggregate."""
     dim = probe_dim(df, vec_col, dim)
-    # session-scoped assignment cache (the _DEDUP_CACHE / _CO_EDGE
-    # discipline): semantic dedup, cluster purity, and the refined-
-    # centroid query all run Lloyd on the SAME corpus — a production
-    # pipeline materializes the clustering once and every consumer
-    # reads it, so the registry does too. Keyed like cached_count
-    # (applicationId + semantic plan hash + input-file fingerprint) so
-    # a different table, filter, or rewritten file can never hit.
+    # session artifact: semantic dedup, cluster purity, and the
+    # refined-centroid query all run Lloyd on the SAME corpus — a
+    # production pipeline materializes the clustering once and every
+    # consumer reads it, so the registry does too. Keyed like
+    # cached_count (semantic plan hash + input-file fingerprint) so a
+    # different table, filter, or rewritten file can never hit.
     key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        _input_fingerprint(df),
+        df.semanticHash(), input_fingerprint(df),
         int(n_centroids), int(n_iter), id_col, vec_col, int(dim),
     )
-    got = _KMEANS_CACHE.get(key)
-    if got is not None:
-        return got
-    for k in [k for k in _KMEANS_CACHE if k[0] != key[0]]:
-        del _KMEANS_CACHE[k]
-    # bound the per-application footprint: each entry pins a
-    # localCheckpoint's executor storage, so cap distinct
-    # (input, params) clusterings and drop the oldest reference
-    # (never an explicit unpersist — an earlier-built query may still
-    # hold the frame; the dropped reference lets Spark's
-    # ContextCleaner reclaim the blocks once it is unreachable)
-    while len(_KMEANS_CACHE) >= 16:
-        del _KMEANS_CACHE[next(iter(_KMEANS_CACHE))]
+    return memo(df.sparkSession, "kmeans", key,
+                lambda: _lloyd(df, n_centroids, n_iter, id_col, vec_col, dim))
+
+
+def _lloyd(df: DataFrame, n_centroids: int, n_iter: int, id_col: str,
+           vec_col: str, dim: int) -> DataFrame:
     # spread BEFORE the checkpoint: the checkpointed frame keeps its
     # partitioning, and every assign() pass (n_centroids cosines per
     # row) runs on it
-    rows = _vec_norm(_spread(df), id_col, vec_col, dim).localCheckpoint()
+    rows = _vec_norm(spread_small_input(df), id_col, vec_col, dim).localCheckpoint()
 
     cents = rows.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).cast("long").alias("cell"),
@@ -647,10 +582,8 @@ def kmeans_assign(df: DataFrame, n_centroids: int = 8, n_iter: int = 1,
         )
         cents = refined
 
-    out = assign(cents).select(id_col, "cell", "cent_sim") \
+    return assign(cents).select(id_col, "cell", "cent_sim") \
         .localCheckpoint(eager=False)
-    _KMEANS_CACHE[key] = out
-    return out
 
 
 def ann_recall_vs_bruteforce(df: DataFrame, query_ids: list[int], k: int = 5,
@@ -857,12 +790,12 @@ def l2_distance_unrolled(a: F.Column, b: F.Column, width: int) -> F.Column:
 
 
 def _pq_subvectors(df: DataFrame, m: int, sub_w: int, id_col: str,
-                   vec_col: str, spread: bool = True) -> DataFrame:
+                   vec_col: str) -> DataFrame:
     """(id, sub, sv): each vector sliced into its m subvectors BEFORE
     the explode, so only sub_w-wide arrays ever travel.
 
-    ``spread`` repartitions the subvector frame by (id, sub) across
-    the cluster's parallelism: the k-candidate distance argmin that
+    The subvector frame is repartitioned by (id, sub) across the
+    cluster's parallelism: the k-candidate distance argmin that
     follows is a map-side k-times blowup, and on a small or
     single-file input it would otherwise evaluate entirely inside the
     scan's few partitions (measured 41 s -> ~2 s on the sf0.1 encode).
@@ -876,10 +809,8 @@ def _pq_subvectors(df: DataFrame, m: int, sub_w: int, id_col: str,
             F.array(*[F.slice(v, i * sub_w + 1, sub_w) for i in range(m)])
         ).alias("sub", "sv"),
     )
-    if spread:
-        n = df.sparkSession.sparkContext.defaultParallelism
-        out = out.repartition(n, F.col(id_col), F.col("sub"))
-    return out
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return out.repartition(n, F.col(id_col), F.col("sub"))
 
 
 def train_pq_codebook(df: DataFrame, m: int = 4, k: int = 8, n_iter: int = 5,
@@ -1565,7 +1496,7 @@ def label_centroid_similarity(df: DataFrame, label_col: str = "label",
     aggregate — the only corpus-sized pass; the pairwise self-join
     runs on labels x dim rows (KBs at any corpus size), so the
     quadratic term is in LABEL count, never rows."""
-    e = _spread(df.select(label_col, vec_col)).select(
+    e = spread_small_input(df.select(label_col, vec_col)).select(
         F.col(label_col), F.posexplode(vec_col).alias("pos", "val")
     )
     cent = e.groupBy(label_col, "pos").agg(
@@ -1665,7 +1596,7 @@ def fit_centroid_model(df: DataFrame, label_col: str = "label",
     on any engine or partitioning. labels x dim rows: KBs at any
     corpus size; persist it (write_centroid_model) and it becomes the
     stream scorer's fixed state, swapped by path like the ANN index."""
-    e = _spread(df.select(label_col, vec_col)).select(
+    e = spread_small_input(df.select(label_col, vec_col)).select(
         label_col, F.posexplode(vec_col).alias("pos", "val")
     )
     return (
@@ -1694,7 +1625,7 @@ def assign_nearest_centroid(rows: DataFrame, cent: DataFrame,
     cnorm = cent.groupBy("predicted").agg(
         F.sum(F.col("c") * F.col("c")).alias("c2")
     )
-    e = _spread(rows.select(id_col, *keep_cols, vec_col)).select(
+    e = spread_small_input(rows.select(id_col, *keep_cols, vec_col)).select(
         id_col, *keep_cols, F.posexplode(vec_col).alias("pos", "val")
     )
     dots = (
@@ -1747,7 +1678,7 @@ def cluster_exemplars(df: DataFrame, k: int = 3,
     cnorm = cent.groupBy("predicted").agg(
         F.sum(F.col("c") * F.col("c")).alias("c2")
     )
-    e = _spread(df.select(id_col, label_col, vec_col)).select(
+    e = spread_small_input(df.select(id_col, label_col, vec_col)).select(
         id_col, label_col, F.posexplode(vec_col).alias("pos", "val")
     )
     ec = e.alias("e")
@@ -1828,7 +1759,7 @@ def label_margin_audit(df: DataFrame, label_col: str = "label",
     cnorm = cent.groupBy("predicted").agg(
         F.sum(F.col("c") * F.col("c")).alias("c2")
     )
-    e = _spread(df.select(id_col, label_col, vec_col)).select(
+    e = spread_small_input(df.select(id_col, label_col, vec_col)).select(
         id_col, label_col, F.posexplode(vec_col).alias("pos", "val")
     )
     dots = (
@@ -1905,7 +1836,7 @@ def simplified_silhouette(df: DataFrame, label_col: str = "label",
     # is interpreted, not codegen'd: the "optimized" fold benched 2x
     # slower at sf0.1 with identical hashes), so the codegen'd
     # aggregate sum stays
-    e = _spread(df.select(id_col, label_col, vec_col)).select(
+    e = spread_small_input(df.select(id_col, label_col, vec_col)).select(
         id_col, label_col, F.posexplode(vec_col).alias("pos", "val")
     )
     dots = (

@@ -89,8 +89,7 @@ def ks_statistic_cogrouped(left: DataFrame, right: DataFrame,
 
 def groupwise_ols(df: DataFrame, group_col: str, x_col: str, y_col: str,
                   x_decimal: str = "decimal(12,2)",
-                  y_decimal: str = "decimal(18,2)",
-                  spread: bool = True) -> DataFrame:
+                  y_decimal: str = "decimal(18,2)") -> DataFrame:
     """Per-group simple linear regression (OLS slope + intercept +
     Pearson r^2) of ``y_col`` on ``x_col`` — the distributed form of
     "fit a line per segment" analytics, in one map-side-combined
@@ -106,14 +105,13 @@ def groupwise_ols(df: DataFrame, group_col: str, x_col: str, y_col: str,
     rounded. Groups with zero x-variance report NULL slope/intercept
     (vertical fit) rather than dividing by zero.
     """
-    if spread:
-        # the six decimal moment sums (two DECIMAL multiplies per row)
-        # are far heavier than the scan; a single-file local input
-        # would otherwise run the whole partial aggregate in 1-2 scan
-        # tasks (no-op for real multi-file tables)
-        from .dedup import spread_small_input
+    # the six decimal moment sums (two DECIMAL multiplies per row) are
+    # far heavier than the scan; a single-file local input would
+    # otherwise run the whole partial aggregate in 1-2 scan tasks
+    # (no-op for real multi-file tables)
+    from .dedup import spread_small_input
 
-        df = spread_small_input(df.select(group_col, x_col, y_col))
+    df = spread_small_input(df.select(group_col, x_col, y_col))
     x = F.col(x_col).cast(x_decimal)
     y = F.col(y_col).cast(y_decimal)
     m = df.groupBy(group_col).agg(

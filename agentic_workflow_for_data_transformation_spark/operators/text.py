@@ -15,6 +15,8 @@ import string
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import spread_small_input
+
 # the [A-Za-z0-9 ] class as a translate() deletion table — see
 # with_quality_score for why this replaces the regex scan
 _ALNUM_SPACE = (
@@ -130,7 +132,7 @@ def hashed_bow_features(df: DataFrame, d: int = 8, id_col: str = "doc_id",
     build, no second pass, fixed width at any corpus size. One explode
     + one aggregate; map-side partial aggregation collapses each
     partition to d longs per doc before the shuffle."""
-    from .dedup import _hash60, spread_small_input
+    from .dedup import _hash60
 
     e = (
         spread_small_input(df)
@@ -196,8 +198,6 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id",
     whole plan is one DAG with no driver action. Ties break on the
     term string, so top-k is total-ordered and oracle-reproducible."""
     from pyspark.sql import Window
-
-    from .dedup import spread_small_input
 
     words = (
         spread_small_input(df)
@@ -313,7 +313,7 @@ def unigram_surprisal(df: DataFrame, id_col: str = "doc_id",
     sum-of-logs / exact count, rounded once at the end. At 100 TB the
     vocabulary table is the thing to persist and broadcast."""
     w = (
-        spread_small_input_text(df)
+        spread_small_input(df)
         .select(F.col(id_col), F.explode(_word_array(text_col)).alias("w"))
     )
     # lazy 1-row total cross-joined in (broadcast) — no driver action
@@ -334,14 +334,6 @@ def unigram_surprisal(df: DataFrame, id_col: str = "doc_id",
             F.round(F.sum("nll") / F.count(F.lit(1)), 6).alias("surprisal"),
         )
     )
-
-
-def spread_small_input_text(df: DataFrame) -> DataFrame:
-    """Text-module twin of dedup.spread_small_input (single small file
-    must not serialize a row-expansion pipeline onto one task)."""
-    from .dedup import spread_small_input
-
-    return spread_small_input(df)
 
 
 def boilerplate_ratio(df: DataFrame, min_docs: int = 2, n: int = 3,
@@ -663,7 +655,7 @@ def perplexity_buckets(df: DataFrame, ref_source: str = "src0",
     the cutoff compare; cutoffs interpolate between rounded values, so
     the bucket decision is engine-exact (percentile == quantile_cont,
     the established cross-engine contract)."""
-    base = spread_small_input_text(df).select(
+    base = spread_small_input(df).select(
         F.col(id_col), F.col(lang_col), F.col(source_col),
         F.explode(_word_array(text_col)).alias("w"),
     )
@@ -938,7 +930,7 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     row_number form. Documents shorter than the gram width contribute
     no grams and score 0.0 (vacuously passing, as the paper treats
     missing signals)."""
-    from .dedup import shingle_index, spread_small_input
+    from .dedup import shingle_index
 
     base = spread_small_input(df).select(
         F.col(id_col), F.length(F.col(text_col)).alias("n_chars"),
@@ -1044,7 +1036,6 @@ def heaps_fit(df: DataFrame, id_col: str = "doc_id",
     the four points with the same rounded-decimal moment discipline as
     zipf_fit. Output: one row per level (draw_cut, n_tokens, n_types)
     with the shared heaps_beta broadcast onto each."""
-    from .dedup import spread_small_input
     from .sampling import DRAW_BUCKETS, hash_draw
 
     cuts = [DRAW_BUCKETS // 8, DRAW_BUCKETS // 4, DRAW_BUCKETS // 2, DRAW_BUCKETS]
@@ -1449,7 +1440,7 @@ def hapax_ratio(df: DataFrame, group_col: str = "source",
     (map-side combined — the exchange carries words once per distinct
     (group, word)), one per-group rollup of the vocabulary frame. No
     window, no join, no second scan."""
-    base = spread_small_input_text(df).select(
+    base = spread_small_input(df).select(
         F.col(group_col), F.explode(_word_array(text_col)).alias("w")
     )
     vocab = base.groupBy(group_col, "w").agg(

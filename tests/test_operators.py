@@ -539,6 +539,159 @@ def test_cached_count_refreshes_on_rewritten_input(spark, tmp_path):
     assert cached_count(spark.read.parquet(p)) == 25
 
 
+@pytest.fixture
+def artifacts(monkeypatch):
+    """An empty session-artifact store for one test; the shared one is
+    put back afterwards."""
+    from collections import OrderedDict
+
+    from agentic_workflow_for_data_transformation_spark import session
+
+    store = OrderedDict()
+    monkeypatch.setattr(session, "_ARTIFACTS", store)
+    return store
+
+
+def _fake_spark(app_id):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_memo_hit_refreshes_recency(spark, artifacts, monkeypatch):
+    """The store is LRU, not FIFO: re-reading the oldest clustering
+    makes it the newest, so the next eviction drops the cold one."""
+    from agentic_workflow_for_data_transformation_spark import session
+
+    monkeypatch.setattr(session, "_ARTIFACT_CAP", 2)
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0 + i]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def km(k):
+        return similarity.kmeans_assign(emb, n_centroids=k, n_iter=1, dim=2)
+
+    hot, cold = km(2), km(3)
+    assert km(2) is hot  # hit: hot is now the most recent entry
+    km(4)  # miss at the cap evicts the least recently used: cold
+    assert km(2) is hot
+    assert km(3) is not cold
+
+
+def test_memo_never_serves_another_application(artifacts):
+    from agentic_workflow_for_data_transformation_spark.session import memo
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert memo(_fake_spark("app-1"), "k", ("x",), build) == 1
+    assert memo(_fake_spark("app-1"), "k", ("x",), build) == 1
+    assert memo(_fake_spark("app-2"), "k", ("x",), build) == 2
+    assert all(k[0] == "app-2" for k in artifacts)  # app-1 dropped on the miss
+    assert memo(_fake_spark("app-1"), "k", ("x",), build) == 3
+
+
+def test_memo_does_not_store_none(artifacts):
+    from agentic_workflow_for_data_transformation_spark.session import memo
+
+    calls = []
+    for _ in range(2):
+        assert memo(_fake_spark("app"), "k", (), lambda: calls.append(1)) is None
+    assert len(calls) == 2 and not artifacts
+
+
+def test_memo_nested_build(artifacts):
+    """A build may memoize its own inputs (dedup candidates build the
+    signatures): both land in the store, and the inner one is reused."""
+    from agentic_workflow_for_data_transformation_spark.session import memo
+
+    app = _fake_spark("app")
+    builds = []
+
+    def sig():
+        builds.append("sig")
+        return "S"
+
+    def cand():
+        builds.append("cand")
+        return memo(app, "sig", (), sig) + "C"
+
+    assert memo(app, "cand", (), cand) == "SC"
+    assert memo(app, "cand", (), cand) == "SC"
+    assert memo(app, "sig", (), sig) == "S"
+    assert builds == ["cand", "sig"]
+    assert set(artifacts) == {("app", "sig"), ("app", "cand")}
+
+
+def test_memo_concurrent_callers(artifacts, monkeypatch):
+    """Streaming foreachBatch callbacks call the memo from another
+    thread: concurrent hits, misses and evictions must neither raise
+    nor serve one key's value for another."""
+    import sys
+    import threading
+
+    from agentic_workflow_for_data_transformation_spark import session
+
+    monkeypatch.setattr(session, "_ARTIFACT_CAP", 4)
+    apps = [_fake_spark("app-1"), _fake_spark("app-2")]
+    errors = []
+
+    def worker(seed):
+        try:
+            for i in range(2000):
+                k = (seed * 7 + i) % 11
+                app = apps[(i // 500) % 2]
+                got = session.memo(app, "k", (k,), lambda: (app.sparkContext.applicationId, k))
+                assert got == (app.sparkContext.applicationId, k)
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(n,)) for n in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+
+def test_ivfpq_index_dir_removed_at_exit(spark, sf_dir, artifacts, monkeypatch):
+    """The IVFADC index lives in a mkdtemp dir per application; it must
+    be scheduled for removal at interpreter exit (not on eviction,
+    where an earlier-built query may still scan it)."""
+    import atexit
+    import os
+
+    # the registry modules load through benchqueries, which orders them
+    from agentic_workflow_for_data_transformation_spark import benchqueries  # noqa: F401
+    from agentic_workflow_for_data_transformation_spark import nsqueries3
+
+    written, at_exit = [], []
+    monkeypatch.setattr(similarity, "write_ivfpq_index",
+                        lambda df, index_dir, **kw: written.append(index_dir))
+    monkeypatch.setattr(similarity, "load_ivfpq_index",
+                        lambda s, index_dir: (None, None, s.range(1).toDF("cell")))
+    monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
+
+    nsqueries3._ivfpq_index_cached(spark, sf_dir)
+    nsqueries3._ivfpq_index_cached(spark, sf_dir)  # a hit makes no new dir
+    (index_dir,) = written
+    assert os.path.basename(index_dir).startswith("spark_graft_ivfpq_")
+    assert os.path.isdir(index_dir)
+    (fn, args), = at_exit
+    fn(*args)
+    assert not os.path.exists(index_dir)
+
+
 def test_two_phase_row_number_desc_and_nulls(spark):
     """Descending ranks and NULL order keys must match the plain
     row_number window exactly: desc numbers from the largest key, and

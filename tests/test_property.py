@@ -13,13 +13,10 @@ import pytest
 from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 
-# Derandomize the whole fuzz suite: every @settings below inherits
-# derandomize=True from this profile, so the gate cannot flake on a
-# lucky/unlucky seed. Regressions found by a randomized run get pinned
-# as @example (see the anova ssw-guard case).
-settings.register_profile("derandomized", derandomize=True)
-settings.load_profile("derandomized")
-
+# Every @settings below sets derandomize=True, so the gate cannot flake
+# on a lucky/unlucky seed, without changing hypothesis's global profile
+# for other suites. Regressions found by a randomized run get pinned as
+# @example (see the anova ssw-guard case).
 from agentic_workflow_for_data_transformation_spark.plans import compile_spec
 from agentic_workflow_for_data_transformation_spark.plans.sqlgen import spec_to_sql
 
@@ -93,6 +90,7 @@ def _spark_rows(df) -> list[tuple]:
 
 
 @settings(
+    derandomize=True,
     max_examples=60,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -106,6 +104,7 @@ def test_random_predicates_match_duckdb(spark_module, expr):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -146,6 +145,7 @@ def spark_module(spark, people):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -249,6 +249,7 @@ def join_tables(spark):
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -274,6 +275,7 @@ def test_random_joins_match_duckdb(spark_module, join_tables, expr, how):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -292,6 +294,7 @@ def test_random_unions_match_duckdb(spark_module, join_tables, expr, distinct):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -363,6 +366,7 @@ def people_nulls(spark):
 
 
 @settings(
+    derandomize=True,
     max_examples=40,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -399,6 +403,7 @@ def test_null_semantics_match_duckdb(people_nulls, expr, sort_desc, n):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -434,6 +439,7 @@ def test_random_schema_ops_match_duckdb(
 # ---- round-5 grammar surface: pivot / rollup / sliding frames ------------
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -463,6 +469,7 @@ def test_random_pivots_match_duckdb(spark_module, expr, vals, fn):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -495,6 +502,7 @@ def test_random_rollups_match_duckdb(spark_module, expr, fn):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -527,6 +535,7 @@ def test_random_sliding_frames_match_duckdb(spark_module, expr, n_prec, fn):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -558,6 +567,7 @@ def test_random_mode_pivot_listagg_match_duckdb(spark_module, expr, kind):
 
 
 @settings(
+    derandomize=True,
     max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -615,6 +625,7 @@ def test_random_asof_match_duckdb(spark, lts, rts, direction, tolerance):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -641,6 +652,7 @@ def test_random_explode_matches_duckdb(spark_module, expr, pattern):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -663,6 +675,7 @@ def test_random_dedup_matches_duckdb(spark_module, expr, keep):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -695,6 +708,7 @@ def test_random_median_windows_match_duckdb(spark_module, expr, n_prec, parts):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -722,6 +736,7 @@ def test_random_percentiles_match_duckdb(spark_module, expr, p, keys):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -755,6 +770,7 @@ def test_random_case_matches_duckdb(spark_module, expr, t1, t2, with_else):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -784,6 +800,7 @@ def test_random_replace_in_place_matches_duckdb(spark_module, expr, fill):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -819,6 +836,7 @@ def test_random_bm25_matches_duckdb(spark_module, expr, terms, k):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -888,6 +906,7 @@ def test_cumulative_median_tied_order_keys_match_duckdb(spark):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -912,6 +931,7 @@ def test_random_winsorize_match_duckdb(spark_module, lo, hi):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -956,6 +976,7 @@ _gopher_lines = st.lists(
 
 
 @settings(
+    derandomize=True,
     max_examples=40,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -998,6 +1019,7 @@ _dsir_docs = st.lists(
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1024,6 +1046,7 @@ def test_random_dsir_docs_match_duckdb(spark_module, docs):
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1065,6 +1088,7 @@ _dup_docs = st.lists(
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1102,6 +1126,7 @@ _entropy_docs = st.lists(
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1128,6 +1153,7 @@ def test_random_word_entropy_matches_duckdb(spark_module, docs):
 
 
 @settings(
+    derandomize=True,
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1159,6 +1185,7 @@ def test_random_blocklist_matches_duckdb(spark_module, docs, words):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1193,6 +1220,7 @@ def test_random_ewma_windows_match_duckdb(spark_module, expr, alpha,
 
 
 @settings(
+    derandomize=True,
     max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1224,6 +1252,7 @@ def test_random_anomaly_flags_match_duckdb(spark_module, expr, n, z):
 
 
 @settings(
+    derandomize=True,
     max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
@@ -1282,6 +1311,7 @@ def test_random_null_frames_correlate_match_duckdb(spark, data):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow,
@@ -1330,6 +1360,7 @@ def test_random_null_frames_anova_match_duckdb(spark, data):
 
 
 @settings(
+    derandomize=True,
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow,
