@@ -16,9 +16,11 @@ Shape and contracts follow the reference workflow
   empty results still produce a header-only file (AGENTIC_WORKFLOW.md:87).
 - critic_agent (:157-255): the reference asks an LLM YES/NO and with no
   LLM accepts blindly (:175-177). Here validation is deterministic:
-  schema check + zero-predicate-violation check + row-count
-  cross-check, with the same MAX_RETRIES = 2 budget (:159). An LLM
-  critic can be layered on top but is never required.
+  schema check + row-count cross-check against the recomputed plan +
+  zero-predicate-violation check, the last two read from the written
+  file by ONE aggregate; the escape-hatch path runs the same check
+  core on the snippet's rerun. Same MAX_RETRIES = 2 budget (:159). An
+  LLM critic can be layered on top but is never required.
 - LLM degradation policy (G8, :9-12): every stage works with no LLM at
   all — and unlike the reference (whose offline path degenerates to an
   identity transform), the deterministic path runs the full eval corpus.
@@ -33,8 +35,9 @@ from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..plans import compile_spec, parse_description, validate_spec
+from ..plans import compile_expr, compile_spec, parse_description, validate_spec
 from ..plans.escape import apply_snippet
 from ..plans.parser import ParseError
 from ..plans.spec import SpecError
@@ -329,18 +332,14 @@ def escape_hatch_agent(
 def execution_agent(
     df: DataFrame, spec: dict, description: str, out_dir: str | Path,
     tables: dict[str, DataFrame] | None = None,
-) -> tuple[str, int]:
-    """Compile and run the spec; write the uniquely-named CSV sink.
-    Returns (output_path, row_count). ``tables`` feeds the compiler's
-    table map for ops with a named right side (join, decontaminate)."""
+) -> str:
+    """Compile and run the spec; write the uniquely-named CSV sink and
+    return its path (the critic counts the rows in the written file).
+    ``tables`` feeds the compiler's table map for ops with a named
+    right side (join, decontaminate)."""
     result = compile_spec(df, spec, tables=tables or {})
     path = unique_output_path(out_dir, description)
-    path = write_csv_single(result, path)
-    # the compiled DataFrame's count — the critic independently
-    # recomputes and cross-checks it against the written file, so
-    # driver-side line counting (which miscounts quoted newlines and
-    # leaks a file handle) is unnecessary
-    return str(path), result.count()
+    return str(write_csv_single(result, path))
 
 
 def _filter_exprs_on_output(spec: dict) -> list[dict]:
@@ -424,10 +423,12 @@ def _filter_exprs_on_output(spec: dict) -> list[dict]:
             dropped.update(op["cols"])
         elif kind == "select":
             selected = set(op["cols"])
-        elif kind == "with_column":
+        elif kind in ("with_column", "redact"):
             # overwriting a column a kept filter references changes
-            # its values; that filter is no longer checkable
-            kept = [(e, c) for (e, c) in kept if op["name"] not in c]
+            # its values; that filter is no longer checkable (redact
+            # rewrites its text column in place)
+            name = op["name"] if kind == "with_column" else op.get("text_col", "text")
+            kept = [(e, c) for (e, c) in kept if name not in c]
         elif kind == "groupby_agg":
             # key columns survive with their values intact, so a
             # filter purely over keys stays checkable
@@ -450,6 +451,31 @@ def _filter_exprs_on_output(spec: dict) -> list[dict]:
     return out
 
 
+def _check_output(
+    spark: SparkSession, result: DataFrame, output_path: str, preds: list[dict]
+) -> tuple[str | None, int | None, DataFrame]:
+    """The deterministic check of both the spec and escape-hatch paths:
+    (a) file columns == ``result`` columns; (b) file row count == a
+    recount of ``result``; (c) no row violates ``preds``, in order. The
+    file is read by ONE aggregate, count(*) plus count_if(NOT pred) per
+    predicate (NULL is never a violation, as with a filter). Returns
+    (failure reason or None, rows in the file, the file's DataFrame)."""
+    out_df = read_csv(spark, output_path)
+    if out_df.columns != result.columns:
+        return f"schema mismatch: {out_df.columns} != {result.columns}", None, out_df
+    expected_n = result.count()
+    actual_n, *violations = out_df.agg(
+        F.count(F.lit(1)), *[F.count_if(~compile_expr(e)) for e in preds]
+    ).first()
+    if actual_n != expected_n:
+        return (f"row count mismatch: output {actual_n} != recomputed {expected_n}",
+                actual_n, out_df)
+    for expr, n_bad in zip(preds, violations):
+        if n_bad:
+            return f"{n_bad} rows violate predicate {expr}", actual_n, out_df
+    return None, actual_n, out_df
+
+
 def critic_agent(
     spark: SparkSession,
     df: DataFrame,
@@ -457,29 +483,19 @@ def critic_agent(
     output_path: str,
     llm: LLMClient | None = None,
     tables: dict[str, DataFrame] | None = None,
-) -> tuple[bool, str]:
+) -> tuple[bool, str, int | None]:
     """Deterministic validation (replacing the reference's LLM YES/NO,
-    :179-193): (a) output schema == compiled schema; (b) zero rows in
-    the output violate any still-checkable filter predicate; (c) output
-    row count == recomputed count. The optional LLM verdict is advisory
-    only — it can veto, never approve a failed deterministic check."""
-    from ..plans.compile import compile_expr
-
+    :179-193) by ``_check_output``: schema, row count against the
+    recomputed plan, then every still-checkable filter predicate.
+    Returns (ok, reason, rows in the written file). The optional LLM
+    verdict is advisory only — it can veto, never approve a failed
+    deterministic check."""
     result = compile_spec(df, spec, tables=tables or {})
-    expected_cols = result.columns
-    out_df = read_csv(spark, output_path)
-    if out_df.columns != expected_cols:
-        return False, f"schema mismatch: {out_df.columns} != {expected_cols}"
-    expected_n = result.count()
-    actual_n = out_df.count()
-    if actual_n != expected_n:
-        return False, f"row count mismatch: output {actual_n} != recomputed {expected_n}"
-    n_checked_preds = 0
-    for expr in _filter_exprs_on_output(spec):
-        violations = out_df.filter(~compile_expr(expr)).count()
-        if violations:
-            return False, f"{violations} rows violate predicate {expr}"
-        n_checked_preds += 1
+    preds = _filter_exprs_on_output(spec)
+    failure, actual_n, out_df = _check_output(spark, result, output_path, preds)
+    if failure is not None:
+        return False, failure, actual_n
+    n_checked_preds = len(preds)
     if llm is not None:
         # Advisory veto only — it can reject, never approve a failed
         # deterministic check. Prompt framing matters (first live run,
@@ -591,32 +607,8 @@ def critic_agent(
             "First line of your reply: strictly YES or NO."
         )
         if verdict.strip().upper().startswith("NO"):
-            return False, f"llm critic rejected: {verdict.splitlines()[0]}"
-    return True, "ok"
-
-
-def critic_escape(
-    spark: SparkSession,
-    df: DataFrame,
-    code: str,
-    schema: str,
-    output_path: str,
-) -> tuple[bool, str]:
-    """Deterministic validation for the escape-hatch path: the snippet
-    has no spec to derive predicates from, so the check is (a) output
-    columns == declared schema columns, (b) output row count == a fresh
-    recomputation of the snippet. A snippet that violates the row-local
-    contract (e.g. per-batch aggregation) produces batch-dependent
-    counts and fails (b) whenever the partitioning differs between the
-    write and the recheck — an intentional tripwire."""
-    result = apply_snippet(df, code, schema)
-    out_df = read_csv(spark, output_path)
-    if out_df.columns != result.columns:
-        return False, f"schema mismatch: {out_df.columns} != {result.columns}"
-    expected_n, actual_n = result.count(), out_df.count()
-    if actual_n != expected_n:
-        return False, f"row count mismatch: output {actual_n} != recomputed {expected_n}"
-    return True, "ok (escape hatch)"
+            return False, f"llm critic rejected: {verdict.splitlines()[0]}", actual_n
+    return True, "ok", actual_n
 
 
 def run_transform(
@@ -638,10 +630,10 @@ def run_transform(
         desc = description if feedback is None else f"{description}\n(previous attempt failed: {feedback})"
         try:
             state.spec = planner_agent(desc, columns=df.columns, llm=llm)
-            state.output_path, state.row_count = execution_agent(
+            state.output_path = execution_agent(
                 df, state.spec, description, out_dir, tables=tables
             )
-            ok, reason = critic_agent(
+            ok, reason, state.row_count = critic_agent(
                 spark, df, state.spec, state.output_path, llm=llm, tables=tables
             )
         except (ParseError, SpecError, json.JSONDecodeError, AnalysisException) as e:
@@ -654,24 +646,23 @@ def run_transform(
             if llm is None:
                 raise  # deterministic path: retrying identical input is pointless
             # Both the grammar and the LLM-spec path failed: U1 escape
-            # hatch — sandboxed row-local pandas via mapInPandas.
+            # hatch — sandboxed row-local pandas via mapInPandas. With
+            # no spec there are no predicates; a snippet breaking the
+            # row-local contract (per-batch aggregation) gives
+            # batch-dependent counts, so the recount is a tripwire.
             try:
-                state.code, state.schema, state.output_path, state.row_count = (
+                state.code, state.schema, state.output_path, _ = (
                     escape_hatch_agent(df, desc, llm, out_dir)
                 )
-                ok, reason = critic_escape(
-                    spark, df, state.code, state.schema, state.output_path
+                failure, state.row_count, _ = _check_output(
+                    spark, apply_snippet(df, state.code, state.schema),
+                    state.output_path, [],
                 )
             except Exception as ee:  # sandbox rejection, bad JSON, runtime error
                 state.messages.append(f"attempt {attempt + 1}: escape hatch failed: {ee}")
                 feedback = f"{e}; escape hatch: {ee}"
                 continue
-            state.messages.append(f"attempt {attempt + 1}: {reason}")
-            if ok:
-                state.valid = True
-                return state
-            feedback = reason
-            continue
+            ok, reason = failure is None, failure or "ok (escape hatch)"
         state.messages.append(f"attempt {attempt + 1}: {reason}")
         if ok:
             state.valid = True

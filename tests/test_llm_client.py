@@ -208,7 +208,7 @@ def test_live_planner_fallback_roundtrip(spark, people, tmp_path):
         "Please keep only the folks older than forty, just their names.",
         out_dir=tmp_path, llm=live_or_replay_llm(),
     )
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     assert {r[0] for r in out.collect()} <= {"Diana", "Fiona", "Ian"}
 
@@ -289,7 +289,7 @@ def test_live_corpus_op_spec_roundtrip(spark, tmp_path):
         ).collect()
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path, llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {(int(r["doc_id"]), r["lang"], r["split"]) for r in out.collect()}
     assert got == golden
@@ -329,7 +329,7 @@ def test_live_dup_audit_spec_roundtrip(spark, tmp_path):
         ).collect()
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path, llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         (
@@ -375,7 +375,7 @@ def test_live_blocklist_spec_roundtrip(spark, tmp_path):
         ).collect()
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path, llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {(int(r["doc_id"]), r["lang"]) for r in out.collect()}
     assert got == golden
@@ -410,7 +410,7 @@ def test_live_kanonymity_spec_roundtrip(spark, tmp_path):
     ).collect()
     st = run_transform(spark, events, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     (r,) = out.collect()
     assert int(r["n_groups"]) == g["n_groups"]
@@ -448,7 +448,7 @@ def test_live_word_entropy_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         (int(r["doc_id"]), round(float(r["entropy"]), 6),
@@ -492,7 +492,7 @@ def test_live_oov_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         (r["source"], int(r["n_tokens"]), int(r["n_oov"]),
@@ -533,7 +533,7 @@ def test_live_majority_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, events, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["user_id"]): (r["majority_label"], int(r["n_votes"]),
@@ -579,7 +579,7 @@ def test_live_dedup_tiebreak_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {int(r["doc_id"]) for r in out.collect()}
     assert got == golden
@@ -613,7 +613,7 @@ def test_live_agreement_spec_roundtrip(spark, tmp_path):
     ).collect()
     st = run_transform(spark, events, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     (r,) = out.collect()
     assert int(r["n_items"]) == g["n_items"]
@@ -657,7 +657,7 @@ def test_live_window_ewma_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, events, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     smoothed = [c for c in out.columns if c not in events.columns]
     assert len(smoothed) == 1
@@ -702,7 +702,7 @@ def test_live_anomaly_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, events, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["event_id"]): r["is_anomaly"].lower() == "true"
@@ -744,7 +744,7 @@ def test_live_correlate_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, li, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         (r["col_a"], r["col_b"]): (None if r["r"] in (None, "")
@@ -785,7 +785,7 @@ def test_live_ndcg_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, emb, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["query_id"]): (int(r["n_rel_topk"]), int(r["ideal_n"]),
@@ -828,7 +828,7 @@ def test_live_silhouette_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, emb, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         r["label"]: (int(r["n_vecs"]), round(float(r["mean_silhouette"]), 6),
@@ -868,7 +868,7 @@ def test_live_bpe_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["merge_rank"]): (r["pair"], r["merged"], int(r["pair_count"]))
@@ -909,7 +909,7 @@ def test_live_perplexity_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["doc_id"]): (r["lang"], int(r["n_tokens"]),
@@ -950,7 +950,7 @@ def test_live_common_direction_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, emb, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["vec_id"]): (round(float(r["c1_proj"]), 6),
@@ -996,7 +996,7 @@ def test_live_unimax_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         r["source"]: (int(r["n_tokens"]), int(r["capacity"]),
@@ -1044,7 +1044,7 @@ def test_live_bootstrap_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, ev, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         r["event_type"]: (int(r["n_rows"]), round(float(r["mean_value"]), 6),
@@ -1091,7 +1091,7 @@ def test_live_spearman_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, li, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         (r["col_a"], r["col_b"]): (None if r["rho"] in (None, "")
@@ -1129,7 +1129,7 @@ def test_live_mutual_info_spec_roundtrip(spark, tmp_path):
     ).collect()
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     (r,) = out.collect()
     assert int(r["n"]) == g["n"]
@@ -1176,7 +1176,7 @@ def test_live_anova_spec_roundtrip(spark, tmp_path):
     ]
     st = run_transform(spark, ev, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = [
         (int(r["k"]), int(r["n"]), round(float(r["ss_between"]), 6),
@@ -1222,7 +1222,7 @@ def test_live_funnel_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, ev, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["step"]): (r["event_type"], int(r["n_users"]))
@@ -1262,7 +1262,7 @@ def test_live_novelty_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         int(r["doc_id"]): (int(r["n_grams"]), int(r["n_novel"]),
@@ -1305,7 +1305,7 @@ def test_live_concentration_spec_roundtrip(spark, tmp_path):
     ]
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = [
         (int(r["k_groups"]), int(r["total_tokens"]),
@@ -1348,7 +1348,7 @@ def test_live_hapax_spec_roundtrip(spark, tmp_path):
     }
     st = run_transform(spark, docs, para, out_dir=tmp_path,
                        llm=live_or_replay_llm())
-    assert st.valid
+    assert st.valid, st.messages
     out = spark.read.option("header", True).csv(st.output_path)
     got = {
         r["source"]: (int(r["vocab_size"]), int(r["n_tokens"]),

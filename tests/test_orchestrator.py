@@ -58,9 +58,52 @@ def test_critic_catches_wrong_output(spark, people, tmp_path):
     spec = parse_description("Filter rows where age > 30")
     bad = tmp_path / "bad.csv"
     bad.write_text("name,age,city\nAlice,25,New York\n")  # violates age > 30
-    ok, reason = critic_agent(spark, people, spec, str(bad))
+    ok, reason, _ = critic_agent(spark, people, spec, str(bad))
     assert not ok
     assert "mismatch" in reason or "violate" in reason
+
+
+def test_critic_reports_violated_predicate(spark, people, tmp_path):
+    """A file with the right columns and row count that breaks only
+    the SECOND of two checkable predicates is rejected naming that
+    predicate; a NULL in a predicate column is not a violation (NULL
+    age passes age > 30, NULL city passes city != 'Seattle')."""
+    first = {"gt": ["age", 30]}
+    second = {"ne": ["city", {"lit": "Seattle"}]}
+    spec = {"ops": [{"op": "filter", "expr": first},
+                    {"op": "filter", "expr": second}]}
+    bad = tmp_path / "bad.csv"
+    bad.write_text(  # 6 rows, as recomputed from people
+        "name,age,city\n"
+        "Bob,35,Los Angeles\n"
+        "Charlie,32,Chicago\n"
+        "Diana,45,Seattle\n"
+        "Fiona,41,\n"
+        "George,,Denver\n"
+        "Jasmine,31,Portland\n"
+    )
+    ok, reason, n = critic_agent(spark, people, spec, str(bad))
+    assert not ok and n == 6
+    assert reason == f"1 rows violate predicate {second}"
+
+
+def test_transform_job_count(spark, people, tmp_path):
+    """One deterministic transform runs a fixed number of Spark jobs:
+    the executor does not count, and the critic reads the written file
+    with one aggregate for its row count and every predicate."""
+    sc = spark.sparkContext
+    group = "test_transform_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        st = run_transform(
+            spark, people,
+            "Filter rows where age > 30 and select columns name and age.",
+            out_dir=tmp_path,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert st.valid and st.row_count == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
 
 
 def test_llm_critic_can_veto_but_not_override(spark, people, tmp_path):
@@ -73,7 +116,7 @@ def test_llm_critic_can_veto_but_not_override(spark, people, tmp_path):
     from agentic_workflow_for_data_transformation_spark.plans import parse_description
 
     spec = parse_description("Filter rows where age > 30")
-    ok, reason = critic_agent(spark, people, spec, st.output_path, llm=naysayer)
+    ok, reason, _ = critic_agent(spark, people, spec, st.output_path, llm=naysayer)
     assert not ok and "llm critic rejected" in reason
 
 
@@ -129,7 +172,8 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
     """A filter BEFORE a schema-replacing op (pack/pivot/...) must not
     be re-applied to the replaced output schema; a filter AFTER it
     must; with_column overwriting a filtered column invalidates that
-    filter (live-LLM finding, round 8)."""
+    filter (live-LLM finding, round 8), and so does redact, which
+    rewrites its text column in place."""
     from agentic_workflow_for_data_transformation_spark.agents.orchestrator import (
         _filter_exprs_on_output,
     )
@@ -147,6 +191,12 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
         {"op": "filter", "expr": {"gt": ["age", 30]}},
         {"op": "with_column", "name": "age", "expr": {"lit": 0},
          "replace": True},
+    ]}
+    assert _filter_exprs_on_output(spec) == []
+
+    spec = {"ops": [
+        {"op": "filter", "expr": {"contains": ["text", "@"]}},
+        {"op": "redact"},
     ]}
     assert _filter_exprs_on_output(spec) == []
 

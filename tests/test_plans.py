@@ -983,7 +983,7 @@ def test_pca_top2_single_gram_scan(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_spearman_no_single_partition_exchange(spark):
+def test_spearman_no_single_partition_exchange(spark, monkeypatch):
     """Spearman's rank build must never funnel the data through one
     partition: the in-bucket cumulative windows partition by
     (column-index, bucket), the bounded offsets cumulative partitions
@@ -995,13 +995,48 @@ def test_spearman_no_single_partition_exchange(spark):
     x_corr_matrix). The r10 single-scan rank build additionally pins:
     the main plan reads the parquet ONCE (the probe side); all rank
     slices come from the one lazily-checkpointed exploded build
-    (Scan ExistingRDD), which the r9 per-column form re-scanned 8x."""
+    (Scan ExistingRDD), which the r9 per-column form re-scanned 8x.
+    Behind those checkpoints, the rank build itself
+    (_fractional_ranks_all) reads the parquet ONCE and never funnels
+    through one partition either: the frame it checkpoints and its
+    own output are pinned too."""
     plan = plan_of(spark, "x_spearman_matrix")
     assert plan.count("Exchange SinglePartition") == 1
     assert plan.count("BroadcastExchange") >= 4  # one rank slice/col
     assert plan.count("FileScan") == 1  # probe scan only
     assert plan.count("Scan ExistingRDD") >= 4  # shared checkpoint
     assert "CartesianProduct" not in plan
+
+    from agentic_workflow_for_data_transformation_spark.operators import profile
+    from agentic_workflow_for_data_transformation_spark.operators.dedup import (
+        spread_small_input,
+    )
+    from agentic_workflow_for_data_transformation_spark.sources import (
+        read_parquet_table,
+    )
+
+    def executed(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+    base = spread_small_input(
+        read_parquet_table(spark, SF_DIR, "lineitem").select(
+            *[F.col(c).cast("double").alias(c) for c in cols]
+        )
+    )
+    checkpointed = []
+    real = type(base).localCheckpoint
+
+    def record(self, *args, **kwargs):
+        checkpointed.append(executed(self))  # before it runs
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(base), "localCheckpoint", record)
+    ranks = executed(profile._fractional_ranks_all(base, cols, 2048))
+    assert "Exchange SinglePartition" not in ranks
+    [build] = checkpointed  # the exploded distinct-value counts
+    assert build.count("FileScan") == 1
+    assert "Exchange SinglePartition" not in build
 
 
 def test_mutual_info_single_contingency_scan(spark):
