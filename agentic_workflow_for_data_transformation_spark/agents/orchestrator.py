@@ -19,8 +19,10 @@ Shape and contracts follow the reference workflow
   schema check + row-count cross-check against the recomputed plan +
   zero-predicate-violation check, the last two read from the written
   file by ONE aggregate; the escape-hatch path runs the same check
-  core on the snippet's rerun. Same MAX_RETRIES = 2 budget (:159). An
-  LLM critic can be layered on top but is never required.
+  core on the snippet's rerun. Same MAX_RETRIES = 2 budget (:159) when
+  an LLM re-plans; with no LLM the planner is deterministic, so a
+  rejection ends the loop. An LLM critic can be layered on top but is
+  never required.
 - LLM degradation policy (G8, :9-12): every stage works with no LLM at
   all — and unlike the reference (whose offline path degenerates to an
   identity transform), the deterministic path runs the full eval corpus.
@@ -379,12 +381,14 @@ def _filter_exprs_on_output(spec: dict) -> list[dict]:
     # a wild goose chase)
     replaces_schema = {
         "pivot", "rollup", "pack", "ann_topk", "bm25",
-        "ols", "mode", "neardup_pairs", "wordcount",
+        "ols", "mode",
         # expect/chunk/resample/negatives emit their own report or
         # per-unit schema; merge keeps the schema but REWRITES values
         # (an earlier filter may legitimately no longer hold on
-        # updated rows) — all five invalidate earlier predicates
-        "expect", "chunk", "resample", "negatives", "merge",
+        # updated rows), and union keeps it but appends the right
+        # side's rows, which no earlier filter saw — all six
+        # invalidate earlier predicates
+        "expect", "chunk", "resample", "negatives", "merge", "union",
         # dsir/fertility/dup_by_source replace the schema with their
         # own summaries
         "dsir", "fertility", "dup_by_source",
@@ -622,7 +626,9 @@ def run_transform(
 ) -> TransformState:
     """The linear pipeline (reference graph :271-285 is linear too):
     plan -> execute -> validate, with the critic's retry loop
-    re-planning on failure, budget ``max_retries`` (:159)."""
+    re-planning on failure, budget ``max_retries`` (:159). With no LLM
+    the grammar would re-plan the same spec, so the first rejection is
+    final: ``valid`` stays False and the reason is in ``messages``."""
     state = TransformState(description=description)
     feedback: str | None = None
     for attempt in range(1 + max_retries):
@@ -667,6 +673,8 @@ def run_transform(
         if ok:
             state.valid = True
             return state
+        if llm is None:
+            break
         feedback = reason
     return state
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .operators import joins, stats, windows
 from .plans import compile_spec, parse_description
+from .plans.sqlgen import spec_to_sql
 from .sources import read_events, read_parquet_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -88,6 +89,49 @@ def _nl(spark: SparkSession, sf_dir: str, table: str, description: str,
     tables = {n: _t(spark, sf_dir, n) for n in extra_tables}
     return compile_spec(df, parse_description(description, columns=df.columns),
                         tables=tables)
+
+
+# Column names of the testdata tables. NL oracles are rendered at import
+# time, before any SparkSession exists; _nl parses against the live
+# df.columns at query time and resolves to the same names.
+_TABLE_COLUMNS: dict[str, list[str]] = {
+    "customer": ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
+    "documents": ["doc_id", "text", "lang", "source", "n_chars"],
+    "embeddings": ["vec_id", "embedding", "label"],
+    "events": ["event_id", "ts", "user_id", "event_type", "value", "props"],
+    "lineitem": [
+        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+        "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
+        "l_shipdate",
+    ],
+    "nation": ["n_nationkey", "n_name", "n_regionkey"],
+    "orders": [
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority",
+    ],
+    "part": ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"],
+    "region": ["r_regionkey", "r_name"],
+    "supplier": ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
+}
+
+
+def _register_nl(name: str, table: str, description: str, doc: str,
+                 oracle: str | None = None,
+                 extra_tables: tuple[str, ...] = ()) -> None:
+    """Register ``description`` run through ``_nl`` on ``table``, with
+    ``doc`` as its catalog text. With no hand-written ``oracle``, the
+    oracle is the sqlgen rendering of the parsed description, so the
+    parser, the compiler and the SQL generator answer for one spec."""
+    if oracle is None:
+        oracle = spec_to_sql(
+            parse_description(description, columns=_TABLE_COLUMNS[table]), table
+        )
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _nl(spark, sf_dir, table, description, extra_tables)
+
+    fn.__doc__ = doc
+    register(name, oracle)(fn)
 
 
 # --------------------------------------------------------------------------
@@ -200,17 +244,8 @@ _PARITY_LATE: list[tuple[str, str, str, str]] = [
 ]
 
 
-def _register_parity(rows: list[tuple[str, str, str, str]]) -> None:
-    for _name, _table, _desc, _sql in rows:
-        def _mk(table: str, desc: str) -> QueryFn:
-            fn: QueryFn = lambda spark, sf_dir: _nl(spark, sf_dir, table, desc)  # noqa: E731
-            fn.__doc__ = f"NL pipeline on {table}: {desc!r}"
-            return fn
-
-        register(_name, _sql)(_mk(_table, _desc))
-
-
-_register_parity(_PARITY)
+for _name, _table, _desc, _sql in _PARITY:
+    _register_nl(_name, _table, _desc, f"NL pipeline on {_table}: {_desc!r}", _sql)
 
 
 # p04/p17: sort + top-k need a deterministic tiebreak column so Spark and
@@ -311,25 +346,23 @@ def p20_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "p21_nl_sample",
-    "SELECT doc_id, lang FROM documents WHERE "
-    "(('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000) < 100000",
-)
-def p21_nl_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p21_nl_sample", "documents",
+    "Sample 10% of rows by doc_id and select doc_id, lang.",
     """NL -> spec 'sample' clause: deterministic hash sampling reached
-    from a plain-English description."""
-    return _nl(spark, sf_dir, "documents",
-               "Sample 10% of rows by doc_id and select doc_id, lang.")
-
-
-@register(
-    "p22_nl_select_distinct",
-    "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
+    from a plain-English description.""",
+    oracle="SELECT doc_id, lang FROM documents WHERE "
+           "(('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000) < 100000",
 )
-def p22_nl_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _nl(spark, sf_dir, "lineitem",
-               "Select distinct l_returnflag, l_linestatus.")
+
+
+_register_nl(
+    "p22_nl_select_distinct", "lineitem",
+    "Select distinct l_returnflag, l_linestatus.",
+    "NL pipeline on lineitem: 'Select distinct l_returnflag, l_linestatus' — "
+    "projection then distinct (partial-agg dedup).",
+    oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
+)
 
 
 # --------------------------------------------------------------------------
@@ -440,7 +473,8 @@ from . import nsqueries8  # noqa: E402,F401  (registration side effects)
 from . import nsqueries9  # noqa: E402,F401  (registration side effects)
 
 # Parity variants demoted past the window (shapes duplicated in-window).
-_register_parity(_PARITY_LATE)
+for _name, _table, _desc, _sql in _PARITY_LATE:
+    _register_nl(_name, _table, _desc, f"NL pipeline on {_table}: {_desc!r}", _sql)
 
 
 @register(
@@ -466,56 +500,50 @@ def p17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregates, count-distinct, NL joins — all through the deterministic
 # NL pipeline. Registered just past the driver window; covered by the
 # committed local oracle report and tests/test_eval20.py goldens.
-@register(
-    "p23_nl_sort_multikey",
-    "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem "
-    "ORDER BY l_quantity DESC NULLS LAST, l_orderkey ASC NULLS FIRST, "
-    "l_linenumber ASC NULLS FIRST LIMIT 8",
-)
-def p23_nl_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p23_nl_sort_multikey", "lineitem",
+    "Select l_orderkey, l_linenumber, l_quantity and "
+    "sort by l_quantity desc, l_orderkey, l_linenumber and keep top 8 rows.",
     """Multi-key sort from NL: 'sort by X desc, Y, Z' (the trailing keys
-    make the top-k boundary deterministic)."""
-    return _nl(spark, sf_dir, "lineitem",
-               "Select l_orderkey, l_linenumber, l_quantity and "
-               "sort by l_quantity desc, l_orderkey, l_linenumber and keep top 8 rows.")
-
-
-@register(
-    "p24_nl_global_avg",
-    "SELECT avg(p_size) AS average_p_size FROM part",
+    make the top-k boundary deterministic).""",
+    oracle="SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem "
+           "ORDER BY l_quantity DESC NULLS LAST, l_orderkey ASC NULLS FIRST, "
+           "l_linenumber ASC NULLS FIRST LIMIT 8",
 )
-def p24_nl_global_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p24_nl_global_avg", "part",
+    "Show average p_size.",
     """Global aggregate with no group-by ('show average age' shape from
     the reference corpus, :360): one-row result, no shuffle keys —
-    partial aggregation reduces every partition to one value."""
-    return _nl(spark, sf_dir, "part", "Show average p_size.")
-
-
-@register(
-    "p25_nl_count_distinct",
-    "SELECT count(DISTINCT o_orderpriority) AS o_orderpriority_distinct_count "
-    "FROM orders",
+    partial aggregation reduces every partition to one value.""",
+    oracle="SELECT avg(p_size) AS average_p_size FROM part",
 )
-def p25_nl_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _nl(spark, sf_dir, "orders", "Count distinct o_orderpriority.")
 
 
-@register(
-    "p26_nl_join_group",
-    "SELECT n_name, count(c_custkey) AS c_custkey_count "
-    "FROM customer JOIN nation ON c_nationkey = n_nationkey "
-    "GROUP BY n_name",
+_register_nl(
+    "p25_nl_count_distinct", "orders",
+    "Count distinct o_orderpriority.",
+    "NL pipeline on orders: global 'count distinct o_orderpriority' — "
+    "a zero-key exact distinct aggregate.",
+    oracle="SELECT count(DISTINCT o_orderpriority) AS o_orderpriority_distinct_count "
+           "FROM orders",
 )
-def p26_nl_join_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p26_nl_join_group", "customer",
+    "Rename c_nationkey to n_nationkey and "
+    "broadcast join with nation on n_nationkey and "
+    "group by n_name and count c_custkey.",
     """NL join: rename aligns the key, broadcast hint keeps the 25-row
-    nation dim from shuffling the customer side."""
-    return _nl(
-        spark, sf_dir, "customer",
-        "Rename c_nationkey to n_nationkey and "
-        "broadcast join with nation on n_nationkey and "
-        "group by n_name and count c_custkey.",
-        extra_tables=("nation",),
-    )
+    nation dim from shuffling the customer side.""",
+    oracle="SELECT n_name, count(c_custkey) AS c_custkey_count "
+           "FROM customer JOIN nation ON c_nationkey = n_nationkey "
+           "GROUP BY n_name",
+    extra_tables=("nation",),
+)
 
 
 # --------------------------------------------------------------------------
@@ -2385,57 +2413,48 @@ def x_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "p27_nl_date_filter",
-    "SELECT event_id, ts FROM events "
-    "WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' "
-    "AND ts < TIMESTAMP '2024-01-16 00:00:00' AND event_type = 'click'",
-)
-def p27_nl_date_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p27_nl_date_filter", "events",
+    "Filter rows where ts on or after 2024-01-15 and ts before "
+    "2024-01-16 and event_type == 'click' and select event_id and ts.",
     """NL temporal comparison: ISO date literals tokenize whole and
     'on or after' / 'before' map to inclusive/strict bounds — the
     grammar surface every real log-table description needs. Spark's
     analyzer casts the string literal to timestamp against the ts
-    column, same as the oracle's TIMESTAMP literal."""
-    return _nl(
-        spark, sf_dir, "events",
-        "Filter rows where ts on or after 2024-01-15 and ts before "
-        "2024-01-16 and event_type == 'click' and select event_id and ts.",
-    )
-
-
-@register(
-    "p28_nl_count_per_day",
-    "SELECT date_trunc('day', ts) AS ts_day, count(event_id) AS event_id_count "
-    "FROM events GROUP BY 1",
+    column, same as the oracle's TIMESTAMP literal.""",
+    oracle="SELECT event_id, ts FROM events "
+           "WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' "
+           "AND ts < TIMESTAMP '2024-01-16 00:00:00' AND event_type = 'click'",
 )
-def p28_nl_count_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p28_nl_count_per_day", "events",
+    "Group by day of ts and count event_id.",
     """NL time-bucketed aggregation: 'group by day of ts' compiles to a
     date_trunc key via the spec's trunc expression — the everyday
     events-per-day rollup reached from plain English, one map-side-
-    combined aggregate."""
-    return _nl(spark, sf_dir, "events", "Group by day of ts and count event_id.")
-
-
-@register(
-    "p29_nl_top_per_group",
-    "SELECT o_orderkey, o_orderpriority, o_totalprice FROM ("
-    "SELECT o_orderkey, o_orderpriority, o_totalprice, "
-    "row_number() OVER (PARTITION BY o_orderpriority "
-    "ORDER BY o_totalprice DESC, o_orderkey) AS rn "
-    "FROM orders) WHERE rn <= 2",
+    combined aggregate.""",
+    oracle="SELECT date_trunc('day', ts) AS ts_day, count(event_id) AS event_id_count "
+           "FROM events GROUP BY 1",
 )
-def p29_nl_top_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p29_nl_top_per_group", "orders",
+    "Select o_orderkey, o_orderpriority and o_totalprice and "
+    "for each o_orderpriority show top 2 by o_totalprice.",
     """NL grouped top-k: 'for each X show top N by Y' compiles to a
     partitioned row_number window + rank filter — distributed per-group
     sort, never a global one. The grammar appends the table's first
     column (primary key) as a tie-break, so the rank order is total
-    regardless of value ties; the oracle mirrors it."""
-    return _nl(
-        spark, sf_dir, "orders",
-        "Select o_orderkey, o_orderpriority and o_totalprice and "
-        "for each o_orderpriority show top 2 by o_totalprice.",
-    )
+    regardless of value ties; the oracle mirrors it.""",
+    oracle="SELECT o_orderkey, o_orderpriority, o_totalprice FROM ("
+           "SELECT o_orderkey, o_orderpriority, o_totalprice, "
+           "row_number() OVER (PARTITION BY o_orderpriority "
+           "ORDER BY o_totalprice DESC, o_orderkey) AS rn "
+           "FROM orders) WHERE rn <= 2",
+)
 
 
 @register(
@@ -2493,25 +2512,23 @@ def x_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "event_type", "value", "valid_from")
 
 
-@register(
-    "p30_nl_sessionize",
-    "WITH o AS (SELECT user_id, event_id, ts, lag(epoch(ts)) OVER "
-    " (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events), "
-    "f AS (SELECT user_id, event_id, ts, CASE WHEN prev_ts IS NULL "
-    " OR epoch(ts) - prev_ts > 1800 THEN 1 ELSE 0 END AS brk FROM o), "
-    "s AS (SELECT user_id, ts, CAST(sum(brk) OVER (PARTITION BY user_id "
-    " ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM f) "
-    "SELECT user_id, session_id, count(*) AS n_events, "
-    " min(ts) AS session_start, max(ts) AS session_end "
-    "FROM s GROUP BY user_id, session_id",
-)
-def p30_nl_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p30_nl_sessionize", "events",
+    "Sessionize by user_id with 30 minute gap.",
     """NL sessionization: 'sessionize by user_id with 30 minute gap'
     compiles straight to the lag->cumsum sessionizer — a genuinely
     multi-stage operator (two windows + aggregate) reachable from one
-    plain-English clause."""
-    return _nl(spark, sf_dir, "events",
-               "Sessionize by user_id with 30 minute gap.")
+    plain-English clause.""",
+    oracle="WITH o AS (SELECT user_id, event_id, ts, lag(epoch(ts)) OVER "
+           " (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events), "
+           "f AS (SELECT user_id, event_id, ts, CASE WHEN prev_ts IS NULL "
+           " OR epoch(ts) - prev_ts > 1800 THEN 1 ELSE 0 END AS brk FROM o), "
+           "s AS (SELECT user_id, ts, CAST(sum(brk) OVER (PARTITION BY user_id "
+           " ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM f) "
+           "SELECT user_id, session_id, count(*) AS n_events, "
+           " min(ts) AS session_start, max(ts) AS session_end "
+           "FROM s GROUP BY user_id, session_id",
+)
 
 
 @register(
@@ -2547,151 +2564,87 @@ def x_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
                            right_cols=["view_event_id"], direction="forward")
 
 
-@register(
-    "p31_nl_group_two_keys",
-    "SELECT lang, source, count(doc_id) AS doc_id_count "
-    "FROM documents GROUP BY lang, source",
-)
-def p31_nl_group_two_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p31_nl_group_two_keys", "documents",
+    "Group by lang and source and count doc_id.",
     """NL composite-key aggregation: 'group by lang and source' — the
     two-dimensional rollup phrasing, one map-side-combined aggregate
-    on the pair key."""
-    return _nl(spark, sf_dir, "documents",
-               "Group by lang and source and count doc_id.")
-
-
-@register(
-    "p32_nl_left_join",
-    "SELECT o.o_orderkey AS l_orderkey, o.o_totalprice, l.l_quantity "
-    "FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
+    on the pair key.""",
+    oracle="SELECT lang, source, count(doc_id) AS doc_id_count "
+           "FROM documents GROUP BY lang, source",
 )
-def p32_nl_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p32_nl_left_join", "orders",
+    "Rename o_orderkey to l_orderkey and "
+    "left join with lineitem on l_orderkey and "
+    "select l_orderkey, o_totalprice and l_quantity.",
     """NL outer join: 'left join with lineitem' keeps orders with no
     lines as null-extended rows (257 such orders at sf0.01). The rename
     aligns the key so the join is a plain equi-join Catalyst plans as
-    a shuffle (or AQE-broadcast) hash join."""
-    return _nl(
-        spark, sf_dir, "orders",
-        "Rename o_orderkey to l_orderkey and "
-        "left join with lineitem on l_orderkey and "
-        "select l_orderkey, o_totalprice and l_quantity.",
-        extra_tables=("lineitem",),
-    )
-
-
-@register(
-    "p33_nl_semi_join",
-    "SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders o "
-    "WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
+    a shuffle (or AQE-broadcast) hash join.""",
+    oracle="SELECT o.o_orderkey AS l_orderkey, o.o_totalprice, l.l_quantity "
+           "FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
+    extra_tables=("lineitem",),
 )
-def p33_nl_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p33_nl_semi_join", "orders",
+    "Rename o_orderkey to l_orderkey and "
+    "keep rows that exist in lineitem on l_orderkey and "
+    "select l_orderkey and o_totalprice.",
     """NL existence join: 'keep rows that exist in lineitem' compiles
     to a LeftSemi hash join — the right side's payload columns are
-    never materialized, only its join keys flow through the exchange."""
-    return _nl(
-        spark, sf_dir, "orders",
-        "Rename o_orderkey to l_orderkey and "
-        "keep rows that exist in lineitem on l_orderkey and "
-        "select l_orderkey and o_totalprice.",
-        extra_tables=("lineitem",),
-    )
-
-
-@register(
-    "p34_nl_anti_join",
-    "SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders o "
-    "WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
+    never materialized, only its join keys flow through the exchange.""",
+    oracle="SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders o "
+           "WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
+    extra_tables=("lineitem",),
 )
-def p34_nl_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_register_nl(
+    "p34_nl_anti_join", "orders",
+    "Rename o_orderkey to l_orderkey and "
+    "keep rows with no match in lineitem on l_orderkey and "
+    "select l_orderkey and o_totalprice.",
     """NL anti join: 'keep rows with no match in lineitem' compiles to
-    a LeftAnti hash join (the orphaned-orders audit query)."""
-    return _nl(
-        spark, sf_dir, "orders",
-        "Rename o_orderkey to l_orderkey and "
-        "keep rows with no match in lineitem on l_orderkey and "
-        "select l_orderkey and o_totalprice.",
-        extra_tables=("lineitem",),
-    )
-
-
-_P36_DESC = (
-    "Add running total of l_quantity per l_suppkey ordered by l_orderkey and "
-    "select l_orderkey, l_linenumber, l_suppkey and running_sum_l_quantity."
+    a LeftAnti hash join (the orphaned-orders audit query).""",
+    oracle="SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders o "
+           "WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
+    extra_tables=("lineitem",),
 )
 
 
-def _p36_oracle() -> str:
-    # dogfood: the registered oracle IS the sqlgen rendering of the
-    # parsed description, so parser, compiler, and SQL generator are
-    # all on the hook for the same spec
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(_P36_DESC), "lineitem")
-
-
-@register("p36_nl_running_total", _p36_oracle())
-def p36_nl_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p36_nl_running_total", "lineitem",
+    "Add running total of l_quantity per l_suppkey ordered by l_orderkey and "
+    "select l_orderkey, l_linenumber, l_suppkey and running_sum_l_quantity.",
     """NL ordered-aggregate window: 'add running total of X per K
     ordered by O'. Spark's default RANGE frame equals the SQL default,
     so order-by ties accumulate as one peer group in every engine;
     l_quantity is an integral double, so the running sum is exact
-    regardless of accumulation order."""
-    return _nl(spark, sf_dir, "lineitem", _P36_DESC)
-
-
-_P37_DESC = (
-    "Add previous value per user_id ordered by event_id and "
-    "select event_id, user_id, value and previous_value."
+    regardless of accumulation order.""",
 )
 
 
-def _p37_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(_P37_DESC), "events")
-
-
-@register("p37_nl_lag", _p37_oracle())
-def p37_nl_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p37_nl_lag", "events",
+    "Add previous value per user_id ordered by event_id and "
+    "select event_id, user_id, value and previous_value.",
     """NL lag window: 'add previous value per user_id ordered by
     event_id' (event_id is unique, so the per-partition order is
     total and the lag deterministic). Like p36, the oracle is the
-    sqlgen rendering of the parsed description."""
-    return _nl(spark, sf_dir, "events", _P37_DESC)
+    sqlgen rendering of the parsed description.""",
+)
 
 
-# static schema for oracle-side parses (the oracle string is built at
-# import time, before any SparkSession exists; _nl passes the live
-# df.columns at query time and resolves to the same names)
-_ORDERS_COLUMNS = [
-    "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-    "o_orderdate", "o_orderpriority",
-]
-_LINEITEM_COLUMNS = [
-    "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-    "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
-    "l_shipdate",
-]
-
-
-_P40_DESC = (
+_register_nl(
+    "p40_nl_moving_window", "events",
     "Add moving minimum of value over last 3 rows per user_id "
     "ordered by event_id and "
-    "select event_id, user_id and moving_min_value."
-)
-_EVENTS_COLUMNS = ["event_id", "ts", "user_id", "event_type", "value"]
-
-
-def _p40_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P40_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p40_nl_moving_window", _p40_oracle())
-def p40_nl_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "select event_id, user_id and moving_min_value.",
     """NL sliding ROWS frame: 'add moving minimum of X over last N
     rows per K ordered by O' — min over (N-1) PRECEDING .. CURRENT
     ROW. One sort per partition either way. Determinism: event_id is
@@ -2701,150 +2654,81 @@ def p40_nl_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-unique order key would split peers arbitrarily — the lineitem
     variant of this query is NOT portable, which is why it runs on
     events). Oracle is the sqlgen rendering of the parsed
-    description."""
-    return _nl(spark, sf_dir, "events", _P40_DESC)
-
-
-_P42_DESC = (
-    "Add row number ordered by event_id and "
-    "select event_id, user_id and row_num."
+    description.""",
 )
 
 
-def _p42_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P42_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p42_nl_global_row_number", _p42_oracle())
-def p42_nl_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p42_nl_global_row_number", "events",
+    "Add row number ordered by event_id and "
+    "select event_id, user_id and row_num.",
     """NL global ordinal: 'add row number ordered by event_id'. The
     compiler routes this through operators.windows.two_phase_row_number
     (numeric ascending key), so unlike the naive row_number() OVER
     (ORDER BY ...) the data never crosses a single partition — the
     oracle still renders the naive window because the numbers are
-    identical (event_id is unique, so the order is total)."""
-    return _nl(spark, sf_dir, "events", _P42_DESC)
-
-
-_P41_DESC = (
-    "Group by o_orderpriority and show count rows, "
-    "count distinct o_custkey, minimum o_totalprice and "
-    "maximum o_totalprice."
+    identical (event_id is unique, so the order is total).""",
 )
 
 
-def _p41_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P41_DESC, columns=_ORDERS_COLUMNS), "orders"
-    )
-
-
-@register("p41_nl_multi_agg", _p41_oracle())
-def p41_nl_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p41_nl_multi_agg", "orders",
+    "Group by o_orderpriority and show count rows, "
+    "count distinct o_custkey, minimum o_totalprice and "
+    "maximum o_totalprice.",
     """NL multi-aggregate group-by: several aggregates in ONE
     aggregation pass (count rows, count distinct, min, max — each
     phrase keeps the single-clause alias conventions). Exact outputs
     only (counts and min/max), so the hash-compare is unconditional;
     money SUMS would go through the decimal(18,2) cast discipline
-    instead."""
-    return _nl(spark, sf_dir, "orders", _P41_DESC)
-
-_P38_DESC = (
-    "Pivot o_orderstatus by o_orderpriority counting rows "
-    "for values F, O and P."
+    instead.""",
 )
 
 
-def _p38_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P38_DESC, columns=_ORDERS_COLUMNS), "orders"
-    )
-
-
-@register("p38_nl_pivot", _p38_oracle())
-def p38_nl_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p38_nl_pivot", "orders",
+    "Pivot o_orderstatus by o_orderpriority counting rows "
+    "for values F, O and P.",
     """NL declared-values pivot: 'pivot <col> by <key> counting rows
     for values ...' — compiles to ONE hash aggregate (values are
     declared in the description, so Spark never runs the distinct
     discovery scan). Count cells null-fill to 0, matching the
-    sqlgen oracle's count(*) FILTER rendering."""
-    return _nl(spark, sf_dir, "orders", _P38_DESC)
-
-
-_P39_DESC = (
-    "Group by o_orderpriority then o_orderstatus with subtotals "
-    "and count rows."
+    sqlgen oracle's count(*) FILTER rendering.""",
 )
 
 
-def _p39_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P39_DESC, columns=_ORDERS_COLUMNS), "orders"
-    )
-
-
-@register("p39_nl_rollup", _p39_oracle())
-def p39_nl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p39_nl_rollup", "orders",
+    "Group by o_orderpriority then o_orderstatus with subtotals "
+    "and count rows.",
     """NL rollup: 'group by A then B with subtotals and count rows' —
     ROLLUP(A, B) in one Expand pass over a single scan, with
     grouping_id emitted as gid so subtotal rows stay distinguishable
     from real NULL keys. Oracle is the sqlgen rendering of the parsed
-    description (GROUP BY ROLLUP + CAST(GROUPING(...) AS INTEGER))."""
-    return _nl(spark, sf_dir, "orders", _P39_DESC)
+    description (GROUP BY ROLLUP + CAST(GROUPING(...) AS INTEGER)).""",
+)
 
 
-_NATION_COLUMNS = ["n_nationkey", "n_name", "n_regionkey", "n_comment"]
-
-_P43_DESC = "Group by n_regionkey and concatenate n_name."
-
-
-def _p43_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P43_DESC, columns=_NATION_COLUMNS), "nation"
-    )
-
-
-@register("p43_nl_listagg", _p43_oracle())
-def p43_nl_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p43_nl_listagg", "nation",
+    "Group by n_regionkey and concatenate n_name.",
     """NL ordered LISTAGG: 'group by K and concatenate X' — the
     compiler's array_sort(collect_list()) makes the concatenation
     order-deterministic on any partitioning (bare collect_list order
     is partition-dependent); the sqlgen oracle renders
-    string_agg(col, '|' ORDER BY col)."""
-    return _nl(spark, sf_dir, "nation", _P43_DESC)
+    string_agg(col, '|' ORDER BY col).""",
+)
 
 
-_P44_DESC = "Show most common o_orderpriority per o_orderstatus."
-
-
-def _p44_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P44_DESC, columns=_ORDERS_COLUMNS), "orders"
-    )
-
-
-@register("p44_nl_mode", _p44_oracle())
-def p44_nl_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p44_nl_mode", "orders",
+    "Show most common o_orderpriority per o_orderstatus.",
     """NL per-group MODE: 'most common X per K' — count-then-rank with
     the (count DESC, value ASC) tie-break so the winner is
     reproducible on any cluster (Spark's built-in mode() breaks ties
     by partition order). The rank window runs over the counted
-    |K x X| table, never the fact table."""
-    return _nl(spark, sf_dir, "orders", _P44_DESC)
+    |K x X| table, never the fact table.""",
+)
 
 
 _P45_DESC = (
@@ -2859,10 +2743,8 @@ _P45_VIEWS_CTE = (
 
 
 def _p45_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
     return _P45_VIEWS_CTE + spec_to_sql(
-        parse_description(_P45_DESC, columns=_EVENTS_COLUMNS), "events"
+        parse_description(_P45_DESC, columns=_TABLE_COLUMNS["events"]), "events"
     )
 
 
@@ -2894,10 +2776,8 @@ _P46_DESC = (
 
 
 def _p46_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
     return _P45_VIEWS_CTE + spec_to_sql(
-        parse_description(_P46_DESC, columns=_EVENTS_COLUMNS), "events"
+        parse_description(_P46_DESC, columns=_TABLE_COLUMNS["events"]), "events"
     )
 
 
@@ -2919,150 +2799,73 @@ def p46_nl_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_spec(ev, spec, tables={"views": views})
 
 
-_P47_DESC = "Group by l_returnflag and show median l_quantity."
-
-
-def _p47_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P47_DESC, columns=_LINEITEM_COLUMNS), "lineitem"
-    )
-
-
-@register("p47_nl_median", _p47_oracle())
-def p47_nl_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p47_nl_median", "lineitem",
+    "Group by l_returnflag and show median l_quantity.",
     """NL exact median: 'group by K and show median X' — Spark's
     F.median (exact interpolated, == DuckDB median / quantile_cont 0.5)
     in one aggregation pass. The value depends only on the two middle
     order statistics, so it is partition-order independent and
     hash-compares without rounding tricks. Scale note: exact median is
     a sort-based aggregate per group; for loose-tolerance profiling at
-    100 TB the KLL sketch (x_approx_percentiles) is the cheaper path."""
-    return _nl(spark, sf_dir, "lineitem", _P47_DESC)
+    100 TB the KLL sketch (x_approx_percentiles) is the cheaper path.""",
+)
 
 
 # round-7 NL reach for the window vocabulary (VERDICT r6 #3): ntile,
 # percent_rank, cume_dist, first_value had spec/compile/sqlgen support
 # but no NL phrasing produced them.
 
-_P48_DESC = (
+
+_register_nl(
+    "p48_nl_ntile", "events",
     "Divide into 10 buckets by event_id per user_id and "
-    "select event_id, user_id and bucket_event_id."
-)
-
-
-def _p48_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P48_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p48_nl_ntile", _p48_oracle())
-def p48_nl_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "select event_id, user_id and bucket_event_id.",
     """NL ntile: 'divide into 10 buckets by event_id per user_id' —
     per-user decile assignment over a TIE-FREE ordering column
     (event_id is unique, so the bucket boundaries are deterministic;
     ntile among order ties is engine-arbitrary and the grammar's
     docstring says to order by a key). One partitioned window, one
-    shuffle on user_id."""
-    return _nl(spark, sf_dir, "events", _P48_DESC)
-
-
-_P49_DESC = "Add percentile rank of value per user_id."
-
-
-def _p49_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P49_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p49_nl_percent_rank", _p49_oracle())
-def p49_nl_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NL percent_rank: '(rank-1)/(n-1)' within each user's values.
-    Deterministic under order ties (tied rows share a rank), and the
-    division is an exact integer-over-integer float64 op — identical
-    bits across engines, no rounding trick needed."""
-    return _nl(spark, sf_dir, "events", _P49_DESC)
-
-
-_P50_DESC = "Add cumulative distribution of value per user_id."
-
-
-def _p50_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P50_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p50_nl_cume_dist", _p50_oracle())
-def p50_nl_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NL cume_dist: fraction of the user's rows with value <= mine —
-    peers included, so order ties are deterministic by construction.
-    Integer-count division in float64, bit-identical cross-engine."""
-    return _nl(spark, sf_dir, "events", _P50_DESC)
-
-
-_P51_DESC = (
-    "Add first value per user_id ordered by event_id over last 3 rows and "
-    "select event_id, user_id, value and first_value."
+    shuffle on user_id.""",
 )
 
 
-def _p51_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P51_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-_P53_DESC = "Group by l_returnflag and show 90th percentile of l_extendedprice."
-
-
-def _p53_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P53_DESC, columns=_LINEITEM_COLUMNS), "lineitem"
-    )
+_register_nl(
+    "p49_nl_percent_rank", "events",
+    "Add percentile rank of value per user_id.",
+    """NL percent_rank: '(rank-1)/(n-1)' within each user's values.
+    Deterministic under order ties (tied rows share a rank), and the
+    division is an exact integer-over-integer float64 op — identical
+    bits across engines, no rounding trick needed.""",
+)
 
 
-@register("p53_nl_percentile", _p53_oracle())
-def p53_nl_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p50_nl_cume_dist", "events",
+    "Add cumulative distribution of value per user_id.",
+    """NL cume_dist: fraction of the user's rows with value <= mine —
+    peers included, so order ties are deterministic by construction.
+    Integer-count division in float64, bit-identical cross-engine.""",
+)
+
+
+_register_nl(
+    "p53_nl_percentile", "lineitem",
+    "Group by l_returnflag and show 90th percentile of l_extendedprice.",
     """NL exact percentile: 'show 90th percentile of X' — Spark
     F.percentile == DuckDB quantile_cont (index p*(n-1), linear
     interpolation between two order statistics, partition-order
     independent), so the hash-compare needs no rounding. Same sort-
     based-aggregate scale note as median (p47); the KLL sketch
-    (x_approx_percentiles) is the loose-tolerance 100 TB path."""
-    return _nl(spark, sf_dir, "lineitem", _P53_DESC)
-
-
-_P52_DESC = (
-    "Add moving median of value over last 5 rows per user_id "
-    "ordered by event_id and select event_id, user_id, value "
-    "and moving_median_value."
+    (x_approx_percentiles) is the loose-tolerance 100 TB path.""",
 )
 
 
-def _p52_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P52_DESC, columns=_EVENTS_COLUMNS), "events"
-    )
-
-
-@register("p52_nl_moving_median", _p52_oracle())
-def p52_nl_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p52_nl_moving_median", "events",
+    "Add moving median of value over last 5 rows per user_id "
+    "ordered by event_id and select event_id, user_id, value "
+    "and moving_median_value.",
     """NL rolling median: the robust smoother time-series monitoring
     uses where a moving average is outlier-dragged. Exact interpolated
     median over a 5-row sliding frame per user (Spark F.median over
@@ -3070,26 +2873,13 @@ def p52_nl_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics, partition-order independent). The frame is
     bounded (5 rows), so per-group state is O(frame), not O(group) —
     the 100 TB discipline for order-statistic windows; event_id order
-    is total, so the frame contents are deterministic."""
-    return _nl(spark, sf_dir, "events", _P52_DESC)
+    is total, so the frame contents are deterministic.""",
+)
 
 
-_P54_DESC = "Split text into words and count each word showing top 50."
-
-
-def _p54_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P54_DESC, columns=["doc_id", "text", "lang", "source", "n_chars"]
-        ),
-        "documents",
-    )
-
-
-@register("p54_nl_wordcount", _p54_oracle())
-def p54_nl_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p54_nl_wordcount", "documents",
+    "Split text into words and count each word showing top 50.",
     """NL word count: 'split text into words and count each word' —
     the new explode spec op (regex split -> one row per non-empty
     token) feeding a groupby count; top-k sorts on (count desc, word
@@ -3097,26 +2887,13 @@ def p54_nl_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: explode happens map-side inside the scan stage and the
     count is a partial-aggregated shuffle on the token — the word-
     count plan that works at any corpus size. Oracle: unnest over
-    string_split_regex."""
-    return _nl(spark, sf_dir, "documents", _P54_DESC)
+    string_split_regex.""",
+)
 
 
-_P55_DESC = "Remove duplicate rows by text keeping the lowest doc_id."
-
-
-def _p55_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P55_DESC, columns=["doc_id", "text", "lang", "source", "n_chars"]
-        ),
-        "documents",
-    )
-
-
-@register("p55_nl_dedup_keep", _p55_oracle())
-def p55_nl_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p55_nl_dedup_keep", "documents",
+    "Remove duplicate rows by text keeping the lowest doc_id.",
     """NL deterministic dedup: 'remove duplicate rows by X keeping
     the lowest Y' — the keyed dedup spec op (row_number over the dedup
     keys ordered by the keep column, filter to 1). This is the
@@ -3124,32 +2901,15 @@ def p55_nl_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-arbitrary row and is declared non-portable in sqlgen; with
     an explicit keep order both engines pick the SAME representative,
     so the whole surviving ROW hash-matches. One exchange on the dedup
-    keys; duplicate groups are small so the per-group sort is cheap."""
-    return _nl(spark, sf_dir, "documents", _P55_DESC)
-
-
-_P56_DESC = (
-    "Add tier column as 'low' when o_totalprice < 100000, "
-    "'mid' when o_totalprice < 300000, otherwise 'high' "
-    "and then group by tier and count o_orderkey."
+    keys; duplicate groups are small so the per-group sort is cheap.""",
 )
 
 
-def _p56_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P56_DESC,
-            columns=["o_orderkey", "o_custkey", "o_orderstatus",
-                     "o_totalprice", "o_orderpriority"],
-        ),
-        "orders",
-    )
-
-
-@register("p56_nl_case_when", _p56_oracle())
-def p56_nl_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p56_nl_case_when", "orders",
+    "Add tier column as 'low' when o_totalprice < 100000, "
+    "'mid' when o_totalprice < 300000, otherwise 'high' "
+    "and then group by tier and count o_orderkey.",
     """NL CASE expression: "add <col> column as 'low' when ..., 'mid'
     when ..., otherwise 'high'" — the categorize/bucket phrasing every
     labeling pipeline needs, compiled to an ANSI first-match-wins
@@ -3160,61 +2920,29 @@ def p56_nl_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes (a bare string in expression position is column-ref sugar).
     Reference parity: the closest reference eval shapes are the
     computed-column descriptions (agentic_workflow_transformation.py:339-362);
-    this extends them with multi-branch categorization."""
-    return _nl(spark, sf_dir, "orders", _P56_DESC)
-
-
-_P59_DESC = (
-    "Filter rows where lang == 'en' and "
-    "search for 'vector stream window' and show top 5 matches"
+    this extends them with multi-branch categorization.""",
 )
 
 
-def _p59_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P59_DESC, columns=["doc_id", "text", "lang", "source", "n_chars"]
-        ),
-        "documents",
-    )
-
-
-@register("p59_nl_search", _p59_oracle())
-def p59_nl_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p59_nl_search", "documents",
+    "Filter rows where lang == 'en' and "
+    "search for 'vector stream window' and show top 5 matches",
     """NL lexical search: "search for '<terms>' and show top N
     matches" — BM25 as a first-class spec op, composable with the rest
     of the grammar (here: a language filter narrows the corpus BEFORE
     scoring, so df/N/avgdl are per-slice as a search engine would
     compute them). Same plan as ns_text_bm25: term filter inside the
-    scan stage, broadcast statistics, TakeOrderedAndProject."""
-    return _nl(spark, sf_dir, "documents", _P59_DESC)
+    scan stage, broadcast statistics, TakeOrderedAndProject.""",
+)
 
 
-_P57_DESC = (
+_register_nl(
+    "p57_nl_fillna", "orders",
     "Rename o_orderkey to l_orderkey and "
     "left join with lineitem on l_orderkey and "
     "replace missing l_quantity with 0 and then "
-    "group by o_orderpriority and show average l_quantity"
-)
-_P58_DESC = (
-    "Convert o_totalprice to integer and "
-    "select o_orderkey, o_totalprice and "
-    "sort by o_totalprice desc, o_orderkey and keep top 10"
-)
-_ORDERS_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-                "o_orderpriority"]
-
-
-def _nl_orders_oracle(desc: str) -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(desc, columns=_ORDERS_COLS), "orders")
-
-
-@register("p57_nl_fillna", _nl_orders_oracle(_P57_DESC))
-def p57_nl_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "group by o_orderpriority and show average l_quantity",
     """NL null fill after an outer join: 'replace missing X with 0' —
     the coalesce-in-place clause every left-join pipeline needs before
     aggregating (null-extended rows count as 0, not as absent). The
@@ -3222,125 +2950,80 @@ def p57_nl_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bare '*, expr AS name' would leave TWO columns with that name in
     the oracle engine and later references would silently bind to the
     ORIGINAL (the bug this phrasing's round-7 test caught). Spark side
-    is withColumn — pure projection, no new exchange."""
-    return _nl(spark, sf_dir, "orders", _P57_DESC,
-               extra_tables=("lineitem",))
+    is withColumn — pure projection, no new exchange.""",
+    extra_tables=("lineitem",),
+)
 
 
-@register("p58_nl_convert", _nl_orders_oracle(_P58_DESC))
-def p58_nl_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p58_nl_convert", "orders",
+    "Convert o_totalprice to integer and "
+    "select o_orderkey, o_totalprice and "
+    "sort by o_totalprice desc, o_orderkey and keep top 10",
     """NL type conversion: 'convert X to integer' — in-place cast
     (replace=True spec op). Cross-engine pin: Spark's numeric->integer
     cast TRUNCATES toward zero while DuckDB's CAST rounds half-up, so
     sqlgen renders integer casts as CAST(trunc(x) AS BIGINT). Top-k
     sorts on the converted value with the key as tie-break (truncation
-    creates ties the original doubles didn't have)."""
-    return _nl(spark, sf_dir, "orders", _P58_DESC)
-
-
-_P60_DESC = (
-    "Rename o_orderkey to l_orderkey and "
-    "left join with lineitem on l_orderkey and then "
-    "group by o_orderpriority and show count rows, "
-    "count missing l_quantity and maximum o_totalprice"
+    creates ties the original doubles didn't have).""",
 )
 
 
-def _p60_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P60_DESC, columns=_ORDERS_COLS), "orders"
-    )
-
-
-@register("p60_nl_count_missing", _p60_oracle())
-def p60_nl_count_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p60_nl_count_missing", "orders",
+    "Rename o_orderkey to l_orderkey and "
+    "left join with lineitem on l_orderkey and then "
+    "group by o_orderpriority and show count rows, "
+    "count missing l_quantity and maximum o_totalprice",
     """NL completeness audit: 'count missing X' — the count_nulls
     aggregate (count of CASE WHEN x IS NULL), here counting orders a
     left join failed to match, alongside count rows and a max in ONE
     aggregation pass. The everyday data-quality question ('how many
     rows lack a value per segment?') reached from plain English; the
     Spark side is F.count(F.when(isNull)) — integer-exact, no
-    determinism caveats."""
-    return _nl(spark, sf_dir, "orders", _P60_DESC,
-               extra_tables=("lineitem",))
-
-
-_P61_DESC = (
-    "Rename l_partkey to p_partkey and join with part on p_partkey "
-    "and fit l_extendedprice on l_quantity per p_brand"
+    determinism caveats.""",
+    extra_tables=("lineitem",),
 )
 
 
-def _p61_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P61_DESC,
-            columns=["l_orderkey", "l_partkey", "l_quantity",
-                     "l_extendedprice"],
-        ),
-        "lineitem",
-    )
-
-
-@register("p61_nl_fit_ols", _p61_oracle())
-def p61_nl_fit_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p61_nl_fit_ols", "lineitem",
+    "Rename l_partkey to p_partkey and join with part on p_partkey "
+    "and fit l_extendedprice on l_quantity per p_brand",
     """NL regression: 'fit Y on X per K' — per-group OLS
     (slope/intercept/r2) as a first-class spec op riding on
     operators/stats.groupwise_ols: five decimal-exact moments in ONE
     map-side-combined aggregate, closed forms in a fixed double shape,
     rounded on report. Composes with the join grammar (the rename
     aligns the key; the fit runs over the joined frame) — the
-    fit-a-line-per-segment ask in plain English."""
-    return _nl(spark, sf_dir, "lineitem", _P61_DESC,
-               extra_tables=("part",))
+    fit-a-line-per-segment ask in plain English.""",
+    extra_tables=("part",),
+)
 
 
 # --- round-8: the LLM-corpus operators join the NL surface ---------------
 # (VERDICT r7 gap #2: dedup / near-dup / decontaminate / pack were
 # API-only registrations — "the engine's NL story left half-told").
 
-_DOCS_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
-_P62_DESC = (
+_register_nl(
+    "p62_nl_dedup_docs", "documents",
     "Remove duplicate documents keeping the first and "
-    "select doc_id, lang, n_chars"
-)
-_P63_DESC = (
-    "Filter rows where lang == 'en' and "
-    "remove near-duplicate documents above 0.5 similarity and "
-    "select doc_id, lang"
-)
-_P64_DESC = "Drop documents that appear in benchmark and select doc_id, lang"
-_P65_DESC = (
-    "Filter rows where n_chars > 100 and "
-    "pack documents into sequences of 512 tokens"
-)
-
-
-def _docs_nl_oracle(desc: str) -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(desc, columns=_DOCS_COLS),
-                       "documents")
-
-
-@register("p62_nl_dedup_docs", _docs_nl_oracle(_P62_DESC))
-def p62_nl_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "select doc_id, lang, n_chars",
     """NL exact dedup: 'remove duplicate documents keeping the first'
     routes to the keyed-dedup spec op (keys=[text], keep lowest
     doc_id) — deterministic keeper, oracle-rendered row_number chain.
     Scale: one hash exchange; at 100 TB swap the key for md5(text) so
     the shuffle carries digests (dedup.exact_dedup_groups is that
-    form; the NL op keeps the row-preserving semantics)."""
-    return _nl(spark, sf_dir, "documents", _P62_DESC)
+    form; the NL op keeps the row-preserving semantics).""",
+)
 
 
-@register("p63_nl_neardup", _docs_nl_oracle(_P63_DESC))
-def p63_nl_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p63_nl_neardup", "documents",
+    "Filter rows where lang == 'en' and "
+    "remove near-duplicate documents above 0.5 similarity and "
+    "select doc_id, lang",
     """NL fuzzy dedup: 'remove near-duplicate documents above T
     similarity' — the full LSH chain (16 md5 minhashes, 4-band
     candidates, exact Jaccard on survivors) behind one English clause,
@@ -3348,14 +3031,15 @@ def p63_nl_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup at a lower id). Composes with the filter grammar: the
     language slice narrows the corpus BEFORE shingling. The oracle
     unrolls the identical chain in SQL — the NL layer inherits the
-    dedup family's hash-exactness."""
-    return _nl(spark, sf_dir, "documents", _P63_DESC)
+    dedup family's hash-exactness.""",
+)
+
+
+_P64_DESC = "Drop documents that appear in benchmark and select doc_id, lang"
 
 
 def _p64_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    spec = parse_description(_P64_DESC, columns=_DOCS_COLS)
+    spec = parse_description(_P64_DESC, columns=_TABLE_COLUMNS["documents"])
     for op in spec["ops"]:
         # the benchmark table exists Spark-side via the compiler's
         # table map; the DuckDB oracle gets it as an inline slice of
@@ -3388,50 +3072,23 @@ def p64_nl_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_P66_DESC = "Find the 10 most similar vectors to vector 42"
-
-
-def _p66_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P66_DESC, columns=["vec_id", "embedding", "label"]),
-        "embeddings",
-    )
-
-
-@register("p66_nl_ann", _p66_oracle())
-def p66_nl_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p66_nl_ann", "embeddings",
+    "Find the 10 most similar vectors to vector 42",
     """NL similarity search: 'find the K most similar vectors to
     vector N' — exact cosine top-k (similarity.topk_cosine_bruteforce)
     as a spec op: the broadcast-query scan + TakeOrderedAndProject
     baseline of the ANN family, now reachable from plain English the
     way search (p59) and regression (p61) are. The approximate tiers
     (sign-LSH, IVF, PQ, IVFADC) stay API registrations — picking an
-    index is a deployment decision, not an NL phrasing."""
-    return _nl(spark, sf_dir, "embeddings", _P66_DESC)
-
-
-_P67_DESC = (
-    "Extract the number k from props and filter rows where k > 80 "
-    "and select event_id, event_type, k"
+    index is a deployment decision, not an NL phrasing.""",
 )
 
 
-def _p67_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P67_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-        ),
-        "events",
-    )
-
-
-@register("p67_nl_json_extract", _p67_oracle())
-def p67_nl_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p67_nl_json_extract", "events",
+    "Extract the number k from props and filter rows where k > 80 "
+    "and select event_id, event_type, k",
     """NL semi-structured extraction: 'extract the number k from
     props' — the json_get expression op (get_json_object JVM-side /
     json_extract_string in the oracle) surfaced as an English clause,
@@ -3439,18 +3096,14 @@ def p67_nl_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JSON text scalar to DOUBLE (the portable numeric form; string
     -> integer casts are engine-divergent and stay rejected). The
     extraction is a pure per-row expression inside whole-stage
-    codegen: no shuffle, no UDF, filter pushes to the scan."""
-    return _nl(spark, sf_dir, "events", _P67_DESC)
-
-
-_P68_DESC = (
-    "Split into 90/5/5 train/val/test by doc_id and "
-    "select doc_id, lang, split"
+    codegen: no shuffle, no UDF, filter pushes to the scan.""",
 )
 
 
-@register("p68_nl_split", _docs_nl_oracle(_P68_DESC))
-def p68_nl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p68_nl_split", "documents",
+    "Split into 90/5/5 train/val/test by doc_id and "
+    "select doc_id, lang, split",
     """NL dataset splitting: 'split into 90/5/5 train/val/test by
     doc_id' — the N-way deterministic hash split
     (sampling.with_hash_split) as one English clause. Assignment is a
@@ -3458,133 +3111,85 @@ def p68_nl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared integer cutoffs), so it is stable under appends and
     repartitioning and needs no shuffle, no sampling pass, and no
     driver state — the property a 100 TB corpus split actually
-    requires (re-running on grown data never reassigns old rows)."""
-    return _nl(spark, sf_dir, "documents", _P68_DESC)
+    requires (re-running on grown data never reassigns old rows).""",
+)
 
 
-_P69_DESC = (
+_register_nl(
+    "p69_nl_langid", "documents",
     "Detect the language of each document and "
-    "select doc_id, lang, pred_lang"
-)
-_P70_DESC = (
-    "Count tokens in each document and filter rows where n_tokens > 60 "
-    "and select doc_id, n_words, n_tokens"
-)
-_P71_DESC = (
-    "Score the quality of each document and "
-    "select doc_id, n_words, quality_score"
-)
-
-
-@register("p69_nl_langid", _docs_nl_oracle(_P69_DESC))
-def p69_nl_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "select doc_id, lang, pred_lang",
     """NL language ID: 'detect the language of each document' —
     text.with_lang_id (stopword-vote argmax, deterministic ties,
     'und' fallback) as one English clause. Pure per-row array
     expressions inside whole-stage codegen; composes with the filter
-    and projection grammar."""
-    return _nl(spark, sf_dir, "documents", _P69_DESC)
+    and projection grammar.""",
+)
 
 
-@register("p70_nl_token_counts", _docs_nl_oracle(_P70_DESC))
-def p70_nl_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p70_nl_token_counts", "documents",
+    "Count tokens in each document and filter rows where n_tokens > 60 "
+    "and select doc_id, n_words, n_tokens",
     """NL tokenization stats: 'count tokens in each document' —
     text.with_token_counts (whitespace words + BPE-ish regex tokens)
     behind one clause, with the token-count threshold expressed in the
     same description. No shuffle; the filter runs on the derived
-    column in the same codegen stage."""
-    return _nl(spark, sf_dir, "documents", _P70_DESC)
+    column in the same codegen stage.""",
+)
 
 
-@register("p71_nl_quality", _docs_nl_oracle(_P71_DESC))
-def p71_nl_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p71_nl_quality", "documents",
+    "Score the quality of each document and "
+    "select doc_id, n_words, quality_score",
     """NL quality scoring: 'score the quality of each document' —
     text.with_quality_score's five typed columns (length, mean word
     length, stopword ratio, non-alnum ratio, composite score) from one
     English clause. The oracle re-renders the exact rounded-ratio
     composite, so the NL layer inherits the text family's
-    hash-exactness."""
-    return _nl(spark, sf_dir, "documents", _P71_DESC)
-
-
-_P72_DESC = (
-    "Winsorize value at 5/95 within each event_type and "
-    "select event_id, event_type, value_winsor, was_clamped"
+    hash-exactness.""",
 )
 
 
-def _p72_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P72_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-        ),
-        "events",
-    )
-
-
-@register("p72_nl_winsorize", _p72_oracle())
-def p72_nl_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p72_nl_winsorize", "events",
+    "Winsorize value at 5/95 within each event_type and "
+    "select event_id, event_type, value_winsor, was_clamped",
     """NL outlier taming: 'winsorize value at 5/95 within each
     event_type' — stats.winsorize_group (exact-percentile clamp via a
     broadcast-back group frame) as one English clause, composing with
     the projection grammar. The fact side never shuffles on a
     data-sized key; at 100 TB the exact percentile swaps for
-    percentile_approx with the same plan shape."""
-    return _nl(spark, sf_dir, "events", _P72_DESC)
-
-
-_P73_DESC = (
-    "Resample value every 6 hours per user_id with linear interpolation"
+    percentile_approx with the same plan shape.""",
 )
 
 
-def _p73_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P73_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-        ),
-        "events",
-    )
-
-
-@register("p73_nl_resample", _p73_oracle())
-def p73_nl_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p73_nl_resample", "events",
+    "Resample value every 6 hours per user_id with linear interpolation",
     """NL time-series regularization: 'resample value every 6 hours
     per user_id with linear interpolation' —
     timeseries.resample_interpolate behind one clause. The grid is
     bounded by wall-clock span; the four fill windows share one
     (key, epoch) exchange; the oracle re-renders the identical IEEE
-    interpolation shape so the NL layer inherits hash-exactness."""
-    return _nl(spark, sf_dir, "events", _P73_DESC)
-
-
-_P74_DESC = (
-    "Filter rows where lang == 'en' and "
-    "chunk documents into 32-word chunks every 16 words"
+    interpolation shape so the NL layer inherits hash-exactness.""",
 )
 
 
-@register("p74_nl_chunk", _docs_nl_oracle(_P74_DESC))
-def p74_nl_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p74_nl_chunk", "documents",
+    "Filter rows where lang == 'en' and "
+    "chunk documents into 32-word chunks every 16 words",
     """NL context-window preparation: 'chunk documents into 32-word
     chunks every 16 words' — corpus.chunk_documents (sliding-window
     explode, overlapping when stride < size, tail kept) behind one
     clause, composing with the filter grammar. A pure narrow row
-    expansion: no shuffle, no Python."""
-    return _nl(spark, sf_dir, "documents", _P74_DESC)
+    expansion: no shuffle, no Python.""",
+)
 
 
 _P75_DESC = "Merge updates into the table on o_orderkey"
-_P75_COLS = [
-    "o_orderkey", "o_custkey", "o_orderstatus",
-    "o_totalprice", "o_orderdate", "o_orderpriority",
-]
 
 
 def _p75_updates_sql() -> str:
@@ -3600,9 +3205,7 @@ def _p75_updates_sql() -> str:
 
 
 def _p75_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    spec = parse_description(_P75_DESC, columns=_P75_COLS)
+    spec = parse_description(_P75_DESC, columns=_TABLE_COLUMNS["orders"])
     for op in spec["ops"]:
         if op["op"] == "merge":
             # the updates table exists Spark-side via the compiler's
@@ -3610,7 +3213,7 @@ def _p75_oracle() -> str:
             # the renderer needs the column list the compiler reads
             # off the schema
             op["right"] = _p75_updates_sql()
-            op["cols"] = _P75_COLS
+            op["cols"] = _TABLE_COLUMNS["orders"]
     return spec_to_sql(spec, "orders")
 
 
@@ -3648,98 +3251,73 @@ def p75_nl_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_P76_DESC = "Pick 3 negatives per vector from a pool of 64"
-
-
-def _p76_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(_P76_DESC, columns=["vec_id", "embedding", "label"]),
-        "embeddings",
-    )
-
-
-@register("p76_nl_negatives", _p76_oracle())
-def p76_nl_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p76_nl_negatives", "embeddings",
+    "Pick 3 negatives per vector from a pool of 64",
     """NL contrastive sampling: 'pick 3 negatives per vector from a
     pool of 64' — sampling.negative_samples behind one clause: each
     anchor draws different-label negatives from a fixed broadcast
     pool, ranked per anchor by md5(anchor|candidate). Anchor x
-    constant work, linear at 100 TB."""
-    return _nl(spark, sf_dir, "embeddings", _P76_DESC)
-
-
-_P79_DESC = (
-    "Check that doc_id is unique and text is not null and "
-    "lang is in 'en', 'de' and at least 100 rows"
+    constant work, linear at 100 TB.""",
 )
 
 
-@register("p79_nl_expectations", _docs_nl_oracle(_P79_DESC))
-def p79_nl_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p79_nl_expectations", "documents",
+    "Check that doc_id is unique and text is not null and "
+    "lang is in 'en', 'de' and at least 100 rows",
     """NL data-quality contract: 'check that doc_id is unique and text
     is not null and lang is in ... and at least 100 rows' —
     quality.check_expectations behind one clause. Every per-row check
     is a conditional sum and uniqueness an exact count-distinct inside
     ONE aggregate scan; the report explodes from the 1-row frame. The
     two-language accepted-values list fails on purpose so the fixture
-    exercises non-zero violation counts."""
-    return _nl(spark, sf_dir, "documents", _P79_DESC)
-
-
-_P80_DESC = (
-    "Apply the gopher quality rules to each document and "
-    "select doc_id, lang, n_words, mean_word_len, alpha_ratio, "
-    "n_req_stopwords, r_word_count, r_word_len, r_stopwords, passes_gopher"
+    exercises non-zero violation counts.""",
 )
 
 
-@register("p80_nl_gopher", _docs_nl_oracle(_P80_DESC))
-def p80_nl_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p80_nl_gopher", "documents",
+    "Apply the gopher quality rules to each document and "
+    "select doc_id, lang, n_words, mean_word_len, alpha_ratio, "
+    "n_req_stopwords, r_word_count, r_word_len, r_stopwords, passes_gopher",
     """NL heuristic quality filtering: 'apply the gopher quality rules
     to each document' — text.gopher_rules (the published Rae et al.
     2021 rule battery) behind one clause, composing with the
     projection grammar. Pure per-row string expressions inside
     whole-stage codegen, no shuffle; the oracle re-renders every rule
     from the same GOPHER_BOUNDS constants so thresholds cannot
-    drift between engines."""
-    return _nl(spark, sf_dir, "documents", _P80_DESC)
+    drift between engines.""",
+)
 
 
-_P81_DESC = "Weight documents by importance to lang 'en'"
-
-
-@register("p81_nl_dsir", _docs_nl_oracle(_P81_DESC))
-def p81_nl_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p81_nl_dsir", "documents",
+    "Weight documents by importance to lang 'en'",
     """NL data selection: 'weight documents by importance to lang
     <value>' — corpus.dsir_log_weights (DSIR, arXiv:2302.03169)
     behind one clause: hashed bag-of-words log-likelihood ratio of the
     target slice vs the whole corpus, per document. The estimate pass
     collapses map-side to 16 rows; the scoring join is broadcast; the
     per-doc sum is decimal-exact. The oracle unrolls the identical
-    three-CTE chain."""
-    return _nl(spark, sf_dir, "documents", _P81_DESC)
+    three-CTE chain.""",
+)
 
 
-_P82_DESC = "Compute token fertility per lang"
-
-
-@register("p82_nl_fertility", _docs_nl_oracle(_P82_DESC))
-def p82_nl_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p82_nl_fertility", "documents",
+    "Compute token fertility per lang",
     """NL tokenizer audit: 'compute token fertility per <key>' —
     text.token_fertility_by_lang behind one clause (schema-replacing,
     like ols/dsir). Exact integer sums feed one fixed double division
     per group, so the oracle is hash-exact; one scan, one
-    partial-aggregated exchange on the group key."""
-    return _nl(spark, sf_dir, "documents", _P82_DESC)
+    partial-aggregated exchange on the group key.""",
+)
 
 
-_P83_DESC = "Audit 5-gram duplication per source"
-
-
-@register("p83_nl_dup_audit", _docs_nl_oracle(_P83_DESC))
-def p83_nl_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p83_nl_dup_audit", "documents",
+    "Audit 5-gram duplication per source",
     """NL corpus-contamination audit: 'audit <n>-gram duplication per
     <key>' — corpus.dup_rate_by_source behind one clause
     (schema-replacing, like fertility/dsir): per-group fraction of
@@ -3747,19 +3325,15 @@ def p83_nl_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     with other groups. One shingle explode whose exchanges carry
     60-bit digests; per-gram totals via a window over the digest (no
     self-join re-scan); the per-group doc count joins broadcast. The
-    oracle unrolls the identical digest/aggregate chain."""
-    return _nl(spark, sf_dir, "documents", _P83_DESC)
-
-
-_P84_DESC = (
-    "Filter rows where lang == 'en' and "
-    "remove documents sharing fingerprinted passages above 0.5 overlap "
-    "and select doc_id, source"
+    oracle unrolls the identical digest/aggregate chain.""",
 )
 
 
-@register("p84_nl_winnow_dedup", _docs_nl_oracle(_P84_DESC))
-def p84_nl_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p84_nl_winnow_dedup", "documents",
+    "Filter rows where lang == 'en' and "
+    "remove documents sharing fingerprinted passages above 0.5 overlap "
+    "and select doc_id, source",
     """NL winnowing dedup: 'remove documents sharing fingerprinted
     passages above T overlap' — dedup.winnow_shared_pairs (MOSS
     winnowing, SIGMOD'03) behind one clause with greedy keep-first
@@ -3768,48 +3342,40 @@ def p84_nl_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-substring guarantee, the >max_df boilerplate guard runs as
     an aggregate + semi-join (no single-task window sort on a hot
     fingerprint), and the final anti join touches the corpus once.
-    The oracle unrolls the identical window-min/pair chain."""
-    return _nl(spark, sf_dir, "documents", _P84_DESC)
+    The oracle unrolls the identical window-min/pair chain.""",
+)
 
 
-_P85_DESC = "Report vocabulary divergence per source"
-
-
-@register("p85_nl_vocab_divergence", _docs_nl_oracle(_P85_DESC))
-def p85_nl_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p85_nl_vocab_divergence", "documents",
+    "Report vocabulary divergence per source",
     """NL corpus-similarity map: 'report vocabulary divergence per
     <key>' — corpus.js_divergence_by_group behind one clause
     (schema-replacing, like dup_by_source): pairwise Jensen-Shannon
     divergence between per-group unigram distributions, with the
     union-of-vocab sum folded into intersection-only join terms plus
     closed-form one-sided mass. The oracle renders the identical
-    fold."""
-    return _nl(spark, sf_dir, "documents", _P85_DESC)
+    fold.""",
+)
 
 
-_P86_DESC = "Report the dedup savings per source"
-
-
-@register("p86_nl_dedup_savings", _docs_nl_oracle(_P86_DESC))
-def p86_nl_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p86_nl_dedup_savings", "documents",
+    "Report the dedup savings per source",
     """NL dedup pricing: 'report the dedup savings per <key>' —
     dedup.dedup_savings_by_source behind one clause (schema-replacing,
     like dup_by_source): per group, the documents and characters a
     corpus-wide lowest-id-keeper exact dedup removes. One digest
     aggregate (exchanges carry 16-byte md5, never text) and a
     group-cardinality rollup. The oracle renders the identical
-    keeper-join chain."""
-    return _nl(spark, sf_dir, "documents", _P86_DESC)
-
-
-_P87_DESC = (
-    "Remove documents containing the words 'spark', 'merge' "
-    "and select doc_id, lang, n_chars"
+    keeper-join chain.""",
 )
 
 
-@register("p87_nl_blocklist", _docs_nl_oracle(_P87_DESC))
-def p87_nl_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p87_nl_blocklist", "documents",
+    "Remove documents containing the words 'spark', 'merge' "
+    "and select doc_id, lang, n_chars",
     """NL C4-style blocklist screen: 'remove documents containing the
     words ...' — text.blocklist_screen behind one clause: drop every
     document whose lowercased word set intersects the quoted list
@@ -3818,60 +3384,39 @@ def p87_nl_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the predicate, codegens into the scan, no shuffle — at
     100 TB it rides the scan you already pay; beyond a few thousand
     words switch to the broadcast-join form (corpus.contaminated_ids).
-    The oracle renders the identical list_has_any intersection."""
-    return _nl(spark, sf_dir, "documents", _P87_DESC)
+    The oracle renders the identical list_has_any intersection.""",
+)
 
 
-_P88_DESC = "Check k-anonymity of user_id and event_type at 5"
-
-
-def _p88_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P88_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p88_nl_kanonymity", _p88_oracle())
-def p88_nl_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p88_nl_kanonymity", "events",
+    "Check k-anonymity of user_id and event_type at 5",
     """NL privacy audit: 'check k-anonymity of <cols> at <k>' —
     quality.k_anonymity_audit behind one clause (schema-replacing,
     like expect): one report row counting quasi-identifier groups
     smaller than k and the rows they expose. One hash aggregate on
     the quasi key folded to a single row; integer-exact except the
     one rounded ratio. The oracle renders the identical two-level
-    aggregate."""
-    return _nl(spark, sf_dir, "events", _P88_DESC)
+    aggregate.""",
+)
 
 
-_P89_DESC = "Compute the word entropy of each document"
-
-
-@register("p89_nl_word_entropy", _docs_nl_oracle(_P89_DESC))
-def p89_nl_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p89_nl_word_entropy", "documents",
+    "Compute the word entropy of each document",
     """NL repetition screen: 'compute the word entropy of each
     document' — text.word_entropy behind one clause (schema-replacing):
     per-doc Shannon entropy of the word distribution plus evenness,
     the model-free gibberish/template signal. cnt*log2(cnt) terms pin
     DECIMAL(18,8) so the per-doc sum is partition-order exact; one
     explode and two map-side-combinable aggregates, no joins. The
-    oracle renders the identical pinned-term chain."""
-    return _nl(spark, sf_dir, "documents", _P89_DESC)
-
-
-_P90_DESC = (
-    "Report the out-of-vocabulary rate per source against the top 100 words"
+    oracle renders the identical pinned-term chain.""",
 )
 
 
-@register("p90_nl_oov", _docs_nl_oracle(_P90_DESC))
-def p90_nl_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p90_nl_oov", "documents",
+    "Report the out-of-vocabulary rate per source against the top 100 words",
     """NL tokenizer-coverage audit: 'report the out-of-vocabulary rate
     per <key> [against the top N words]' — text.oov_rate_by_group
     behind one clause (schema-replacing): per group, tokens outside
@@ -3879,28 +3424,13 @@ def p90_nl_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode feeds both the TakeOrdered vocabulary (never a global
     window) and the per-group counts; the v-row vocabulary broadcasts
     into the membership join. The oracle renders the identical
-    vocab + membership chain."""
-    return _nl(spark, sf_dir, "documents", _P90_DESC)
+    vocab + membership chain.""",
+)
 
 
-_P91_DESC = "Take the majority vote of event_type per user_id"
-
-
-def _p91_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P91_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p91_nl_majority", _p91_oracle())
-def p91_nl_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p91_nl_majority", "events",
+    "Take the majority vote of event_type per user_id",
     """NL label aggregation: 'take the majority vote of <label> per
     <key>' — quality.majority_vote behind one clause (schema-
     replacing): per key the winning label with total ratings, vote
@@ -3908,19 +3438,15 @@ def p91_nl_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     label, flagged). One (key, label) hash aggregate plus one
     key-partitioned window reading the top two rows; integer-exact
     except the rounded share. The oracle renders the identical
-    aggregate + window chain."""
-    return _nl(spark, sf_dir, "events", _P91_DESC)
-
-
-_P92_DESC = (
-    "Score the quality of each document and then remove duplicates by "
-    "lang and source keeping the highest quality_score breaking ties "
-    "by doc_id"
+    aggregate + window chain.""",
 )
 
 
-@register("p92_nl_quality_dedup", _docs_nl_oracle(_P92_DESC))
-def p92_nl_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p92_nl_quality_dedup", "documents",
+    "Score the quality of each document and then remove duplicates by "
+    "lang and source keeping the highest quality_score breaking ties "
+    "by doc_id",
     """NL quality-aware exemplar selection: two composed clauses —
     the quality projection, then keyed dedup keeping the HIGHEST
     quality_score with the new 'breaking ties by <col>' suffix making
@@ -3929,58 +3455,26 @@ def p92_nl_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     curator's 'best representative per (lang, source)' table. One
     scan, one exchange on the dedup keys, per-group sort of small
     groups; the oracle renders the identical row_number chain with the
-    ascending tiebreak."""
-    return _nl(spark, sf_dir, "documents", _P92_DESC)
+    ascending tiebreak.""",
+)
 
 
-_P93_DESC = "Compute the inter-annotator agreement of event_type per user_id"
-
-
-def _p93_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P93_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p93_nl_agreement", _p93_oracle())
-def p93_nl_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p93_nl_agreement", "events",
+    "Compute the inter-annotator agreement of event_type per user_id",
     """NL agreement gate: 'compute the inter-annotator agreement of
     <label> per <key>' — stats.krippendorff_alpha behind one clause
     (schema-replacing): the nominal coincidence-matrix alpha over
     however many ratings each key has (no fixed-n trimming), one
     report row out. Exact integer marginals, DECIMAL(24,12)-pinned
-    per-item quotients; the oracle renders the identical chain."""
-    return _nl(spark, sf_dir, "events", _P93_DESC)
-
-
-_P94_DESC = (
-    "Add exponential moving average of value over last 5 rows per "
-    "user_id ordered by event_id with smoothing 0.7"
+    per-item quotients; the oracle renders the identical chain.""",
 )
 
 
-def _p94_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P94_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p94_nl_ewma", _p94_oracle())
-def p94_nl_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p94_nl_ewma", "events",
+    "Add exponential moving average of value over last 5 rows per "
+    "user_id ordered by event_id with smoothing 0.7",
     """NL smoothing window: 'add exponential moving average of <col>
     over last N rows per <key> ordered by <o> [with smoothing a]' —
     the ewma window fn compiles to a BOUNDED weighted lag chain
@@ -3989,31 +3483,14 @@ def p94_nl_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the double result is bit-identical cross-engine with no
     recursive state and no UDF; the N lags share the window's one
     sort per key. The unique event_id order key keeps the chain
-    tie-deterministic. The oracle renders the identical chain."""
-    return _nl(spark, sf_dir, "events", _P94_DESC)
-
-
-_P95_DESC = (
-    "Flag anomalies in value over last 20 rows per user_id ordered by "
-    "event_id above z 2.5"
+    tie-deterministic. The oracle renders the identical chain.""",
 )
 
 
-def _p95_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P95_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p95_nl_anomaly", _p95_oracle())
-def p95_nl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p95_nl_anomaly", "events",
+    "Flag anomalies in value over last 20 rows per user_id ordered by "
+    "event_id above z 2.5",
     """NL metric monitoring: 'flag anomalies in <col> over last N rows
     per <key> ordered by <o> [above z <t>]' — rolling z-score flags
     (timeseries.rolling_zscore_anomalies) behind one clause: each row
@@ -4022,41 +3499,22 @@ def p95_nl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY frame fold order (sliding-window segment trees reorder float
     additions; decimals don't care); one exchange on the key, three
     frame aggregates sharing one sort. The oracle renders the
-    identical pinned chain."""
-    return _nl(spark, sf_dir, "events", _P95_DESC)
-
-
-_P96_DESC = (
-    "Compute the correlation matrix of l_quantity, l_extendedprice, "
-    "l_discount and l_tax"
+    identical pinned chain.""",
 )
 
 
-def _p96_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P96_DESC,
-            columns=["l_orderkey", "l_partkey", "l_suppkey",
-                     "l_linenumber", "l_quantity", "l_extendedprice",
-                     "l_discount", "l_tax", "l_returnflag",
-                     "l_linestatus", "l_shipdate"],
-        ),
-        "lineitem",
-    )
-
-
-@register("p96_nl_correlate", _p96_oracle())
-def p96_nl_correlate(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p96_nl_correlate", "lineitem",
+    "Compute the correlation matrix of l_quantity, l_extendedprice, "
+    "l_discount and l_tax",
     """NL profiling: 'compute the correlation matrix of <cols>' —
     profile.correlation_matrix behind one clause (schema-replacing):
     one row per unordered pair with decimal-exact moments collected
     in a SINGLE global aggregate (one scan for any number of
     columns), r closed-form in doubles, NULL on zero variance. The
     oracle renders the identical pinned chain with the DECIMAL(24,6)
-    product widening DuckDB's int64 DECIMAL multiply needs."""
-    return _nl(spark, sf_dir, "lineitem", _P96_DESC)
+    product widening DuckDB's int64 DECIMAL multiply needs.""",
+)
 
 
 # round-9 NL additions (VERDICT r8 ask #6): the evaluation layer in
@@ -4065,49 +3523,35 @@ def p96_nl_correlate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window; their driver rows come with the r10 rotation; fresh local
 # rows in CORRECTNESS_LOCAL.json meanwhile.
 
-_EMB_COLS = ["vec_id", "embedding", "label"]
 
-_P97_DESC = "Compute retrieval NDCG at 10 for the first 8 queries"
-
-
-def _emb_nl_oracle(desc: str) -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(desc, columns=_EMB_COLS),
-                       "embeddings")
-
-
-@register("p97_nl_ndcg", _emb_nl_oracle(_P97_DESC))
-def p97_nl_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p97_nl_ndcg", "embeddings",
+    "Compute retrieval NDCG at 10 for the first 8 queries",
     """NL retrieval evaluation: 'compute retrieval NDCG at <k> for the
     first <n> queries' — similarity.ndcg_per_query behind one clause
     (schema-replacing, one row per query): exact-cosine top-k with the
     query side broadcast and one corpus scan, binary label relevance,
     gains and ideal-DCG normalizers frozen as 12-decimal literals so
     both engines sum identical decimals. The oracle renders the same
-    chain with DuckDB's list_cosine_similarity."""
-    return _nl(spark, sf_dir, "embeddings", _P97_DESC)
+    chain with DuckDB's list_cosine_similarity.""",
+)
 
 
-_P98_DESC = "How well separated are the labels"
-
-
-@register("p98_nl_separation", _emb_nl_oracle(_P98_DESC))
-def p98_nl_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p98_nl_separation", "embeddings",
+    "How well separated are the labels",
     """NL cluster-quality question: 'how well separated are the
     labels' — similarity.simplified_silhouette behind one clause
     (schema-replacing, one row per label): centroid-form silhouette
     (LINEAR in rows, unlike Rousseeuw's all-pairs original), per-row s
     pinned DECIMAL(12,6) so the per-label mean is an exact decimal
-    sum. Broadcast centroid model, label-count fan-out only."""
-    return _nl(spark, sf_dir, "embeddings", _P98_DESC)
+    sum. Broadcast centroid model, label-count fan-out only.""",
+)
 
 
-_P99_DESC = "Train a BPE tokenizer with 5 merges"
-
-
-@register("p99_nl_bpe", _docs_nl_oracle(_P99_DESC))
-def p99_nl_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p99_nl_bpe", "documents",
+    "Train a BPE tokenizer with 5 merges",
     """NL tokenizer training: 'train a BPE tokenizer with <n> merges'
     — text.bpe_merge_table behind one clause (schema-replacing, one
     row per merge). The corpus collapses to its word-frequency table
@@ -4115,78 +3559,72 @@ def p99_nl_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE-ROW driver collect for the argmax merge (spec validation caps
     n at 20 — each merge is a driver round AND an unrolled oracle CTE
     block). The oracle unrolls the same doubled-boundary replace
-    algebra per round."""
-    return _nl(spark, sf_dir, "documents", _P99_DESC)
+    algebra per round.""",
+)
 
 
-_P100_DESC = "Bucket documents by perplexity against the src0 slice"
-
-
-@register("p100_nl_perplexity", _docs_nl_oracle(_P100_DESC))
-def p100_nl_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p100_nl_perplexity", "documents",
+    "Bucket documents by perplexity against the src0 slice",
     """NL corpus curation: 'bucket documents by perplexity against the
     <source> slice' — text.perplexity_buckets behind one clause
     (schema-replacing): cross-entropy under an add-one unigram LM
     trained on the reference slice, head/middle/tail tertiles per
     language via broadcast percentile cutoffs (no language-sized
     window sort). The oracle renders the identical smoothed-LM
-    chain."""
-    return _nl(spark, sf_dir, "documents", _P100_DESC)
-
-
-_P77_DESC = (
-    "Sample 10% of documents by doc_id and select doc_id, lang, n_chars"
+    chain.""",
 )
 
 
-@register("p77_nl_sample", _docs_nl_oracle(_P77_DESC))
-def p77_nl_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p77_nl_sample", "documents",
+    "Sample 10% of documents by doc_id and select doc_id, lang, n_chars",
     """NL deterministic sampling: 'sample 10% of documents by doc_id'
     — sampling.hash_sample behind one clause. A pure per-row md5-draw
     filter (never df.sample's engine-private RNG), so the same rows
     survive on every run, engine, and partitioning; at 100 TB the
     predicate codegens into the scan stage with no shuffle and no
-    state. The oracle renders the identical draw + integer cutoff."""
-    return _nl(spark, sf_dir, "documents", _P77_DESC)
-
-
-_P78_DESC = (
-    "Redact emails and numbers in each document and "
-    "select doc_id, text, n_masked"
+    state. The oracle renders the identical draw + integer cutoff.""",
 )
 
 
-@register("p78_nl_redact", _docs_nl_oracle(_P78_DESC))
-def p78_nl_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p78_nl_redact", "documents",
+    "Redact emails and numbers in each document and "
+    "select doc_id, text, n_masked",
     """NL PII scrub: 'redact emails and numbers in each document' —
     text.redact_text behind one clause, masking emails and long digit
     runs IN PLACE in the text column plus an n_masked audit count
     (matches against the original text, so replacement-order
-    independent). Pure JVM regex per row: no shuffle, no Python."""
-    return _nl(spark, sf_dir, "documents", _P78_DESC)
+    independent). Pure JVM regex per row: no shuffle, no Python.""",
+)
 
 
-@register("p65_nl_pack", _docs_nl_oracle(_P65_DESC))
-def p65_nl_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p65_nl_pack", "documents",
+    "Filter rows where n_chars > 100 and "
+    "pack documents into sequences of 512 tokens",
     """NL sequence packing: 'pack documents into sequences of N
     tokens' — corpus.pack_sequences behind one clause: id-ordered
     greedy fill into N-token training sequences, windowed per
     (lang, id-group) so no reducer ever holds a whole language.
     Composes with the filter grammar (short docs dropped before
-    packing). Output is the packed-sequence summary table."""
-    return _nl(spark, sf_dir, "documents", _P65_DESC)
+    packing). Output is the packed-sequence summary table.""",
+)
 
 
-@register("p51_nl_first_value", _p51_oracle())
-def p51_nl_first_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p51_nl_first_value", "events",
+    "Add first value per user_id ordered by event_id over last 3 rows and "
+    "select event_id, user_id, value and first_value.",
     """NL sliding first_value: 'first value ... over last 3 rows' =
     the value from two events back (or the earliest available) in each
     user's event_id order — the same ROWS frame the engine compiles as
     rowsBetween(-2, 0) and the oracle renders as ROWS BETWEEN 2
     PRECEDING AND CURRENT ROW (the round-7 frame fix: previously a
     first_value frame was silently dropped on both sides). event_id is
-    unique, so the pick is deterministic."""
-    return _nl(spark, sf_dir, "events", _P51_DESC)
+    unique, so the pick is deterministic.""",
+)
 
 
 @register(
@@ -4538,8 +3976,6 @@ _DESCRIPTIONS.update({
     "p06_with_column_bool": "NL pipeline on customer: add a computed boolean column (c_acctbal >= 5000) via the 'add <name> column where' clause.",
     "p17_sort_filter_limit": "NL pipeline on orders: sort, then filter, then limit folded in the stated clause order (order-sensitivity check).",
     "p18_groupby_avg_having": "NL pipeline on orders: group by o_orderpriority with decimal-exact average o_totalprice and a HAVING filter on the aggregate.",
-    "p22_nl_select_distinct": "NL pipeline on lineitem: 'Select distinct l_returnflag, l_linestatus' — projection then distinct (partial-agg dedup).",
-    "p25_nl_count_distinct": "NL pipeline on orders: global 'count distinct o_orderpriority' — a zero-key exact distinct aggregate.",
     "x_join_semi": "Left-semi join orders -> high-quantity lineitem (EXISTS shape): the right side's payload columns never leave its scan.",
     "x_join_anti": "Left-anti join customer -> orders (NOT EXISTS shape): customers with no orders, right side reduced to its join key.",
     "x_window_topk_per_group": "Top-3 orders by price per priority via one row_number window — a single sort within each partition, id tie-break.",
@@ -4550,11 +3986,9 @@ _DESCRIPTIONS.update({
 })
 
 
-_P101_DESC = "Audit the common direction of the embeddings"
-
-
-@register("p101_nl_common_direction", _emb_nl_oracle(_P101_DESC))
-def p101_nl_common_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p101_nl_common_direction", "embeddings",
+    "Audit the common direction of the embeddings",
     """NL embedding hygiene: 'audit the common direction of the
     embeddings' — linalg.common_direction_audit behind one clause
     (schema-replacing, one row per vector): the projection onto the
@@ -4563,180 +3997,115 @@ def p101_nl_common_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centered norm and projection ratio (the all-but-the-top
     correction's inputs, Mu & Viswanath ICLR 2018). The oracle unrolls
     the identical matvec+normalize rounds, so even the eigenvector is
-    hash-checked."""
-    return _nl(spark, sf_dir, "embeddings", _P101_DESC)
-
-
-_P102_DESC = (
-    "Allocate a training budget of 48000 tokens across sources "
-    "with at most 2 epochs"
+    hash-checked.""",
 )
 
 
-@register("p102_nl_unimax", _docs_nl_oracle(_P102_DESC))
-def p102_nl_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p102_nl_unimax", "documents",
+    "Allocate a training budget of 48000 tokens across sources "
+    "with at most 2 epochs",
     """NL data mixing: 'allocate a training budget of N tokens across
     <key> with at most E epochs' — UniMax epoch-capped allocation
     (corpus.unimax_allocation) behind one clause (schema-replacing,
     one row per group): capacity-ascending water-filling where the
     capped prefix is identified in pure-integer window arithmetic;
     same plan as ns_corpus_unimax. One corpus scan; all allocation
-    math on the group-cardinality frame."""
-    return _nl(spark, sf_dir, "documents", _P102_DESC)
-
-
-_P103_DESC = (
-    "Bootstrap a 95% confidence interval for the mean value per "
-    "event_type keyed by event_id with 40 replicates"
+    math on the group-cardinality frame.""",
 )
 
 
-def _p103_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P103_DESC,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        ),
-        "events",
-    )
-
-
-@register("p103_nl_bootstrap", _p103_oracle())
-def p103_nl_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p103_nl_bootstrap", "events",
+    "Bootstrap a 95% confidence interval for the mean value per "
+    "event_type keyed by event_id with 40 replicates",
     """NL uncertainty: 'bootstrap a 95% confidence interval for the
     mean <col> per <key> keyed by <id> [with B replicates]' — the
     Poisson bootstrap (stats.poisson_bootstrap_ci) behind one clause
     (schema-replacing, one CI row per group): B replicate means from
     ONE corpus scan via hash-derived Poisson(1) weights, nearest-rank
-    percentile picks; same plan as ns_stats_poisson_bootstrap."""
-    return _nl(spark, sf_dir, "events", _P103_DESC)
-
-
-
-_P104_DESC = (
-    "Compute the spearman correlation of l_quantity, l_extendedprice, "
-    "l_discount and l_tax"
+    percentile picks; same plan as ns_stats_poisson_bootstrap.""",
 )
 
 
-def _p104_oracle() -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(
-        parse_description(
-            _P104_DESC,
-            columns=["l_orderkey", "l_partkey", "l_suppkey",
-                     "l_linenumber", "l_quantity", "l_extendedprice",
-                     "l_discount", "l_tax", "l_returnflag",
-                     "l_linestatus", "l_shipdate"],
-        ),
-        "lineitem",
-    )
-
-
-@register("p104_nl_spearman", _p104_oracle())
-def p104_nl_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p104_nl_spearman", "lineitem",
+    "Compute the spearman correlation of l_quantity, l_extendedprice, "
+    "l_discount and l_tax",
     """NL profiling: 'compute the spearman correlation of <cols>' —
     profile.spearman_matrix behind one clause (schema-replacing):
     fractional ranks per column via the two-phase bucketed cumulative
     (no global sort), then the same decimal-pinned Pearson moment
     pass as p96 on the rank columns; the oracle renders the identical
-    rank + moment chain through sqlgen's shared _correlate_sql."""
-    return _nl(spark, sf_dir, "lineitem", _P104_DESC)
+    rank + moment chain through sqlgen's shared _correlate_sql.""",
+)
 
 
-_P105_DESC = "Compute the mutual information between lang and source"
-
-
-@register("p105_nl_mutual_info", _docs_nl_oracle(_P105_DESC))
-def p105_nl_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p105_nl_mutual_info", "documents",
+    "Compute the mutual information between lang and source",
     """NL dependence audit: 'compute the mutual information between
     <a> and <b>' — stats.mutual_information behind one clause
     (schema-replacing, one report row): one contingency scan,
     marginals/entropies derived from the cell frame, every log term
-    pinned DECIMAL(28,12); same chain as ns_stats_mutual_info."""
-    return _nl(spark, sf_dir, "documents", _P105_DESC)
+    pinned DECIMAL(28,12); same chain as ns_stats_mutual_info.""",
+)
 
 
-_EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-
-def _events_nl_oracle(desc: str) -> str:
-    from .plans.sqlgen import spec_to_sql
-
-    return spec_to_sql(parse_description(desc, columns=_EVENT_COLS),
-                       "events")
-
-
-_P106_DESC = "Compute the anova of value by event_type"
-
-
-@register("p106_nl_anova", _events_nl_oracle(_P106_DESC))
-def p106_nl_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p106_nl_anova", "events",
+    "Compute the anova of value by event_type",
     """NL variance decomposition: 'compute the anova of <value> by
     <group>' (also parses 'compare the mean <value> across <group>')
     — stats.anova_oneway behind one clause (schema-replacing, one
     F / eta^2 report row): one grouped sufficient-stats scan with
     DECIMAL-exact sums, the k-row reduction pinned DECIMAL(28,12);
-    same chain as ns_stats_anova."""
-    return _nl(spark, sf_dir, "events", _P106_DESC)
-
-
-_P107_DESC = (
-    "Compute the funnel of event_type steps view then click then "
-    "purchase per user_id ordered by ts"
+    same chain as ns_stats_anova.""",
 )
 
 
-@register("p107_nl_funnel", _events_nl_oracle(_P107_DESC))
-def p107_nl_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p107_nl_funnel", "events",
+    "Compute the funnel of event_type steps view then click then "
+    "purchase per user_id ordered by ts",
     """NL sequence analysis: 'compute the funnel of <type> steps <a>
     then <b> then <c> per <user> ordered by <ts>' —
     timeseries.funnel_steps behind one clause (schema-replacing, one
     row per step): per-stage min-ts frames chained on the user key
-    with strict-after semantics; same chain as x_funnel_conversion."""
-    return _nl(spark, sf_dir, "events", _P107_DESC)
+    with strict-after semantics; same chain as x_funnel_conversion.""",
+)
 
 
-_P108_DESC = "Score each document's 3-gram novelty"
-
-
-@register("p108_nl_novelty", _docs_nl_oracle(_P108_DESC))
-def p108_nl_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p108_nl_novelty", "documents",
+    "Score each document's 3-gram novelty",
     """NL corpus diagnostics: 'score each document's <n>-gram
     novelty' — text.ngram_novelty behind one clause
     (schema-replacing, per-doc rows): distinct-shingle explode,
     min-doc-id first-occurrence aggregate on the 60-bit gram hash;
-    same chain as ns_text_novelty."""
-    return _nl(spark, sf_dir, "documents", _P108_DESC)
+    same chain as ns_text_novelty.""",
+)
 
 
-_P109_DESC = "Audit the source concentration of the token mass"
-
-
-@register("p109_nl_concentration", _docs_nl_oracle(_P109_DESC))
-def p109_nl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p109_nl_concentration", "documents",
+    "Audit the source concentration of the token mass",
     """NL mix governance: 'audit the [source] concentration of the
     token mass [by <key>]' — corpus.concentration_audit behind one
     clause (schema-replacing, one HHI/Gini/top-share report row):
     one corpus scan, rank math on the group-cardinality frame behind
-    the pmod key; same chain as ns_corpus_concentration."""
-    return _nl(spark, sf_dir, "documents", _P109_DESC)
+    the pmod key; same chain as ns_corpus_concentration.""",
+)
 
 
-_P110_DESC = "Compute the hapax ratio per source"
-
-
-@register("p110_nl_hapax", _docs_nl_oracle(_P110_DESC))
-def p110_nl_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register_nl(
+    "p110_nl_hapax", "documents",
+    "Compute the hapax ratio per source",
     """NL lexical richness: 'compute the hapax ratio per <key>' —
     text.hapax_ratio behind one clause (schema-replacing, one row
     per group): token explode, (group, word) count, vocabulary
-    rollup; same chain as ns_text_hapax."""
-    return _nl(spark, sf_dir, "documents", _P110_DESC)
+    rollup; same chain as ns_text_hapax.""",
+)
 
 
 # round-9 session registrations (post-window; these lead the r10

@@ -106,6 +106,33 @@ def test_transform_job_count(spark, people, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
 
 
+def test_filter_then_union_passes_the_critic(spark, people, tmp_path):
+    """Rows appended by a union are not re-checked against a filter
+    that ran before it (the right side's age-20 row is correct)."""
+    others = spark.createDataFrame([("Zoe", 20, "Reno")], people.schema)
+    st = run_transform(
+        spark, people,
+        "Filter rows where age > 30 and append rows from others.",
+        out_dir=tmp_path, tables={"others": others},
+    )
+    assert st.valid and st.attempts == 1 and st.row_count == 8, st.messages
+
+
+def test_offline_critic_rejection_ends_the_loop(spark, people, tmp_path,
+                                                 monkeypatch):
+    """With no LLM the planner is deterministic: a critic rejection is
+    final and reported, not retried with a description the grammar
+    cannot parse."""
+    from agentic_workflow_for_data_transformation_spark.agents import orchestrator
+
+    monkeypatch.setattr(orchestrator, "critic_agent",
+                        lambda *a, **k: (False, "rejected on purpose", 0))
+    st = run_transform(spark, people, "Filter rows where age > 30",
+                       out_dir=tmp_path)
+    assert st.valid is False and st.attempts == 1
+    assert st.messages == ["attempt 1: rejected on purpose"]
+
+
 def test_llm_critic_can_veto_but_not_override(spark, people, tmp_path):
     naysayer = lambda prompt: "NO\nbecause I said so"  # noqa: E731
     st = run_transform(
@@ -173,7 +200,8 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
     be re-applied to the replaced output schema; a filter AFTER it
     must; with_column overwriting a filtered column invalidates that
     filter (live-LLM finding, round 8), and so does redact, which
-    rewrites its text column in place."""
+    rewrites its text column in place, and union, whose appended rows
+    no earlier filter saw."""
     from agentic_workflow_for_data_transformation_spark.agents.orchestrator import (
         _filter_exprs_on_output,
     )
@@ -197,6 +225,12 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
     spec = {"ops": [
         {"op": "filter", "expr": {"contains": ["text", "@"]}},
         {"op": "redact"},
+    ]}
+    assert _filter_exprs_on_output(spec) == []
+
+    spec = {"ops": [
+        {"op": "filter", "expr": {"gt": ["age", 30]}},
+        {"op": "union", "right": "others"},
     ]}
     assert _filter_exprs_on_output(spec) == []
 

@@ -74,3 +74,19 @@ def test_every_query_has_a_catalog_description():
     generated catalog has no blank cells (VERDICT r3 #6)."""
     blank = [k for k, v in benchqueries.descriptions().items() if not v.strip()]
     assert not blank, f"registrations with no catalog line: {blank[:10]}"
+
+
+def test_nl_oracle_schema_map_matches_testdata():
+    """NL oracles are rendered at import time from one static table ->
+    columns map, so it must list exactly the columns of every testdata
+    table, in file order (an unchecked hand-copied list once named a
+    column no table has)."""
+    from pathlib import Path
+
+    import pyarrow.dataset as ds
+
+    tables = {
+        p.name.removesuffix(".parquet"): ds.dataset(p, format="parquet").schema.names
+        for p in sorted(Path(SMOKE_SF_DIR).glob("*.parquet"))
+    }
+    assert benchqueries._TABLE_COLUMNS == tables

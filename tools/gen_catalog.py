@@ -1,6 +1,6 @@
 """Generate QUERIES.md: a catalog of every registered query — name,
 oracle status, and the first docstring line of its builder — so the
-76-entry registry is navigable without reading benchqueries.py.
+356-entry registry is navigable without reading benchqueries.py.
 
 Usage: python tools/gen_catalog.py  (writes QUERIES.md at repo root)
 """
