@@ -16,13 +16,13 @@ Shape and contracts follow the reference workflow
   empty results still produce a header-only file (AGENTIC_WORKFLOW.md:87).
 - critic_agent (:157-255): the reference asks an LLM YES/NO and with no
   LLM accepts blindly (:175-177). Here validation is deterministic:
-  schema check + row-count cross-check against the recomputed plan +
-  zero-predicate-violation check, the last two read from the written
-  file by ONE aggregate; the escape-hatch path runs the same check
-  core on the snippet's rerun. Same MAX_RETRIES = 2 budget (:159) when
-  an LLM re-plans; with no LLM the planner is deterministic, so a
-  rejection ends the loop. An LLM critic can be layered on top but is
-  never required.
+  schema check + row-count cross-check against a recount of the
+  executor's frame + zero-predicate-violation check, the last two read
+  from the written file by ONE aggregate; the escape-hatch path runs
+  the same check core on the snippet's frame. Same MAX_RETRIES = 2
+  budget (:159) when an LLM re-plans; with no LLM the planner is
+  deterministic, so a rejection ends the loop. An LLM critic can be
+  layered on top but is never required.
 - LLM degradation policy (G8, :9-12): every stage works with no LLM at
   all — and unlike the reference (whose offline path degenerates to an
   identity transform), the deterministic path runs the full eval corpus.
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..plans import compile_expr, compile_spec, parse_description, validate_spec
 from ..plans.escape import apply_snippet
 from ..plans.parser import ParseError
-from ..plans.spec import SpecError
+from ..plans.spec import SpecError, validate_expr
 from ..sources import read_csv, unique_output_path, write_csv_single
 
 MAX_RETRIES = 2  # same budget as the reference (:159)
@@ -314,62 +314,40 @@ def planner_agent(
 
 def escape_hatch_agent(
     df: DataFrame, description: str, llm: LLMClient, out_dir: str | Path
-) -> tuple[str, str, str, int]:
+) -> tuple[str, str, str, DataFrame]:
     """U1 escape hatch (SURVEY.md section 2.7): when neither the grammar
     nor the LLM-spec path can express a description, ask the LLM for a
     row-local pandas snippet + declared result schema, AST-validate it
     (plans/escape.py — no imports/I-O/exec, closed name set), and run it
     per Arrow batch via mapInPandas. The reference exec's the equivalent
     snippet on the driver (:123-150); here it is sandboxed and
-    partition-parallel. Returns (code, schema, output_path, row_count)."""
+    partition-parallel. Returns (code, schema, output_path, result)."""
     raw = llm(_PANDAS_PROMPT.format(columns=df.columns, description=description))
     payload = json.loads(_strip_fences(raw))
     code, schema = payload["code"], payload["schema"]
     result = apply_snippet(df, code, schema)  # validates before running
-    path = unique_output_path(out_dir, description)
-    path = write_csv_single(result, path)
-    return code, schema, str(path), result.count()
+    path = write_csv_single(result, unique_output_path(out_dir, description))
+    return code, schema, str(path), result
 
 
 def execution_agent(
     df: DataFrame, spec: dict, description: str, out_dir: str | Path,
     tables: dict[str, DataFrame] | None = None,
-) -> str:
-    """Compile and run the spec; write the uniquely-named CSV sink and
-    return its path (the critic counts the rows in the written file).
+) -> tuple[str, DataFrame]:
+    """Compile the spec once and run it; write the uniquely-named CSV
+    sink and return (its path, the compiled frame) for the critic.
     ``tables`` feeds the compiler's table map for ops with a named
     right side (join, decontaminate)."""
     result = compile_spec(df, spec, tables=tables or {})
-    path = unique_output_path(out_dir, description)
-    return str(write_csv_single(result, path))
+    path = write_csv_single(result, unique_output_path(out_dir, description))
+    return str(path), result
 
 
 def _filter_exprs_on_output(spec: dict) -> list[dict]:
     """Filter expressions still checkable on the *output* schema: walk
     ops in order, tracking renames/drops/selects; keep filters whose
-    referenced columns survive to the end."""
-
-    def expr_cols(e, acc: set[str]) -> set[str]:
-        if isinstance(e, str):  # bare string in expr position = column ref
-            acc.add(e)
-            return acc
-        if not isinstance(e, dict):
-            return acc
-        [(op, args)] = e.items()
-        if op == "col":
-            acc.add(args)
-        elif op == "lit":
-            pass
-        elif op in ("not", "is_null", "is_not_null", "lower", "upper", "trim", "length"):
-            expr_cols(args, acc)  # single-expr argument
-        elif op in ("isin", "startswith", "contains", "round", "cast"):
-            expr_cols(args[0], acc)  # remaining args are raw values
-        else:  # compares, arithmetic, between, and/or, concat, coalesce:
-            # all args are exprs
-            for a in args:
-                expr_cols(a, acc)
-        return acc
-
+    referenced columns (as ``validate_expr`` reports them) survive to
+    the end."""
     kept: list[tuple[dict, set[str]]] = []
     renames_total: dict[str, str] = {}
     dropped: set[str] = set()
@@ -420,7 +398,7 @@ def _filter_exprs_on_output(spec: dict) -> list[dict]:
     for op in spec["ops"]:
         kind = op["op"]
         if kind == "filter":
-            kept.append((op["expr"], expr_cols(op["expr"], set())))
+            kept.append((op["expr"], validate_expr(op["expr"])))
         elif kind == "rename":
             renames_total.update(op["renames"])
         elif kind == "drop":
@@ -482,19 +460,17 @@ def _check_output(
 
 def critic_agent(
     spark: SparkSession,
-    df: DataFrame,
+    result: DataFrame,
     spec: dict,
     output_path: str,
     llm: LLMClient | None = None,
-    tables: dict[str, DataFrame] | None = None,
 ) -> tuple[bool, str, int | None]:
     """Deterministic validation (replacing the reference's LLM YES/NO,
-    :179-193) by ``_check_output``: schema, row count against the
-    recomputed plan, then every still-checkable filter predicate.
-    Returns (ok, reason, rows in the written file). The optional LLM
-    verdict is advisory only — it can veto, never approve a failed
-    deterministic check."""
-    result = compile_spec(df, spec, tables=tables or {})
+    :179-193) by ``_check_output``: schema and row count against the
+    executor's compiled frame ``result``, then every still-checkable
+    filter predicate. Returns (ok, reason, rows in the written file).
+    The optional LLM verdict is advisory only — it can veto, never
+    approve a failed deterministic check."""
     preds = _filter_exprs_on_output(spec)
     failure, actual_n, out_df = _check_output(spark, result, output_path, preds)
     if failure is not None:
@@ -636,11 +612,11 @@ def run_transform(
         desc = description if feedback is None else f"{description}\n(previous attempt failed: {feedback})"
         try:
             state.spec = planner_agent(desc, columns=df.columns, llm=llm)
-            state.output_path = execution_agent(
+            state.output_path, result = execution_agent(
                 df, state.spec, description, out_dir, tables=tables
             )
             ok, reason, state.row_count = critic_agent(
-                spark, df, state.spec, state.output_path, llm=llm, tables=tables
+                spark, result, state.spec, state.output_path, llm=llm
             )
         except (ParseError, SpecError, json.JSONDecodeError, AnalysisException) as e:
             # AnalysisException joins the planning-failure class for
@@ -657,12 +633,11 @@ def run_transform(
             # row-local contract (per-batch aggregation) gives
             # batch-dependent counts, so the recount is a tripwire.
             try:
-                state.code, state.schema, state.output_path, _ = (
+                state.code, state.schema, state.output_path, result = (
                     escape_hatch_agent(df, desc, llm, out_dir)
                 )
                 failure, state.row_count, _ = _check_output(
-                    spark, apply_snippet(df, state.code, state.schema),
-                    state.output_path, [],
+                    spark, result, state.output_path, []
                 )
             except Exception as ee:  # sandbox rejection, bad JSON, runtime error
                 state.messages.append(f"attempt {attempt + 1}: escape hatch failed: {ee}")

@@ -467,7 +467,7 @@ def compile_spec(
             df = sessionize_batch(
                 df, gap_seconds=op["gap_seconds"], key_col=op["key"],
                 ts_col=op.get("ts_col", "ts"), id_col=op.get("id_col", "event_id"),
-            ).drop("_brk")
+            )
         elif kind == "asof_join":
             from pyspark.sql import types as T
 

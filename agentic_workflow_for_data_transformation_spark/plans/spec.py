@@ -232,8 +232,7 @@ Reserved / extension ops (SURVEY.md section 2.6, 2.9):
    "vec_col": "embedding"?}
       # similarity search (operators/similarity.topk_cosine_bruteforce):
       # exact cosine top-k to the row with the given id
-  {"op": "neardup", "threshold": 0.8, "id_col": "doc_id"?,
-   "text_col": "text"?}
+  {"op": "neardup", "threshold": 0.8, "id_col": "doc_id"?}
       # fuzzy dedup filter (operators/dedup.lsh_verified_pairs):
       # drop every doc with a verified near-duplicate at a LOWER id
       # (greedy keep-first; cluster-keep-one is the dedup_apply API)
@@ -326,33 +325,41 @@ def _err(msg: str) -> None:
     raise SpecError(msg)
 
 
-def validate_expr(expr: Any) -> None:
-    """Structurally validate an expression tree. Raises SpecError."""
-    if isinstance(expr, str | int | float | bool) or expr is None:
-        return  # sugar: column ref or literal
+def validate_expr(expr: Any) -> set[str]:
+    """Structurally validate an expression tree and return the column
+    names it references (raw-value arguments — isin lists, patterns,
+    round digits, cast types, json fields, trunc units — are not
+    columns). Raises SpecError."""
+    if isinstance(expr, str):
+        return {expr}  # sugar: column ref
+    if isinstance(expr, int | float | bool) or expr is None:
+        return set()  # sugar: literal
     if not isinstance(expr, dict) or len(expr) != 1:
         _err(f"expression must be a 1-key dict, str, or literal; got {expr!r}")
     [(op, args)] = expr.items()
     if op == "col":
         if not isinstance(args, str):
             _err(f"col ref must name a column: {expr!r}")
-    elif op == "lit":
+        return {args}
+    if op == "lit":
         if isinstance(args, dict | list):
             _err(f"lit must be scalar: {expr!r}")
-    elif op in _BINARY_OPS:
+        return set()
+    if op in _BINARY_OPS:
         if not (isinstance(args, list) and len(args) == 2):
             _err(f"{op} takes [left, right]: {expr!r}")
-        for a in args:
-            validate_expr(a)
-    elif op == "round":
+        left, right = validate_expr(args[0]), validate_expr(args[1])
+        # a startswith/contains pattern is a raw value
+        return left if op in ("startswith", "contains") else left | right
+    if op == "round":
         if not (isinstance(args, list) and len(args) == 2 and isinstance(args[1], int)):
             _err(f"round takes [expr, ndigits]: {expr!r}")
-        validate_expr(args[0])
-    elif op == "cast":
+        return validate_expr(args[0])
+    if op == "cast":
         if not (isinstance(args, list) and len(args) == 2 and isinstance(args[1], str)):
             _err(f"cast takes [expr, typename]: {expr!r}")
-        validate_expr(args[0])
-    elif op == "json_get":
+        return validate_expr(args[0])
+    if op == "json_get":
         # the field is a closed identifier, not a JSONPath — nothing
         # user-supplied ever reaches the path string verbatim
         if not (
@@ -362,56 +369,45 @@ def validate_expr(expr: Any) -> None:
             and args[1].isidentifier()
         ):
             _err(f"json_get takes [expr, field_identifier]: {expr!r}")
-        validate_expr(args[0])
-    elif op == "between":
+        return validate_expr(args[0])
+    if op == "between":
         if not (isinstance(args, list) and len(args) == 3):
             _err(f"between takes [expr, lo, hi]: {expr!r}")
-        for a in args:
-            validate_expr(a)
-    elif op == "isin":
+        return set().union(*map(validate_expr, args))
+    if op == "isin":
         if not (isinstance(args, list) and len(args) == 2 and isinstance(args[1], list)):
             _err(f"isin takes [expr, [values...]]: {expr!r}")
-        validate_expr(args[0])
-    elif op in _VARIADIC_BOOL:
+        return validate_expr(args[0])
+    if op in _VARIADIC_BOOL | _VARIADIC_FNS:
         if not (isinstance(args, list) and len(args) >= 1):
             _err(f"{op} takes a non-empty list: {expr!r}")
-        for a in args:
-            validate_expr(a)
-    elif op == "not":
-        validate_expr(args)
-    elif op in ("is_null", "is_not_null"):
-        validate_expr(args)
-    elif op in _UNARY_FNS:
-        validate_expr(args)
-    elif op == "trunc":
+        return set().union(*map(validate_expr, args))
+    if op in ("not", "is_null", "is_not_null") or op in _UNARY_FNS:
+        return validate_expr(args)
+    if op == "trunc":
         if not (
             isinstance(args, list) and len(args) == 2
             and args[0] in _TRUNC_UNITS
         ):
             _err(f"trunc takes [unit in {sorted(_TRUNC_UNITS)}, expr]: {expr!r}")
-        validate_expr(args[1])
-    elif op in _VARIADIC_FNS:
-        if not (isinstance(args, list) and len(args) >= 1):
-            _err(f"{op} takes a non-empty list: {expr!r}")
-        for a in args:
-            validate_expr(a)
-    elif op == "case":
+        return validate_expr(args[1])
+    if op == "case":
         if not isinstance(args, dict):
             _err(f"case takes {{'when': [[cond, val], ...], 'else': val?}}: {expr!r}")
         whens = args.get("when")
         if not (isinstance(whens, list) and whens):
             _err(f"case needs a non-empty 'when' list: {expr!r}")
+        cols: set[str] = set()
         for pair in whens:
             if not (isinstance(pair, list) and len(pair) == 2):
                 _err(f"each case 'when' entry is a [cond, value] pair: {expr!r}")
-            validate_expr(pair[0])
-            validate_expr(pair[1])
+            cols |= validate_expr(pair[0]) | validate_expr(pair[1])
         if set(args) - {"when", "else"}:
             _err(f"case allows only 'when' and 'else' keys: {expr!r}")
         if "else" in args:
-            validate_expr(args["else"])
-    else:
-        _err(f"unknown expression op {op!r}")
+            cols |= validate_expr(args["else"])
+        return cols
+    _err(f"unknown expression op {op!r}")
 
 
 def _validate_sort_keys(keys: Any) -> None:
@@ -957,9 +953,10 @@ def validate_op(op: Any) -> None:
         if not (isinstance(t, int | float) and not isinstance(t, bool)
                 and 0 < t <= 1):
             _err(f"neardup needs 'threshold' in (0, 1]: {op!r}")
-        for f in ("id_col", "text_col"):
-            if f in op and not isinstance(op[f], str):
-                _err(f"neardup '{f}' must be a string: {op!r}")
+        if "id_col" in op and not isinstance(op["id_col"], str):
+            _err(f"neardup 'id_col' must be a string: {op!r}")
+        if "text_col" in op:  # lsh_verified_pairs shingles 'text' only
+            _err(f"neardup reads the 'text' column; 'text_col' is not supported: {op!r}")
     elif kind == "merge":
         if not isinstance(op.get("right"), str):
             _err(f"merge needs a string 'right' table name: {op!r}")

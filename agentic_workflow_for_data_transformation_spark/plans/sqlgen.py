@@ -16,9 +16,9 @@ JOIN) and union (rendered as UNION [ALL] BY NAME — the exact
 positional-independence semantics of unionByName) when the right side
 is a table NAME, window (ranking family incl. ntile/percent_rank/
 cume_dist/first_value, lag/lead, ordered and sliding-frame
-aggregates), pivot/rollup, as-of join (LATERAL with tolerance),
-sessionize, the analytics ops (bm25 search, per-group OLS fit), and
-the full expression vocabulary (incl. CASE). SqlGenError marks
+aggregates), pivot/rollup, as-of join (LATERAL with tolerance), the
+analytics ops (bm25 search, per-group OLS fit), and the full
+expression vocabulary (incl. CASE). SqlGenError marks
 inline-DataFrame right sides unsupported rather than emitting
 something wrong.
 """
@@ -1663,7 +1663,6 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # minhashes mod 2^31-1, 4-band LSH candidates, exact
             # Jaccard on candidates only, drop the doc_b side
             idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
             t = op["threshold"]
             m31 = 2147483647
             base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {m31})"
@@ -1679,7 +1678,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             )
             sql = (
                 f"WITH nsrc AS ({sql}), "
-                f"nw AS (SELECT {idc} AS doc_id, string_split({txt}, ' ') AS ws FROM nsrc), "
+                f"nw AS (SELECT {idc} AS doc_id, string_split(\"text\", ' ') AS ws FROM nsrc), "
                 "nsh AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN "
                 "list_distinct(list_transform(range(1, len(ws)-1), "
                 "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) "

@@ -105,21 +105,21 @@ def write_csv_single(df: DataFrame, path: str | Path, small_threshold: int = 1_0
     (S5 contract: header-only file, AGENTIC_WORKFLOW.md:87).
 
     Spark's native CSV sink writes a directory of part files; for the
-    reference's single-file contract we collect through Arrow — but only
-    after a bounded probe proves the result has at most
-    ``small_threshold`` rows (``limit(n+1).count()`` stops the scan
-    early, so the probe never materializes the table). Anything larger
-    falls back to the parallel directory sink (``write_csv_dir``) and
-    returns that directory path — ``spark.read.csv`` reads either form,
-    so downstream consumers (the critic) are unaffected. This keeps a
-    "select everything from a 100 TB table" description from collecting
-    onto the driver.
+    reference's single-file contract we collect through Arrow, in ONE
+    bounded collect of at most ``small_threshold + 1`` rows
+    (``limit(n+1)`` stops the scan early, so the driver never holds
+    more). More than ``small_threshold`` rows back means the result is
+    too big for one file: it falls back to the parallel directory sink
+    (``write_csv_dir``) and returns that directory path —
+    ``spark.read.csv`` reads either form, so downstream consumers (the
+    critic) are unaffected. This keeps a "select everything from a
+    100 TB table" description from collecting onto the driver.
     """
     path = Path(path)
     path.parent.mkdir(parents=True, exist_ok=True)
-    if df.limit(small_threshold + 1).count() > small_threshold:
+    pdf = df.limit(small_threshold + 1).toPandas()
+    if len(pdf) > small_threshold:
         return write_csv_dir(df, path.with_suffix(""))
-    pdf = df.toPandas()
     pdf.to_csv(path, index=False)
     return path
 

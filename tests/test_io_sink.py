@@ -27,6 +27,26 @@ def test_large_result_never_collects(spark, monkeypatch, tmp_path):
     assert back.count() == 100
 
 
+def test_sink_collect_is_bounded(spark, monkeypatch, tmp_path):
+    """The sink's one collect holds at most small_threshold + 1 rows on
+    the driver; one row past the threshold sends it to the directory
+    sink. (The patch goes on the frame's own class: the session's
+    DataFrame class overrides pyspark.sql.DataFrame.toPandas.)"""
+    df = spark.range(100).withColumnRenamed("id", "n")
+    collected = []
+    original = type(df).toPandas
+
+    def recording(self):
+        pdf = original(self)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(type(df), "toPandas", recording)
+    assert write_csv_single(df, tmp_path / "big.csv", small_threshold=50).is_dir()
+    assert write_csv_single(df, tmp_path / "fits.csv", small_threshold=100).is_file()
+    assert collected == [51, 100]
+
+
 def test_empty_result_still_header_only(spark, people, tmp_path):
     p = write_csv_single(people.filter("age > 100"), tmp_path / "empty.csv")
     assert p.is_file()

@@ -13,6 +13,7 @@ from agentic_workflow_for_data_transformation_spark.agents import (
     run_eval,
     run_transform,
 )
+from agentic_workflow_for_data_transformation_spark.plans import compile_spec
 from agentic_workflow_for_data_transformation_spark.plans.parser import ParseError
 
 
@@ -58,7 +59,7 @@ def test_critic_catches_wrong_output(spark, people, tmp_path):
     spec = parse_description("Filter rows where age > 30")
     bad = tmp_path / "bad.csv"
     bad.write_text("name,age,city\nAlice,25,New York\n")  # violates age > 30
-    ok, reason, _ = critic_agent(spark, people, spec, str(bad))
+    ok, reason, _ = critic_agent(spark, compile_spec(people, spec), spec, str(bad))
     assert not ok
     assert "mismatch" in reason or "violate" in reason
 
@@ -82,15 +83,16 @@ def test_critic_reports_violated_predicate(spark, people, tmp_path):
         "George,,Denver\n"
         "Jasmine,31,Portland\n"
     )
-    ok, reason, n = critic_agent(spark, people, spec, str(bad))
+    ok, reason, n = critic_agent(spark, compile_spec(people, spec), spec, str(bad))
     assert not ok and n == 6
     assert reason == f"1 rows violate predicate {second}"
 
 
 def test_transform_job_count(spark, people, tmp_path):
     """One deterministic transform runs a fixed number of Spark jobs:
-    the executor does not count, and the critic reads the written file
-    with one aggregate for its row count and every predicate."""
+    the sink collects the result once (bounded), the critic recounts
+    the executor's frame and reads the written file with one aggregate
+    for its row count and every predicate."""
     sc = spark.sparkContext
     group = "test_transform_job_count"
     sc.setJobGroup(group, group)
@@ -103,7 +105,7 @@ def test_transform_job_count(spark, people, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert st.valid and st.row_count == 7
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
 
 
 def test_filter_then_union_passes_the_critic(spark, people, tmp_path):
@@ -116,6 +118,27 @@ def test_filter_then_union_passes_the_critic(spark, people, tmp_path):
         out_dir=tmp_path, tables={"others": others},
     )
     assert st.valid and st.attempts == 1 and st.row_count == 8, st.messages
+
+
+def test_case_filter_then_drop_passes_the_critic(spark, people, tmp_path):
+    """An LLM spec filtering on a CASE over age and then dropping age
+    is valid: the critic must not re-check that filter on the output
+    (which has no age column) and send the loop to the escape hatch."""
+    spec = {"ops": [
+        {"op": "filter", "expr": {"eq": [
+            {"case": {"when": [[{"gt": ["age", 40]}, {"lit": "old"}]],
+                      "else": {"lit": "young"}}},
+            {"lit": "old"}]}},
+        {"op": "drop", "cols": ["age"]},
+    ]}
+
+    def llm(prompt: str) -> str:
+        return "YES" if prompt.startswith("You will judge") else json.dumps(spec)
+
+    st = run_transform(spark, people, "keep the elders, then forget their ages",
+                       out_dir=tmp_path, llm=llm)
+    assert st.valid and st.attempts == 1 and st.code is None, st.messages
+    assert st.row_count == 3
 
 
 def test_offline_critic_rejection_ends_the_loop(spark, people, tmp_path,
@@ -143,7 +166,8 @@ def test_llm_critic_can_veto_but_not_override(spark, people, tmp_path):
     from agentic_workflow_for_data_transformation_spark.plans import parse_description
 
     spec = parse_description("Filter rows where age > 30")
-    ok, reason, _ = critic_agent(spark, people, spec, st.output_path, llm=naysayer)
+    ok, reason, _ = critic_agent(spark, compile_spec(people, spec), spec,
+                                 st.output_path, llm=naysayer)
     assert not ok and "llm critic rejected" in reason
 
 
@@ -201,7 +225,9 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
     must; with_column overwriting a filtered column invalidates that
     filter (live-LLM finding, round 8), and so does redact, which
     rewrites its text column in place, and union, whose appended rows
-    no earlier filter saw."""
+    no earlier filter saw. A filter's columns are the ones its
+    expression references: inside a CASE (not the 'when'/'else' keys),
+    a json_get (not the field name) or a trunc (not the unit)."""
     from agentic_workflow_for_data_transformation_spark.agents.orchestrator import (
         _filter_exprs_on_output,
     )
@@ -233,6 +259,35 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
         {"op": "union", "right": "others"},
     ]}
     assert _filter_exprs_on_output(spec) == []
+
+    old = {"case": {"when": [[{"gt": ["age", 40]}, {"lit": "old"}]],
+                    "else": {"lit": "young"}}}
+    spec = {"ops": [
+        {"op": "filter", "expr": {"eq": [old, {"lit": "old"}]}},
+        {"op": "drop", "cols": ["age"]},
+    ]}
+    assert _filter_exprs_on_output(spec) == []
+
+    spec = {"ops": [
+        {"op": "filter", "expr": {"eq": [old, {"lit": "old"}]}},
+        {"op": "with_column", "name": "age", "expr": {"lit": 0},
+         "replace": True},
+    ]}
+    assert _filter_exprs_on_output(spec) == []
+
+    by_props = {"eq": [{"json_get": ["props", "k"]}, {"lit": "x"}]}
+    spec = {"ops": [
+        {"op": "filter", "expr": by_props},
+        {"op": "select", "cols": ["props"]},
+    ]}
+    assert _filter_exprs_on_output(spec) == [by_props]
+
+    by_day = {"eq": [{"trunc": ["day", "ts"]}, {"lit": "2024-01-01"}]}
+    spec = {"ops": [
+        {"op": "filter", "expr": by_day},
+        {"op": "select", "cols": ["ts"]},
+    ]}
+    assert _filter_exprs_on_output(spec) == [by_day]
 
     # a groupby keeps key-only filters checkable (regression guard)
     spec = {"ops": [

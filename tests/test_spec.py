@@ -1235,6 +1235,9 @@ def test_corpus_spec_ops_validate_and_render():
         validate_spec({"ops": [{"op": "neardup", "threshold": 0.0}]})
     with _pytest.raises(SpecError):
         validate_spec({"ops": [{"op": "neardup", "threshold": True}]})
+    with _pytest.raises(SpecError):  # the compiler shingles 'text' only
+        validate_spec({"ops": [{"op": "neardup", "threshold": 0.7,
+                                "text_col": "body"}]})
     with _pytest.raises(SpecError):
         validate_spec({"ops": [{"op": "decontaminate"}]})
     with _pytest.raises(SpecError):
