@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..plans import compile_expr, compile_spec, parse_description, validate_spec
 from ..plans.escape import apply_snippet
 from ..plans.parser import ParseError
-from ..plans.spec import SpecError, validate_expr
+from ..plans.spec import SpecError, schema_effect, validate_expr
 from ..sources import read_csv, unique_output_path, write_csv_single
 
 MAX_RETRIES = 2  # same budget as the reference (:159)
@@ -345,92 +345,21 @@ def execution_agent(
 
 def _filter_exprs_on_output(spec: dict) -> list[dict]:
     """Filter expressions still checkable on the *output* schema: walk
-    ops in order, tracking renames/drops/selects; keep filters whose
-    referenced columns (as ``validate_expr`` reports them) survive to
-    the end."""
+    ops in order and drop each kept filter whose columns (as
+    ``validate_expr`` reports them) a later op's schema effect
+    (``plans.spec.OPS``) writes, leaves out or replaces."""
     kept: list[tuple[dict, set[str]]] = []
-    renames_total: dict[str, str] = {}
-    dropped: set[str] = set()
-    selected: set[str] | None = None
-    # ops whose output schema has nothing to do with the input schema:
-    # every earlier filter's columns are gone (live-LLM run, round 8:
-    # a pre-pack filter re-applied to the packed summary raised
-    # UNRESOLVED_COLUMN inside the critic and sent the re-plan loop on
-    # a wild goose chase)
-    replaces_schema = {
-        "pivot", "rollup", "pack", "ann_topk", "bm25",
-        "ols", "mode",
-        # expect/chunk/resample/negatives emit their own report or
-        # per-unit schema; merge keeps the schema but REWRITES values
-        # (an earlier filter may legitimately no longer hold on
-        # updated rows), and union keeps it but appends the right
-        # side's rows, which no earlier filter saw — all six
-        # invalidate earlier predicates
-        "expect", "chunk", "resample", "negatives", "merge", "union",
-        # dsir/fertility/dup_by_source replace the schema with their
-        # own summaries
-        "dsir", "fertility", "dup_by_source",
-        # the JS divergence map replaces the schema with pair rows;
-        # the dedup savings report with per-group rollups
-        "vocab_divergence", "dedup_savings",
-        # privacy audit -> one report row; entropy -> per-doc stats;
-        # oov -> per-group coverage rows
-        "kanon", "word_entropy", "oov",
-        # majority vote -> one aggregated label row per key;
-        # agreement -> one alpha report row; correlate -> pair rows
-        "majority", "agreement", "correlate",
-        # spearman -> pair rows; mutual_info -> one report row
-        "spearman", "mutual_info",
-        # anova -> one report row; funnel -> per-step rows;
-        # novelty -> per-doc rows; concentration -> one report row;
-        # hapax -> per-group rows
-        "anova", "funnel", "novelty", "concentration", "hapax",
-        # evaluation layer: ndcg -> per-query rows; silhouette ->
-        # per-label rows; bpe_merges -> per-merge rows;
-        # perplexity_buckets -> per-doc scored rows
-        "ndcg", "silhouette", "bpe_merges", "perplexity_buckets",
-        # common_direction -> per-vector projection/norm audit rows
-        "common_direction",
-        # unimax -> one allocation row per group; bootstrap_mean ->
-        # one CI row per group
-        "unimax", "bootstrap_mean",
-    }
     for op in spec["ops"]:
-        kind = op["op"]
-        if kind == "filter":
+        if op["op"] == "filter":
             kept.append((op["expr"], validate_expr(op["expr"])))
-        elif kind == "rename":
-            renames_total.update(op["renames"])
-        elif kind == "drop":
-            dropped.update(op["cols"])
-        elif kind == "select":
-            selected = set(op["cols"])
-        elif kind in ("with_column", "redact"):
-            # overwriting a column a kept filter references changes
-            # its values; that filter is no longer checkable (redact
-            # rewrites its text column in place)
-            name = op["name"] if kind == "with_column" else op.get("text_col", "text")
-            kept = [(e, c) for (e, c) in kept if name not in c]
-        elif kind == "groupby_agg":
-            # key columns survive with their values intact, so a
-            # filter purely over keys stays checkable
-            selected = set(op["keys"]) | {a["alias"] for a in op["aggs"]}
-        elif kind in replaces_schema:
-            kept.clear()
-            renames_total.clear()
-            dropped.clear()
-            selected = None
-    out: list[dict] = []
-    for expr, cols in kept:
-        cols = {renames_total.get(c, c) for c in cols}
-        if cols & dropped:
-            continue
-        if selected is not None and not cols <= selected:
-            continue
-        if any(c in renames_total for c in cols):
-            continue  # renamed columns would need expr rewriting; skip
-        out.append(expr)
-    return out
+        word, cols = schema_effect(op)
+        if word == "replaces":
+            kept = []
+        elif word == "writes":
+            kept = [(e, c) for e, c in kept if not c & cols]
+        elif word == "only":
+            kept = [(e, c) for e, c in kept if c <= cols]
+    return [e for e, _ in kept]
 
 
 def _check_output(

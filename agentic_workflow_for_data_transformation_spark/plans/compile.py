@@ -21,7 +21,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .spec import SpecError, validate_spec
+from .spec import SpecError, spec_ops
 
 _BIN_COMPARES: dict[str, Callable[[Column, Column], Column]] = {
     "gt": lambda a, b: a > b,
@@ -130,7 +130,7 @@ def compile_expr(expr: Any) -> Column:
 
 
 def _sort_cols(keys: list[dict]) -> list[Column]:
-    return [F.col(k["col"]).asc() if k.get("asc", True) else F.col(k["col"]).desc() for k in keys]
+    return [F.col(k["col"]).asc() if k["asc"] else F.col(k["col"]).desc() for k in keys]
 
 
 _WINDOW_RANK_FNS = {
@@ -141,7 +141,7 @@ _WINDOW_RANK_FNS = {
 
 
 def _apply_window(df: DataFrame, op: dict) -> DataFrame:
-    w = Window.partitionBy(*[F.col(c) for c in op.get("partition_by", [])]).orderBy(
+    w = Window.partitionBy(*[F.col(c) for c in op["partition_by"]]).orderBy(
         *_sort_cols(op["order_by"])
     )
     exprs = op["exprs"]
@@ -151,7 +151,7 @@ def _apply_window(df: DataFrame, op: dict) -> DataFrame:
     # (partitioned bucket windows + broadcast offsets) instead —
     # same numbers, no single-partition sort of the data
     if (
-        not op.get("partition_by")
+        not op["partition_by"]
         and len(op["order_by"]) == 1
         and len(exprs) == 1
         and exprs[0]["fn"] == "row_number"
@@ -168,7 +168,7 @@ def _apply_window(df: DataFrame, op: dict) -> DataFrame:
 
             return two_phase_row_number(
                 df, okey, out_col=exprs[0]["alias"],
-                ascending=op["order_by"][0].get("asc", True),
+                ascending=op["order_by"][0]["asc"],
             )
     for e in exprs:
         fn = e["fn"]
@@ -187,12 +187,12 @@ def _apply_window(df: DataFrame, op: dict) -> DataFrame:
             # an explicit rows_preceding sliding frame is honored the
             # same way as on aggregates (first of the last n+1 rows)
             win = w
-            if "rows_preceding" in e:
+            if e["rows_preceding"] is not None:
                 win = w.rowsBetween(-e["rows_preceding"], Window.currentRow)
             col = F.first(e["col"]).over(win)
         elif fn in ("lag", "lead"):
             base = F.lag if fn == "lag" else F.lead
-            col = base(e["col"], e.get("offset", 1)).over(w)
+            col = base(e["col"], e["offset"]).over(w)
         elif fn == "ewma":
             # exponentially weighted moving average over a BOUNDED lag
             # chain: ewma_t = sum_j a^j x_{t-j} / sum_j a^j over the
@@ -242,7 +242,7 @@ def _apply_window(df: DataFrame, op: dict) -> DataFrame:
             # collect_list measures 4.5 s. Keeping the simpler plan.
             win = (
                 w.rowsBetween(-e["rows_preceding"], Window.currentRow)
-                if "rows_preceding" in e
+                if e["rows_preceding"] is not None
                 else w
             )
             arr = F.array_sort(F.collect_list(e["col"]).over(win))
@@ -254,7 +254,7 @@ def _apply_window(df: DataFrame, op: dict) -> DataFrame:
             col = F.when(n > F.lit(0), lo + (hi - lo) / F.lit(2.0))
         else:  # aggregate over the window frame
             win = w
-            if "rows_preceding" in e:
+            if e["rows_preceding"] is not None:
                 # sliding ROWS frame: n PRECEDING .. CURRENT ROW (a
                 # moving aggregate) instead of the default cumulative
                 # RANGE frame — still one sort per partition; Spark
@@ -270,7 +270,7 @@ def _agg_col(a: dict) -> Column:
     decimal(18,2)) makes money-column sums exact and therefore
     bit-identical across engines and partition orders."""
     col = a["col"]
-    if a.get("cast") and col != "*":
+    if a["cast"] and col != "*":
         col = F.col(col).cast(a["cast"])
     if a["fn"] == "percentile":
         # exact interpolated percentile (Spark percentile == DuckDB
@@ -283,9 +283,8 @@ def _agg_col(a: dict) -> Column:
 def _apply_groupby(df: DataFrame, op: dict) -> DataFrame:
     aggs = [_agg_col(a) for a in op["aggs"]]
     out = df.groupBy(*op["keys"]).agg(*aggs) if op["keys"] else df.agg(*aggs)
-    having = op.get("having")
-    if having is not None:
-        out = out.filter(compile_expr(having))
+    if op["having"] is not None:
+        out = out.filter(compile_expr(op["having"]))
     return out
 
 
@@ -396,9 +395,8 @@ def compile_spec(
     """Fold the spec's ops over ``df``. ``tables`` resolves the 'right'
     side of join/union ops by name (scale note: joins honor an explicit
     ``broadcast`` hint so small dimension tables never shuffle)."""
-    validate_spec(spec)
     tables = tables or {}
-    for op in spec["ops"]:
+    for op in spec_ops(spec):
         kind = op["op"]
         if kind == "filter":
             df = df.filter(compile_expr(op["expr"]))
@@ -425,20 +423,20 @@ def compile_spec(
         elif kind == "rollup":
             aggs = [_agg_col(a) for a in op["aggs"]]
             aggs.append(
-                F.grouping_id().cast("int").alias(op.get("gid_alias", "gid"))
+                F.grouping_id().cast("int").alias(op["gid_alias"])
             )
             df = df.rollup(*op["keys"]).agg(*aggs)
         elif kind == "distinct":
-            df = df.dropDuplicates(op["cols"]) if op.get("cols") else df.distinct()
+            df = df.dropDuplicates(op["cols"]) if op["cols"] else df.distinct()
         elif kind == "dedup":
             # deterministic keyed dedup: row_number over (keys, keep_col
             # order) — ONE exchange on the dedup keys plus a per-group
             # sort, vs the min-agg + semi-join form's two shuffles;
             # duplicate groups are small, so the sort is cheap
-            keep = op.get("keep", "min")
+            keep = op["keep"]
             kc = F.col(op["keep_col"])
             order = [kc.asc() if keep == "min" else kc.desc()]
-            if op.get("tiebreak"):
+            if op["tiebreak"]:
                 # optional ascending secondary key: deterministic
                 # winner when keep_col ties within a group
                 order.append(F.col(op["tiebreak"]).asc())
@@ -457,7 +455,7 @@ def compile_spec(
             # explode semantics, matching SQL unnest)
             alias = op["alias"]
             df = df.withColumn(
-                alias, F.explode(F.split(F.col(op["col"]), op.get("pattern", r"\s+")))
+                alias, F.explode(F.split(F.col(op["col"]), op["pattern"]))
             ).filter(F.col(alias) != "")
         elif kind == "window":
             df = _apply_window(df, op)
@@ -466,7 +464,7 @@ def compile_spec(
 
             df = sessionize_batch(
                 df, gap_seconds=op["gap_seconds"], key_col=op["key"],
-                ts_col=op.get("ts_col", "ts"), id_col=op.get("id_col", "event_id"),
+                ts_col=op["ts_col"], id_col=op["id_col"],
             )
         elif kind == "asof_join":
             from pyspark.sql import types as T
@@ -474,8 +472,8 @@ def compile_spec(
             from ..operators.joins import asof_join
 
             rdf = _resolve_right(op["right"], tables)
-            ts = op.get("ts", "ts")
-            if op.get("tolerance") is not None:
+            ts = op["ts"]
+            if op["tolerance"] is not None:
                 # the engine applies tolerance in the ts column's
                 # NATURAL unit (seconds for timestamps, days for
                 # dates, the column's own units for numerics) while
@@ -489,7 +487,7 @@ def compile_spec(
                     if isinstance(dt, (T.TimestampType, T.TimestampNTZType))
                     else "day" if isinstance(dt, T.DateType) else "raw"
                 )
-                unit = op.get("tolerance_unit", natural)
+                unit = op["tolerance_unit"]
                 if unit != natural:
                     raise SpecError(
                         f"asof_join tolerance_unit {unit!r} does not match "
@@ -498,44 +496,44 @@ def compile_spec(
                     )
             df = asof_join(
                 df, rdf, on=op["on"], left_ts=ts,
-                right_ts=op.get("right_ts", ts),
-                right_cols=op.get("right_cols", []),
-                direction=op.get("direction", "backward"),
-                tolerance=op.get("tolerance"),
+                right_ts=op["right_ts"] or ts,
+                right_cols=op["right_cols"],
+                direction=op["direction"],
+                tolerance=op["tolerance"],
             )
         elif kind == "join":
             rdf = _resolve_right(op["right"], tables)
-            if op.get("broadcast"):
+            if op["broadcast"]:
                 rdf = F.broadcast(rdf)
-            df = df.join(rdf, on=op["on"], how=op.get("how", "inner"))
+            df = df.join(rdf, on=op["on"], how=op["how"])
         elif kind == "union":
             rdf = _resolve_right(op["right"], tables)
             df = df.unionByName(rdf)
-            if op.get("distinct"):
+            if op["distinct"]:
                 df = df.distinct()
         elif kind == "sample":
             from ..operators.sampling import hash_sample
 
             df = hash_sample(
-                df, op["fraction"], op["key"], salt=op.get("salt", "sample")
+                df, op["fraction"], op["key"], salt=op["salt"]
             )
         elif kind == "negatives":
             from ..operators.sampling import negative_samples
 
             df = negative_samples(
                 df,
-                id_col=op.get("id_col", "vec_id"),
-                label_col=op.get("label_col", "label"),
-                k=op.get("k", 3),
-                pool_size=op.get("pool", 64),
+                id_col=op["id_col"],
+                label_col=op["label_col"],
+                k=op["k"],
+                pool_size=op["pool"],
             )
         elif kind == "chunk":
             from ..operators.corpus import chunk_documents
 
             df = chunk_documents(
                 df, size=op["size"], stride=op["stride"],
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
             )
         elif kind == "resample":
             from ..operators.timeseries import resample_interpolate
@@ -543,9 +541,9 @@ def compile_spec(
             df = resample_interpolate(
                 df,
                 key_col=op["key"],
-                ts_col=op.get("ts", "ts"),
-                val_col=op.get("val", "value"),
-                id_col=op.get("id", "event_id"),
+                ts_col=op["ts"],
+                val_col=op["val"],
+                id_col=op["id"],
                 step_s=int(op["step_hours"] * 3600),
             )
         elif kind == "winsorize":
@@ -553,12 +551,12 @@ def compile_spec(
 
             df = winsorize_group(
                 df, op["col"], list(op["keys"]),
-                lo=op.get("lo", 0.05), hi=op.get("hi", 0.95),
+                lo=op["lo"], hi=op["hi"],
             )
         elif kind == "langid":
             from ..operators.text import with_lang_id
 
-            df = with_lang_id(df, text_col=op.get("text_col", "text"))
+            df = with_lang_id(df, text_col=op["text_col"])
         elif kind == "expect":
             from ..operators.quality import check_expectations
 
@@ -566,7 +564,7 @@ def compile_spec(
         elif kind == "redact":
             from ..operators.text import redact_text
 
-            tcol = op.get("text_col", "text")
+            tcol = op["text_col"]
             # in-place: the NL contract is "redact ... in text", so the
             # text column itself carries the masked version; n_masked
             # is BIGINT to match the oracle's len() arithmetic
@@ -580,7 +578,7 @@ def compile_spec(
             from ..operators.text import blocklist_screen
 
             df = blocklist_screen(
-                df, list(op["words"]), text_col=op.get("text_col", "text")
+                df, list(op["words"]), text_col=op["text_col"]
             )
         elif kind == "kanon":
             from ..operators.quality import k_anonymity_audit
@@ -620,15 +618,15 @@ def compile_spec(
         elif kind == "novelty":
             from ..operators.text import ngram_novelty
 
-            df = ngram_novelty(df, n=int(op.get("n", 3)))
+            df = ngram_novelty(df, n=int(op["n"]))
         elif kind == "concentration":
             from ..operators.corpus import concentration_audit
 
-            df = concentration_audit(df, group_col=op.get("key", "source"))
+            df = concentration_audit(df, group_col=op["key"])
         elif kind == "hapax":
             from ..operators.text import hapax_ratio
 
-            df = hapax_ratio(df, group_col=op.get("key", "source"))
+            df = hapax_ratio(df, group_col=op["key"])
         elif kind == "ndcg":
             from ..operators.similarity import ndcg_per_query
 
@@ -643,23 +641,23 @@ def compile_spec(
         elif kind == "common_direction":
             from ..operators.linalg import common_direction_audit
 
-            df = common_direction_audit(df, n_iter=int(op.get("n_iter", 6)))
+            df = common_direction_audit(df, n_iter=int(op["n_iter"]))
         elif kind == "unimax":
             from ..operators.corpus import unimax_allocation
 
             df = unimax_allocation(
                 df,
                 budget_tokens=int(op["budget"]),
-                max_epochs=int(op.get("epochs", 2)),
+                max_epochs=int(op["epochs"]),
                 group_col=op["key"],
-                text_col=op.get("text", "text"),
+                text_col=op["text"],
             )
         elif kind == "bootstrap_mean":
             from ..operators.stats import poisson_bootstrap_ci
 
             df = poisson_bootstrap_ci(
                 df, op["key"], op["col"], op["id"],
-                n_boot=int(op.get("n", 40)),
+                n_boot=int(op["n"]),
             )
         elif kind == "bpe_merges":
             from ..operators.text import bpe_merge_table
@@ -669,48 +667,48 @@ def compile_spec(
             from ..operators.text import perplexity_buckets
 
             df = perplexity_buckets(
-                df, ref_source=op.get("ref_source", "src0")
+                df, ref_source=op["ref_source"]
             )
         elif kind == "anomaly":
             from ..operators.timeseries import rolling_zscore_anomalies
 
             df = rolling_zscore_anomalies(
                 df, op["col"], op["key"], op["order_col"],
-                n=int(op["n"]), z=float(op.get("z", 3.0)),
+                n=int(op["n"]), z=float(op["z"]),
             )
         elif kind == "word_entropy":
             from ..operators.text import word_entropy
 
             df = word_entropy(
                 df,
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
             )
         elif kind == "oov":
             from ..operators.text import oov_rate_by_group
 
             df = oov_rate_by_group(
                 df,
-                v=int(op.get("v", 100)),
+                v=int(op["v"]),
                 group_col=op["key"],
-                text_col=op.get("text_col", "text"),
+                text_col=op["text_col"],
             )
         elif kind == "token_counts":
             from ..operators.text import with_token_counts
 
-            df = with_token_counts(df, text_col=op.get("text_col", "text"))
+            df = with_token_counts(df, text_col=op["text_col"])
             # F.size is INT; the oracle (and the column contract) is BIGINT
             df = df.withColumn("n_words", F.col("n_words").cast("long"))
             df = df.withColumn("n_tokens", F.col("n_tokens").cast("long"))
         elif kind == "quality_score":
             from ..operators.text import with_quality_score
 
-            df = with_quality_score(df, text_col=op.get("text_col", "text"))
+            df = with_quality_score(df, text_col=op["text_col"])
             df = df.withColumn("n_words", F.col("n_words").cast("long"))
         elif kind == "gopher":
             from ..operators.text import gopher_rules
 
-            df = gopher_rules(df, text_col=op.get("text_col", "text"))
+            df = gopher_rules(df, text_col=op["text_col"])
             # F.size is INT; the oracle (and the column contract) is BIGINT
             df = df.withColumn("n_words", F.col("n_words").cast("long"))
             df = df.withColumn(
@@ -722,24 +720,24 @@ def compile_spec(
             df = dsir_log_weights(
                 df,
                 target_pred=F.col(op["target_col"]) == op["target_val"],
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
             )
         elif kind == "fertility":
             from ..operators.text import token_fertility_by_lang
 
             df = token_fertility_by_lang(
-                df, lang_col=op["key"], text_col=op.get("text_col", "text")
+                df, lang_col=op["key"], text_col=op["text_col"]
             )
         elif kind == "dup_by_source":
             from ..operators.corpus import dup_rate_by_source
 
             df = dup_rate_by_source(
                 df,
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
                 source_col=op["key"],
-                n=op.get("n", 5),
+                n=op["n"],
             )
         elif kind == "winnow_dedup":
             # winnowing (MOSS) keep-first dedup: drop any doc whose
@@ -749,9 +747,9 @@ def compile_spec(
             # winnow_shared_pairs
             from ..operators.dedup import winnow_shared_pairs
 
-            idc = op.get("id_col", "doc_id")
+            idc = op["id_col"]
             pairs = winnow_shared_pairs(
-                df, id_col=idc, text_col=op.get("text_col", "text"),
+                df, id_col=idc, text_col=op["text_col"],
                 threshold=op["overlap"],
             )
             drop = pairs.select(F.col("doc_b").alias(idc)).distinct()
@@ -761,24 +759,24 @@ def compile_spec(
 
             df = dedup_savings_by_source(
                 df,
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
                 source_col=op["key"],
-                len_col=op.get("len_col", "n_chars"),
+                len_col=op["len_col"],
             )
         elif kind == "vocab_divergence":
             from ..operators.corpus import js_divergence_by_group
 
             df = js_divergence_by_group(
                 df, group_col=op["key"],
-                text_col=op.get("text_col", "text"),
+                text_col=op["text_col"],
             )
         elif kind == "split_assign":
             from ..operators.sampling import with_hash_split
 
             df = with_hash_split(
                 df, op["key"], list(op["weights"]), list(op["labels"]),
-                out=op.get("alias", "split"),
+                out=op["alias"],
             )
         elif kind == "ols":
             from ..operators.stats import groupwise_ols
@@ -788,8 +786,8 @@ def compile_spec(
                 group_col=op["key"],
                 x_col=op["x"],
                 y_col=op["y"],
-                x_decimal=op.get("x_decimal", "decimal(12,2)"),
-                y_decimal=op.get("y_decimal", "decimal(18,2)"),
+                x_decimal=op["x_decimal"],
+                y_decimal=op["y_decimal"],
             )
         elif kind == "bm25":
             from ..operators.text import bm25_topk
@@ -798,16 +796,16 @@ def compile_spec(
                 df,
                 list(op["terms"]),
                 k=op["k"],
-                id_col=op.get("id_col", "doc_id"),
-                text_col=op.get("text_col", "text"),
+                id_col=op["id_col"],
+                text_col=op["text_col"],
             )
         elif kind == "ann_topk":
             from ..operators.similarity import topk_cosine_bruteforce
 
             df = topk_cosine_bruteforce(
                 df, query_id=op["query_id"], k=op["k"],
-                id_col=op.get("id_col", "vec_id"),
-                vec_col=op.get("vec_col", "embedding"),
+                id_col=op["id_col"],
+                vec_col=op["vec_col"],
             )
         elif kind == "neardup":
             # greedy keep-first fuzzy dedup: a doc is dropped iff a
@@ -817,7 +815,7 @@ def compile_spec(
             # touches the corpus once with a tiny broadcast-able set
             from ..operators.dedup import lsh_verified_pairs
 
-            idc = op.get("id_col", "doc_id")
+            idc = op["id_col"]
             pairs = lsh_verified_pairs(
                 df, id_col=idc, threshold=op["threshold"],
             )
@@ -836,10 +834,10 @@ def compile_spec(
             right = op["right"]
             if right not in tables:
                 raise SpecError(f"unknown table {right!r} for decontaminate")
-            idc = op.get("id_col", "doc_id")
+            idc = op["id_col"]
             bad = contaminated_ids(
                 df, tables[right], id_col=idc,
-                text_col=op.get("text_col", "text"),
+                text_col=op["text_col"],
             )
             df = df.join(bad, idc, "left_anti")
         elif kind == "pack":
@@ -848,10 +846,10 @@ def compile_spec(
             df = pack_sequences(
                 df,
                 budget=op["budget"],
-                group_size=op.get("group_size", 1024),
-                id_col=op.get("id_col", "doc_id"),
-                lang_col=op.get("lang_col", "lang"),
-                text_col=op.get("text_col", "text"),
+                group_size=op["group_size"],
+                id_col=op["id_col"],
+                lang_col=op["lang_col"],
+                text_col=op["text_col"],
             )
         else:  # pragma: no cover — validate_spec rejects these
             raise SpecError(f"unknown op {kind!r}")

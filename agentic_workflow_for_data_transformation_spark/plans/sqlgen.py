@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from .spec import validate_spec
+from .spec import spec_ops
 
 _CMP_SQL = {"gt": ">", "ge": ">=", "lt": "<", "le": "<=", "eq": "=", "ne": "<>"}
 _ARITH_SQL = {"add": "+", "sub": "-", "mul": "*", "div": "/"}
@@ -132,7 +132,7 @@ _AGG_SQL = {
 def _sample_sql(op: dict) -> str:
     # mirrors operators/sampling.py: 60-bit md5 prefix draw mod 1e6
     key = _q(op["key"])
-    salt = op.get("salt", "sample")
+    salt = op["salt"]
     draw = (
         f"(('0x' || substr(md5({_lit_sql(salt + '|')} || CAST({key} AS VARCHAR)), 1, 15))::BIGINT"
         f" % 1000000)"
@@ -203,20 +203,19 @@ def spec_to_sql(spec: dict, table: str) -> str:
     """Render a relational-core spec as a nested-subquery SQL statement
     over ``table``. Ops keep their stated order (each op wraps the
     previous result in a subquery — the optimizer flattens them)."""
-    validate_spec(spec)
     sql = f"SELECT * FROM {table}"
 
     def wrap(select: str, tail: str = "") -> str:
         return f"SELECT {select} FROM ({sql}) {tail}".rstrip()
 
-    for op in spec["ops"]:
+    for op in spec_ops(spec):
         kind = op["op"]
         if kind == "filter":
             sql = wrap("*", f"WHERE {expr_to_sql(op['expr'])}")
         elif kind == "select":
             sql = wrap(", ".join(_q(c) for c in op["cols"]))
         elif kind == "with_column":
-            if op.get("replace"):
+            if op["replace"]:
                 # in-place update of an existing column: a bare
                 # "*, expr AS name" would leave TWO columns named
                 # 'name' in DuckDB and later references silently bind
@@ -242,14 +241,14 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # otherwise pick different boundary rows than the engine
             keys = ", ".join(
                 _q(k["col"])
-                + (" ASC NULLS FIRST" if k.get("asc", True) else " DESC NULLS LAST")
+                + (" ASC NULLS FIRST" if k["asc"] else " DESC NULLS LAST")
                 for k in op["keys"]
             )
             sql = wrap("*", f"ORDER BY {keys}")
         elif kind == "limit":
             sql = wrap("*", f"LIMIT {op['n']}")
         elif kind == "distinct":
-            if op.get("cols"):
+            if op["cols"]:
                 raise SqlGenError("distinct-by-cols keeps arbitrary rows; no portable SQL")
             sql = f"SELECT DISTINCT * FROM ({sql})"
         elif kind == "dedup":
@@ -258,12 +257,12 @@ def spec_to_sql(spec: dict, table: str) -> str:
             part = ", ".join(_q(k) for k in op["keys"])
             dirn = (
                 "ASC NULLS FIRST"
-                if op.get("keep", "min") == "min"
+                if op["keep"] == "min"
                 else "DESC NULLS LAST"
             )
             tb = (
                 f", {_q(op['tiebreak'])} ASC NULLS FIRST"
-                if op.get("tiebreak")
+                if op["tiebreak"]
                 else ""
             )
             inner = wrap(
@@ -272,7 +271,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             )
             sql = f'SELECT * EXCLUDE ("_rn") FROM ({inner}) WHERE "_rn" = 1'
         elif kind == "explode":
-            pat = _lit_sql(op.get("pattern", r"\s+"))
+            pat = _lit_sql(op["pattern"])
             sql = wrap(
                 f"*, unnest(list_filter(string_split_regex("
                 f"{_q(op['col'])}, {pat}), t -> t <> '')) AS {_q(op['alias'])}"
@@ -282,9 +281,9 @@ def spec_to_sql(spec: dict, table: str) -> str:
         elif kind == "negatives":
             # mirrors operators/sampling.negative_samples (the
             # ns_sample_negatives oracle over the wrapped subquery)
-            idc = _q(op.get("id_col", "vec_id"))
-            lab = _q(op.get("label_col", "label"))
-            k, pool = op.get("k", 3), op.get("pool", 64)
+            idc = _q(op["id_col"])
+            lab = _q(op["label_col"])
+            k, pool = op["k"], op["pool"]
             sql = (
                 f"WITH gsrc AS ({sql}), "
                 f"gpool AS (SELECT {idc} AS cand_id, {lab} AS cand_label "
@@ -303,8 +302,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mirrors operators/corpus.chunk_documents (the
             # ns_chunk_documents oracle, parameterized over the
             # wrapped subquery)
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             size, stride = int(op["size"]), int(op["stride"])
             sql = (
                 f"WITH cw AS (SELECT {idc} AS doc_id, string_split({txt}, ' ') AS ws "
@@ -324,9 +323,9 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # epoch buckets, arg_min observed sample, IGNORE NULLS fill
             # windows, identical IEEE interpolation shape
             key = _q(op["key"])
-            ts = _q(op.get("ts", "ts"))
-            val = _q(op.get("val", "value"))
-            idc = _q(op.get("id", "event_id"))
+            ts = _q(op["ts"])
+            val = _q(op["val"])
+            idc = _q(op["id"])
             step = int(op["step_hours"] * 3600)
             sql = (
                 f"WITH rsrc AS ({sql}), "
@@ -363,7 +362,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # Spark percentile), clamp rounded to 6
             col = _q(op["col"])
             keys = ", ".join(_q(k) for k in op["keys"])
-            lo, hi = op.get("lo", 0.05), op.get("hi", 0.95)
+            lo, hi = op["lo"], op["hi"]
             sql = (
                 f"WITH wsrc AS ({sql}), "
                 f"wq AS (SELECT {keys}, quantile_cont({col}, {lo!r}) AS __lo, "
@@ -434,7 +433,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # counted against the original text
             from ..operators.text import EMAIL_REGEX, LONG_NUM_REGEX
 
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             sql = (
                 f"SELECT * REPLACE (regexp_replace(regexp_replace({txt}, "
                 f"'{EMAIL_REGEX}', '<EMAIL>', 'g'), "
@@ -448,7 +447,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # intersection of the lowercased whitespace tokens against
             # the (lowercased) literal list — list_has_any is DuckDB's
             # arrays_overlap
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             arr = ", ".join(_lit_sql(w.lower()) for w in op["words"])
             sql = (
                 f"SELECT * FROM ({sql}) WHERE NOT "
@@ -652,7 +651,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # distinct-shingle explode (the _SHINGLE_CTE shape,
             # parameterized by n), a min-doc-id first-occurrence
             # aggregate, one join back, one per-doc aggregate
-            n = int(op.get("n", 3))
+            n = int(op["n"])
             gram = " || ' ' || ".join(f"ws[i + {j}]" for j in range(n))
             gram = gram.replace("ws[i + 0]", "ws[i]")
             sql = (
@@ -677,7 +676,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # token sums, sorted-rank Gini with integer rank-weight
             # products, HHI and top-3 share as fixed double shapes
             # over exact BIGINTs
-            kq = _q(op.get("key", "source"))
+            kq = _q(op["key"])
             sql = (
                 f"WITH __cc_t AS (SELECT {kq}, "
                 f"CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS w "
@@ -699,7 +698,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
         elif kind == "hapax":
             # mirrors operators/text.hapax_ratio: one token explode,
             # one (group, word) count, one per-group vocabulary rollup
-            kq = _q(op.get("key", "source"))
+            kq = _q(op["key"])
             sql = (
                 f"WITH __hx_w AS (SELECT {kq}, "
                 f"unnest(string_split(text, ' ')) AS w FROM ({sql})), "
@@ -846,7 +845,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # ns_text_perplexity_buckets oracle, parameterized):
             # add-one unigram LM on the reference slice, head/middle/
             # tail tertiles per language via broadcast cutoffs
-            ref = op.get("ref_source", "src0").replace("'", "''")
+            ref = op["ref_source"].replace("'", "''")
             sql = (
                 "WITH __b AS (SELECT doc_id, lang, source, "
                 "unnest(string_split(text, ' ')) AS w "
@@ -878,8 +877,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # 6 unrolled power-iteration rounds with DECIMAL
             # accumulators and 9-rounded iterates, the sign pin, then
             # the per-vector projection/norm aggregates
-            n_it = int(op.get("n_iter", 6))
-            dim_n = int(op.get("dim", 64))
+            n_it = int(op["n_iter"])
+            dim_n = int(op["dim"])
             ctes = [
                 f"__dims AS (SELECT unnest(generate_series(1, {dim_n})) "
                 "AS d)",
@@ -954,7 +953,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mean/std/z in doubles, rounded to 6 on emit
             xc = _q(op["col"])
             n = int(op["n"])
-            zt = repr(float(op.get("z", 3.0)))
+            zt = repr(float(op["z"]))
             # baseline = the n rows BEFORE the current row (excluded:
             # self-inclusion bounds |z| at (n-1)/sqrt(n) and masks the
             # very spike being hunted)
@@ -991,9 +990,9 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # order, running bool_and caps exactly the prefix the
             # sequential walk would)
             g = _q(op["key"])
-            txt = _q(op.get("text", "text"))
+            txt = _q(op["text"])
             budget = int(op["budget"])
-            epochs = int(op.get("epochs", 2))
+            epochs = int(op["epochs"])
             ordc = f"ORDER BY capacity, {g}"
             runw = f"{ordc} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
             sql = (
@@ -1038,7 +1037,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             g = _q(op["key"])
             xc = _q(op["col"])
             idc = _q(op["id"])
-            n_boot = int(op.get("n", 40))
+            n_boot = int(op["n"])
             lo = max(1, _math.ceil(0.025 * n_boot))
             hi = _math.ceil(0.975 * n_boot)
             wcase = "CASE " + " ".join(
@@ -1116,8 +1115,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mirrors operators/text.word_entropy (the
             # ns_text_word_entropy oracle, parameterized): per-word
             # counts, DECIMAL(18,8)-pinned cnt*log2(cnt) terms
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             sql = (
                 f"SELECT {idc}, n_words, n_distinct, "
                 f"round(log2(n_words) - CAST(s AS DOUBLE) / n_words, 6) "
@@ -1136,8 +1135,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mirrors operators/text.oov_rate_by_group (the
             # ns_text_oov_rate oracle, parameterized)
             key = _q(op["key"])
-            txt = _q(op.get("text_col", "text"))
-            v = int(op.get("v", 100))
+            txt = _q(op["text_col"])
+            v = int(op["v"])
             sql = (
                 f"WITH tok AS (SELECT {key}, "
                 f"unnest(string_split({txt}, ' ')) AS tw FROM ({sql})), "
@@ -1157,7 +1156,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # rendered over the wrapped subquery)
             from ..operators.text import STOPWORDS
 
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             hits = {
                 lang: (
                     "len(list_filter(__ws, w -> lower(w) IN ("
@@ -1178,7 +1177,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
         elif kind == "token_counts":
             from ..operators.text import TOKEN_REGEX
 
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             sql = wrap(
                 f"*, CAST(len(string_split({txt}, ' ')) AS BIGINT) AS n_words, "
                 f"CAST(len(regexp_extract_all(lower({txt}), "
@@ -1191,7 +1190,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # the engine does
             from ..operators.text import STOPWORDS
 
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             stops = ", ".join(_lit_sql(s) for s in STOPWORDS["en"])
             nw = "len(__ws)"
             nc = f"length({txt})"
@@ -1222,7 +1221,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             from ..operators.text import GOPHER_BOUNDS as GB
             from ..operators.text import GOPHER_REQUIRED_STOPWORDS
 
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             stops = ", ".join(_lit_sql(s) for s in GOPHER_REQUIRED_STOPWORDS)
             nw = "len(__ws)"
             nc = f"length({txt})"
@@ -1268,8 +1267,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mirrors operators/corpus.dsir_log_weights: same 60-bit
             # md5 bucketing (d=16), same add-one smoothing, per-bucket
             # log-ratio rounded to 9 then decimal-summed per document
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             tcol = _q(op["target_col"])
             tval = _lit_sql(op["target_val"])
             sql = (
@@ -1297,7 +1296,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             from ..operators.text import TOKEN_REGEX
 
             key = _q(op["key"])
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             sql = (
                 f"WITH __t AS (SELECT {key}, len(string_split({txt}, ' ')) AS n_words, "
                 f"len(regexp_extract_all(lower({txt}), {_lit_sql(TOKEN_REGEX)})) AS n_tokens, "
@@ -1314,9 +1313,9 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # gram digests, same per-gram totals, same left-join
             # null semantics for groups with no grams
             key = _q(op["key"])
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
-            n = op.get("n", 5)
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
+            n = op["n"]
             sql = (
                 f"WITH __w AS (SELECT {idc}, {key}, string_split({txt}, ' ') AS ws "
                 f"FROM ({sql})), "
@@ -1364,14 +1363,14 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 if branches
                 else _lit_sql(labels[-1])
             )
-            sql = wrap(f"*, {case} AS {_q(op.get('alias', 'split'))}")
+            sql = wrap(f"*, {case} AS {_q(op['alias'])}")
         elif kind == "ols":
             # mirrors operators/stats.groupwise_ols: decimal-exact
             # moment sums (partition-order independent), closed forms
             # in one fixed double shape, rounded on report
             key, x, y = _q(op["key"]), _q(op["x"]), _q(op["y"])
-            xd = op.get("x_decimal", "decimal(12,2)")
-            yd = op.get("y_decimal", "decimal(18,2)")
+            xd = op["x_decimal"]
+            yd = op["y_decimal"]
             den_x = "(n * sxx - sx * sx)"
             den_y = "(n * syy - sy * sy)"
             num = "(n * sxy - sx * sy)"
@@ -1395,8 +1394,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # b=0.75 -> the 2.2 / 0.25 / 0.75 literals): identical
             # IEEE expression shapes per term, per-doc sum rounded to
             # 6, doc-id tie-break at the k boundary
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             terms = ", ".join(_lit_sql(t) for t in op["terms"])
             sql = (
                 f"WITH src AS ({sql}), "
@@ -1414,10 +1413,10 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 f"ORDER BY bm25 DESC, {idc} LIMIT {int(op['k'])}"
             )
         elif kind == "window":
-            parts = ", ".join(_q(c) for c in op.get("partition_by", []))
+            parts = ", ".join(_q(c) for c in op["partition_by"])
             order = ", ".join(
                 _q(k["col"])
-                + (" ASC NULLS FIRST" if k.get("asc", True) else " DESC NULLS LAST")
+                + (" ASC NULLS FIRST" if k["asc"] else " DESC NULLS LAST")
                 for k in op["order_by"]
             )
             over_head = (
@@ -1440,7 +1439,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 elif fn == "ntile":
                     call = f"ntile({e['n']})"
                 elif fn in ("lag", "lead"):
-                    call = f"{fn}({_q(e['col'])}, {e.get('offset', 1)})"
+                    call = f"{fn}({_q(e['col'])}, {e['offset']})"
                 elif fn == "ewma":
                     # mirrors the engine's bounded lag chain: fixed
                     # a^j float literals, additions in ascending j,
@@ -1471,7 +1470,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
                     # honor an explicit rows_preceding sliding frame
                     # (the engine compiles the identical rowsBetween)
                     call = f"{fn}({_q(e['col'])})"
-                    if "rows_preceding" in e:
+                    if e["rows_preceding"] is not None:
                         over = (
                             over_head
                             + f" ROWS BETWEEN {e['rows_preceding']} PRECEDING"
@@ -1484,7 +1483,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             if not isinstance(right, str):
                 raise SqlGenError("join right side must be a table name for SQL")
             on = ", ".join(_q(c) for c in op["on"])
-            how = op.get("how", "inner")
+            how = op["how"]
             # spec joins always carry 'on', and Spark applies the
             # equi-condition even when how='cross' (df.join(r, on,
             # 'cross') is an equi-join) — so 'cross' renders as the
@@ -1504,12 +1503,12 @@ def spec_to_sql(spec: dict, table: str) -> str:
             right = op["right"]
             if not isinstance(right, str):
                 raise SqlGenError("asof_join right side must be a table name for SQL")
-            key, ts = _q(op["on"]), _q(op.get("ts", "ts"))
-            rts = _q(op.get("right_ts", op.get("ts", "ts")))
+            key, ts = _q(op["on"]), _q(op["ts"])
+            rts = _q(op["right_ts"] or op["ts"])
             cells = [f"r.{rts} AS {_q('asof_ts')}"] + [
-                f"r.{_q(c)} AS {_q('asof_' + c)}" for c in op.get("right_cols", [])
+                f"r.{_q(c)} AS {_q('asof_' + c)}" for c in op["right_cols"]
             ]
-            direction = op.get("direction", "backward")
+            direction = op["direction"]
             # type-generic distance: CASE-split subtraction compares
             # INTERVALs for timestamps and numbers for numeric keys —
             # no epoch() so fractional seconds survive exactly, the
@@ -1526,13 +1525,13 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 cond, order = f" AND r.{rts} <= l.{ts}", f"r.{rts} DESC"
             else:
                 cond, order = f" AND r.{rts} >= l.{ts}", f"r.{rts} ASC"
-            if "tolerance" in op:
+            if op["tolerance"] is not None:
                 # bound rendered in the unit matching the ts type:
                 # timestamp distance is an INTERVAL (to_microseconds
                 # handles fractional-second tolerances exactly), date
                 # distance is integer days, numeric distance is raw
                 tol = op["tolerance"]
-                unit = op.get("tolerance_unit", "raw")
+                unit = op["tolerance_unit"]
                 if unit == "second":
                     bound = f"to_microseconds(CAST({int(round(tol * 1_000_000))} AS BIGINT))"
                 else:  # 'day' (date-date is integer days) or 'raw'
@@ -1550,7 +1549,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 raise SqlGenError("union right side must be a table name for SQL")
             # UNION BY NAME dedups, UNION ALL BY NAME concatenates —
             # exactly unionByName (+ optional .distinct())
-            kw = "UNION BY NAME" if op.get("distinct") else "UNION ALL BY NAME"
+            kw = "UNION BY NAME" if op["distinct"] else "UNION ALL BY NAME"
             sql = f"SELECT * FROM ({sql}) {kw} SELECT * FROM {right}"
         elif kind == "groupby_agg":
             aggs = []
@@ -1579,14 +1578,14 @@ def spec_to_sql(spec: dict, table: str) -> str:
                     )
                     continue
                 arg = "*" if col == "*" else _q(col)
-                if a.get("cast") and col != "*":
+                if a["cast"] and col != "*":
                     arg = f"CAST({arg} AS {a['cast']})"
                 aggs.append(f"{_AGG_SQL[fn]}({arg}) AS {alias}")
             keys = ", ".join(_q(k) for k in op["keys"])
             head = (keys + ", " if keys else "") + ", ".join(aggs)
             tail = f"GROUP BY {keys}" if keys else ""
             sql = wrap(head, tail)
-            if op.get("having") is not None:
+            if op["having"] is not None:
                 sql = f"SELECT * FROM ({sql}) WHERE {expr_to_sql(op['having'])}"
         elif kind == "pivot":
             agg = op["agg"]
@@ -1633,11 +1632,11 @@ def spec_to_sql(spec: dict, table: str) -> str:
                     )
                     continue
                 arg = "*" if col == "*" else _q(col)
-                if a.get("cast") and col != "*":
+                if a["cast"] and col != "*":
                     arg = f"CAST({arg} AS {a['cast']})"
                 aggs.append(f"{_AGG_SQL[fn]}({arg}) AS {alias}")
             keys = ", ".join(_q(k) for k in op["keys"])
-            gid = _q(op.get("gid_alias", "gid"))
+            gid = _q(op["gid_alias"])
             aggs.append(f"CAST(GROUPING({keys}) AS INTEGER) AS {gid}")
             sql = wrap(
                 keys + ", " + ", ".join(aggs), f"GROUP BY ROLLUP({keys})"
@@ -1645,8 +1644,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
         elif kind == "ann_topk":
             # mirrors similarity.topk_cosine_bruteforce: list cosine
             # rounded to 6, id tie-break at the k boundary
-            idc = _q(op.get("id_col", "vec_id"))
-            vec = _q(op.get("vec_col", "embedding"))
+            idc = _q(op["id_col"])
+            vec = _q(op["vec_col"])
             qid, k = int(op["query_id"]), int(op["k"])
             sql = (
                 f"WITH asrc AS ({sql}), "
@@ -1662,7 +1661,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # wrapped subquery): word 3-gram shingles, 16 md5-based
             # minhashes mod 2^31-1, 4-band LSH candidates, exact
             # Jaccard on candidates only, drop the doc_b side
-            idc = _q(op.get("id_col", "doc_id"))
+            idc = _q(op["id_col"])
             t = op["threshold"]
             m31 = 2147483647
             base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {m31})"
@@ -1707,8 +1706,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # window-min fingerprints over full w-windows only,
             # boilerplate fingerprints (>100 docs) dropped, pairs by
             # containment overlap of fingerprint sets, doc_b side out
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             t = float(op["overlap"])
             sql = (
                 f"WITH wsrc AS ({sql}), "
@@ -1736,9 +1735,9 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # mirrors operators/dedup.dedup_savings_by_source: corpus-
             # wide lowest-id keeper per md5 digest, per-group rollup
             key = _q(op["key"])
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
-            ln = _q(op.get("len_col", "n_chars"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
+            ln = _q(op["len_col"])
             sql = (
                 f"WITH dr AS (SELECT {idc} AS _id, {key} AS {key}, "
                 f"CAST({ln} AS BIGINT) AS _len, md5({txt}) AS _h FROM ({sql})), "
@@ -1756,7 +1755,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # union-of-vocab JS sum folded into intersection-only
             # terms plus closed-form one-sided mass
             key = _q(op["key"])
-            txt = _q(op.get("text_col", "text"))
+            txt = _q(op["text_col"])
             sql = (
                 f"WITH vt AS (SELECT {key} AS g, unnest(string_split({txt}, ' ')) AS w "
                 f"FROM ({sql})), "
@@ -1780,7 +1779,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
             # oracle generator injects it (the DataFrame compiler
             # reads the schema instead)
             right = op["right"]
-            if "cols" not in op:
+            if op["cols"] is None:
                 raise SqlGenError("merge SQL rendering needs 'cols'")
             key = _q(op["key"])
             cols = [c for c in op["cols"] if c != op["key"]]
@@ -1806,8 +1805,8 @@ def spec_to_sql(spec: dict, table: str) -> str:
             right = op["right"]
             if not isinstance(right, str):
                 raise SqlGenError("decontaminate right side must be a table name")
-            idc = _q(op.get("id_col", "doc_id"))
-            txt = _q(op.get("text_col", "text"))
+            idc = _q(op["id_col"])
+            txt = _q(op["text_col"])
             shingle = (
                 "CASE WHEN len(ws) >= 3 THEN "
                 "list_distinct(list_transform(range(1, len(ws)-1), "
@@ -1827,10 +1826,10 @@ def spec_to_sql(spec: dict, table: str) -> str:
                 f"SELECT * FROM dsrc ANTI JOIN bad USING ({idc})"
             )
         elif kind == "pack":
-            idc = _q(op.get("id_col", "doc_id"))
-            lng = _q(op.get("lang_col", "lang"))
-            txt = _q(op.get("text_col", "text"))
-            budget, gsz = op["budget"], op.get("group_size", 1024)
+            idc = _q(op["id_col"])
+            lng = _q(op["lang_col"])
+            txt = _q(op["text_col"])
+            budget, gsz = op["budget"], op["group_size"]
             sql = (
                 f"WITH pt AS (SELECT {idc} AS doc_id, {lng} AS lang, "
                 f"CAST(len(string_split({txt}, ' ')) AS BIGINT) AS n_tokens, "

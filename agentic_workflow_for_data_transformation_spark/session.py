@@ -13,6 +13,7 @@ import threading
 from collections import OrderedDict
 from typing import Any, Callable, TypeVar
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame, SparkSession
 
 _T = TypeVar("_T")
@@ -25,7 +26,9 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults.
+    """Build a SparkSession with scale-aware defaults, or return the
+    running one as it is (the builder would otherwise re-apply these
+    settings, e.g. the shuffle partitions, to a session in use).
 
     - AQE on: runtime shuffle-partition coalescing + skew-join splitting,
       which is what keeps the same plan viable from sf0.001 to 100 TB.
@@ -33,6 +36,10 @@ def get_spark(
     - Arrow on: fast pandas interchange for the sample-handoff path and
       for pandas UDFs used by the multimodal/similarity operators.
     """
+    try:
+        return SparkSession.active()
+    except PySparkRuntimeError:  # no session yet
+        pass
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -197,6 +197,18 @@ def test_cli_sql_escape_hatch(spark, tmp_path, capsys):
     assert len(lines) == 4  # header + A/N/R
 
 
+def test_get_spark_leaves_a_running_session_alone(spark):
+    """cli.main calls get_spark(app_name="cli") inside a running
+    session; that must not re-tune it (the test session runs 4 shuffle
+    partitions, the factory default is 32)."""
+    from agentic_workflow_for_data_transformation_spark.session import get_spark
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    again = get_spark(app_name="cli")
+    assert again.sparkContext is spark.sparkContext
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before == "4"
+
+
 def test_cli_sql_requires_a_source(tmp_path, capsys):
     from agentic_workflow_for_data_transformation_spark import cli
 
@@ -225,9 +237,13 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
     must; with_column overwriting a filtered column invalidates that
     filter (live-LLM finding, round 8), and so does redact, which
     rewrites its text column in place, and union, whose appended rows
-    no earlier filter saw. A filter's columns are the ones its
-    expression references: inside a CASE (not the 'when'/'else' keys),
-    a json_get (not the field name) or a trunc (not the unit)."""
+    no earlier filter saw. So do explode, window and split_assign
+    writing their alias over a filtered column, a right join (its key
+    comes from the right side), sessionize (only its key survives) and
+    a rename of the filtered column (the filter would need rewriting).
+    A filter's columns are the ones its expression references: inside
+    a CASE (not the 'when'/'else' keys), a json_get (not the field
+    name) or a trunc (not the unit)."""
     from agentic_workflow_for_data_transformation_spark.agents.orchestrator import (
         _filter_exprs_on_output,
     )
@@ -296,3 +312,39 @@ def test_filter_exprs_invalidated_by_schema_replacing_ops():
          "aggs": [{"fn": "count", "col": "*", "alias": "n"}]},
     ]}
     assert len(_filter_exprs_on_output(spec)) == 1
+
+    for writer in (
+        {"op": "explode", "col": "text", "alias": "text"},
+        {"op": "window", "order_by": [{"col": "age"}],
+         "exprs": [{"fn": "rank", "alias": "age"}]},
+        {"op": "split_assign", "key": "name", "weights": [1, 1],
+         "labels": ["a", "b"], "alias": "city"},
+        {"op": "join", "right": "others", "on": ["age"], "how": "right"},
+        {"op": "sessionize", "key": "user_id", "gap_seconds": 1800},
+        {"op": "rename", "renames": {"age": "years"}},
+    ):
+        col = {"explode": "text", "split_assign": "city",
+               "sessionize": "event_type"}.get(writer["op"], "age")
+        spec = {"ops": [{"op": "filter", "expr": {"gt": [col, 30]}}, writer]}
+        assert _filter_exprs_on_output(spec) == [], writer
+
+    # sessionize keeps its key column, values intact
+    by_user = {"gt": ["user_id", 3]}
+    spec = {"ops": [{"op": "filter", "expr": by_user},
+                    {"op": "sessionize", "key": "user_id", "gap_seconds": 1800}]}
+    assert _filter_exprs_on_output(spec) == [by_user]
+
+
+def test_filter_then_explode_passes_the_critic(spark, tmp_path):
+    """explode writing its tokens over the filtered text column: the
+    filter held on the input rows, not on the tokens, so the critic
+    must not re-check it on the output."""
+    from agentic_workflow_for_data_transformation_spark.agents import execution_agent
+
+    df = spark.createDataFrame([("ax by",), ("cz",)], "text string")
+    spec = {"ops": [
+        {"op": "filter", "expr": {"contains": ["text", "x"]}},
+        {"op": "explode", "col": "text", "alias": "text"},
+    ]}
+    path, result = execution_agent(df, spec, "tokens of x rows", tmp_path)
+    assert critic_agent(spark, result, spec, path) == (True, "ok", 2)

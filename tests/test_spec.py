@@ -10,21 +10,33 @@ from agentic_workflow_for_data_transformation_spark.plans import (
     parse_description,
 )
 from agentic_workflow_for_data_transformation_spark.plans.parser import ParseError, parse_predicate
-from agentic_workflow_for_data_transformation_spark.plans.spec import validate_spec
+from agentic_workflow_for_data_transformation_spark.plans.spec import (
+    OPS,
+    schema_effect,
+    validate_spec,
+)
 
 
 def test_validate_rejects_bad_specs():
     for bad in [
         {"ops": [{"op": "nope"}]},
-        {"ops": [{"op": "filter"}, ]},  # missing expr -> None invalid? None is allowed literal
+        {"ops": [{"op": "filter"}]},  # expr is required
         {"ops": [{"op": "select", "cols": []}]},
         {"ops": [{"op": "limit", "n": -1}]},
         {"ops": [{"op": "groupby_agg", "keys": ["c"], "aggs": [{"fn": "variance", "col": "x", "alias": "m"}]}]},
         {"ops": [{"op": "filter", "expr": {"gt": ["age"]}}]},
         "not a spec",
+        # nested window-expr fields are typed (a string offset used to
+        # reach the compiler and fail there with a Py4J error)
+        {"ops": [{"op": "window", "order_by": [{"col": "ts"}],
+                  "exprs": [{"fn": "lag", "col": "v", "alias": "p", "offset": "two"}]}]},
+        {"ops": [{"op": "window", "order_by": [{"col": "ts"}],
+                  "exprs": [{"fn": "lag", "col": 3, "alias": "p"}]}]},
+        {"ops": [{"op": "join", "right": "t", "on": ["k"], "broadcast": "yes"}]},
+        {"ops": [{"op": "union", "right": "t", "distinct": 1}]},
+        # an undeclared field is an error, never silently ignored
+        {"ops": [{"op": "bm25", "terms": ["x"], "k": 3, "text_column": "body"}]},
     ]:
-        if bad == {"ops": [{"op": "filter"}]}:
-            continue
         with pytest.raises(SpecError):
             validate_spec(bad)
 
@@ -2800,3 +2812,141 @@ def test_concentration_hapax_spec_bounds():
             validate_spec({"ops": [{"op": kind, "key": "text"}]})
         with _pytest.raises(SpecError):
             validate_spec({"ops": [{"op": kind, "key": 3}]})
+
+
+# One example per op in plans.spec.OPS (table, fields), run through the
+# validator, the compiler and the SQL renderer.
+_ORDERS_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+                "o_orderdate", "o_orderpriority"]
+EXAMPLES = {
+    "filter": ("orders", {"expr": {"gt": ["o_totalprice", 1000]}}),
+    "select": ("orders", {"cols": ["o_orderkey", "o_totalprice"]}),
+    "with_column": ("orders", {"name": "o_totalprice", "replace": True,
+                               "expr": {"mul": ["o_totalprice", 2]}}),
+    "rename": ("orders", {"renames": {"o_custkey": "cust"}}),
+    "drop": ("orders", {"cols": ["o_orderpriority"]}),
+    "sort": ("orders", {"keys": [{"col": "o_totalprice", "asc": False}]}),
+    "limit": ("orders", {"n": 5}),
+    "groupby_agg": ("orders", {"keys": ["o_orderstatus"], "having": {"gt": ["total", 0]},
+                               "aggs": [{"fn": "sum", "col": "o_totalprice", "alias": "total"}]}),
+    "join": ("customer", {"right": "nation_k", "on": ["c_nationkey"], "how": "right"}),
+    "union": ("orders", {"right": "orders", "distinct": True}),
+    "distinct": ("orders", {}),
+    "dedup": ("documents", {"keys": ["source"], "keep_col": "doc_id", "keep": "max"}),
+    "explode": ("documents", {"col": "text", "alias": "text"}),
+    "sessionize": ("events", {"key": "user_id", "gap_seconds": 1800}),
+    "window": ("events", {"partition_by": ["user_id"], "order_by": [{"col": "ts"}],
+                          "exprs": [{"fn": "lag", "col": "value", "alias": "value",
+                                     "offset": 2}]}),
+    "sample": ("documents", {"fraction": 0.5, "key": "doc_id"}),
+    "split_assign": ("documents", {"key": "doc_id", "weights": [1, 1],
+                                   "labels": ["a", "b"], "alias": "source"}),
+    "winsorize": ("events", {"col": "value", "keys": ["event_type"]}),
+    "resample": ("events", {"key": "user_id", "step_hours": 6}),
+    "chunk": ("documents", {"size": 8, "stride": 4}),
+    "negatives": ("embeddings", {"k": 2, "pool": 8}),
+    "pivot": ("orders", {"keys": ["o_custkey"], "col": "o_orderstatus",
+                         "values": ["F", "O"], "agg": {"fn": "count", "col": "*"},
+                         "aliases": ["n_f", "n_o"]}),
+    "asof_join": ("events", {"right": "events", "on": "user_id", "right_cols": ["value"]}),
+    "rollup": ("orders", {"keys": ["o_orderstatus"],
+                          "aggs": [{"fn": "count", "col": "*", "alias": "n"}]}),
+    "mode": ("orders", {"keys": ["o_custkey"], "col": "o_orderstatus"}),
+    "ols": ("orders", {"key": "o_orderstatus", "x": "o_custkey", "y": "o_totalprice"}),
+    "bm25": ("documents", {"terms": ["data"], "k": 3}),
+    "ann_topk": ("embeddings", {"query_id": 1, "k": 3}),
+    "langid": ("documents", {}),
+    "token_counts": ("documents", {}),
+    "quality_score": ("documents", {}),
+    "gopher": ("documents", {}),
+    "redact": ("documents", {}),
+    "blocklist": ("documents", {"words": ["spark"]}),
+    "kanon": ("events", {"cols": ["user_id", "event_type"], "k": 2}),
+    "majority": ("events", {"key": "user_id", "label": "event_type"}),
+    "agreement": ("events", {"key": "user_id", "label": "event_type"}),
+    "correlate": ("events", {"cols": ["value", "user_id"]}),
+    "spearman": ("events", {"cols": ["value", "user_id"]}),
+    "mutual_info": ("documents", {"a": "lang", "b": "source"}),
+    "anova": ("events", {"value": "value", "group": "event_type"}),
+    "funnel": ("events", {"type": "event_type", "steps": ["view", "click"],
+                          "user": "user_id", "ts": "ts"}),
+    "novelty": ("documents", {}),
+    "concentration": ("documents", {}),
+    "hapax": ("documents", {}),
+    "ndcg": ("embeddings", {"k": 3, "n_queries": 2}),
+    "silhouette": ("embeddings", {}),
+    "common_direction": ("embeddings", {"n_iter": 2}),
+    "unimax": ("documents", {"budget": 1000, "key": "source"}),
+    "bootstrap_mean": ("events", {"col": "value", "key": "event_type", "id": "event_id",
+                                  "n": 4}),
+    "bpe_merges": ("documents", {"n": 2}),
+    "perplexity_buckets": ("documents", {}),
+    "anomaly": ("events", {"col": "value", "key": "user_id", "order_col": "event_id",
+                           "n": 5}),
+    "word_entropy": ("documents", {}),
+    "oov": ("documents", {"key": "source"}),
+    "dsir": ("documents", {"target_col": "lang", "target_val": "en"}),
+    "fertility": ("documents", {"key": "lang"}),
+    "dup_by_source": ("documents", {"key": "source"}),
+    "winnow_dedup": ("documents", {"overlap": 0.5}),
+    "dedup_savings": ("documents", {"key": "source"}),
+    "vocab_divergence": ("documents", {"key": "source"}),
+    "expect": ("documents", {"expectations": [{"kind": "unique", "col": "doc_id"}]}),
+    "neardup": ("documents", {"threshold": 0.8}),
+    "merge": ("orders", {"right": "orders", "key": "o_orderkey", "cols": _ORDERS_COLS}),
+    "decontaminate": ("documents", {"right": "documents"}),
+    "pack": ("documents", {"budget": 64}),
+}
+
+
+@pytest.fixture(scope="module")
+def example_tables(spark, sf_dir):
+    from agentic_workflow_for_data_transformation_spark.sources import (
+        read_events,
+        read_parquet_table,
+    )
+
+    names = ["customer", "documents", "embeddings", "nation", "orders"]
+    tables = {n: read_parquet_table(spark, sf_dir, n) for n in names}
+    tables["events"] = read_events(spark, sf_dir)
+    tables["nation_k"] = tables["nation"].withColumnRenamed("n_nationkey", "c_nationkey")
+    return tables
+
+
+def _attr_ids(df) -> dict:
+    out = df._jdf.queryExecution().analyzed().output()
+    attrs = [out.apply(i) for i in range(out.size())]
+    return {a.name(): a.exprId().id() for a in attrs}
+
+
+@pytest.mark.parametrize("kind", sorted(set(EXAMPLES) | set(OPS)))
+def test_op_table_entry_is_what_the_engine_does(example_tables, kind):
+    """Drift guard over plans.spec.OPS: each op's example validates,
+    compiles and renders SQL (sessionize has no SQL rendering), and
+    the declared schema effect covers every input column the compiled
+    plan rewrites or drops, as seen in the analyzed plan's output
+    attribute ids: "keeps" allows none, "writes" only its columns, and
+    "only" keeps each of its columns as it was."""
+    from agentic_workflow_for_data_transformation_spark.plans.sqlgen import (
+        SqlGenError,
+        spec_to_sql,
+    )
+
+    table, fields = EXAMPLES[kind]
+    op = {"op": kind, **fields}
+    spec = validate_spec({"ops": [op]})
+    df = example_tables[table]
+    out = compile_spec(df, spec, tables=example_tables)
+    try:
+        assert spec_to_sql(spec, table).startswith(("SELECT", "WITH"))
+    except SqlGenError:
+        assert kind == "sessionize"
+    word, cols = schema_effect(op)
+    if word == "replaces":
+        return
+    before, after = _attr_ids(df), _attr_ids(out)
+    if word == "only":
+        assert {c: after.get(c) for c in cols} == {c: before[c] for c in cols}
+    else:
+        moved = {c for c, i in before.items() if after.get(c) != i}
+        assert moved <= cols, f"{kind} rewrites or drops {sorted(moved - cols)}"
