@@ -14,15 +14,18 @@ Shape and contracts follow the reference workflow
 - execution_agent (:105-154): compile the spec, run on Spark, write a
   uniquely-named CSV (same transform_{slug}_{stamp} naming, :114-118),
   empty results still produce a header-only file (AGENTIC_WORKFLOW.md:87).
+  The critic's numbers (row count, one violation count per checkable
+  predicate) are observed on that same execution: one Spark job.
 - critic_agent (:157-255): the reference asks an LLM YES/NO and with no
-  LLM accepts blindly (:175-177). Here validation is deterministic:
-  schema check + row-count cross-check against a recount of the
-  executor's frame + zero-predicate-violation check, the last two read
-  from the written file by ONE aggregate; the escape-hatch path runs
-  the same check core on the snippet's frame. Same MAX_RETRIES = 2
-  budget (:159) when an LLM re-plans; with no LLM the planner is
-  deterministic, so a rejection ends the loop. An LLM critic can be
-  layered on top but is never required.
+  LLM accepts blindly (:175-177). Here validation is deterministic and
+  runs no Spark job: the file's header against the executor's columns,
+  its data rows (csv module) against the observed row count, and zero
+  observed predicate violations (one aggregate over the result stands
+  in when the sink fell back to a directory); the escape-hatch path
+  runs the same check core against a recount of the snippet's frame.
+  Same MAX_RETRIES = 2 budget (:159) when an LLM re-plans; with no LLM
+  the planner is deterministic, so a rejection ends the loop. An LLM
+  critic can be layered on top but is never required.
 - LLM degradation policy (G8, :9-12): every stage works with no LLM at
   all — and unlike the reference (whose offline path degenerates to an
   identity transform), the deterministic path runs the full eval corpus.
@@ -36,14 +39,14 @@ from pathlib import Path
 from typing import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import compile_expr, compile_spec, parse_description, validate_spec
 from ..plans.escape import apply_snippet
 from ..plans.parser import ParseError
 from ..plans.spec import SpecError, schema_effect, validate_expr
-from ..sources import read_csv, unique_output_path, write_csv_single
+from ..sources import csv_shape, read_csv, unique_output_path, write_csv_single
 
 MAX_RETRIES = 2  # same budget as the reference (:159)
 
@@ -333,14 +336,19 @@ def escape_hatch_agent(
 def execution_agent(
     df: DataFrame, spec: dict, description: str, out_dir: str | Path,
     tables: dict[str, DataFrame] | None = None,
-) -> tuple[str, DataFrame]:
-    """Compile the spec once and run it; write the uniquely-named CSV
-    sink and return (its path, the compiled frame) for the critic.
-    ``tables`` feeds the compiler's table map for ops with a named
-    right side (join, decontaminate)."""
-    result = compile_spec(df, spec, tables=tables or {})
+) -> tuple[str, DataFrame, Observation]:
+    """Compile the spec once and run it into the uniquely-named CSV
+    sink, with the critic's numbers (``_plan_numbers`` of the
+    predicates ``_filter_exprs_on_output`` keeps) observed on that same
+    execution. Returns (the path, the observed frame, its Observation)
+    for the critic. ``tables`` feeds the compiler's table map for ops
+    with a named right side (join, decontaminate)."""
+    observation = Observation()
+    result = compile_spec(df, spec, tables=tables or {}).observe(
+        observation, *_plan_numbers(_filter_exprs_on_output(spec))
+    )
     path = write_csv_single(result, unique_output_path(out_dir, description))
-    return str(path), result
+    return str(path), result, observation
 
 
 def _filter_exprs_on_output(spec: dict) -> list[dict]:
@@ -362,46 +370,60 @@ def _filter_exprs_on_output(spec: dict) -> list[dict]:
     return [e for e, _ in kept]
 
 
+def _plan_numbers(preds: list[dict]) -> list[Column]:
+    """The plan side of the critic's check: count(*), then
+    count_if(NOT pred) per predicate (NULL is never a violation, as
+    with a filter)."""
+    return [F.count(F.lit(1)).alias("n"),
+            *[F.count_if(~compile_expr(e)).alias(f"bad{i}") for i, e in enumerate(preds)]]
+
+
 def _check_output(
-    spark: SparkSession, result: DataFrame, output_path: str, preds: list[dict]
-) -> tuple[str | None, int | None, DataFrame]:
+    result: DataFrame, output_path: str, preds: list[dict], plan_numbers: list[int]
+) -> tuple[str | None, int | None]:
     """The deterministic check of both the spec and escape-hatch paths:
-    (a) file columns == ``result`` columns; (b) file row count == a
-    recount of ``result``; (c) no row violates ``preds``, in order. The
-    file is read by ONE aggregate, count(*) plus count_if(NOT pred) per
-    predicate (NULL is never a violation, as with a filter). Returns
-    (failure reason or None, rows in the file, the file's DataFrame)."""
-    out_df = read_csv(spark, output_path)
-    if out_df.columns != result.columns:
-        return f"schema mismatch: {out_df.columns} != {result.columns}", None, out_df
-    expected_n = result.count()
-    actual_n, *violations = out_df.agg(
-        F.count(F.lit(1)), *[F.count_if(~compile_expr(e)) for e in preds]
-    ).first()
+    (a) file header == ``result`` columns; (b) file data rows == the
+    plan's row count; (c) no row violates ``preds``, in order. The file
+    side is read with the csv module (``csv_shape``); ``plan_numbers``
+    is the plan side: the row count, then one violation count per
+    predicate. Returns (failure reason or None, rows in the file)."""
+    columns, actual_n = csv_shape(output_path)
+    if columns != result.columns:
+        return f"schema mismatch: {columns} != {result.columns}", None
+    expected_n, *violations = plan_numbers
     if actual_n != expected_n:
         return (f"row count mismatch: output {actual_n} != recomputed {expected_n}",
-                actual_n, out_df)
+                actual_n)
     for expr, n_bad in zip(preds, violations):
         if n_bad:
-            return f"{n_bad} rows violate predicate {expr}", actual_n, out_df
-    return None, actual_n, out_df
+            return f"{n_bad} rows violate predicate {expr}", actual_n
+    return None, actual_n
 
 
 def critic_agent(
     spark: SparkSession,
     result: DataFrame,
+    observation: Observation,
     spec: dict,
     output_path: str,
     llm: LLMClient | None = None,
 ) -> tuple[bool, str, int | None]:
     """Deterministic validation (replacing the reference's LLM YES/NO,
-    :179-193) by ``_check_output``: schema and row count against the
-    executor's compiled frame ``result``, then every still-checkable
-    filter predicate. Returns (ok, reason, rows in the written file).
-    The optional LLM verdict is advisory only — it can veto, never
-    approve a failed deterministic check."""
+    :179-193) by ``_check_output``, with no Spark job of its own: the
+    written file's header and data rows against the executor's frame
+    ``result`` and the row count ``observation`` took on the sink's
+    execution, then every still-checkable filter predicate's observed
+    violation count. A directory sink stopped its bounded collect
+    early, so its observation is partial: one aggregate over ``result``
+    stands in. Returns (ok, reason, rows in the written file). The
+    optional LLM verdict is advisory only — it can veto, never approve
+    a failed deterministic check."""
     preds = _filter_exprs_on_output(spec)
-    failure, actual_n, out_df = _check_output(spark, result, output_path, preds)
+    if Path(output_path).is_dir():
+        plan_numbers = list(result.agg(*_plan_numbers(preds)).first())
+    else:
+        plan_numbers = list(observation.get.values())
+    failure, actual_n = _check_output(result, output_path, preds, plan_numbers)
     if failure is not None:
         return False, failure, actual_n
     n_checked_preds = len(preds)
@@ -455,7 +477,7 @@ def critic_agent(
             "predicates, any violation you believe you see in the "
             "sample is a misreading.\n"
             + skipped_note
-            + f"sample: {out_df.limit(5).toPandas().to_csv(index=False)}\n"
+            + f"sample: {read_csv(spark, output_path).limit(5).toPandas().to_csv(index=False)}\n"
             "How to read the sample — it is the plan's FINISHED OUTPUT; "
             "every op has ALREADY run:\n"
             "- rename a->b: the header showing b (and no a) is exactly "
@@ -541,11 +563,11 @@ def run_transform(
         desc = description if feedback is None else f"{description}\n(previous attempt failed: {feedback})"
         try:
             state.spec = planner_agent(desc, columns=df.columns, llm=llm)
-            state.output_path, result = execution_agent(
+            state.output_path, result, observation = execution_agent(
                 df, state.spec, description, out_dir, tables=tables
             )
             ok, reason, state.row_count = critic_agent(
-                spark, result, state.spec, state.output_path, llm=llm
+                spark, result, observation, state.spec, state.output_path, llm=llm
             )
         except (ParseError, SpecError, json.JSONDecodeError, AnalysisException) as e:
             # AnalysisException joins the planning-failure class for
@@ -565,8 +587,8 @@ def run_transform(
                 state.code, state.schema, state.output_path, result = (
                     escape_hatch_agent(df, desc, llm, out_dir)
                 )
-                failure, state.row_count, _ = _check_output(
-                    spark, result, state.output_path, []
+                failure, state.row_count = _check_output(
+                    result, state.output_path, [], [result.count()]
                 )
             except Exception as ee:  # sandbox rejection, bad JSON, runtime error
                 state.messages.append(f"attempt {attempt + 1}: escape hatch failed: {ee}")

@@ -84,7 +84,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.sql is not None:
         # raw-SQL escape hatch: the full Spark SQL surface without the
         # NL pipeline — same session config, same sinks
-        from .sources import read_tables, write_csv_single
+        from .sources import csv_shape, read_tables, write_csv_single
 
         spark = get_spark(app_name="cli")
         if args.sf_dir:
@@ -100,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
             out.explain("formatted")  # prints the physical plan
             return 0
         path = write_csv_single(out, Path(args.out_dir) / "sql_result.csv")
-        print(f"rows={out.count()}")
+        print(f"rows={csv_shape(path)[1]}")  # counted off the written file
         print(f"output: {path}")
         return 0
 

@@ -16,6 +16,7 @@ parquet); CSV exists for reference parity at the edges.
 
 from __future__ import annotations
 
+import csv
 import re
 from datetime import datetime, timezone
 from pathlib import Path
@@ -111,8 +112,8 @@ def write_csv_single(df: DataFrame, path: str | Path, small_threshold: int = 1_0
     more). More than ``small_threshold`` rows back means the result is
     too big for one file: it falls back to the parallel directory sink
     (``write_csv_dir``) and returns that directory path —
-    ``spark.read.csv`` reads either form, so downstream consumers (the
-    critic) are unaffected. This keeps a "select everything from a
+    ``spark.read.csv`` and ``csv_shape`` read either form, so downstream
+    consumers (the critic) are unaffected. This keeps a "select everything from a
     100 TB table" description from collecting onto the driver.
     """
     path = Path(path)
@@ -122,6 +123,23 @@ def write_csv_single(df: DataFrame, path: str | Path, small_threshold: int = 1_0
         return write_csv_dir(df, path.with_suffix(""))
     pdf.to_csv(path, index=False)
     return path
+
+
+def csv_shape(path: str | Path) -> tuple[list[str], int]:
+    """(header, data-row count) of what ``write_csv_single`` wrote — a
+    single file, or a directory whose part files each carry the header
+    — read with the ``csv`` module, so no Spark job. pandas doubles an
+    embedded quote; Spark's part files escape it with a backslash."""
+    path = Path(path)
+    parts = sorted(path.glob("part-*")) if path.is_dir() else [path]
+    header: list[str] = []
+    n = 0
+    for part in parts:
+        with open(part, newline="", encoding="utf-8") as f:
+            rows = csv.reader(f, escapechar="\\" if path.is_dir() else None)
+            header = next(rows, header)
+            n += sum(1 for _ in rows)
+    return header, n
 
 
 def write_csv_dir(df: DataFrame, path: str | Path) -> Path:

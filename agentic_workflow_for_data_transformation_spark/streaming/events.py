@@ -161,10 +161,11 @@ def sessionized_events(events: DataFrame, gap_seconds: int = 1800,
     order = [F.col(ts_col), F.col(id_col)]  # total order under ts ties
     w = Window.partitionBy(key_col).orderBy(*order)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev_ts = F.lag(F.col(ts_col).cast("long")).over(w)
-    brk = F.when(
-        prev_ts.isNull() | ((F.col(ts_col).cast("long") - prev_ts) > gap_seconds), 1
-    ).otherwise(0)
+    # through TIMESTAMP: Spark casts no TIMESTAMP_NTZ to long (as in
+    # sources.io.normalize_event_ts; the session pins UTC)
+    epoch_s = F.col(ts_col).cast("timestamp").cast("long")
+    prev_ts = F.lag(epoch_s).over(w)
+    brk = F.when(prev_ts.isNull() | ((epoch_s - prev_ts) > gap_seconds), 1).otherwise(0)
     return (
         events.withColumn("_brk", brk)
         .withColumn("session_id", F.sum("_brk").over(run))

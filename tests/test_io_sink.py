@@ -3,7 +3,10 @@ result larger than small_threshold onto the driver (ADVICE round 1)."""
 
 from __future__ import annotations
 
-from agentic_workflow_for_data_transformation_spark.sources.io import write_csv_single
+from agentic_workflow_for_data_transformation_spark.sources.io import (
+    csv_shape,
+    write_csv_single,
+)
 
 
 def test_small_result_single_file(spark, people, tmp_path):
@@ -21,6 +24,18 @@ def test_large_result_never_collects(spark, tmp_path):
     assert p.is_dir()  # parallel directory sink, not a driver collect
     back = spark.read.option("header", True).csv(str(p))
     assert back.count() == 100
+
+
+def test_csv_shape_reads_either_sink_form(spark, tmp_path):
+    """csv_shape reads the header and counts data rows with the csv
+    module, summed over the part files of a directory sink; values
+    holding the delimiter, a quote, a newline or a backslash, an empty
+    string and a NULL are one row each in both forms."""
+    values = ["a,b", 'q"uote', "nl\nx", 'q"\nx', "back\\slash", "", None, "plain"]
+    df = spark.createDataFrame(list(enumerate(values * 3)), "n int, s string")
+    assert csv_shape(write_csv_single(df, tmp_path / "one.csv")) == (["n", "s"], 24)
+    parts = write_csv_single(df.repartition(3), tmp_path / "many.csv", small_threshold=5)
+    assert parts.is_dir() and csv_shape(parts) == (["n", "s"], 24)
 
 
 def test_sink_collect_is_bounded(spark, monkeypatch, tmp_path):

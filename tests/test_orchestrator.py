@@ -4,16 +4,17 @@ retry loop, LLM fallback path (with a fake LLM), and the eval harness."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 
 from agentic_workflow_for_data_transformation_spark.agents import (
     critic_agent,
+    execution_agent,
     planner_agent,
     run_eval,
     run_transform,
 )
-from agentic_workflow_for_data_transformation_spark.plans import compile_spec
 from agentic_workflow_for_data_transformation_spark.plans.parser import ParseError
 
 
@@ -31,6 +32,15 @@ def test_run_transform_empty_result(spark, people, tmp_path):
     st = run_transform(spark, people, "Filter rows where age > 100", out_dir=tmp_path)
     assert st.valid and st.row_count == 0
     assert open(st.output_path).read().strip() == "name,age,city"
+
+
+def test_run_transform_empty_input(spark, people, tmp_path):
+    """An empty input frame gives a valid zero-row result in a
+    header-only file (a filter matching no row: the test above)."""
+    empty = spark.createDataFrame([], people.schema)
+    st = run_transform(spark, empty, "Filter rows where age > 100", out_dir=tmp_path)
+    assert st.valid and st.row_count == 0, st.messages
+    assert open(st.output_path).read() == "name,age,city\n"
 
 
 def test_planner_llm_fallback(spark, people):
@@ -57,42 +67,51 @@ def test_critic_catches_wrong_output(spark, people, tmp_path):
     from agentic_workflow_for_data_transformation_spark.plans import parse_description
 
     spec = parse_description("Filter rows where age > 30")
+    _, result, observation = execution_agent(people, spec, "age over 30", tmp_path)
     bad = tmp_path / "bad.csv"
     bad.write_text("name,age,city\nAlice,25,New York\n")  # violates age > 30
-    ok, reason, _ = critic_agent(spark, compile_spec(people, spec), spec, str(bad))
+    ok, reason, _ = critic_agent(spark, result, observation, spec, str(bad))
     assert not ok
     assert "mismatch" in reason or "violate" in reason
 
 
-def test_critic_reports_violated_predicate(spark, people, tmp_path):
-    """A file with the right columns and row count that breaks only
+# Two checkable predicates over six rows that hold a NULL age and a
+# NULL city; a compiler that drops every filter passes them through.
+FIRST = {"gt": ["age", 30]}
+SECOND = {"ne": ["city", {"lit": "Seattle"}]}
+TWO_FILTERS = {"ops": [{"op": "filter", "expr": FIRST},
+                       {"op": "filter", "expr": SECOND}]}
+SIX_ROWS = [("Bob", 35, "Los Angeles"), ("Charlie", 32, "Chicago"),
+            ("Diana", 45, "Seattle"), ("Fiona", 41, None),
+            ("George", None, "Denver"), ("Jasmine", 31, "Portland")]
+
+
+def _violating_run(spark, monkeypatch, tmp_path):
+    """execution_agent over SIX_ROWS with a compiler that ignores the
+    spec, so the frame the sink writes really breaks SECOND."""
+    from agentic_workflow_for_data_transformation_spark.agents import orchestrator
+
+    monkeypatch.setattr(orchestrator, "compile_spec", lambda df, spec, tables: df)
+    six = spark.createDataFrame(SIX_ROWS, "name string, age bigint, city string")
+    return execution_agent(six, TWO_FILTERS, "two filters", tmp_path)
+
+
+def test_critic_reports_violated_predicate(spark, tmp_path, monkeypatch):
+    """A result with the right columns and row count that breaks only
     the SECOND of two checkable predicates is rejected naming that
     predicate; a NULL in a predicate column is not a violation (NULL
     age passes age > 30, NULL city passes city != 'Seattle')."""
-    first = {"gt": ["age", 30]}
-    second = {"ne": ["city", {"lit": "Seattle"}]}
-    spec = {"ops": [{"op": "filter", "expr": first},
-                    {"op": "filter", "expr": second}]}
-    bad = tmp_path / "bad.csv"
-    bad.write_text(  # 6 rows, as recomputed from people
-        "name,age,city\n"
-        "Bob,35,Los Angeles\n"
-        "Charlie,32,Chicago\n"
-        "Diana,45,Seattle\n"
-        "Fiona,41,\n"
-        "George,,Denver\n"
-        "Jasmine,31,Portland\n"
-    )
-    ok, reason, n = critic_agent(spark, compile_spec(people, spec), spec, str(bad))
+    path, result, observation = _violating_run(spark, monkeypatch, tmp_path)
+    ok, reason, n = critic_agent(spark, result, observation, TWO_FILTERS, path)
     assert not ok and n == 6
-    assert reason == f"1 rows violate predicate {second}"
+    assert reason == f"1 rows violate predicate {SECOND}"
 
 
 def test_transform_job_count(spark, people, tmp_path):
-    """One deterministic transform runs a fixed number of Spark jobs:
-    the sink collects the result once (bounded), the critic recounts
-    the executor's frame and reads the written file with one aggregate
-    for its row count and every predicate."""
+    """One deterministic transform runs one Spark job: the sink's
+    bounded collect, which also carries the critic's row count and
+    predicate violation counts as observed metrics; the critic reads
+    the written file with the csv module."""
     sc = spark.sparkContext
     group = "test_transform_job_count"
     sc.setJobGroup(group, group)
@@ -105,7 +124,44 @@ def test_transform_job_count(spark, people, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert st.valid and st.row_count == 7
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_directory_sink_gives_the_single_file_verdicts(spark, people, tmp_path,
+                                                      monkeypatch):
+    """Past ``small_threshold`` rows the sink writes a directory and the
+    observation is partial (the bounded collect stopped early); the
+    critic's numbers then come from one aggregate over the result, with
+    the same verdicts and row counts as the single-file sink."""
+    import functools
+
+    from agentic_workflow_for_data_transformation_spark.agents import orchestrator
+    from agentic_workflow_for_data_transformation_spark.cli import EVAL_DESCRIPTIONS
+
+    descriptions = EVAL_DESCRIPTIONS[:5] + EVAL_DESCRIPTIONS[9:12]
+    single = [run_transform(spark, people, d, out_dir=tmp_path / "file")
+              for d in descriptions]
+    monkeypatch.setattr(orchestrator, "write_csv_single", functools.partial(
+        orchestrator.write_csv_single, small_threshold=3))
+    split = [run_transform(spark, people, d, out_dir=tmp_path / "dir")
+             for d in descriptions]
+    assert any(Path(st.output_path).is_dir() for st in split)
+    assert [(st.valid, st.row_count) for st in split] == [
+        (st.valid, st.row_count) for st in single]
+    assert all(st.valid for st in split), [st.messages for st in split]
+
+
+def test_directory_sink_still_rejects_a_violation(spark, tmp_path, monkeypatch):
+    import functools
+
+    from agentic_workflow_for_data_transformation_spark.agents import orchestrator
+
+    monkeypatch.setattr(orchestrator, "write_csv_single", functools.partial(
+        orchestrator.write_csv_single, small_threshold=3))
+    path, result, observation = _violating_run(spark, monkeypatch, tmp_path)
+    assert Path(path).is_dir()
+    assert critic_agent(spark, result, observation, TWO_FILTERS, path) == (
+        False, f"1 rows violate predicate {SECOND}", 6)
 
 
 def test_filter_then_union_passes_the_critic(spark, people, tmp_path):
@@ -166,8 +222,8 @@ def test_llm_critic_can_veto_but_not_override(spark, people, tmp_path):
     from agentic_workflow_for_data_transformation_spark.plans import parse_description
 
     spec = parse_description("Filter rows where age > 30")
-    ok, reason, _ = critic_agent(spark, compile_spec(people, spec), spec,
-                                 st.output_path, llm=naysayer)
+    path, result, observation = execution_agent(people, spec, "age over 30", tmp_path)
+    ok, reason, _ = critic_agent(spark, result, observation, spec, path, llm=naysayer)
     assert not ok and "llm critic rejected" in reason
 
 
@@ -195,6 +251,34 @@ def test_cli_sql_escape_hatch(spark, tmp_path, capsys):
     lines = (tmp_path / "sql_result.csv").read_text().strip().splitlines()
     assert lines[0] == "l_returnflag,n"
     assert len(lines) == 4  # header + A/N/R
+
+
+def test_cli_sql_runs_the_query_once(spark, people, tmp_path, capsys):
+    """--sql prints rows= counted off the written file, so the query
+    runs once, in the sink: one job for a scan-and-filter, on top of
+    the jobs that registering the input view takes (the jobs of the
+    same command with --explain, which executes nothing)."""
+    from agentic_workflow_for_data_transformation_spark import cli
+
+    csv_in = tmp_path / "people.csv"
+    people.toPandas().to_csv(csv_in, index=False)
+    sc = spark.sparkContext
+
+    def jobs(group: str, *extra: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            rc = cli.main(["--sql", "SELECT name, age FROM t WHERE age > 30",
+                           "--input-csv", str(csv_in), "--out-dir", str(tmp_path),
+                           *extra])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rc == 0
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    registering = jobs("cli_sql_explain", "--explain")
+    capsys.readouterr()
+    assert jobs("cli_sql_run") == registering + 1
+    assert capsys.readouterr().out.splitlines()[0] == "rows=7"
 
 
 def test_get_spark_leaves_a_running_session_alone(spark):
@@ -339,12 +423,10 @@ def test_filter_then_explode_passes_the_critic(spark, tmp_path):
     """explode writing its tokens over the filtered text column: the
     filter held on the input rows, not on the tokens, so the critic
     must not re-check it on the output."""
-    from agentic_workflow_for_data_transformation_spark.agents import execution_agent
-
     df = spark.createDataFrame([("ax by",), ("cz",)], "text string")
     spec = {"ops": [
         {"op": "filter", "expr": {"contains": ["text", "x"]}},
         {"op": "explode", "col": "text", "alias": "text"},
     ]}
-    path, result = execution_agent(df, spec, "tokens of x rows", tmp_path)
-    assert critic_agent(spark, result, spec, path) == (True, "ok", 2)
+    path, result, observation = execution_agent(df, spec, "tokens of x rows", tmp_path)
+    assert critic_agent(spark, result, observation, spec, path) == (True, "ok", 2)

@@ -109,3 +109,22 @@ def test_dsir_sample_is_weighted_and_deterministic(spark):
 
     per_lang = collections.Counter(lang for _, lang in a)
     assert all(n <= 10 for n in per_lang.values())
+
+
+def test_sessionize_op_accepts_timestamp_ntz(spark, sf_dir):
+    """The sessionize op over a TIMESTAMP_NTZ ``ts`` (how Spark surfaces
+    a parquet timestamp not adjusted to UTC) gives the same sessions as
+    over its TIMESTAMP twin."""
+    from agentic_workflow_for_data_transformation_spark.plans import compile_spec
+    from agentic_workflow_for_data_transformation_spark.sources import read_events
+
+    ev = read_events(spark, sf_dir)
+    ntz = ev.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    spec = {"ops": [{"op": "sessionize", "key": "user_id", "gap_seconds": 1800}]}
+
+    def sessions(df):
+        out = compile_spec(df, spec)
+        return sorted(map(tuple, out.select([F.col(c).cast("string") for c in out.columns]).collect()))
+
+    assert ntz.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    assert sessions(ntz) == sessions(ev)
