@@ -6,8 +6,9 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 The actual registry lives in
-``agentic_workflow_for_data_transformation_spark/benchqueries.py`` (and the
-operator modules it imports); this file only re-exports it.
+``agentic_workflow_for_data_transformation_spark/benchqueries.py`` (the core)
+and ``registry/`` (one module per query family); this file only
+re-exports it.
 """
 
 from __future__ import annotations

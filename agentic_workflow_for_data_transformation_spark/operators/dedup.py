@@ -350,7 +350,7 @@ def duplicate_clusters(df: DataFrame, id_col: str = "doc_id",
     (doc_a, doc_b, ...) near-dup pair frame — the pair pipeline is the
     expensive 90% of this operator and is shared verbatim with the
     pair-level queries, so pipelines computing both should compute it
-    once (see nsqueries' session-scoped intermediate cache)."""
+    once (see the session-scoped dedup chain in registry/_shared.py)."""
     if pairs is None:
         pairs = lsh_verified_pairs(df, id_col=id_col, threshold=threshold,
                                    num_hashes=num_hashes, bands=bands, n=n)

@@ -1657,7 +1657,7 @@ def spec_to_sql(spec: dict, table: str) -> str:
         elif kind == "neardup":
             # mirrors operators/dedup.lsh_verified_pairs + the greedy
             # keep-first anti join, term for term (same chain as the
-            # nsqueries _VERIFIED_CTES oracles, rendered over the
+            # registry _VERIFIED_CTES oracles, rendered over the
             # wrapped subquery): word 3-gram shingles, 16 md5-based
             # minhashes mod 2^31-1, 4-band LSH candidates, exact
             # Jaccard on candidates only, drop the doc_b side

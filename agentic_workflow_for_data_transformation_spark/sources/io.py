@@ -128,24 +128,30 @@ def write_csv_single(df: DataFrame, path: str | Path, small_threshold: int = 1_0
 def csv_shape(path: str | Path) -> tuple[list[str], int]:
     """(header, data-row count) of what ``write_csv_single`` wrote — a
     single file, or a directory whose part files each carry the header
-    — read with the ``csv`` module, so no Spark job. pandas doubles an
-    embedded quote; Spark's part files escape it with a backslash."""
+    — read with the ``csv`` module, so no Spark job. Both forms write
+    one dialect (see ``write_csv_dir``)."""
     path = Path(path)
     parts = sorted(path.glob("part-*")) if path.is_dir() else [path]
     header: list[str] = []
     n = 0
     for part in parts:
         with open(part, newline="", encoding="utf-8") as f:
-            rows = csv.reader(f, escapechar="\\" if path.is_dir() else None)
+            rows = csv.reader(f)
             header = next(rows, header)
             n += sum(1 for _ in rows)
     return header, n
 
 
 def write_csv_dir(df: DataFrame, path: str | Path) -> Path:
-    """Scale-path CSV sink: a directory of part files, parallel write."""
+    """Scale-path CSV sink: a directory of part files, parallel write,
+    in the single-file form's (pandas') dialect: an embedded quote is
+    doubled, a backslash is an ordinary character, and NULL is written
+    as ``""`` (Spark writes nothing for it, so a one-column NULL row
+    would otherwise vanish as an empty line). Spark reads ``""`` back
+    as NULL."""
     path = Path(path)
-    df.write.mode("overwrite").option("header", True).csv(str(path))
+    (df.write.mode("overwrite").option("header", True)
+     .option("escape", '"').option("nullValue", '""').csv(str(path)))
     return path
 
 

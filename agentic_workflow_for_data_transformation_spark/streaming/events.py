@@ -2,10 +2,10 @@
 the reference has no streaming at all — this is north-star surface).
 
 The same logical plan as the batch time-bucket aggregate
-(benchqueries.x_time_bucket_agg) runs incrementally: watermark bounds
-state, tumbling/session windows aggregate, and the memory sink +
-``processAllAvailable`` lets a finite parquet directory drive the query
-to completion synchronously in tests. In production the source becomes
+(x_time_bucket_agg, registry/relational.py) runs incrementally:
+watermark bounds state, tumbling/session windows aggregate, and the
+memory sink + ``processAllAvailable`` lets a finite parquet directory
+drive the query to completion synchronously in tests. In production the source becomes
 Kafka and the sink a Delta/parquet table via ``foreachBatch`` —
 everything between them is unchanged.
 

@@ -3,6 +3,8 @@ result larger than small_threshold onto the driver (ADVICE round 1)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from agentic_workflow_for_data_transformation_spark.sources.io import (
     csv_shape,
     write_csv_single,
@@ -30,12 +32,38 @@ def test_csv_shape_reads_either_sink_form(spark, tmp_path):
     """csv_shape reads the header and counts data rows with the csv
     module, summed over the part files of a directory sink; values
     holding the delimiter, a quote, a newline or a backslash, an empty
-    string and a NULL are one row each in both forms."""
+    string and a NULL are one row each in both forms, as are a
+    last-column value ending in a backslash and a one-column NULL."""
     values = ["a,b", 'q"uote', "nl\nx", 'q"\nx', "back\\slash", "", None, "plain"]
-    df = spark.createDataFrame(list(enumerate(values * 3)), "n int, s string")
-    assert csv_shape(write_csv_single(df, tmp_path / "one.csv")) == (["n", "s"], 24)
-    parts = write_csv_single(df.repartition(3), tmp_path / "many.csv", small_threshold=5)
-    assert parts.is_dir() and csv_shape(parts) == (["n", "s"], 24)
+    inputs = [
+        (list(enumerate(values * 3)), "n int, s string"),
+        ([(1, "plain"), (2, "ends\\"), (3, "plain")], "n int, s string"),
+        ([("x",), (None,), ("y",)], "s string"),
+    ]
+    for i, (rows, schema) in enumerate(inputs):
+        df = spark.createDataFrame(rows, schema)
+        shape = (df.columns, len(rows))
+        assert csv_shape(write_csv_single(df, tmp_path / f"one{i}.csv")) == shape
+        for form in (df.repartition(3), df.coalesce(1)):
+            parts = write_csv_single(form, tmp_path / f"many{i}.csv", small_threshold=1)
+            assert parts.is_dir() and csv_shape(parts) == shape, i
+
+
+def test_directory_sink_transform_is_valid(spark, monkeypatch, tmp_path):
+    """A transform whose output goes to the directory sink passes the
+    critic's row-count check on rows that once miscounted there."""
+    import functools
+
+    from agentic_workflow_for_data_transformation_spark.agents import orchestrator
+
+    monkeypatch.setattr(orchestrator, "write_csv_single",
+                        functools.partial(write_csv_single, small_threshold=1))
+    df = spark.createDataFrame(
+        [(1, "plain"), (2, "ends\\"), (3, "plain"), (4, None)], "n int, s string"
+    ).coalesce(1)
+    st = orchestrator.run_transform(spark, df, "Select columns n and s.", out_dir=tmp_path)
+    assert Path(st.output_path).is_dir()
+    assert st.valid and st.row_count == 4, st.messages
 
 
 def test_sink_collect_is_bounded(spark, monkeypatch, tmp_path):

@@ -671,9 +671,9 @@ def test_ivfpq_index_dir_removed_at_exit(spark, sf_dir, artifacts, monkeypatch):
     import atexit
     import os
 
-    # the registry modules load through benchqueries, which orders them
-    from agentic_workflow_for_data_transformation_spark import benchqueries  # noqa: F401
-    from agentic_workflow_for_data_transformation_spark import nsqueries3
+    from agentic_workflow_for_data_transformation_spark.registry import (
+        similarity as similarity_queries,
+    )
 
     written, at_exit = [], []
     monkeypatch.setattr(similarity, "write_ivfpq_index",
@@ -682,8 +682,8 @@ def test_ivfpq_index_dir_removed_at_exit(spark, sf_dir, artifacts, monkeypatch):
                         lambda s, index_dir: (None, None, s.range(1).toDF("cell")))
     monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
 
-    nsqueries3._ivfpq_index_cached(spark, sf_dir)
-    nsqueries3._ivfpq_index_cached(spark, sf_dir)  # a hit makes no new dir
+    similarity_queries._ivfpq_index_cached(spark, sf_dir)
+    similarity_queries._ivfpq_index_cached(spark, sf_dir)  # a hit makes no new dir
     (index_dir,) = written
     assert os.path.basename(index_dir).startswith("spark_graft_ivfpq_")
     assert os.path.isdir(index_dir)
@@ -1310,8 +1310,7 @@ def test_trained_pq_recall_clears_serving_bar(spark):
     reach recall@10 >= 0.7 on the sf0.01 fixture (the seeded-exemplar
     codebook measured 0.1). Checked on the registered query id plus a
     second probe so a lucky single query can't pass alone."""
-    import agentic_workflow_for_data_transformation_spark.benchqueries  # noqa: F401 (full registry first: nsqueries3 alone is a partial circular import)
-    from agentic_workflow_for_data_transformation_spark.nsqueries3 import (
+    from agentic_workflow_for_data_transformation_spark.registry.similarity import (
         _pq_codebook_cached,
     )
     from agentic_workflow_for_data_transformation_spark.operators.similarity import (

@@ -14,7 +14,11 @@ the behavior the driver sees too.
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -90,3 +94,46 @@ def test_nl_oracle_schema_map_matches_testdata():
         for p in sorted(Path(SMOKE_SF_DIR).glob("*.parquet"))
     }
     assert benchqueries._TABLE_COLUMNS == tables
+
+
+_REGISTRY_DIR = Path(benchqueries.__file__).resolve().parent / "registry"
+_MODULES = sorted(p.stem for p in _REGISTRY_DIR.glob("*.py") if p.stem != "__init__")
+_FAMILIES = [m for m in _MODULES if not m.startswith("_")]
+
+
+@pytest.mark.parametrize("module", _MODULES)
+def test_registry_module_can_be_imported_first(module):
+    """Any registry module imported first in a fresh interpreter leaves
+    the whole registry registered: no module depends on import order."""
+    pkg = benchqueries.__name__.rpartition(".")[0]
+    code = (
+        "import importlib, json\n"
+        f"importlib.import_module('{pkg}.registry.{module}')\n"
+        f"from {pkg}.benchqueries import queries\n"
+        "print(json.dumps(sorted(queries())))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                         cwd=_REGISTRY_DIR.parent.parent, timeout=120)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == sorted(_NAMES)
+
+
+def test_driver_window_is_least_recently_gated():
+    """The driver gates the first 50 names; read off the committed
+    ledgers, none of them was gated later than any name after them,
+    and the name breaks ties."""
+    last: dict[str, int] = {}
+    for path in _REGISTRY_DIR.parent.parent.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(path.read_text()):
+            last[name] = max(last.get(name, 0), rnd)
+    assert last, "no driver ledgers found"
+    window, rest = _NAMES[:50], _NAMES[50:]
+    assert max(last.get(n, 0) for n in window) <= min(last.get(n, 0) for n in rest)
+    assert _NAMES == sorted(_NAMES, key=lambda n: (last.get(n, 0), n))
+
+
+def test_every_query_has_one_family_and_every_family_registers():
+    families = benchqueries.families()
+    assert list(families) == _NAMES
+    assert set(families.values()) == set(_FAMILIES)
