@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")  # top bit of a hex digit
 
 
-def spread_small_input(df: DataFrame, max_files: int = 4) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition for TINY inputs only. Row-expansion
     operators (shingling, word explode) do orders of magnitude more
     work than the scan, so a single small parquet file (or an
@@ -39,7 +39,7 @@ def spread_small_input(df: DataFrame, max_files: int = 4) -> DataFrame:
     The smallness probe is the scan's file count (``df.inputFiles()``),
     NOT ``df.rdd.getNumPartitions()`` — touching ``.rdd`` forces a
     driver-side plan conversion per query construction. The threshold
-    is a small CONSTANT (``max_files``), deliberately not
+    is a small CONSTANT (4 files), deliberately not
     ``defaultParallelism``: file count does not track scan parallelism
     for big tables (Spark splits large files at
     ``maxPartitionBytes``), so comparing against the core count would
@@ -47,7 +47,7 @@ def spread_small_input(df: DataFrame, max_files: int = 4) -> DataFrame:
     the input this helper must leave alone. A handful of files is only
     ever the local-test case; anything larger is a no-op."""
     sc = df.sparkSession.sparkContext
-    if len(df.inputFiles()) <= max_files:
+    if len(df.inputFiles()) <= 4:
         return df.repartition(sc.defaultParallelism)
     return df
 

@@ -41,9 +41,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def correlation_matrix(df: DataFrame, cols: list[str],
-                       in_decimal: str = "decimal(18,6)",
-                       spread: bool = True) -> DataFrame:
+def correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     """Pairwise Pearson correlations across numeric columns — the
     profiling read after per-column stats (profile_table): which
     measures move together, which "independent" features are the same
@@ -68,7 +66,7 @@ def correlation_matrix(df: DataFrame, cols: list[str],
     CASE-per-moment form re-multiplied inside every aggregate and
     measured 5.6x slower at sf0.1 (13.3 s -> 2.4 s, round 9).
 
-    Exactness: every moment pins DECIMAL — inputs cast ``in_decimal``,
+    Exactness: every moment pins DECIMAL — inputs cast decimal(18,6),
     products in Spark's exact decimal product type — so the sums are
     exact under any partition order; r's closed form then runs in
     doubles from those exact sums, rounded to 6. Constant columns
@@ -77,21 +75,22 @@ def correlation_matrix(df: DataFrame, cols: list[str],
     in a single scan (d = len(cols)); the pair rows are exploded from
     that 1-row frame with stack — profiling d columns costs the one
     scan you were already paying, never d^2 scans."""
-    pairs = [(i, j) for i in range(len(cols))
-             for j in range(i + 1, len(cols))]
     # 6*d(d-1)/2 decimal aggregations per row is far more work than
     # the scan: spread a single-small-file input across the cores
     # (no-op for real multi-file tables; the moment sums are
-    # decimal-exact, so partitioning cannot move a digit). Callers
-    # whose input is already exchange-partitioned (spearman's
-    # rank-joined frame) pass spread=False to skip the extra shuffle.
+    # decimal-exact, so partitioning cannot move a digit)
     from .dedup import spread_small_input
 
-    base = df.select(*cols)
-    if spread:
-        base = spread_small_input(base)
+    return _pearson_moments(spread_small_input(df.select(*cols)), cols)
+
+
+def _pearson_moments(base: DataFrame, cols: list[str]) -> DataFrame:
+    """correlation_matrix's moment core on an already-spread frame:
+    the one global moment aggregate and the stacked pair rows."""
+    pairs = [(i, j) for i in range(len(cols))
+             for j in range(i + 1, len(cols))]
     proj = base.select(
-        *[F.col(c).cast(in_decimal).alias(f"_x{i}")
+        *[F.col(c).cast("decimal(18,6)").alias(f"_x{i}")
           for i, c in enumerate(cols)]
     )
     proj = proj.select(
@@ -278,7 +277,7 @@ def spearman_matrix(df: DataFrame, cols: list[str],
     ranked = ranked.select(
         *[F.col(f"_r{i}").alias(c) for i, c in enumerate(cols)]
     )
-    # spread=False: base is already spread above — a second round-robin
-    # repartition here would be a full shuffle of the data for nothing
-    return correlation_matrix(ranked, cols, spread=False) \
-        .withColumnRenamed("r", "rho")
+    # the moment core without correlation_matrix's spread: base is
+    # already spread above — a second round-robin repartition here
+    # would be a full shuffle of the data for nothing
+    return _pearson_moments(ranked, cols).withColumnRenamed("r", "rho")

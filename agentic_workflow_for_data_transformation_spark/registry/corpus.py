@@ -365,15 +365,13 @@ def ns_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact contaminated count must match SQL — instead of recording an
     err:no_oracle row; the FP-rate bound stays pinned in
     tests/test_corpus.py."""
-    from ..operators import corpus as _corpus
-
     docs = _t(spark, sf_dir, "documents")
     # the benchmark side is a FIXED slice (<= 600 docs at any sf):
     # real decontamination screens a growing crawl against a
     # fixed-size eval suite, so the scale sweep measures the PROBE's
     # linear scan, not an ever-growing build (r7: the benchmark-
     # scales-with-corpus form spent 97s at sf10, build-dominated)
-    return _corpus.bloom_guarantee_check(
+    return corpus.bloom_guarantee_check(
         docs.filter(F.col("doc_id") % 97 != 0),
         docs.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 58200)),
     )
@@ -398,9 +396,7 @@ def ns_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection step that turns per-language token targets into a
     document set, with the ingest-order bias removed. One per-group
     cumulative window; strict <= makes budgets hard caps."""
-    from ..operators import corpus as _corpus
-
-    return _corpus.select_token_budget(
+    return corpus.select_token_budget(
         _t(spark, sf_dir, "documents"), budget_tokens=4000
     )
 
@@ -465,8 +461,6 @@ def _q_dsir_sample(spark, sf_dir: str):
     j = docs.select("doc_id", "lang").join(w, "doc_id").withColumn(
         "samp_weight", F.exp(F.col("avg_log_ratio"))
     )
-    from ..operators import sampling
-
     sel = sampling.weighted_sample_per_group(
         j, group_col="lang", weight_col="samp_weight", k=10,
         key_col="doc_id", salt="dsir",
@@ -693,8 +687,6 @@ def _unimax_oracle() -> str:
     """Delegates to the sqlgen 'unimax' renderer (the NL p102 path),
     so the operator registration and the NL clause share ONE oracle
     chain."""
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "unimax", "budget": _UNIMAX_B, "key": "source",
                   "epochs": _UNIMAX_E}]},

@@ -5,6 +5,7 @@ span, line and incremental dedup.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -336,11 +337,8 @@ def ns_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     batch. Rows are identical to ns_dedup_incremental (same oracle);
     only the plan changes. The archive-side exchange elimination is
     pinned by tests/test_layout.py and measured in PLANS.md."""
-    import os
-    import re as _re
-
     docs = _t(spark, sf_dir, "documents")
-    tag = _re.sub(r"[^a-zA-Z0-9_]", "_", sf_dir.strip("/").split("/")[-1])
+    tag = re.sub(r"[^a-zA-Z0-9_]", "_", sf_dir.strip("/").split("/")[-1])
     table = f"digest_archive_{tag}"
     path = os.path.join(os.getcwd(), "spark-warehouse", table)
     dedup.write_digest_archive(

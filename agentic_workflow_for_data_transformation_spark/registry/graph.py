@@ -87,10 +87,8 @@ def ns_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs deg^2. Docs in many triangles sit in tight duplicate
     cliques; chain-shaped borderline matches score 0. The oracle is
     the naive ordered 3-way join (orientation-independent count)."""
-    from ..operators import graph as _graph
-
     pairs = _dedup_cached(spark, sf_dir, "pairs")
-    return _graph.triangle_counts(
+    return graph.triangle_counts(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
 

@@ -41,8 +41,6 @@ def _abtt_sql(n_iter: int = 6) -> str:
     # delegate to the sqlgen 'common_direction' renderer so the
     # unrolled power-iteration oracle lives in exactly one place (the
     # NL twin p101 renders the identical chain)
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "common_direction", "n_iter": n_iter}]},
         "embeddings",
@@ -184,8 +182,6 @@ def _pca_top2_sql(n_iter: int = 6, dim: int = 64) -> str:
 def ns_embed_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deflated top-2 PCA (operators/linalg.power_iteration_top2):
     everything after the one corpus scan runs on d*d-row frames."""
-    from ..operators import linalg as _linalg
-
-    return _linalg.power_iteration_top2(
+    return linalg.power_iteration_top2(
         _t(spark, sf_dir, "embeddings"), n_iter=6,
     )

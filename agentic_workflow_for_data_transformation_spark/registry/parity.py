@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .. import benchqueries
 from ..benchqueries import _DESCRIPTIONS, _register_nl, _t, register
+from ..plans.escape import apply_snippet
 
 
 _PARITY: list[tuple[str, str, str, str]] = [
@@ -248,8 +249,6 @@ def u1_escape_hatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side exec. Row-local semantics (filter + project + computed
     column), so per-batch execution composes to the exact global
     answer."""
-    from ..plans.escape import apply_snippet
-
     code = (
         "kept = pdf[pdf['c_acctbal'] > 5000.0]\n"
         "result_df = kept[['c_custkey', 'c_name', 'c_acctbal']].assign(\n"

@@ -37,8 +37,6 @@ def _corr_sql(cols: list[str]) -> str:
     # delegate to the sqlgen 'correlate' renderer so the oracle formula
     # (pairwise-complete masking, DECIMAL(24,6) product widening for
     # DuckDB's int64 DECIMAL multiply) lives in exactly one place
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "correlate", "cols": list(cols)}]}, "lineitem"
     )
@@ -70,8 +68,6 @@ def _spearman_sql(cols: list[str], table: str = "lineitem") -> str:
     """Delegates to the sqlgen 'spearman' renderer (the NL p104 path)
     so the rank CTEs + shared _correlate_sql moment chain live in ONE
     place."""
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "spearman", "cols": list(cols)}]}, table
     )

@@ -9,6 +9,10 @@ from pyspark.sql import functions as F
 
 from .. import benchqueries
 from ..benchqueries import _DESCRIPTIONS, _t, register
+from ..functions.layout import zorder_key_2d
+from ..operators.dedup import edit_distance_pairs
+from ..operators.timeseries import resample_interpolate
+from ..streaming.events import sessionize_batch, sessionized_events
 
 
 @register(
@@ -192,8 +196,6 @@ def x_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation between the nearest observed buckets. The four fill
     windows share ONE (user_id, epoch_s) exchange; grid size is
     bounded by wall-clock span, not event count."""
-    from ..operators.timeseries import resample_interpolate
-
     return resample_interpolate(_t(spark, sf_dir, "events"))
 
 
@@ -530,8 +532,6 @@ def x_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline sessionization (lag -> cumsum), the exact-oracle batch
     twin of the streaming session_window aggregate."""
-    from ..streaming.events import sessionize_batch
-
     return sessionize_batch(_t(spark, sf_dir, "events"), gap_seconds=1800)
 
 
@@ -570,8 +570,6 @@ def x_events_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order-independent; every stage keys on user_id or its
     cohort, so the whole pipeline is one window pass plus three
     aggregates."""
-    from ..streaming.events import sessionized_events
-
     se = sessionized_events(_t(spark, sf_dir, "events"), gap_seconds=1800)
     sess = se.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1140,8 +1138,6 @@ def x_entity_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same nation block. Blocking keeps the pair space to sum(block^2)
     — the standard entity-resolution shape; swap the block key for
     phonetic codes or name prefixes in real data."""
-    from ..operators.dedup import edit_distance_pairs
-
     s = _t(spark, sf_dir, "supplier")
     return edit_distance_pairs(
         s, id_col="s_suppkey", text_col="s_name",
@@ -1166,8 +1162,6 @@ def x_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured in tests/test_layout.py against real row-group stats).
     The key arithmetic is plain shifts/ors, bit-identical in any
     engine."""
-    from ..functions.layout import zorder_key_2d
-
     li = _t(spark, sf_dir, "lineitem")
     zkey = zorder_key_2d(
         F.col("l_orderkey") % 256, F.col("l_partkey") % 256, bits=8

@@ -95,9 +95,7 @@ def ns_sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a constant pool — linear at 100 TB where per-anchor corpus
     sampling would be a self-join; assignment is engine- and
     run-stable (the md5 rank key is the oracle's own)."""
-    from ..operators import sampling as _sampling
-
-    return _sampling.negative_samples(_t(spark, sf_dir, "embeddings"))
+    return sampling.negative_samples(_t(spark, sf_dir, "embeddings"))
 
 
 _DESCRIPTIONS.update({

@@ -7,6 +7,7 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,8 +136,6 @@ def _topk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN over a bucket-partitioned materialization: the probe's
     literal bucket predicate prunes at the FILE level (PartitionFilters
     in the scan), asserted by tests/test_plans.py."""
-    from pathlib import Path
-
     out = f"/tmp/spark_graft_part/{Path(sf_dir).name}/emb_by_bucket"
     return similarity.topk_cosine_partition_pruned(
         spark, _t(spark, sf_dir, "embeddings"), query_id=7, out_path=out, k=5, bits=4
@@ -320,9 +319,7 @@ def ns_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its rounded L2 distance. Slice-before-explode keeps only
     subvectors on the wire; the k*m codebook broadcasts; the argmin is
     a min(struct) aggregate — one corpus-sized exchange."""
-    from ..operators import similarity as _sim
-
-    return _sim.product_quantize(_t(spark, sf_dir, "embeddings"),
+    return similarity.product_quantize(_t(spark, sf_dir, "embeddings"),
                                  m=4, k=8, dim=64)
 
 
@@ -340,9 +337,7 @@ def _pq_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped trained codebook (localCheckpoint'ed by the
     trainer) shared by the ADC top-k and recall queries — training
     once is exactly what a serving deployment does."""
-    from ..operators import similarity as _sim
-
-    return memo(spark, "pq_codebook", (sf_dir,), lambda: _sim.train_pq_codebook(
+    return memo(spark, "pq_codebook", (sf_dir,), lambda: similarity.train_pq_codebook(
         _t(spark, sf_dir, "embeddings"), m=_PQ_M, k=_PQ_K,
         n_iter=_PQ_ITER, dim=64, sample_n=_PQ_SAMPLE,
     ))
@@ -357,9 +352,7 @@ def _pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     code-table scan. A deployment encodes once per corpus snapshot;
     serving reads n*m code rows, each matching exactly ONE broadcast
     LUT row."""
-    from ..operators import similarity as _sim
-
-    return memo(spark, "pq_codes", (sf_dir,), lambda: _sim.product_quantize(
+    return memo(spark, "pq_codes", (sf_dir,), lambda: similarity.product_quantize(
         _t(spark, sf_dir, "embeddings"), m=_PQ_M, k=_PQ_K, dim=64,
         codebook=_pq_codebook_cached(spark, sf_dir),
     ).localCheckpoint())
@@ -450,9 +443,7 @@ def ns_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     this codebook); the exact harness is ns_sim_topk_bruteforce. The
     oracle unrolls training AND encoding as SQL CTEs, so the whole
     offline build is hash-checked too."""
-    from ..operators import similarity as _sim
-
-    return _sim.topk_pq_adc(
+    return similarity.topk_pq_adc(
         _t(spark, sf_dir, "embeddings"), query_id=42, k=10,
         m=_PQ_M, n_cents=_PQ_K, dim=64,
         codebook=_pq_codebook_cached(spark, sf_dir),
@@ -486,9 +477,7 @@ def ns_sim_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors); the round-8 TRAINED codebook (train_pq_codebook, m=32 x
     k=128, 2 Lloyd iterations) scores 0.9 on this registered query
     and 0.8-0.9 across probe queries — cleared for serving."""
-    from ..operators import similarity as _sim
-
-    return _sim.pq_recall_vs_exact(
+    return similarity.pq_recall_vs_exact(
         _t(spark, sf_dir, "embeddings"), query_id=42, k=10,
         m=_PQ_M, n_cents=_PQ_K, dim=64,
         codebook=_pq_codebook_cached(spark, sf_dir),
@@ -510,17 +499,15 @@ def _ivfpq_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     path scans codes only, and the probed-cell join prunes at the
     partitioned scan. The tmp dir is removed at interpreter exit, never
     on eviction: a query built earlier may still scan the code table."""
-    from ..operators import similarity as _sim
-
     def build() -> tuple:
         index_dir = tempfile.mkdtemp(prefix="spark_graft_ivfpq_")
         atexit.register(shutil.rmtree, index_dir, True)
-        _sim.write_ivfpq_index(
+        similarity.write_ivfpq_index(
             _t(spark, sf_dir, "embeddings"), index_dir,
             n_cells=_IVF_CELLS, m=_PQ_M, n_cents=_PQ_K, n_iter=_PQ_ITER,
             dim=64, sample_n=_PQ_SAMPLE,
         )
-        cents, cb, codes = _sim.load_ivfpq_index(spark, index_dir)
+        cents, cb, codes = similarity.load_ivfpq_index(spark, index_dir)
         # partition-column type inference reads small cell ids as INT;
         # the scoring plan and oracle speak BIGINT
         codes = codes.withColumn("cell", F.col("cell").cast("long"))
@@ -593,10 +580,8 @@ def ns_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact L2 on sf0.01: 0.72 avg over 5 probe queries (boundary
     losses across unprobed cells are the residual-PQ tradeoff the
     n_probe knob prices)."""
-    from ..operators import similarity as _sim
-
     cents, cb, codes = _ivfpq_index_cached(spark, sf_dir)
-    return _sim.topk_ivfpq_adc(
+    return similarity.topk_ivfpq_adc(
         _t(spark, sf_dir, "embeddings"), query_id=42, k=10,
         n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, m=_PQ_M, n_cents=_PQ_K,
         dim=64, codebook=cb, codes=codes,

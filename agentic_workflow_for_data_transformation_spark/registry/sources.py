@@ -4,6 +4,7 @@ and partitioned ORC.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import functions as F
@@ -23,8 +24,6 @@ def _q_source_jsonl(spark, sf_dir: str):
     lossless including the null-fill of the missing column."""
     # key the fixture on the FULL resolved path, not the basename:
     # testdata/sf0.1 and scaledata/sf0.1 must not share a fixture
-    import hashlib
-
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     st = os.stat(src) if os.path.exists(src) else None
     stamp = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns if st else 0}|{st.st_size if st else 0}"
@@ -71,8 +70,6 @@ def _q_source_orc(spark, sf_dir: str):
     ORC write -> partitioned read -> prune path is what's checked.
     Timestamps stay out of the round trip on purpose: value/ids are
     binary-exact in ORC, and the determinism contract stays trivial."""
-    import hashlib
-
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
     st = os.stat(src) if os.path.exists(src) else None
     stamp = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns if st else 0}|{st.st_size if st else 0}"
@@ -122,8 +119,6 @@ def _q_source_csv(spark, sf_dir: str):
     null-fill of the missing column. Only CSV-safe scalar columns are
     written (no free text: embedded newlines need multiLine readers,
     which serialize to one task per file)."""
-    import hashlib
-
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     st = os.stat(src) if os.path.exists(src) else None
     stamp = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns if st else 0}|{st.st_size if st else 0}"

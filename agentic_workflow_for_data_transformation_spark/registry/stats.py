@@ -4,11 +4,15 @@ agreement, regression, calibration and outlier measures.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..benchqueries import _DESCRIPTIONS, _t, register
 from ..operators import stats
+from ..operators.sampling import POISSON1_CUTOFFS
+from ..operators.stats import BENFORD_EXPECTED
 from ..plans.sqlgen import spec_to_sql
 from ..session import memo
 
@@ -145,9 +149,7 @@ def ns_stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition-order independent), closed-form t and Welch-
     Satterthwaite df in fixed-shape double math, rounded on report.
     Scale: the exchange carries one 6-number row per group."""
-    from ..operators import stats as _stats
-
-    return _stats.welch_ttest(_t(spark, sf_dir, "events"), "event_type",
+    return stats.welch_ttest(_t(spark, sf_dir, "events"), "event_type",
                               "value", "event_id")
 
 
@@ -174,9 +176,7 @@ def ns_stats_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     family is the portable md5-60bit, so the sketch is deterministic
     and fully SQL-oracle-checkable; the sketch aggregate exchanges at
     most depth*width rows no matter the corpus size."""
-    from ..operators import stats as _stats
-
-    return _stats.count_min_estimates(_t(spark, sf_dir, "documents"))
+    return stats.count_min_estimates(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -198,9 +198,7 @@ def x_winsorize_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table is scanned twice but never shuffled on a data-sized
     key. At 100 TB swap the exact percentile for percentile_approx
     (mergeable sketch, same broadcast-back shape)."""
-    from ..operators import stats as _stats
-
-    return _stats.winsorize_group(
+    return stats.winsorize_group(
         _t(spark, sf_dir, "events"), "value", ["event_type"]
     ).select("event_id", "event_type", "value_winsor", "was_clamped")
 
@@ -535,8 +533,6 @@ register(
 
 
 def _benford_sql() -> str:
-    from ..operators.stats import BENFORD_EXPECTED
-
     case = " ".join(
         f"WHEN '{d}' THEN {e!r}" for d, e in BENFORD_EXPECTED.items()
     )
@@ -621,8 +617,6 @@ def _bootstrap_oracle(n_boot: int) -> str:
     path): same integer Poisson(1) CDF cutoffs
     (sampling.POISSON1_CUTOFFS), same md5 draw, decimal-exact weighted
     sums, nearest-rank picks with NULLS FIRST pinned."""
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "bootstrap_mean", "col": "value",
                   "key": "event_type", "id": "event_id", "n": n_boot}]},
@@ -647,9 +641,7 @@ def ns_stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uncertainty band beside the Welch t-test and KS drift ops —
     hash-deterministic, decimal-exact weighted sums, engine-pinned
     rank picks."""
-    from ..operators import stats as _stats
-
-    return _stats.poisson_bootstrap_ci(
+    return stats.poisson_bootstrap_ci(
         _t(spark, sf_dir, "events"), "event_type", "value", "event_id",
         n_boot=40,
     )
@@ -659,12 +651,8 @@ def _bootstrap_diff_oracle(n_boot: int) -> str:
     """Oracle for bootstrap_diff_ci over the event_id-parity cohorts
     (the welch_ttest cohort split): same draw, same cutoffs, four
     decimal sums per (group, replicate), nearest-rank band, zero test."""
-    import math as _math
-
-    from ..operators.sampling import POISSON1_CUTOFFS
-
-    lo = max(1, _math.ceil(0.025 * n_boot))
-    hi = _math.ceil(0.975 * n_boot)
+    lo = max(1, math.ceil(0.025 * n_boot))
+    hi = math.ceil(0.975 * n_boot)
     wcase = "CASE " + " ".join(
         f"WHEN d < {cut} THEN {k}" for k, cut in enumerate(POISSON1_CUTOFFS)
     ) + f" ELSE {len(POISSON1_CUTOFFS)} END"
@@ -727,11 +715,7 @@ def _bootstrap_diff_oracle(n_boot: int) -> str:
 def ns_stats_bootstrap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B bootstrap (operators/stats.bootstrap_diff_ci) beside the
     Welch t-test: same cohorts, assumption-free interval."""
-    from pyspark.sql import functions as F
-
-    from ..operators import stats as _stats
-
-    return _stats.bootstrap_diff_ci(
+    return stats.bootstrap_diff_ci(
         _t(spark, sf_dir, "events"), "event_type", "value", "event_id",
         cohort=F.col("event_id") % 2 == 0, n_boot=40,
     )
@@ -740,8 +724,6 @@ def ns_stats_bootstrap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mi_oracle() -> str:
     """Delegates to the sqlgen 'mutual_info' renderer (the NL p105
     path) so the decimal-pinned term chain lives in ONE place."""
-    from ..plans.sqlgen import spec_to_sql
-
     return spec_to_sql(
         {"ops": [{"op": "mutual_info", "a": "lang", "b": "source"}]},
         "documents",

@@ -288,9 +288,7 @@ def ns_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle renders the identical IEEE expression shapes; the per-doc
     sum (the only order-sensitive float op) is rounded to 6 places and
     the k boundary tie-breaks on doc_id."""
-    from ..operators import text as _text
-
-    return _text.bm25_topk(_t(spark, sf_dir, "documents"),
+    return text.bm25_topk(_t(spark, sf_dir, "documents"),
                            list(_BM25_TERMS), k=20)
 
 
@@ -322,9 +320,7 @@ def ns_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     templated/synthetic corpora flatten or cliff. Regressors round to
     6 then sum as DECIMAL (exact moments), slope in fixed-shape double
     math. One explode, one per-group rank window, one aggregate."""
-    from ..operators import text as _text
-
-    return _text.zipf_fit(_t(spark, sf_dir, "documents"))
+    return text.zipf_fit(_t(spark, sf_dir, "documents"))
 
 
 def _bpe_sql(n_merges: int = 3) -> str:
@@ -376,9 +372,7 @@ def ns_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair string. The per-round driver state is ONE row (the chosen
     merge), the Lloyd-trainer shape; everything corpus-sized stays in
     the plan."""
-    from ..operators import text as _text
-
-    return _text.bpe_merge_table(_t(spark, sf_dir, "documents"), n_merges=3)
+    return text.bpe_merge_table(_t(spark, sf_dir, "documents"), n_merges=3)
 
 
 register(
@@ -549,8 +543,7 @@ register(
 
 
 def _gopher_rep_sql() -> str:
-    from ..operators.text import GOPHER_REP_BOUNDS as GB
-
+    GB = text.GOPHER_REP_BOUNDS
     rules = {
         "r_dup_lines": f"dup_line_frac <= {GB['max_dup_line_frac']}",
         "r_dup_line_chars": f"dup_line_char_frac <= {GB['max_dup_line_char_frac']}",

@@ -307,6 +307,39 @@ def test_parser_group_agg_variants(spark, people):
         ("Seattle", 45), ("San Francisco", 41), ("Austin", 50)
     }
 
+    # one aggregate grammar: a phrase means the same aggregate with or
+    # without "show", after any number of keys, and in a keyless list
+    import duckdb
+
+    from agentic_workflow_for_data_transformation_spark.plans.sqlgen import spec_to_sql
+
+    count_rows = [{"op": "groupby_agg", "keys": ["city"],
+                   "aggs": [{"fn": "count", "col": "*", "alias": "row_count"}]}]
+    con = duckdb.connect()
+    con.register("people", people.toPandas())
+    for text, ops in [
+        ("group by city and count rows", count_rows),
+        ("Group by city and show count rows", count_rows),
+        ("group by city and name and show total age", [{
+            "op": "groupby_agg", "keys": ["city", "name"],
+            "aggs": [{"fn": "sum", "col": "age", "alias": "sum_age"}],
+        }]),
+        ("show total age and average age", [{
+            "op": "groupby_agg", "keys": [],
+            "aggs": [{"fn": "sum", "col": "age", "alias": "sum_age"},
+                     {"fn": "avg", "col": "age", "alias": "average_age"}],
+        }]),
+    ]:
+        for columns in (None, people.columns):
+            spec = parse_description(text, columns)
+            assert spec["ops"] == ops, (text, columns)
+        got = sorted(tuple(r) for r in compile_spec(people, spec).collect())
+        assert got == sorted(con.sql(spec_to_sql(spec, "people")).fetchall()), text
+    # a keyless bare "count X" is not an aggregate: "count tokens" must
+    # never become count(token)
+    with pytest.raises(ParseError):
+        parse_description("count tokens")
+
 
 def test_parser_widened_grammar(spark, people):
     """Round-2 grammar: multi-key sort, global aggregates, count
@@ -554,7 +587,6 @@ def test_parse_moving_window_and_multi_agg():
              "alias": "name_distinct_count"},
         ],
     }]
-    # single-agg phrasing keeps routing through the dedicated pattern
     spec = parse_description("Group by city and show average age",
                              columns=["city", "age"])
     assert spec["ops"][0]["aggs"][0]["alias"] == "average_age"

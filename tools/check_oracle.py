@@ -128,9 +128,10 @@ def main() -> int:
         if only:
             prior = json.loads(out.read_text()) if out.exists() else {}
             prior.update(report)
-            # registry order, dropping rows for queries no longer registered
+            # drop rows for queries no longer registered
             report = {k: prior[k] for k in qs if k in prior}
-        out.write_text(json.dumps(report, indent=2) + "\n")
+        # sorted by query name, so a rerun diffs only on changed rows
+        out.write_text(json.dumps(dict(sorted(report.items())), indent=2) + "\n")
         print(f"wrote {out} ({len(report)} queries)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
