@@ -13,13 +13,16 @@ deterministic shape is:
   then ``dot / (norm_a * norm_b)`` — a single interpreted fold per
   pair instead of three.
 
+Construction cost: each Column method or ``functions.*`` call is a
+py4j round trip, so the expanded d=64 norm built from Column calls
+took about 3 x 64 of them per norm; built as one SQL expression
+(``l2_norm`` given a column name) it takes one.
+
 The float expression shape dot/(na*nb) matches the ANSI oracle's
 cosine formula term-for-term, so rounded-to-6 results agree exactly.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,19 +64,28 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    """Row-wise L2 norm; expanded (codegen) when ``dim`` is known."""
-    if dim:
-        sq = [F.element_at(a, i + 1) * F.element_at(a, i + 1) for i in range(dim)]
-        return F.sqrt(reduce(lambda acc, t: acc + t, sq))
+def l2_norm(a: Column | str, dim: int | None = None) -> Column:
+    """Row-wise L2 norm of a vector column, or of the column named
+    ``a`` read as array<double>. Given a name and ``dim``, the sum of
+    squares is expanded (codegen) as one SQL expression, so building
+    it is one py4j round trip rather than three Column calls per
+    term; otherwise it is a fold."""
+    if dim and isinstance(a, str):
+        quoted = a.replace("`", "``")
+        v = f"CAST(`{quoted}` AS ARRAY<DOUBLE>)"
+        sq = " + ".join(f"element_at({v}, {i}) * element_at({v}, {i})"
+                        for i in range(1, dim + 1))
+        return F.expr(f"sqrt({sq})")
+    if isinstance(a, str):
+        a = as_double_array(a)
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Self-contained cosine (norms recomputed per evaluation). In
-    pair joins prefer precomputing each side's norm per row and using
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Self-contained cosine (norms folded per evaluation). In pair
+    joins prefer precomputing each side's norm per row and using
     cosine_from_parts — same float semantics, 3x less pair work."""
-    return dot(a, b) / (l2_norm(a, dim) * l2_norm(b, dim))
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def cosine_from_parts(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:

@@ -434,10 +434,10 @@ def minhash_estimate_pairs(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col).alias("doc_b"),
         *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
     )
-    matches = sum(
-        F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
+    # the match count as one SQL expression (one py4j round trip), in
+    # the tree Python's sum() of Column terms built: ((t0 + 0) + t1) + ...
+    terms = [f"CASE WHEN ha{i} = hb{i} THEN 1 ELSE 0 END" for i in range(num_hashes)]
+    matches = F.expr(" + ".join([terms[0], "0", *terms[1:]]))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")

@@ -64,7 +64,7 @@ def _vec_norm(df: DataFrame, id_col: str, vec_col: str, dim: int,
         F.col(id_col),
         *(extra_cols or []),
         as_double_array(vec_col).alias("v"),
-        l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+        l2_norm(vec_col, dim).alias("nrm"),
     )
 
 
@@ -149,7 +149,7 @@ def topk_cosine_lsh(df: DataFrame, query_id: int, k: int = 5, bits: int = 8,
     rows = df.select(
         F.col(id_col),
         as_double_array(vec_col).alias("v"),
-        l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+        l2_norm(vec_col, dim).alias("nrm"),
         sign_bucket(vec_col, bits).alias("bucket"),
     )
     q = F.broadcast(
@@ -196,7 +196,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.4,
     b = df.select(
         F.col(id_col),
         as_double_array(vec_col).alias("v"),
-        l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+        l2_norm(vec_col, dim).alias("nrm"),
         sign_bucket(vec_col, bits).alias("bucket"),
     )
     x, y = b.alias("x"), b.alias("y")
@@ -250,7 +250,7 @@ def embedding_dedup_apply(df: DataFrame, threshold: float = 0.9,
     b = df.select(
         F.col(id_col),
         as_double_array(vec_col).alias("v"),
-        l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+        l2_norm(vec_col, dim).alias("nrm"),
         sign_bucket(vec_col, bits).alias("bucket"),
     )
     reps = b.groupBy("bucket").agg(F.min(id_col).alias("rep_id"))
@@ -379,7 +379,7 @@ def topk_cosine_partition_pruned(
         .withColumn(
             "cos_sim",
             F.round(
-                cosine_from_parts(F.col("v"), qv_col, l2_norm(F.col("v"), dim), F.lit(qnrm)),
+                cosine_from_parts(F.col("v"), qv_col, l2_norm("v", dim), F.lit(qnrm)),
                 6,
             ),
         )
@@ -577,7 +577,7 @@ def _lloyd(df: DataFrame, n_centroids: int, n_iter: int, id_col: str,
             .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "cval"))).alias("pl"))
             .select("cell", F.transform("pl", lambda s: s["cval"]).alias("cv"))
-            .withColumn("cnrm", l2_norm(F.col("cv"), dim))
+            .withColumn("cnrm", l2_norm("cv", dim))
             .localCheckpoint()
         )
         cents = refined
@@ -613,7 +613,7 @@ def ann_recall_vs_bruteforce(df: DataFrame, query_ids: list[int], k: int = 5,
     rows = df.select(
         F.col(id_col),
         as_double_array(vec_col).alias("v"),
-        l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+        l2_norm(vec_col, dim).alias("nrm"),
         sign_bucket(vec_col, bits).alias("bucket"),
     )
     q = F.broadcast(
@@ -729,7 +729,7 @@ def knn_join_bucketed(df: DataFrame, id_col: str = "vec_id",
             F.col(id_col),
             F.col(label_col),
             as_double_array(vec_col).alias("v"),
-            l2_norm(as_double_array(vec_col), dim).alias("nrm"),
+            l2_norm(vec_col, dim).alias("nrm"),
         ),
         bits,
         label_col,

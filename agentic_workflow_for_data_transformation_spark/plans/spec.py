@@ -288,6 +288,14 @@ def _check_aggs(op: dict) -> None:
     for a in op["aggs"]:
         if a["fn"] == "percentile" and a["p"] is None:
             _err(f"percentile agg needs 'p' in [0, 1]: {a!r}")
+    # every output column needs its own name, or a later reference to
+    # it is ambiguous; Spark resolves names without regard to case
+    names = [*op["keys"], *(a["alias"] for a in op["aggs"])]
+    if "gid_alias" in op:
+        names.append(op["gid_alias"])
+    folded = [n.lower() for n in names]
+    if dup := sorted({n for n in names if folded.count(n.lower()) > 1}):
+        _err(f"{op['op']} output names repeat {dup}: {op!r}")
 
 
 def _check_pivot(op: dict) -> None:

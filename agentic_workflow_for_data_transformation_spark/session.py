@@ -55,6 +55,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark's call-site capture wraps every Column method and
+        # functions.* call in about four extra py4j round trips, so
+        # building a wide expression paid for it per term. Off, a JVM
+        # error loses only its "== DataFrame == ... was called from"
+        # block, which points into this package's own modules anyway.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # long benchmark/registry sessions accumulate checkpoint and
         # shuffle blocks that only free on driver GC; with a large heap
         # GC is rare, so ask the ContextCleaner to force one periodically
@@ -87,8 +93,10 @@ def get_spark(
 # weights, input counts, vector widths) — the "materialize once, read
 # many" reuse a production pipeline gets from persisting them. One
 # LRU store for all kinds, keyed (applicationId, kind, *key). The cap
-# sits well above the 14 distinct entries a full 356-query registry
-# pass creates, so bench.py's steady runs never rebuild an artifact.
+# sits well above the 24 distinct entries a full 356-query registry
+# pass creates (14 artifacts and 10 parquet schemas, one per table,
+# from sources.io.read_parquet), so bench.py's steady runs never
+# rebuild an artifact.
 _ARTIFACTS: OrderedDict[tuple, Any] = OrderedDict()
 _ARTIFACT_CAP = 64
 # foreachBatch callbacks run on another thread; a build runs unlocked
@@ -130,6 +138,20 @@ def memo(spark: SparkSession, kind: str, key: tuple,
     return got
 
 
+def _stat_part(name: str, path: str) -> str | None:
+    """``name|size|mtime_ns`` of a local file, ``None`` if it cannot
+    be stat'ed."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return f"{name}|{st.st_size}|{st.st_mtime_ns}"
+
+
+def _digest(parts: list[str]) -> str:
+    return hashlib.md5("\x00".join(parts).encode()).hexdigest()
+
+
 def input_fingerprint(df: DataFrame) -> str:
     """Content-sensitive fingerprint of a frame's input files: the
     sorted paths plus (size, mtime) for every stat-able local file, so
@@ -144,9 +166,24 @@ def input_fingerprint(df: DataFrame) -> str:
             p = p[len("file:"):]
             while p.startswith("//"):
                 p = p[1:]
-        try:
-            st = os.stat(p)
-            parts.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f)
-    return hashlib.md5("\x00".join(parts).encode()).hexdigest()
+        parts.append(_stat_part(f, p) or f)
+    return _digest(parts)
+
+
+def path_fingerprint(path: str) -> str | None:
+    """Fingerprint of a local parquet path without asking Spark: the
+    sorted (relative name, size, mtime_ns) of every file under a
+    directory, or of the one file a path names. ``None`` for a path
+    that is not local (a URI, a glob, a missing path) or a file that
+    vanishes during the walk; the caller then cannot memoize."""
+    if "://" in path or not os.path.exists(path):
+        return None
+    if os.path.isdir(path):
+        files = sorted(
+            (os.path.relpath(full, path), full)
+            for dirpath, _, names in os.walk(path)
+            for full in (os.path.join(dirpath, n) for n in names))
+    else:
+        files = [("", path)]
+    parts = [_stat_part(name, full) for name, full in files]
+    return _digest(parts) if parts and None not in parts else None

@@ -23,6 +23,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import memo, path_fingerprint
+
 TPCH_TABLES = [
     "region",
     "nation",
@@ -47,8 +49,25 @@ def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.option("inferSchema", True).csv(path)
 
 
+def read_parquet(spark: SparkSession, path: str | Path) -> DataFrame:
+    """Parquet source with its schema memoized per (application, path,
+    file fingerprint). Inferring a parquet schema is a Spark job on
+    every read; reading with the schema found last time runs none, so
+    a warm query construction launches no job. The fingerprint
+    (session.path_fingerprint) is the sorted name, size and mtime of
+    every file under the path, so a rewrite in place misses the memo
+    and is inferred afresh. A path that is not local, or a file that
+    vanishes during the walk, falls back to plain inference."""
+    path = str(path)
+    fp = path_fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path)
+    schema = memo(spark, "schema", (path, fp), lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(str(Path(sf_dir) / f"{name}.parquet"))
+    return read_parquet(spark, Path(sf_dir) / f"{name}.parquet")
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -82,8 +101,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores int64 nanos, and without it such a file fails the read with
     PARQUET_TYPE_ILLEGAL before we can inspect the schema."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(str(Path(sf_dir) / "events.parquet"))
-    return normalize_event_ts(df)
+    return normalize_event_ts(read_parquet(spark, Path(sf_dir) / "events.parquet"))
 
 
 def read_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -44,16 +44,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     need an explicit schema (no inference pass), and the on-disk ``ts``
     encoding has varied across testdata generations (int64 nanos,
     timestamp[us]/NTZ, plain timestamp) — so the schema is taken from a
-    one-file batch read of the same path rather than hard-coded, and the
-    same dtype-adaptive normalization as the batch reader
-    (sources.io.normalize_event_ts) maps ``ts`` to TimestampType. In
+    batch read of the same path (sources.io.read_parquet) rather than
+    hard-coded, and the same dtype-adaptive normalization as the batch
+    reader (sources.io.normalize_event_ts) maps ``ts`` to TimestampType. In
     production the source becomes Kafka with a registry-backed schema;
     the normalization stays."""
-    from ..sources.io import normalize_event_ts
+    from ..sources.io import normalize_event_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = str(Path(sf_dir) / "events.parquet")
-    on_disk_schema = spark.read.parquet(path).schema
+    on_disk_schema = read_parquet(spark, path).schema
     # file-stream sources require a directory; glob-filter to the one table
     stream = (
         spark.readStream.schema(on_disk_schema)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as _dedup
+from ..sources.io import read_parquet
 
 
 def ensure_digest_archive(spark: SparkSession, table: str, path: str,
@@ -111,8 +112,9 @@ def ingest_stream_dedup(docs: DataFrame, table: str, path: str,
 def read_documents_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-stream source over a documents parquet directory. Streaming
     file sources need an explicit schema; take it from a batch read of
-    the same directory (one footer read, no inference scan)."""
-    schema = spark.read.parquet(src_dir).schema
+    the same directory (sources.io.read_parquet: inferred once per
+    file fingerprint)."""
+    schema = read_parquet(spark, src_dir).schema
     return spark.readStream.schema(schema).parquet(src_dir)
 
 

@@ -25,12 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import similarity as _sim
+from ..sources.io import read_parquet
 
 
 def read_query_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-stream source of (query_id, qv) parquet batches (schema
     from one batch footer read, as in ingest.read_documents_stream)."""
-    schema = spark.read.parquet(src_dir).schema
+    schema = read_parquet(spark, src_dir).schema
     return spark.readStream.schema(schema).parquet(src_dir)
 
 

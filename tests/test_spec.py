@@ -36,6 +36,24 @@ def test_validate_rejects_bad_specs():
         {"ops": [{"op": "union", "right": "t", "distinct": 1}]},
         # an undeclared field is an error, never silently ignored
         {"ops": [{"op": "bm25", "terms": ["x"], "k": 3, "text_column": "body"}]},
+        # every output column of an aggregate needs its own name: two
+        # aggs with one alias, an alias equal to a key, or to gid_alias
+        {"ops": [{"op": "groupby_agg", "keys": ["city"],
+                  "aggs": [{"fn": "sum", "col": "age", "alias": "sum_age"},
+                           {"fn": "sum", "col": "age", "alias": "sum_age"}]}]},
+        {"ops": [{"op": "groupby_agg", "keys": ["city"],
+                  "aggs": [{"fn": "count", "col": "*", "alias": "city"}]}]},
+        {"ops": [{"op": "rollup", "keys": ["city"],
+                  "aggs": [{"fn": "count", "col": "*", "alias": "gid"}]}]},
+        {"ops": [{"op": "rollup", "keys": ["city", "name"], "gid_alias": "name",
+                  "aggs": [{"fn": "count", "col": "*", "alias": "n"}]}]},
+        # names differing only in case collide too: Spark resolves
+        # columns case-insensitively
+        {"ops": [{"op": "groupby_agg", "keys": ["city"],
+                  "aggs": [{"fn": "sum", "col": "age", "alias": "sum_age"},
+                           {"fn": "max", "col": "age", "alias": "SUM_AGE"}]}]},
+        {"ops": [{"op": "groupby_agg", "keys": ["city"],
+                  "aggs": [{"fn": "count", "col": "*", "alias": "City"}]}]},
     ]:
         with pytest.raises(SpecError):
             validate_spec(bad)
