@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _hash60, shingle_index, spread_small_input
-from .sampling import DRAW_BUCKETS, hash_draw
+from .dedup import shingle_index, spread_small_input
+from .sampling import DRAW_BUCKETS, _hash60, hash_draw
 
 
 def contaminated_ids(corpus: DataFrame, benchmark: DataFrame,
@@ -212,7 +212,6 @@ def mix_weights(df: DataFrame, group_col: str = "lang",
     arithmetic consumers (apply_mix_sampling's keep threshold) pass
     ``rounded=False`` so a boundary floor() never flips on the rounded
     value where the exact one would not."""
-    from pyspark.sql import Window
 
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
     scaled = F.pow(F.col("n_docs").cast("double"), F.lit(alpha))
@@ -300,7 +299,6 @@ def apply_mix_sampling(df: DataFrame, budget: int,
     This is the step that turns a mixing POLICY into a corpus: the
     weights say what the training mix should look like, this operator
     materializes a dataset with that mix."""
-    from .sampling import DRAW_BUCKETS, hash_draw
 
     # unrounded weight: the keep threshold must floor() the exact value
     # (the registered oracle uses the unrounded weight too) — see
@@ -421,7 +419,6 @@ def contaminated_ids_bloom(corpus: DataFrame, benchmark: DataFrame,
     Probabilistic bits are why this registers as a rows-only driver
     check (no SQL oracle can reproduce the FP set), same class as the
     HLL/KLL sketches."""
-    from .dedup import _hash60, shingle_index
 
     k = num_hashes
     b = (
@@ -489,7 +486,6 @@ def contamination_scores(corpus: DataFrame, benchmark: DataFrame,
     carries |corpus grams| x hit-flag, then one per-doc aggregate. At
     100 TB the benchmark gram set is the small side (eval suites are
     MBs) — Spark broadcasts it and the corpus never shuffles."""
-    from .dedup import _hash60, shingle_index
 
     e = shingle_index(corpus, id_col=id_col, text_col=text_col, n=n).select(
         F.col(id_col), _hash60(F.col("s")).alias("hs")
@@ -530,9 +526,6 @@ def select_token_budget(df: DataFrame, budget_tokens: int,
     the sort is per-group, never global); output carries (group, id,
     tokens, running) — the full text rejoins downstream by id only if
     needed."""
-    from pyspark.sql import Window
-
-    from .dedup import _hash60
 
     toks = df.select(
         F.col(group_col),
@@ -623,7 +616,6 @@ def dsir_ratio_table(corpus: DataFrame, target_pred, text_col: str = "text",
     reused by the streaming scorer — estimate once over the reference
     corpus, then score every future ingest batch against the same
     fixed table (the production DSIR serving shape)."""
-    from .dedup import _hash60, spread_small_input
 
     e = (
         spread_small_input(corpus)
@@ -661,7 +653,6 @@ def dsir_score_against_ratios(docs: DataFrame, ratios: DataFrame,
     the broadcast table, so the identical plan scores a batch corpus
     or a streaming micro-batch (streaming/ingest.dsir_score_stream) —
     batch and stream can never drift because they share this code."""
-    from .dedup import _hash60, spread_small_input
 
     e = (
         spread_small_input(docs)
@@ -715,7 +706,6 @@ def dup_rate_by_source(df: DataFrame, id_col: str = "doc_id",
     Documents shorter than n words contribute no grams (same
     empty-shingle-set semantics as dedup.shingle_index) but still
     count in ``n_docs``."""
-    from .dedup import _hash60, spread_small_input
 
     base = (
         spread_small_input(df)
@@ -926,8 +916,6 @@ def corpus_datacard(df: DataFrame, lang_col: str = "lang",
             F.round(F.col("_n") / F.col("n_docs"), 6).alias("value"),
         )
 
-    from .dedup import spread_small_input
-
     cnt = (
         spread_small_input(df)
         .select(F.col(lang_col).alias("l"),
@@ -1128,7 +1116,6 @@ def apply_unimax_sampling(df: DataFrame, budget_tokens: int,
     shuffle (sequence(1, n_copies)); output order and content are
     pure functions of (id, source). Output: (id, group, copy) — copy
     numbers 1..n_copies."""
-    from .sampling import hash_draw
 
     alloc = unimax_allocation(df, budget_tokens, max_epochs,
                               group_col, text_col)

@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import write_parquet
+from .sampling import _hash60, with_hash_split
+
 HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")  # top bit of a hex digit
 
 
@@ -99,15 +102,6 @@ def exact_dedup_groups(df: DataFrame, key_col: str = "text",
 
 
 MERSENNE_31 = 2147483647  # 2^31 - 1, the minhash modulus
-
-
-def _hash60(col: F.Column) -> F.Column:
-    """Portable 60-bit integer hash: the first 15 hex digits of md5,
-    base-16 decoded. Identical in any engine with md5 + hex casts, so
-    oracles can replicate it exactly; used both as a compact join key
-    (shuffling 8-byte longs instead of shingle strings) and as the
-    base for the minhash family."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -582,7 +576,6 @@ def write_digest_archive(df: DataFrame, table: str, path: str,
     pay the shuffle once at archive-build time, never again per batch.
     Measured in tests/test_layout.py: archive-side Exchange disappears
     from the join plan; numbers in PLANS.md."""
-    from ..sources.io import write_parquet
 
     write_parquet(
         corpus_digests(df, text_col), path, buckets=(n_buckets, ["_h"], table)
@@ -672,7 +665,6 @@ def jaccard_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     scale path; this operator is the EXACT-threshold alternative — LSH
     banding is probabilistic recall, prefix filtering is lossless.
     """
-    from pyspark.sql import Window
 
     if index is not None:
         e = index
@@ -948,7 +940,6 @@ def write_lsh_archive(df: DataFrame, table: str, path: str,
     recurring per-batch cost is one small-side shuffle. The artifact is
     (id, band_idx, band_key): ~bands rows x ~40 bytes per document —
     pay the signature computation and the shuffle once at build."""
-    from ..sources.io import write_parquet
 
     write_parquet(
         band_buckets(df, id_col=id_col, num_hashes=num_hashes,
@@ -1060,7 +1051,6 @@ def split_leakage_audit(df: DataFrame, weights: list[float] | None = None,
     pairs joined to the two rows' split tags. Hash-split stability
     means the audit's verdict is reproducible on any engine or
     cluster."""
-    from .sampling import with_hash_split
 
     weights = weights or [90.0, 5.0, 5.0]
     labels = labels or ["train", "val", "test"]

@@ -21,6 +21,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _ts_scalar(ts_type):
@@ -31,7 +32,6 @@ def _ts_scalar(ts_type):
     for nearest-pick distances and tolerance bounds — never a bare
     cast('long'), which floors timestamps to seconds and NULLs dates.
     """
-    from pyspark.sql import types as T
 
     if isinstance(ts_type, T.TimestampType):
         return F.unix_micros, 1_000_000

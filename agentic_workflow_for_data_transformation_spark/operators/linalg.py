@@ -17,8 +17,14 @@ money sums and the integer PageRank (operators/graph.py).
 
 from __future__ import annotations
 
+import decimal
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import spread_small_input
 
 SCALE = 10**6
 
@@ -98,7 +104,6 @@ def pca_components(df: DataFrame, vec_col: str = "embedding", k: int = 2,
     largest-magnitude entry is positive (eigenvectors are only defined
     up to sign; fixing it makes results comparable across runs).
     """
-    import numpy as np
 
     rows = gram_upper(df, vec_col, scale).collect()
     d = max(r["j"] for r in rows) + 1
@@ -152,7 +157,6 @@ def _pinned_ctx():
     ROUND_HALF_EVEN and is mutable by any host code — under it a
     large-magnitude covariance product would silently round
     mid-accumulation and diverge from the oracle's exact decimal sum."""
-    import decimal
 
     return decimal.localcontext(
         decimal.Context(prec=50, rounding=decimal.ROUND_HALF_UP)
@@ -166,7 +170,6 @@ def _rhu(x: float, ndigits: int) -> float:
     BigDecimal.valueOf(x).setScale(s, HALF_UP).toDouble(), which
     Python reproduces as quantize over repr(x) (both languages print
     the minimal-length decimal that round-trips)."""
-    import decimal
 
     with _pinned_ctx():
         return float(
@@ -183,7 +186,6 @@ def _dec(x: float, scale_digits: int):
     power-iteration inputs (values already rounded to <= s decimals
     and well inside 15 significant digits) the quantize is exact —
     it recovers the intended decimal, not an approximation."""
-    import decimal
 
     with _pinned_ctx():
         return decimal.Decimal(repr(float(x))).quantize(
@@ -200,7 +202,6 @@ def _matvec_local(cov_dec: dict, v: dict) -> dict:
     ``cov_dec`` carries the DEC(20,12) covariances pre-quantized (one
     conversion per entry, not one per entry per round); the iterate is
     quantized once per dimension per call."""
-    import decimal
 
     vdec = {j: _dec(x, 9) for j, x in v.items()}
     acc: dict = {}
@@ -221,8 +222,6 @@ def _power_rounds_local(cov: dict, dims: list, n_iter: int) -> dict:
     — but ~2*n_iter tiny Spark jobs become zero (the covariance is
     d*d-bounded driver state, the same class as the logreg weights
     and the Bloom bitset words)."""
-    import decimal
-    import math
 
     cov_dec = {k: _dec(c, 12) for k, c in cov.items()}
     v = {i: 1.0 for i in dims}
@@ -242,7 +241,6 @@ def _rayleigh_local(cov: dict, v: dict) -> float:
     """lam = v' C v, the plan's two exact stages: decimal matvec then
     SUM(CAST(round(w,9) AS DEC(18,9)) * CAST(v AS DEC(12,9)) AS
     DEC(38,18)) in Decimal, one double round to 12."""
-    import decimal
 
     cov_dec = {k: _dec(c, 12) for k, c in cov.items()}
     w = _matvec_local(cov_dec, v)
@@ -357,7 +355,6 @@ def common_direction_audit(df: DataFrame, id_col: str = "vec_id",
             "i int, v double, mu double",
         )
     )
-    from .dedup import spread_small_input
 
     cx = (
         spread_small_input(df.select(id_col, vec_col))

@@ -17,11 +17,15 @@ batches, and the expensive stage scales with partitions.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import spread_small_input
 
 META_SCHEMA = (
     "doc_id long, n_bytes int, fake_width int, fake_height int, media_format string"
@@ -71,8 +75,6 @@ def extract_media_meta(df: DataFrame, id_col: str = "doc_id",
                 }
             )
 
-    from .dedup import spread_small_input
-
     # decode is the expensive stage: never let a single small file pin
     # every Arrow batch to one Python worker
     return spread_small_input(df.select(id_col, payload_col)).mapInPandas(
@@ -106,8 +108,6 @@ def resize_meta(df: DataFrame, target_width: int = 64,
                 }
             )
 
-    from .dedup import spread_small_input
-
     return spread_small_input(df.select(id_col, payload_col)).mapInPandas(
         run, RESIZE_SCHEMA
     )
@@ -138,8 +138,6 @@ def frame_sample(df: DataFrame, frame_bytes: int = 100, max_frames: int = 5,
                 {"doc_id": ids, "frame_idx": idxs, "byte_offset": offs}
             )
 
-    from .dedup import spread_small_input
-
     return spread_small_input(df.select(id_col, payload_col)).mapInPandas(
         run, FRAMES_SCHEMA
     )
@@ -162,7 +160,6 @@ def audio_frame_zcr(df: DataFrame, id_col: str = "doc_id",
     no floats anywhere — so the DuckDB oracle recomputes it exactly
     from character code points (valid on an ASCII corpus, which the
     test suite asserts; see tests/test_operators.py ascii guard)."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -182,8 +179,6 @@ def audio_frame_zcr(df: DataFrame, id_col: str = "doc_id",
                         int(np.count_nonzero(neg[1:] != neg[:-1]))
                     )
             yield pd.DataFrame(out)
-
-    from .dedup import spread_small_input
 
     return spread_small_input(df.select(id_col, payload_col)).mapInPandas(
         run, AUDIO_ZCR_SCHEMA
@@ -209,9 +204,6 @@ def audio_frame_energy(df: DataFrame, id_col: str = "doc_id",
     floor(rms * 1e6) as an integer is bit-identical everywhere — no
     round() semantics to disagree on (the DuckDB oracle recomputes the
     same value from per-character code points)."""
-    import math
-
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -226,8 +218,6 @@ def audio_frame_energy(df: DataFrame, id_col: str = "doc_id",
                     out["n_samples"].append(len(chunk))
                     out["rms_micro"].append(math.floor(rms * 1_000_000))
             yield pd.DataFrame(out)
-
-    from .dedup import spread_small_input
 
     return spread_small_input(df.select(id_col, payload_col)).mapInPandas(
         run, AUDIO_ENERGY_SCHEMA
@@ -251,7 +241,6 @@ def audio_voiced_segments(df: DataFrame, id_col: str = "doc_id",
     threshold is a pushable filter and both merge windows share one
     doc_id partitioning. Integer micro-RMS in, integer counting out:
     no float semantics for an oracle to disagree on."""
-    from pyspark.sql import Window
 
     energy = audio_frame_energy(df, id_col, payload_col, frame_size)
     voiced = energy.filter(F.col("rms_micro") >= threshold_micro)

@@ -15,8 +15,10 @@ itself is the scale problem.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import spread_small_input
 
 
 def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -79,8 +81,6 @@ def correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     # the scan: spread a single-small-file input across the cores
     # (no-op for real multi-file tables; the moment sums are
     # decimal-exact, so partitioning cannot move a digit)
-    from .dedup import spread_small_input
-
     return _pearson_moments(spread_small_input(df.select(*cols)), cols)
 
 
@@ -162,7 +162,6 @@ def _fractional_ranks_all(df: DataFrame, cols: list[str],
     bucketing. Windows partition by (_i[, _b]) so no stage funnels
     through a single partition; output cardinality is the summed
     distinct-value count, never |df|."""
-    from pyspark.sql import Window
 
     pairs = df.select(
         F.posexplode(F.array(*[F.col(c) for c in cols])).alias("_i", "_v")
@@ -253,7 +252,6 @@ def spearman_matrix(df: DataFrame, cols: list[str],
     one-aggregate plan of correlation_matrix, running on the spread
     frame. Total: one exploded rank build + one moment scan — no step
     is ever O(n log n) on a single partition."""
-    from .dedup import spread_small_input
 
     proj = df.select(
         *[F.col(c).cast("double").alias(c) for c in cols]

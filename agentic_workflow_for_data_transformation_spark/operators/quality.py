@@ -20,8 +20,11 @@ ingest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .sampling import DRAW_BUCKETS, hash_draw
+from .text import with_quality_score
 
 
 def _violation_pred(exp: dict) -> F.Column:
@@ -163,7 +166,6 @@ def majority_vote(df: DataFrame, item_col: str,
     shape: one hash aggregate on (item, label), then one window
     partitioned BY ITEM (key-partitioned, never global) reading the
     top two rows per item; no joins, no driver state."""
-    from pyspark.sql import Window
 
     v = df.groupBy(item_col, label_col).agg(
         F.count(F.lit(1)).cast("long").alias("votes")
@@ -224,8 +226,6 @@ def conformal_quality_thresholds(df: DataFrame, text_col: str = "text",
     frame onto the test slice for conditional coverage counts; the
     report rows are exploded with ``stack``. Two scans total,
     regardless of how many coverage levels."""
-    from .sampling import DRAW_BUCKETS, hash_draw
-    from .text import with_quality_score
 
     cut = int(cal_fraction * DRAW_BUCKETS)
     scored = with_quality_score(df, text_col).select(id_col, "quality_score")

@@ -23,9 +23,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _hash60
-
 DRAW_BUCKETS = 1_000_000
+
+
+def _hash60(col: F.Column) -> F.Column:
+    """Portable 60-bit integer hash: the first 15 hex digits of md5,
+    base-16 decoded. Identical in any engine with md5 + hex casts, so
+    oracles can replicate it exactly; used both as a compact join key
+    (shuffling 8-byte longs instead of shingle strings) and as the
+    base for the minhash family."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def hash_draw(key: F.Column, salt: str) -> F.Column:

@@ -28,17 +28,21 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
     as_double_array,
     cosine_from_parts,
+    dot,
     l2_norm,
     probe_dim,
 )
 from ..session import input_fingerprint, memo
+from ..sources.io import write_parquet
 from .dedup import spread_small_input
+from .sampling import DRAW_BUCKETS, hash_draw
 
 
 def _salt_ways(df: DataFrame, n_blocks: int) -> int:
@@ -350,9 +354,6 @@ def topk_cosine_partition_pruned(
     into a static literal — no join, no dynamic pruning machinery
     needed. Semantically identical to ``topk_cosine_lsh``; only the
     physical layout differs, so the same exact oracle applies."""
-    import math
-
-    from ..sources.io import write_parquet
 
     base = df.select(
         F.col(id_col),
@@ -599,7 +600,6 @@ def ann_recall_vs_bruteforce(df: DataFrame, query_ids: list[int], k: int = 5,
     intersection is a tiny join on (query_id, vec_id). Emits
     (query_id, n_ann, n_hits, recall) — n_ann < k flags underfull
     buckets (recall denominator stays k by convention)."""
-    from pyspark.sql import Window
 
     exact = topk_cosine_multi(df, query_ids=query_ids, k=k, id_col=id_col,
                               vec_col=vec_col, dim=dim).select(
@@ -1567,7 +1567,6 @@ def nearest_centroid_classifier(df: DataFrame, label_col: str = "label",
     size and broadcasts; scoring fans each (row, pos) out by the label
     count, aggregates map-side, and the argmin window partitions by
     row id. No driver state, no iteration."""
-    from .sampling import DRAW_BUCKETS, hash_draw
 
     cut = int(test_fraction * DRAW_BUCKETS)
     base = df.withColumn("_test", hash_draw(F.col(id_col), salt) < cut)
@@ -1886,7 +1885,6 @@ def _ndcg_weights(k: int) -> list[str]:
     12-decimal STRINGS so Spark and any SQL oracle parse the exact
     same decimals (string->decimal is exact in every engine; casting
     a double would leave each engine to round it its own way)."""
-    import math
 
     return [f"{1.0 / math.log2(r + 1):.12f}" for r in range(1, k + 1)]
 
@@ -2129,7 +2127,6 @@ def rrf_fusion(df: DataFrame, query_ids: list[int], k: int = 10,
     evaluation is partial per partition before the final top-k."""
     dim = probe_dim(df, vec_col, dim)
     rows = _vec_norm(df, id_col, vec_col, dim)
-    from ..functions.vectors import dot as vdot
 
     q = F.broadcast(
         rows.filter(F.col(id_col).isin([int(i) for i in query_ids]))
@@ -2150,7 +2147,7 @@ def rrf_fusion(df: DataFrame, query_ids: list[int], k: int = 10,
                                   F.col("nrm"), F.col("qnrm")),
                 6,
             ).alias("cos_sim"),
-            F.round(vdot(F.col("v"), F.col("qv")), 6).alias("dot_score"),
+            F.round(dot(F.col("v"), F.col("qv")), 6).alias("dot_score"),
         )
     )
     w_cos = Window.partitionBy("query_id").orderBy(
@@ -2216,7 +2213,6 @@ def mmr_rerank(df: DataFrame, query_ids: list[int], k: int = 5,
     of 1 non-query row) contributes no pairs and emits no rows —
     reranking needs >= 2 candidates to trade off; callers wanting the
     degenerate passthrough should use the plain top-k."""
-    import pandas as pd
 
     dim = probe_dim(df, vec_col, dim)
     rows = _vec_norm(df, id_col, vec_col, dim)

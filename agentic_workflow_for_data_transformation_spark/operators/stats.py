@@ -15,8 +15,14 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import spread_small_input
+from .sampling import DRAW_BUCKETS, _hash60, hash_draw, poisson1_weight
+from .text import hashed_bow_features
 
 
 def ks_statistic_cogrouped(left: DataFrame, right: DataFrame,
@@ -44,12 +50,8 @@ def ks_statistic_cogrouped(left: DataFrame, right: DataFrame,
     result, ~|shards| Arrow round-trips instead of ~|keys|. Set
     ``shards=None`` to cogroup on the raw key (the right call when
     keys are few and groups are big)."""
-    import pandas as pd  # noqa: F401  (executor-side dependency)
 
     def ks_frame(lpdf, rpdf):
-        import numpy as np
-        import pandas as pd
-
         out_keys, out_d, out_n, out_m = [], [], [], []
         lg = {k: g[value_col].to_numpy() for k, g in lpdf.groupby(key_col)}
         rg = {k: g[value_col].to_numpy() for k, g in rpdf.groupby(key_col)}
@@ -109,8 +111,6 @@ def groupwise_ols(df: DataFrame, group_col: str, x_col: str, y_col: str,
     # far heavier than the scan; a single-file local input would
     # otherwise run the whole partial aggregate in 1-2 scan tasks
     # (no-op for real multi-file tables)
-    from .dedup import spread_small_input
-
     df = spread_small_input(df.select(group_col, x_col, y_col))
     x = F.col(x_col).cast(x_decimal)
     y = F.col(y_col).cast(y_decimal)
@@ -309,7 +309,6 @@ def count_min_estimates(df: DataFrame, text_col: str = "text",
     aggregate exchanges at most depth*width fixed rows regardless of
     corpus size; the top-k probe joins k*depth addressed cells back
     by (row, cell) against the broadcast sketch."""
-    from .dedup import _hash60
 
     tf = (
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
@@ -387,7 +386,6 @@ def psi_by_split(df: DataFrame, cat_col: str = "lang",
     (sampling.hash_draw) — no second scan; one hash aggregate on the
     category key, then category-cardinality rows fold through two
     broadcast 1-row cross joins (totals, then term sum)."""
-    from .sampling import DRAW_BUCKETS, hash_draw
 
     cut = int(test_fraction * DRAW_BUCKETS)
     base = df.select(
@@ -456,7 +454,6 @@ def train_logreg_hashed_bow(df: DataFrame, d: int = 8, n_iter: int = 2,
     aggregate over it returning d+1 decimals to the driver — bounded
     driver state, like the BPE trainer's 1-row argmax collect. At
     100 TB each round costs a feature-table scan, nothing more."""
-    from .text import hashed_bow_features
 
     feats = hashed_bow_features(df, d=d, id_col=id_col, text_col=text_col)
     y = F.when(F.col(target_col) == target_val, 1).otherwise(0)
@@ -542,7 +539,6 @@ def score_logreg_hashed_bow(df: DataFrame, weights: dict[str, float],
     into the projection — no join, no shuffle beyond the feature
     aggregate; the serving half of train_logreg_hashed_bow, and the
     per-batch plan the streaming scorer runs."""
-    from .text import hashed_bow_features
 
     feats = hashed_bow_features(df, d=d, id_col=id_col, text_col=text_col)
     p = logreg_prob(weights, d=d)
@@ -573,7 +569,6 @@ def calibration_report(df: DataFrame, weights: dict[str, float],
 
     Scale shape: one feature aggregate, one projection, one bin-keyed
     aggregate (n_bins rows out) — the scan you already pay to score."""
-    from .text import hashed_bow_features
 
     feats = hashed_bow_features(df, d=d, id_col=id_col, text_col=text_col)
     y = F.when(F.col(target_col) == target_val, 1).otherwise(0)
@@ -628,7 +623,6 @@ def auc_report(df: DataFrame, weights: dict[str, float], d: int = 8,
     broadcast bucket-offset frame (<= n_buckets + 1 rows, its own
     cumulative keyed by the same non-foldable pmod trick) — so no
     unpartitioned window over data-sized input exists in the plan."""
-    from .text import hashed_bow_features
 
     feats = hashed_bow_features(df, d=d, id_col=id_col, text_col=text_col)
     y = F.when(F.col(target_col) == target_val, 1).otherwise(0)
@@ -901,7 +895,6 @@ def _boot_draw(key: F.Column, rep: F.Column, salt: str,
     bottleneck), but DuckDB has no xxhash64, so the fast mode trades
     the cross-engine hash check for a rows/shape check. Same weights
     domain, same cutoffs, different (equally deterministic) stream."""
-    from .sampling import DRAW_BUCKETS, hash_draw
 
     if draw == "xxhash64":
         return F.pmod(F.xxhash64(F.lit(salt), key, rep),
@@ -941,8 +934,6 @@ def poisson_bootstrap_ci(df: DataFrame, group_col: str, val_col: str,
     (group x B) partial rows before the only corpus-sized exchange —
     at any corpus size the shuffle carries groups*B rows. The rank
     window partitions by group over B rows."""
-    from .dedup import spread_small_input
-    from .sampling import poisson1_weight
 
     val = F.col(val_col).cast("decimal(18,2)")
     # the replicate explode does n_boot md5 draws per row — orders of
@@ -1035,8 +1026,6 @@ def bootstrap_diff_ci(df: DataFrame, group_col: str, val_col: str,
     sums each; everything after the one exchange is group-cardinality.
     Determinism: hash draws, decimal-exact weighted sums, one double
     division per cohort per replicate, rank ties on replicate id."""
-    from .dedup import spread_small_input
-    from .sampling import poisson1_weight
 
     val = F.col(val_col).cast("decimal(18,2)")
     # same single-small-file guard as poisson_bootstrap_ci: the

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import string
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import spread_small_input
+from .dedup import shingle_index, spread_small_input
+from .sampling import DRAW_BUCKETS, _hash60, hash_draw
 
 # the [A-Za-z0-9 ] class as a translate() deletion table — see
 # with_quality_score for why this replaces the regex scan
@@ -132,7 +134,6 @@ def hashed_bow_features(df: DataFrame, d: int = 8, id_col: str = "doc_id",
     build, no second pass, fixed width at any corpus size. One explode
     + one aggregate; map-side partial aggregation collapses each
     partition to d longs per doc before the shuffle."""
-    from .dedup import _hash60
 
     e = (
         spread_small_input(df)
@@ -197,7 +198,6 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id",
     size N stays lazy (1-row aggregate cross-joined broadcast), so the
     whole plan is one DAG with no driver action. Ties break on the
     term string, so top-k is total-ordered and oracle-reproducible."""
-    from pyspark.sql import Window
 
     words = (
         spread_small_input(df)
@@ -238,7 +238,6 @@ def repetition_ratio(df: DataFrame, n: int = 3, id_col: str = "doc_id",
     Shape: one codegen'd shingle explode + one grouped aggregate with
     map-side partial count/count-distinct — a single shuffle carrying
     (doc, gram-hash) partials, never the gram strings themselves."""
-    from .dedup import _hash60, shingle_index
 
     e = shingle_index(df, id_col=id_col, text_col=text_col, n=n,
                       distinct=False).select(
@@ -279,8 +278,6 @@ def groupwise_minmax_scale(df: DataFrame, group_col: str = "event_type",
     out_schema = f"{id_col} long, {group_col} string, scaled double"
 
     def scale(pdf):
-        import pandas as pd  # noqa: F401 — executor-side import
-
         lo, hi = pdf[value_col].min(), pdf[value_col].max()
         rng = hi - lo
         scaled = (pdf[value_col] - lo) / rng if rng > 0 else pdf[value_col] * 0.0
@@ -289,8 +286,6 @@ def groupwise_minmax_scale(df: DataFrame, group_col: str = "event_type",
             group_col: pdf[group_col],
             "scaled": scaled,
         })
-
-    import pandas as pd  # make pd visible to the closure on the driver too
 
     out = df.select(id_col, group_col, value_col).groupBy(group_col).applyInPandas(
         scale, schema=out_schema
@@ -353,7 +348,6 @@ def boilerplate_ratio(df: DataFrame, min_docs: int = 2, n: int = 3,
     exchange carries 8-byte hashes), one equi-join back on that hash,
     and a final per-doc aggregate. No window, no driver loop; every
     stage keys on either the gram hash or the doc id."""
-    from .dedup import _hash60, shingle_index
 
     e = shingle_index(df, id_col=id_col, text_col=text_col, n=n).select(
         F.col(id_col), _hash60(F.col("s")).alias("hs")
@@ -394,7 +388,6 @@ def token_label_pmi(df: DataFrame, label_col: str = "lang", k: int = 10,
     label, token-x-label), the 1-row corpus total broadcast via
     crossJoin, one equi-join per marginal, one per-label rank window
     over at most |vocab| rows."""
-    from pyspark.sql import Window
 
     w = df.select(
         F.col(label_col).alias("label"),
@@ -513,7 +506,6 @@ def zipf_fit(df: DataFrame, group_col: str = "lang",
     Scale shape: one explode -> (group, token) count -> per-group rank
     window (partitioned by group, never global) -> one moment
     aggregate; the exchanges carry (group, token-hash-sized) rows."""
-    from pyspark.sql import Window
 
     tf = (
         df.select(F.col(group_col), F.explode(F.split(F.col(text_col), " ")).alias("w"))
@@ -930,7 +922,6 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     row_number form. Documents shorter than the gram width contribute
     no grams and score 0.0 (vacuously passing, as the paper treats
     missing signals)."""
-    from .dedup import shingle_index
 
     base = spread_small_input(df).select(
         F.col(id_col), F.length(F.col(text_col)).alias("n_chars"),
@@ -1036,7 +1027,6 @@ def heaps_fit(df: DataFrame, id_col: str = "doc_id",
     the four points with the same rounded-decimal moment discipline as
     zipf_fit. Output: one row per level (draw_cut, n_tokens, n_types)
     with the shared heaps_beta broadcast onto each."""
-    from .sampling import DRAW_BUCKETS, hash_draw
 
     cuts = [DRAW_BUCKETS // 8, DRAW_BUCKETS // 4, DRAW_BUCKETS // 2, DRAW_BUCKETS]
     e = spread_small_input(df).select(
@@ -1405,7 +1395,6 @@ def ngram_novelty(df: DataFrame, n: int = 3, id_col: str = "doc_id",
     on the 60-bit gram hash (map-side combined; the exchange carries
     8-byte hashes + 8-byte ids), one equi-join back on the hash, one
     per-doc aggregate. No window, no driver loop."""
-    from .dedup import _hash60, shingle_index
 
     e = shingle_index(df, id_col=id_col, text_col=text_col, n=n).select(
         F.col(id_col), _hash60(F.col("s")).alias("hs")

@@ -135,7 +135,6 @@ def rolling_zscore_anomalies(df: DataFrame, col: str, key: str,
     Long-partition headroom: the cumulative DECIMAL(38,12) square sum
     caps at ~10^26 per partition — the cap the framed form had per
     frame; at that magnitude narrow the input pin's scale."""
-    from pyspark.sql import Window
 
     wc = (
         Window.partitionBy(key)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["two_phase_row_number"]
 
@@ -76,8 +77,6 @@ def two_phase_row_number(
         # buckets while Spark's sort puts NaN AFTER every real (so
         # first under DESC). Route NaN to the end-matching sentinel
         # bucket instead, keeping the monotone-bucket invariant.
-        from pyspark.sql import types as T
-
         if isinstance(df.schema[order_col].dataType, (T.FloatType, T.DoubleType)):
             nan_sentinel = 2 ** 62 if ascending else -(2 ** 62)
             b = F.when(F.isnan(order_col), F.lit(nan_sentinel)).otherwise(b)
@@ -152,7 +151,6 @@ def interpolate_gaps(df, key_col: str, ts_col: str, val_col: str,
     on epoch-second longs and the (deterministic) observed values, so
     the oracle matches bit-for-bit; only the reported value is rounded.
     """
-    from pyspark.sql import Window, functions as F
 
     wp = Window.partitionBy(key_col).orderBy(ts_col).rowsBetween(
         Window.unboundedPreceding, 0

@@ -12,7 +12,21 @@ projection, rename, drop, computed columns, sort, top-k, aggregates —
 and emits the typed spec IR, so the full eval suite runs with no LLM at
 all.
 
-Every aggregate phrasing goes through one clause (``_parse_aggregate``):
+A description splits into clauses (``_CLAUSE_SPLIT``), and each clause
+is parsed by one ordered table, ``_CLAUSES``: a row is an anchored,
+case-insensitive pattern and a builder, and the first row whose pattern
+matches and whose builder returns ops wins, so table order is
+precedence. Most rows are flat, ``_op(name, field=converter, ...)``:
+the pattern's named groups are the spec op's fields, in that order,
+each passed through a converter (column, raw text, int, float, percent,
+column list, quoted list, then-list, constant); an optional group that
+did not match leaves its field out unless the row gives it a default,
+and the few cross-field checks (``_CHECKS``) raise ParseError. The
+window clauses share one builder (``_window``, fn and alias per row);
+the shapes that run a sub-grammar or emit several ops (aggregate,
+expect, dedup, pivot, CASE, sort, ...) keep a small builder function.
+
+Every aggregate phrasing goes through one clause (``_aggregate``):
 ``group by <key>[ and <key>]* and [show] <phrase>[, <phrase>]* [where
 <having>]``, or keyless ``show <phrases>`` / ``count rows`` / ``count
 distinct X``. A key is a column or ``<unit> of <ts>``. Each phrase
@@ -28,9 +42,9 @@ descriptions outside this grammar; both paths share one compiler.
 from __future__ import annotations
 
 import re
-from typing import Any
+from typing import Any, Callable
 
-from .spec import _GOPHER_COLS, validate_spec
+from .spec import _COLUMNLESS_FNS, schema_effect, validate_spec
 
 __all__ = ["parse_description", "parse_predicate", "ParseError"]
 
@@ -279,12 +293,11 @@ _TRUNC_KEY = re.compile(
     r"(year|month|week|day|hour|minute)\s+of\s+(\w+)", re.IGNORECASE
 )
 _GROUP_KEY = rf"(?:{_TRUNC_KEY.pattern}|\w+)"
-_AGGREGATE = re.compile(
+_AGGREGATE = (
     rf"^(?:group\s+by\s+(?P<keys>{_GROUP_KEY}(?:\s+and\s+{_GROUP_KEY})*)"
     r"\s+and\s+(?:show\s+)?(?P<aggs>.+?)(?:\s+where\s+(?P<having>.+))?"
     r"|show\s+(?P<shown>.+)"
-    r"|(?P<bare>count\s+(?:rows|distinct\s+\w+)))$",
-    re.IGNORECASE,
+    r"|(?P<bare>count\s+(?:rows|distinct\s+\w+)))$"
 )
 # aggregate word -> spec fn, shared by the phrases below and the
 # running/moving windows
@@ -311,586 +324,7 @@ _AGG_PHRASES = [
         (r"concatenate\s+(?P<x>\w+)", "listagg", "{x}_list"),
     )
 ]
-
-# Whole-description patterns that contain internal "and" connectors the
-# clause splitter must not touch.
-_SESSIONIZE = re.compile(
-    r"^sessionize\s+by\s+(\w+)\s+with\s+(\d+)\s+(second|minute|hour)s?\s+gap\s*$",
-    re.IGNORECASE,
-)
-_GROUP_TOPK = re.compile(
-    r"^for\s+each\s+(\w+)\s+show\s+top\s+(\d+)\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_ADD_COLUMN = re.compile(
-    r"^add\s+(\w+)\s+column\s+where\s+\w+\s*=\s*(.*)$", re.IGNORECASE
-)
-# "add tier column as 'low' when o_totalprice < 100000, 'mid' when
-# o_totalprice < 300000, otherwise 'high'" -> ANSI CASE (first match
-# wins). Branches split on top-level commas only, so IN-lists inside a
-# when-predicate survive; values are quoted strings or bare numbers.
-_CASE_COLUMN = re.compile(r"^add\s+(\w+)\s+column\s+as\s+(.+)$", re.IGNORECASE)
-_CASE_BRANCH = re.compile(
-    r"^('[^']*'|-?\d+(?:\.\d+)?)\s+when\s+(.+)$", re.IGNORECASE
-)
-_CASE_ELSE = re.compile(
-    r"^(?:otherwise\s+('[^']*'|-?\d+(?:\.\d+)?)"
-    r"|('[^']*'|-?\d+(?:\.\d+)?)\s+otherwise)$",
-    re.IGNORECASE,
-)
-_RENAME = re.compile(r"^rename\s+(?:column\s+)?(\w+)\s+to\s+(\w+)\s*$", re.IGNORECASE)
-# "replace missing l_quantity with 0" -> coalesce in place (the
-# post-outer-join null fill); "convert o_totalprice to integer" ->
-# in-place cast. Both are with_column ops over the same name, so the
-# column keeps its position and downstream clauses see the new value.
-_FILL_MISSING = re.compile(
-    r"^replace\s+missing\s+(\w+)\s+with\s+('[^']*'|-?\d+(?:\.\d+)?)\s*$",
-    re.IGNORECASE,
-)
-_CONVERT = re.compile(
-    r"^convert\s+(\w+)\s+to\s+(integer|long|double|float|string|text|date|timestamp)\s*$",
-    re.IGNORECASE,
-)
-# "extract the number k from props" / "extract the text field name
-# from props as author" -> json_get with_column ('number' casts the
-# text scalar to double — the portable numeric form; integer casts of
-# strings are rejected by compile as engine-divergent)
-_JSON_GET = re.compile(
-    r"^extract\s+the\s+(number|text)\s+(?:field\s+)?(\w+)\s+from\s+(\w+)"
-    r"(?:\s+as\s+(\w+))?\s*$",
-    re.IGNORECASE,
-)
-_CONVERT_TYPES = {
-    "integer": "long", "long": "long", "double": "double", "float": "double",
-    "string": "string", "text": "string", "date": "date",
-    "timestamp": "timestamp",
-}
-_DROP = re.compile(r"^drop\s+(?:column\s+)?(\w+)(?:\s+column)?\s*$", re.IGNORECASE)
-# multi-key: "sort by age desc, name" — each comma part is col [dir]
-_SORT = re.compile(r"^sort\s+by\s+(.+)$", re.IGNORECASE)
-_SORT_KEY = re.compile(
-    r"(\w+)(?:\s+(desc(?:ending)?|asc(?:ending)?))?", re.IGNORECASE
-)
-_LIMIT = re.compile(r"^keep\s+top\s+(\d+)(?:\s+rows?)?\s*$", re.IGNORECASE)
-_FILTER = re.compile(r"^(?:filter|select)\s+(?:rows\s+)?(?:where\s+)?(.*)$", re.IGNORECASE)
-_SELECT_COLS = re.compile(r"^select\s+(?:columns?\s+)?(.*)$", re.IGNORECASE)
-# north-star clause forms (SURVEY.md section 2.9 surface)
-# "fit l_extendedprice on l_quantity per p_brand" -> per-group OLS
-# (slope/intercept/r2 from decimal-exact moments)
-_FIT_OLS = re.compile(
-    r"^fit\s+(\w+)\s+on\s+(\w+)\s+per\s+(\w+)\s*$", re.IGNORECASE
-)
-# "search for 'vector stream' and show top 10 matches" -> BM25 lexical
-# top-k over the text column (terms split on whitespace; default k=10)
-_SEARCH = re.compile(
-    r"^search\s+for\s+'([^']+)'"
-    r"(?:\s+and\s+show\s+top\s+(\d+)(?:\s+matches)?)?\s*$",
-    re.IGNORECASE,
-)
-_SAMPLE = re.compile(
-    r"^(?:sample|keep)\s+(\d+(?:\.\d+)?)\s*(?:%|percent)\s+of\s+"
-    r"(?:the\s+)?(?:rows|documents)\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# text-analysis projections over the document table: each adds typed
-# per-row columns with no shuffle (SURVEY section 2.9 text family)
-_LANGID = re.compile(
-    r"^detect\s+the\s+language\s+of\s+each\s+(?:document|row)\s*$",
-    re.IGNORECASE,
-)
-_TOKEN_COUNTS = re.compile(
-    r"^count\s+tokens\s+in\s+each\s+(?:document|row)\s*$", re.IGNORECASE
-)
-_QUALITY = re.compile(
-    r"^score\s+(?:the\s+)?quality\s+of\s+each\s+(?:document|row)\s*$",
-    re.IGNORECASE,
-)
-# "check that doc_id is unique and text is not null and lang is in
-# 'en', 'de' and at least 100 rows" -> the declarative data-quality
-# contract (quality.check_expectations); expectations separated by
-# "and", value lists quoted-comma'd so the two never collide
-_EXPECT = re.compile(r"^check\s+that\s+(.+)$", re.IGNORECASE)
-_EXP_UNIQUE = re.compile(r"^(\w+)\s+is\s+unique$", re.IGNORECASE)
-_EXP_NOT_NULL = re.compile(r"^(\w+)\s+is\s+not\s+null$", re.IGNORECASE)
-_EXP_IN = re.compile(
-    r"^(\w+)\s+is\s+in\s+('[^']*'(?:\s*,\s*'[^']*')*)$", re.IGNORECASE
-)
-_EXP_MIN_ROWS = re.compile(r"^at\s+least\s+(\d+)\s+rows?$", re.IGNORECASE)
-# "redact emails and numbers in each document" / "redact pii in each
-# row" -> mask emails + long digit runs in the text column in place
-_REDACT = re.compile(
-    r"^redact\s+(?:emails?\s+and\s+(?:long\s+)?numbers?|pii)\s+"
-    r"in\s+each\s+(?:document|row)\s*$",
-    re.IGNORECASE,
-)
-# "check k-anonymity of user_id and event_type at 5" -> privacy audit
-# (quality.k_anonymity_audit): one-row report of quasi-identifier
-# groups smaller than k
-_KANON = re.compile(
-    r"^check\s+k-?anonymity\s+of\s+(\w+(?:(?:\s*,\s*|\s+and\s+)\w+)*)\s+"
-    r"at\s+(\d+)\s*$",
-    re.IGNORECASE,
-)
-# "compute the correlation matrix of a, b and c" -> pairwise Pearson
-# r from decimal-exact moments (profile.correlation_matrix),
-# schema-replacing one row per pair
-_CORRELATE = re.compile(
-    r"^(?:compute|show)\s+(?:the\s+)?correlation(?:\s+matrix)?\s+of\s+"
-    r"(\w+(?:(?:\s*,\s*|\s+and\s+)\w+)+)\s*$",
-    re.IGNORECASE,
-)
-# "compute the spearman [rank] correlation [matrix] of <cols>" ->
-# rank-based (monotone) correlation matrix
-_SPEARMAN = re.compile(
-    r"^(?:compute|show)\s+(?:the\s+)?spearman\s+(?:rank\s+)?"
-    r"correlation(?:\s+matrix)?\s+of\s+"
-    r"(\w+(?:(?:\s*,\s*|\s+and\s+)\w+)+)\s*$",
-    re.IGNORECASE,
-)
-# "compute the mutual information between <a> and <b>" -> MI /
-# entropy / NMI report row
-_MUTUAL_INFO = re.compile(
-    r"^(?:compute|show)\s+(?:the\s+)?mutual\s+information\s+"
-    r"between\s+(\w+)\s+and\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "compute the [one-way] anova of <value> by|across <group>" or
-# "compare the mean [of] <value> across <group>" -> one-way ANOVA
-# F / eta^2 report row (stats.anova_oneway), schema-replacing
-_ANOVA = re.compile(
-    r"^(?:compute|show)\s+(?:the\s+)?(?:one[- ]way\s+)?anova\s+of\s+"
-    r"(\w+)\s+(?:by|across)\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_ANOVA_MEAN = re.compile(
-    r"^compare\s+(?:the\s+)?mean\s+(?:of\s+)?(\w+)\s+across\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "compute the funnel of <type> steps <a> then <b> [then <c> ...]
-# per <user> ordered by <ts>" -> per-step reached-user counts +
-# step-over-step conversion (timeseries.funnel_steps),
-# schema-replacing len(steps) rows
-_FUNNEL = re.compile(
-    r"^(?:compute|show)\s+(?:the\s+)?funnel\s+of\s+(\w+)\s+steps\s+"
-    r"('?\w+'?(?:\s+then\s+'?\w+'?)+)\s+per\s+(\w+)\s+"
-    r"ordered\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "score each document's <n>-gram novelty" -> per-doc fraction of
-# distinct n-grams first seen in this doc (text.ngram_novelty),
-# schema-replacing per-doc rows
-_NOVELTY = re.compile(
-    r"^(?:score|compute|show)\s+(?:each\s+document'?s?\s+)?"
-    r"(\d+)-gram\s+novelty\s*$",
-    re.IGNORECASE,
-)
-# "audit the [source] concentration of the token mass [by <key>]" ->
-# HHI / Gini / top-share dominance report (corpus.concentration_audit),
-# schema-replacing one row
-_CONCENTRATION = re.compile(
-    r"^(?:audit|compute|show)\s+(?:the\s+)?(?:source\s+)?concentration"
-    r"\s+of\s+(?:the\s+)?token\s+mass(?:\s+by\s+(\w+))?\s*$",
-    re.IGNORECASE,
-)
-# "compute the hapax ratio per <key>" -> per-group fraction of the
-# vocabulary occurring exactly once (text.hapax_ratio),
-# schema-replacing per-group rows
-_HAPAX = re.compile(
-    r"^(?:compute|show|score)\s+(?:the\s+)?hapax\s+ratio"
-    r"(?:\s+per\s+(\w+))?\s*$",
-    re.IGNORECASE,
-)
-# "flag anomalies in <col> over last <N> rows per <key> ordered by
-# <o> [above z <t>]" -> rolling z-score anomaly flags
-# (timeseries.rolling_zscore_anomalies); adds moving_avg/moving_std/
-# zscore/is_anomaly
-_ANOMALY = re.compile(
-    r"^flag\s+anomalies\s+in\s+(\w+)\s+over\s+last\s+(\d+)\s+rows\s+"
-    r"per\s+(\w+)\s+ordered\s+by\s+(\w+)"
-    r"(?:\s+above\s+z\s+(\d+(?:\.\d+)?))?\s*$",
-    re.IGNORECASE,
-)
-# "compute the inter-annotator agreement of <label> per <key>" ->
-# Krippendorff's alpha, nominal (stats.krippendorff_alpha) — the
-# varying-ratings-per-item form, so no trimming clause is needed;
-# schema-replacing one-row report
-_AGREEMENT = re.compile(
-    r"^(?:compute|report|check)\s+(?:the\s+)?(?:inter-?annotator\s+)?"
-    r"agreement\s+(?:of|on)\s+(\w+)\s+per\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "take the majority vote of <label> per <key>" -> per-key winning
-# label with ratings/share/margin/tie flag (quality.majority_vote),
-# schema-replacing
-_MAJORITY = re.compile(
-    r"^(?:take|aggregate|compute)\s+(?:the\s+)?majority\s+vote\s+of\s+"
-    r"(\w+)\s+per\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "compute retrieval NDCG at 10 for the first 8 queries" -> NDCG@k
-# against label ground truth (similarity.ndcg_per_query), queries =
-# the first n vector ids; schema-replacing one row per query
-_NDCG = re.compile(
-    r"^(?:compute|report|evaluate)\s+(?:the\s+)?retrieval\s+ndcg\s+"
-    r"at\s+(\d+)\s+for\s+(?:the\s+first\s+)?(\d+)\s+queries\s*"
-    r"(?:against\s+the\s+labels\s*)?$",
-    re.IGNORECASE,
-)
-# "how well separated are the labels" / "compute the silhouette of the
-# labels" -> per-label simplified (centroid-form) silhouette
-# (similarity.simplified_silhouette), schema-replacing
-_SILHOUETTE = re.compile(
-    r"^(?:how\s+well\s+separated\s+are\s+(?:my|the)\s+labels"
-    r"|(?:compute|report|check|show)\s+(?:the\s+)?"
-    r"(?:label\s+)?(?:silhouette|separation)"
-    r"(?:\s+of\s+(?:my|the)\s+labels)?)\s*$",
-    re.IGNORECASE,
-)
-# "train a BPE tokenizer with 5 merges" -> distributed BPE merge-table
-# training (text.bpe_merge_table), schema-replacing one row per merge
-_BPE_MERGES = re.compile(
-    r"^train\s+a\s+bpe\s+tokenizer\s+with\s+(\d+)\s+merges?\s*$",
-    re.IGNORECASE,
-)
-# "audit the common direction of the embeddings" / "which vectors are
-# dominated by the common direction" -> all-but-the-top audit
-# (linalg.common_direction_audit): per vector, the projection onto the
-# corpus top principal component + centered norm; schema-replacing
-_COMMON_DIR = re.compile(
-    r"^(?:audit\s+the\s+common\s+direction\s+of\s+(?:the\s+)?"
-    r"(?:embeddings|vectors)"
-    r"|which\s+(?:embeddings|vectors)\s+are\s+dominated\s+by\s+"
-    r"(?:the\s+)?common\s+direction)\s*$",
-    re.IGNORECASE,
-)
-# "allocate a training budget of 48000 tokens across sources with at
-# most 2 epochs" -> UniMax epoch-capped budget allocation
-# (corpus.unimax_allocation), schema-replacing one row per group
-_UNIMAX = re.compile(
-    r"^allocate\s+a\s+(?:training\s+)?budget\s+of\s+(\d+)\s+tokens\s+"
-    r"across\s+(\w+)(?:\s+with\s+at\s+most\s+(\d+)\s+epochs?)?\s*$",
-    re.IGNORECASE,
-)
-# "bootstrap a 95% confidence interval for the mean value per
-# event_type keyed by event_id [with 40 replicates]" -> Poisson
-# bootstrap CI (stats.poisson_bootstrap_ci), schema-replacing
-_BOOTSTRAP = re.compile(
-    r"^bootstrap\s+a\s+95%\s+confidence\s+interval\s+for\s+the\s+"
-    r"mean\s+(\w+)\s+per\s+(\w+)\s+keyed\s+by\s+(\w+)"
-    r"(?:\s+with\s+(\d+)\s+replicates?)?\s*$",
-    re.IGNORECASE,
-)
-# "bucket documents by perplexity [against the src0 slice]" ->
-# CCNet-style head/middle/tail perplexity tertiles per language
-# (text.perplexity_buckets), schema-replacing
-_PPL_BUCKETS = re.compile(
-    r"^bucket\s+(?:the\s+)?documents\s+by\s+perplexity"
-    r"(?:\s+against\s+the\s+(\w+)\s+slice)?\s*$",
-    re.IGNORECASE,
-)
-# "compute the word entropy of each document" -> per-doc Shannon
-# entropy + evenness (text.word_entropy), schema-replacing
-_WENTROPY = re.compile(
-    r"^compute\s+(?:the\s+)?word\s+entropy\s+(?:of|for)\s+each\s+"
-    r"(?:document|row)\s*$",
-    re.IGNORECASE,
-)
-# "report the out-of-vocabulary rate per source [against the top 100
-# words]" -> tokenizer-coverage audit (text.oov_rate_by_group),
-# schema-replacing
-_OOV = re.compile(
-    r"^report\s+(?:the\s+)?out-of-vocabulary\s+rate\s+per\s+(\w+)"
-    r"(?:\s+against\s+(?:the\s+)?top\s+(\d+)\s+words)?\s*$",
-    re.IGNORECASE,
-)
-# "remove documents containing the words 'x', 'y'" -> C4-style
-# blocklist screen (text.blocklist_screen): word-level set
-# intersection against the quoted list, pure per-row filter
-_BLOCKLIST = re.compile(
-    r"^remove\s+(?:documents|rows)\s+containing\s+(?:the\s+)?words?\s+"
-    r"('[^']*'(?:\s*,\s*'[^']*')*)\s*$",
-    re.IGNORECASE,
-)
-# "apply the gopher quality rules to each document" -> the published
-# heuristic rule battery (text.gopher_rules): per-rule booleans +
-# passes_gopher, all paper-default thresholds
-_GOPHER = re.compile(
-    r"^apply\s+(?:the\s+)?gopher\s+quality\s+rules\s+to\s+each\s+"
-    r"(?:document|row)\s*$",
-    re.IGNORECASE,
-)
-# "weight documents by importance to lang 'en'" -> DSIR hashed-n-gram
-# importance weights against the target slice <col> = '<value>'
-_DSIR = re.compile(
-    r"^weight\s+(?:the\s+)?(?:documents|rows)\s+by\s+importance\s+to\s+"
-    r"(\w+)\s+'([^']*)'\s*$",
-    re.IGNORECASE,
-)
-# "compute token fertility per lang" -> tokens-per-word /
-# chars-per-token audit grouped on the named column
-_FERTILITY = re.compile(
-    r"^compute\s+token\s+fertility\s+per\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "audit 5-gram duplication per source" / "report duplication by
-# source" -> per-group duplication report: fraction of word n-gram
-# occurrences duplicated across documents / shared across groups
-_DUPAUDIT = re.compile(
-    r"^(?:audit|report)\s+(?:(\d+)-gram\s+)?duplication\s+(?:per|by)\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "remove documents sharing fingerprinted passages above 0.5 overlap"
-# -> winnowing (MOSS) keep-first dedup: window-min fingerprints, pairs
-# by containment overlap of fingerprint sets, drop the higher id
-_WINNOWDEDUP = re.compile(
-    r"^remove\s+documents\s+sharing\s+fingerprinted\s+passages"
-    r"\s+above\s+(0?\.\d+|1(?:\.0+)?)\s+overlap\s*$",
-    re.IGNORECASE,
-)
-# "report dedup savings per source" -> per-group exact-dedup savings
-# report (docs and characters a corpus-wide lowest-id-keeper dedup
-# would remove from each group)
-_DEDUPSAVINGS = re.compile(
-    r"^(?:report|price)\s+(?:the\s+)?dedup\s+savings\s+(?:per|by)\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "report vocabulary divergence per source" -> pairwise Jensen-Shannon
-# divergence between per-group unigram distributions
-_VOCDIV = re.compile(
-    r"^(?:report|compare)\s+vocabulary\s+divergence\s+(?:per|by|between)"
-    r"\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "pick 3 negatives per vector from a pool of 64" -> deterministic
-# contrastive negative sampling (different-label, broadcast pool)
-_NEGATIVES = re.compile(
-    r"^pick\s+(\d+)\s+negatives\s+per\s+vector"
-    r"(?:\s+from\s+a\s+pool\s+of\s+(\d+))?\s*$",
-    re.IGNORECASE,
-)
-# "chunk documents into 32-word chunks every 16 words" -> sliding-
-# window chunking (stride = the every-N phrase; equal stride = no
-# overlap, smaller = overlapping context windows)
-_CHUNK = re.compile(
-    r"^chunk\s+documents\s+into\s+(\d+)-word\s+chunks?"
-    r"(?:\s+every\s+(\d+)\s+words?)?\s*$",
-    re.IGNORECASE,
-)
-# "resample value every 6 hours per user_id with linear interpolation"
-# -> regular-grid resample; the value/ts/id columns default to the
-# events-table names, the value column is named explicitly
-_RESAMPLE = re.compile(
-    r"^resample\s+(\w+)\s+every\s+(\d+(?:\.\d+)?)\s+hours?\s+per\s+(\w+)"
-    r"(?:\s+with\s+linear\s+interpolation)?\s*$",
-    re.IGNORECASE,
-)
-# "winsorize value at 5/95 within each event_type" -> per-group
-# percentile clamp (percentages; 5/95 means the [p05, p95] band)
-_WINSORIZE = re.compile(
-    r"^winsorize\s+(\w+)\s+at\s+(\d+(?:\.\d+)?)/(\d+(?:\.\d+)?)\s+"
-    r"within\s+each\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "split into 90/5/5 train/val/test by doc_id" -> deterministic N-way
-# hash split; weight and label lists must be the same length
-_SPLIT_ASSIGN = re.compile(
-    r"^split\s+into\s+(\d+(?:\.\d+)?(?:/\d+(?:\.\d+)?)+)\s+"
-    r"(\w+(?:/\w+)+)\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_DEDUP = re.compile(
-    r"^(?:deduplicate|drop\s+duplicates?|remove\s+duplicates?)(?:\s+rows)?"
-    r"(?:\s+by\s+(.+?))?"
-    r"(?:\s+keeping\s+the\s+(lowest|highest)\s+(\w+))?"
-    r"(?:\s+breaking\s+ties\s+by\s+(\w+))?$",
-    re.IGNORECASE,
-)
-# corpus-pipeline phrasings (round-8: the LLM-data operators join the
-# NL surface). "remove duplicate documents keeping the first" = exact
-# dedup on text keeping the lowest doc_id; "remove near-duplicate
-# documents above 0.8 similarity" = the LSH chain + greedy keep-first;
-# "drop documents that appear in <table>" = 3-gram decontamination;
-# "pack documents into sequences of 512 tokens" = sequence packing.
-_DEDUP_DOCS = re.compile(
-    r"^remove\s+duplicate\s+documents(?:\s+keeping\s+the\s+first)?\s*$",
-    re.IGNORECASE,
-)
-_NEARDUP = re.compile(
-    r"^remove\s+near[- ]duplicate\s+documents?\s+above\s+"
-    r"(0?\.\d+|1(?:\.0+)?)\s+similarity\s*$",
-    re.IGNORECASE,
-)
-_DECONTAM = re.compile(
-    r"^drop\s+documents\s+that\s+appear\s+in\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "merge updates into the table on o_orderkey" -> MERGE upsert against
-# the named table from the compiler's table map
-_MERGE = re.compile(
-    r"^merge\s+(\w+)\s+into\s+the\s+table\s+on\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_PACK = re.compile(
-    r"^pack\s+documents\s+into\s+sequences\s+of\s+(\d+)\s+tokens\s*$",
-    re.IGNORECASE,
-)
-# "find the 10 most similar vectors to vector 42" / "find 5 nearest
-# neighbors of vector 7" — exact cosine top-k (similarity search)
-_ANN = re.compile(
-    r"^find\s+(?:the\s+)?(\d+)\s+(?:most\s+similar|nearest|closest)\s+"
-    r"(?:vectors?|neighbou?rs?|embeddings?)\s+(?:to|of)\s+vector\s+(\d+)\s*$",
-    re.IGNORECASE,
-)
-# "split text into words and count each word [showing top 50]" — the
-# explode + groupby-count shape (word count); the optional top-k sorts
-# on (count desc, word asc) so the boundary is a total order
-_WORDCOUNT = re.compile(
-    r"^split\s+(\w+)\s+into\s+words\s+and\s+count\s+each\s+word"
-    r"(?:\s+showing\s+top\s+(\d+))?$",
-    re.IGNORECASE,
-)
-_SELECT_DISTINCT = re.compile(r"^select\s+distinct\s+(.*)$", re.IGNORECASE)
-# "join with customer on custkey" / "broadcast join nation on n_nationkey"
-# / "left join orders with customer on c_custkey" — the base table is the
-# clause pipeline's input; 'right' resolves via the compiler's tables map.
-_JOIN = re.compile(
-    r"^(broadcast\s+)?(?:(inner|left_semi|left_anti|left|right|full|cross)\s+)?join\s+"
-    r"(?:\w+\s+with\s+|with\s+)?(\w+)\s+on\s+(\w+(?:\s*,\s*\w+)*)\s*$",
-    re.IGNORECASE,
-)
-# existence joins in natural phrasing: "keep rows that exist in
-# lineitem on l_orderkey" (semi) / "keep rows with no match in
-# lineitem on l_orderkey" (anti). Only the left side's columns
-# survive — Spark plans these as LeftSemi/LeftAnti hash joins, which
-# never materialize the right side's payload columns.
-_SEMI_JOIN = re.compile(
-    r"^keep\s+rows\s+(?:that\s+(?:exist|match|have\s+a\s+match)\s+in|"
-    r"with\s+a\s+match\s+in)\s+(\w+)\s+on\s+(\w+(?:\s*,\s*\w+)*)\s*$",
-    re.IGNORECASE,
-)
-_ANTI_JOIN = re.compile(
-    r"^keep\s+rows\s+with(?:\s+no|out\s+a?)\s+match\s+in\s+"
-    r"(\w+)\s+on\s+(\w+(?:\s*,\s*\w+)*)\s*$",
-    re.IGNORECASE,
-)
-# "append rows from <table>" (union all, by column name) /
-# "append distinct rows from <table>" (union + dedup)
-_UNION = re.compile(
-    r"^append\s+(distinct\s+)?rows\s+from\s+(\w+)\s*$", re.IGNORECASE
-)
-# "add running total of value per user_id ordered by ts" — an ordered
-# aggregate window (Spark's default RANGE frame = the SQL default, so
-# ties accumulate together in every engine)
-_RUNNING = re.compile(
-    r"^add\s+running\s+(total|sum|count|average|minimum|maximum)\s+of\s+(\w+)"
-    r"\s+per\s+(\w+)\s+ordered\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "add moving average of value over last 5 rows per user_id ordered by
-# ts" — a sliding ROWS frame ((n-1) PRECEDING .. CURRENT ROW)
-_MOVING = re.compile(
-    r"^add\s+moving\s+(total|sum|count|average|minimum|maximum|median)\s+of\s+(\w+)"
-    r"\s+over\s+last\s+(\d+)\s+rows\s+per\s+(\w+)\s+ordered\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "add exponential moving average of value over last 5 rows per
-# user_id ordered by ts [with smoothing 0.7]" — bounded weighted lag
-# chain (a^j weights, renormalized over available lags); default
-# smoothing 0.5
-_EWMA = re.compile(
-    r"^add\s+exponential\s+moving\s+average\s+of\s+(\w+)"
-    r"\s+over\s+last\s+(\d+)\s+rows\s+per\s+(\w+)\s+ordered\s+by\s+(\w+)"
-    r"(?:\s+with\s+smoothing\s+(0?\.\d+))?\s*$",
-    re.IGNORECASE,
-)
-# "add row number ordered by event_id" — global ordinal; the compiler
-# routes numeric ascending orderings through the two-phase rank so no
-# single-partition sort of the data ever runs
-_GLOBAL_RN = re.compile(
-    r"^add\s+row\s+number\s+ordered\s+by\s+(\w+)(\s+descending)?\s*$",
-    re.IGNORECASE,
-)
-# "add previous value per user_id ordered by ts" (lag) /
-# "add next value per user_id ordered by ts" (lead)
-_LAG_LEAD = re.compile(
-    r"^add\s+(previous|next)\s+(\w+)\s+per\s+(\w+)\s+ordered\s+by\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# round-5 relational extensions: declared-values pivot and rollup
-# subtotals (VERDICT r4 #4).
-# "pivot o_orderstatus by o_orderpriority counting rows for values F, O and P"
-# round-6: aggregate cells too — "pivot o_orderstatus by o_orderpriority
-# summing o_totalprice for values F, O" (summing|averaging|taking
-# minimum/maximum of <col>)
-_PIVOT = re.compile(
-    r"^pivot\s+(\w+)\s+by\s+(\w+)\s+counting\s+rows\s+for\s+values\s+(.+?)\s*$",
-    re.IGNORECASE,
-)
-_PIVOT_AGG = re.compile(
-    r"^pivot\s+(\w+)\s+by\s+(\w+)\s+"
-    r"(summing|averaging|taking\s+minimum\s+of|taking\s+maximum\s+of)\s+(\w+)"
-    r"\s+for\s+values\s+(.+?)\s*$",
-    re.IGNORECASE,
-)
-_PIVOT_AGG_WORDS = {"summing": "sum", "averaging": "avg",
-                    "taking minimum of": "min", "taking maximum of": "max"}
-# "group by o_orderpriority then o_orderstatus with subtotals and count rows"
-_ROLLUP = re.compile(
-    r"^group\s+by\s+(\w+(?:\s+then\s+\w+)+)\s+with\s+subtotals"
-    r"\s+and\s+count\s+rows\s*$",
-    re.IGNORECASE,
-)
 _VALUE_LIST_SPLIT = re.compile(r"\s*,\s*|\s+and\s+", re.IGNORECASE)
-# "show most common o_orderpriority per o_orderstatus" -> per-group MODE
-_MODE = re.compile(
-    r"^(?:show\s+)?most\s+common\s+(\w+)\s+per\s+(\w+)\s*$", re.IGNORECASE
-)
-# "join nearest views on user_id by ts taking view_event_id [within
-# 300 seconds|5 days|10 units]" -> as-of join (nearest|previous=
-# backward|next=forward); 'taking' lists the right-side payload
-# columns to attach as asof_<name>; 'within' bounds the match
-# distance (merge_asof tolerance)
-_ASOF = re.compile(
-    r"^join\s+(nearest|previous|next)\s+(\w+)\s+on\s+(\w+)\s+by\s+(\w+)"
-    r"\s+taking\s+(\w+(?:\s*,\s*\w+)*)"
-    r"(?:\s+within\s+(\d+(?:\.\d+)?)\s+(second|day|unit)s?)?\s*$",
-    re.IGNORECASE,
-)
-_ASOF_DIRECTIONS = {"nearest": "nearest", "previous": "backward",
-                    "next": "forward"}
-_ASOF_UNITS = {"second": "second", "day": "day", "unit": "raw"}
-# round-7: NL reach for the remaining window-vocabulary spec ops
-# (VERDICT r6 #3 — ntile/percent_rank/cume_dist/first_value existed in
-# the spec IR and compiler but no phrasing produced them).
-# "divide into 10 buckets by event_id per user_id" -> ntile. Pick a
-# tie-free ordering column: ntile's assignment among order ties is
-# engine-arbitrary.
-_NTILE = re.compile(
-    r"^divide\s+into\s+(\d+)\s+buckets\s+by\s+(\w+)\s+per\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "add percentile rank of value per user_id" / "add cumulative
-# distribution of value per user_id" — both are deterministic under
-# order ties (rank- and count-based), unlike row_number
-_PCT_RANK = re.compile(
-    r"^add\s+(percentile\s+rank|cumulative\s+distribution)\s+of\s+(\w+)"
-    r"\s+per\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# "add first value per user_id ordered by event_id [over last 3 rows]"
-# -> first_value; the optional rows suffix makes it a sliding frame
-# (first of the last n rows) exactly like moving aggregates
-_FIRST_VALUE = re.compile(
-    r"^add\s+first\s+(\w+)\s+per\s+(\w+)\s+ordered\s+by\s+(\w+)"
-    r"(?:\s+over\s+last\s+(\d+)\s+rows)?\s*$",
-    re.IGNORECASE,
-)
-
-
-def _slug_alias(value: str, prefix: str = "n_") -> str:
-    """Deterministic output-column alias for a pivot value — the same
-    name the sqlgen oracle emits, so hash-compares line up."""
-    return prefix + (re.sub(r"[^a-z0-9]+", "_", value.lower()).strip("_") or "value")
 
 
 def _agg_phrase(phrase: str, columns: list[str] | None) -> dict | None:
@@ -908,12 +342,9 @@ def _agg_phrase(phrase: str, columns: list[str] | None) -> dict | None:
     return None
 
 
-def _parse_aggregate(clause: str, columns: list[str] | None) -> list[dict] | None:
+def _aggregate(m: re.Match, columns: list[str] | None) -> list[dict] | None:
     """The aggregate clause -> its ops (a with_column per truncated
-    key, then one groupby_agg), or None when the clause is not one."""
-    m = _AGGREGATE.match(clause)
-    if not m:
-        return None
+    key, then one groupby_agg), or None when a phrase is not one."""
     phrases = m["aggs"] or m["shown"] or m["bare"]
     aggs = [_agg_phrase(p, columns)
             for p in _VALUE_LIST_SPLIT.split(phrases) if p.strip()]
@@ -933,600 +364,690 @@ def _parse_aggregate(clause: str, columns: list[str] | None) -> list[dict] | Non
     return ops + [op]
 
 
+# Flat-row converters: (group text, input columns) -> field value.
+def _raw(text: str, columns: list[str] | None) -> str:
+    return text
+
+
+def _int(text: str, columns: list[str] | None) -> int:
+    return int(text)
+
+
+def _float(text: str, columns: list[str] | None) -> float:
+    return float(text)
+
+
+def _pct(text: str, columns: list[str] | None) -> float:
+    return float(text) / 100.0
+
+
+def _cols(text: str, columns: list[str] | None) -> list[str]:
+    """'a, b and c' -> the plural-resolved columns."""
+    return [_resolve_col(c.strip(), columns) for c in re.split(r",|\s+and\s+", text)]
+
+
+def _names(text: str, columns: list[str] | None) -> list[str]:
+    """'a, b' -> the names as written."""
+    return [c.strip() for c in text.split(",")]
+
+
+def _quoted(text: str, columns: list[str] | None) -> list[str]:
+    return [v[1:-1] for v in re.findall(r"'[^']*'", text)]
+
+
+def _then(text: str, columns: list[str] | None) -> list[str]:
+    return [s.strip().strip("'") for s in re.split(r"\s+then\s+", text, flags=re.I)]
+
+
+def _pred(text: str, columns: list[str] | None) -> dict:
+    return parse_predicate(text)
+
+
+def _const(value: Any) -> Callable[[str | None, list[str] | None], Any]:
+    return lambda text, columns: value
+
+
+# a flat row's cross-field checks: op -> (test of the built op, message)
+_CHECKS: dict[str, tuple[Callable[[dict], Any], str]] = {
+    "winsorize": (lambda op: op["lo"] < op["hi"], "winsorize needs lo < hi"),
+    "anomaly": (lambda op: op["n"] >= 3, "anomaly window needs at least 3 rows"),
+    "split_assign": (lambda op: len(op["labels"]) == len(op["weights"]),
+                     "split needs one label per weight"),
+    "bm25": (lambda op: op["terms"], "search needs at least one term"),
+}
+
+_Build = Callable[[re.Match, list[str] | None], dict | list[dict] | None]
+
+
+def _op(name: str, /, **fields: Any) -> _Build:
+    """A flat row: the op ``name`` with one field per keyword, in that
+    order, each the converter of the same-named group. A field with no
+    group (a ``_const``) is always set; an optional group that did not
+    match leaves its field out, unless the converter comes as
+    ``(converter, default)``: then ``default`` fills it, or
+    ``default(op)`` when it is callable."""
+    def build(m: re.Match, columns: list[str] | None) -> dict:
+        op, groups = {"op": name}, m.groupdict()
+        for field, conv in fields.items():
+            conv, default = conv if isinstance(conv, tuple) else (conv, None)
+            if (text := groups.get(field)) is not None or field not in groups:
+                op[field] = conv(text, columns)
+            elif default is not None:
+                op[field] = default(op) if callable(default) else default
+        if name in _CHECKS and not _CHECKS[name][0](op):
+            raise ParseError(f"{_CHECKS[name][1]}: {m.string!r}")
+        return op
+    return build
+
+
+def _window(fn: str | dict[str, str], alias: str, least: int = 1, why: str = "") -> _Build:
+    """A window row: one window op with one expr. Groups: x the
+    (plural-resolved) column, by the partition, o the ordering column
+    as written (else x orders, descending when desc matched), w a word
+    that ``fn`` maps to the window fn, n a row count (ntile: buckets;
+    else the frame is the n - 1 preceding rows) of at least ``least``
+    (else ParseError ``why``), alpha the ewma smoothing (default 0.5).
+    ``alias`` is formatted with the groups and fn."""
+    def build(m: re.Match, columns: list[str] | None) -> dict:
+        g = {k: v for k, v in m.groupdict().items() if v is not None}
+        if "w" in g:
+            g["w"] = " ".join(g["w"].lower().split())
+        g["fn"] = fn[g["w"]] if isinstance(fn, dict) else fn
+        g["x"] = _resolve_col(g["x"], columns)
+        expr = {"fn": g["fn"]}
+        if g["fn"] not in _COLUMNLESS_FNS:
+            expr["col"] = g["x"]
+        if "n" in g and (n := int(g["n"])) < least:
+            raise ParseError(f"{why}: {m.string!r}")
+        if g["fn"] == "ntile":
+            expr["n"] = n
+        expr["alias"] = alias.format_map(g)
+        if g["fn"] == "ewma":
+            expr["alpha"] = float(g.get("alpha", 0.5))
+        if "n" in g and g["fn"] != "ntile":
+            expr["rows_preceding"] = n - 1
+        return {"op": "window", "partition_by": [g["by"]] if "by" in g else [],
+                "order_by": [{"col": g.get("o", g["x"]), "asc": "desc" not in g}],
+                "exprs": [expr]}
+    return build
+
+
+def _word_count(m: re.Match, columns: list[str] | None) -> list[dict]:
+    ops: list[dict] = [
+        {"op": "explode", "col": _resolve_col(m.group(1), columns), "alias": "word"},
+        {"op": "groupby_agg", "keys": ["word"],
+         "aggs": [{"fn": "count", "col": "*", "alias": "n"}]},
+    ]
+    if m.group(2):
+        ops += [
+            {"op": "sort", "keys": [{"col": "n", "asc": False}, {"col": "word", "asc": True}]},
+            {"op": "limit", "n": int(m.group(2))},
+        ]
+    return ops
+
+
+def _dedup_docs(m: re.Match, columns: list[str] | None) -> dict:
+    # exact dedup of the documents table: key on the text, keep the
+    # lowest doc_id — the deterministic keyed-dedup op, so the oracle
+    # renders for free
+    return {"op": "dedup", "keys": [_resolve_col("text", columns)],
+            "keep_col": _resolve_col("doc_id", columns), "keep": "min"}
+
+
+_EXP_UNIQUE = re.compile(r"^(\w+)\s+is\s+unique$", re.IGNORECASE)
+_EXP_NOT_NULL = re.compile(r"^(\w+)\s+is\s+not\s+null$", re.IGNORECASE)
+_EXP_IN = re.compile(
+    r"^(\w+)\s+is\s+in\s+('[^']*'(?:\s*,\s*'[^']*')*)$", re.IGNORECASE
+)
+_EXP_MIN_ROWS = re.compile(r"^at\s+least\s+(\d+)\s+rows?$", re.IGNORECASE)
+
+
+def _expect(m: re.Match, columns: list[str] | None) -> dict:
+    exps: list[dict] = []
+    for part in re.split(r"\s+and\s+", m.group(1), flags=re.IGNORECASE):
+        part = part.strip()
+        if mm := _EXP_UNIQUE.match(part):
+            exps.append({"kind": "unique", "col": _resolve_col(mm.group(1), columns)})
+        elif mm := _EXP_NOT_NULL.match(part):
+            exps.append({"kind": "not_null", "col": _resolve_col(mm.group(1), columns)})
+        elif mm := _EXP_IN.match(part):
+            exps.append({"kind": "accepted_values", "col": _resolve_col(mm.group(1), columns),
+                         "values": _quoted(mm.group(2), columns)})
+        elif mm := _EXP_MIN_ROWS.match(part):
+            exps.append({"kind": "min_rows", "n": int(mm.group(1))})
+        else:
+            raise ParseError(f"unknown expectation: {part!r}")
+    return {"op": "expect", "expectations": exps}
+
+
+_CONVERT_TYPES = {
+    "integer": "long", "long": "long", "double": "double", "float": "double",
+    "string": "string", "text": "string", "date": "date",
+    "timestamp": "timestamp",
+}
+
+
+def _json_get(m: re.Match, columns: list[str] | None) -> dict:
+    kind_, field, src, alias = m.groups()
+    expr: dict = {"json_get": [_resolve_col(src, columns), field]}
+    if kind_.lower() == "number":
+        expr = {"cast": [expr, "double"]}
+    name = alias or field
+    op = {"op": "with_column", "name": name, "expr": expr}
+    if columns and name in columns:
+        op["replace"] = True
+    return op
+
+
+def _dedup(m: re.Match, columns: list[str] | None) -> dict:
+    by, keep, keep_col, tiebreak = m.groups()
+    if keep:
+        # "keeping the lowest/highest <col>" makes the kept row
+        # deterministic -> the keyed dedup op (oracle-renderable), not
+        # arbitrary-row distinct-by-cols
+        if not by:
+            raise ParseError("deduplicate ... keeping ... needs 'by <columns>'")
+        op = {"op": "dedup", "keys": _parse_select_cols(by),
+              "keep_col": _resolve_col(keep_col, columns),
+              "keep": "min" if keep.lower() == "lowest" else "max"}
+        if tiebreak:
+            # "breaking ties by <col>": deterministic winner when
+            # keep_col ties within a group (always ascending)
+            op["tiebreak"] = _resolve_col(tiebreak, columns)
+        return op
+    if tiebreak:
+        raise ParseError(
+            "deduplicate ... breaking ties ... needs 'keeping the lowest/highest <col>'"
+        )
+    op = {"op": "distinct"}
+    if by:
+        op["cols"] = _parse_select_cols(by)
+    return op
+
+
+def _select_distinct(m: re.Match, columns: list[str] | None) -> list[dict]:
+    return [{"op": "select", "cols": _parse_select_cols(m.group(1))}, {"op": "distinct"}]
+
+
+_PIVOT_AGG_WORDS = {"summing": "sum", "averaging": "avg",
+                    "taking minimum of": "min", "taking maximum of": "max"}
+
+
+def _slug_alias(value: str, prefix: str = "n_") -> str:
+    """Deterministic output-column alias for a pivot value — the same
+    name the sqlgen oracle emits, so hash-compares line up."""
+    return prefix + (re.sub(r"[^a-z0-9]+", "_", value.lower()).strip("_") or "value")
+
+
+def _pivot(m: re.Match, columns: list[str] | None) -> dict:
+    """Declared-values pivot: counting rows (aliases n_<value>), or
+    summing/averaging/taking minimum or maximum of x (<fn>_<value>)."""
+    g = m.groupdict()
+    vals = [v.strip().strip("'\"") for v in _VALUE_LIST_SPLIT.split(g["values"]) if v.strip()]
+    agg, prefix = {"fn": "count", "col": "*"}, "n_"
+    if g.get("w"):
+        fn = _PIVOT_AGG_WORDS[re.sub(r"\s+", " ", g["w"].lower())]
+        agg, prefix = {"fn": fn, "col": _resolve_col(g["x"], columns)}, f"{fn}_"
+    return {"op": "pivot", "keys": [_resolve_col(g["key"], columns)],
+            "col": _resolve_col(g["col"], columns), "values": vals, "agg": agg,
+            "aliases": [_slug_alias(v, prefix) for v in vals]}
+
+
+def _rollup(m: re.Match, columns: list[str] | None) -> dict:
+    keys = re.split(r"\s+then\s+", m.group(1), flags=re.IGNORECASE)
+    return {"op": "rollup", "keys": [_resolve_col(k, columns) for k in keys],
+            "aggs": [{"fn": "count", "col": "*", "alias": "n_rows"}], "gid_alias": "gid"}
+
+
+_ASOF_DIRECTIONS = {"nearest": "nearest", "previous": "backward", "next": "forward"}
+_ASOF_UNITS = {"second": "second", "day": "day", "unit": "raw"}
+
+
+def _asof(m: re.Match, columns: list[str] | None) -> dict:
+    direction, right, on, ts, taking, tol, unit = m.groups()
+    op = {"op": "asof_join", "right": right, "on": on, "ts": ts,
+          "right_cols": _names(taking, columns),
+          "direction": _ASOF_DIRECTIONS[direction.lower()]}
+    if tol:
+        tol = float(tol)
+        op["tolerance"] = int(tol) if tol.is_integer() else tol
+        op["tolerance_unit"] = _ASOF_UNITS[unit.lower()]
+    return op
+
+
+def _seconds(text: str, columns: list[str] | None) -> int:
+    n, unit = text.split()
+    return int(n) * {"second": 1, "minute": 60, "hour": 3600}[unit.lower()]
+
+
+def _group_top_k(m: re.Match, columns: list[str] | None) -> list[dict]:
+    g, n, v = m.group(1), int(m.group(2)), _resolve_col(m.group(3), columns)
+    # deterministic tie-break (determinism policy): append the table's
+    # first column (the star schema's primary key) so row_number's
+    # order is total even when top values tie. Marked _auto so
+    # parse_description can strip it if an earlier clause dropped that
+    # column (the marker never reaches the validated spec).
+    order = [{"col": v, "asc": False}]
+    if columns and columns[0] not in (v, g):
+        order.append({"col": columns[0], "asc": True, "_auto": True})
+    return [
+        {"op": "window", "partition_by": [g], "order_by": order,
+         "exprs": [{"fn": "row_number", "alias": "_rn"}]},
+        {"op": "filter", "expr": {"le": [{"col": "_rn"}, n]}},
+        {"op": "drop", "cols": ["_rn"]},
+    ]
+
+
+# "add tier column as 'low' when o_totalprice < 100000, 'mid' when
+# o_totalprice < 300000, otherwise 'high'" -> ANSI CASE (first match
+# wins). Branches split on top-level commas only, so IN-lists inside a
+# when-predicate survive; values are quoted strings or bare numbers.
+_CASE_BRANCH = re.compile(
+    r"^('[^']*'|-?\d+(?:\.\d+)?)\s+when\s+(.+)$", re.IGNORECASE
+)
+_CASE_ELSE = re.compile(
+    r"^(?:otherwise\s+('[^']*'|-?\d+(?:\.\d+)?)"
+    r"|('[^']*'|-?\d+(?:\.\d+)?)\s+otherwise)$",
+    re.IGNORECASE,
+)
+_ADD_COLUMN = r"^add\s+(?P<name>\w+)\s+column\s+where\s+\w+\s*=\s*(?P<expr>.*)$"
+
+
+def _case_column(m: re.Match, columns: list[str] | None) -> dict | None:
+    clause = m.string
+    if re.match(_ADD_COLUMN, clause, re.IGNORECASE):
+        return None
+    whens: list[list] = []
+    else_val = None
+    for part in _split_top_level_commas(m.group(2)):
+        if em := _CASE_ELSE.match(part):
+            if else_val is not None:
+                raise ParseError(f"case column has two otherwise branches: {clause!r}")
+            else_val = _case_literal(em.group(1) or em.group(2))
+            continue
+        bm = _CASE_BRANCH.match(part)
+        if not bm:
+            raise ParseError(f"bad case branch {part!r} in {clause!r}")
+        if else_val is not None:
+            raise ParseError(f"case branch after otherwise: {clause!r}")
+        whens.append([parse_predicate(bm.group(2)), _case_literal(bm.group(1))])
+    if not whens:
+        raise ParseError(f"case column needs at least one when branch: {clause!r}")
+    case: dict = {"when": whens}
+    if else_val is not None:
+        case["else"] = else_val
+    return {"op": "with_column", "name": m.group(1), "expr": {"case": case}}
+
+
+def _in_place(m: re.Match, columns: list[str] | None) -> dict:
+    """'replace missing X with V' (coalesce, the post-outer-join null
+    fill) / 'convert X to T' (cast): a with_column over the same name,
+    so the column keeps its position and later clauses see the new
+    value."""
+    col, g = m["name"], m.groupdict()
+    if "fill" in g:
+        expr = {"coalesce": [{"col": col}, _case_literal(g["fill"])]}
+    else:
+        expr = {"cast": [{"col": col}, _CONVERT_TYPES[g["type"].lower()]]}
+    return {"op": "with_column", "name": col, "replace": True, "expr": expr}
+
+
+def _renames(text: str, columns: list[str] | None) -> dict:
+    old, _, new = text.split()
+    return {old: new}
+
+
+# multi-key: "sort by age desc, name" — each comma part is col [dir]
+_SORT_KEY = re.compile(
+    r"(\w+)(?:\s+(desc(?:ending)?|asc(?:ending)?))?", re.IGNORECASE
+)
+
+
+def _sort(m: re.Match, columns: list[str] | None) -> dict:
+    keys = []
+    for part in re.split(r"\s*,\s*", m.group(1).strip()):
+        km = _SORT_KEY.fullmatch(part.strip())
+        if not km:
+            raise ParseError(f"bad sort key {part!r}")
+        keys.append({"col": km.group(1),
+                     "asc": not (km.group(2) or "").lower().startswith("desc")})
+    return {"op": "sort", "keys": keys}
+
+
+def _select_cols(m: re.Match, columns: list[str] | None) -> dict | None:
+    # "select name, city" / "select columns name and age": a projection
+    # iff the payload is a bare column list; else a filter
+    if "where" in m.string.lower():
+        return None
+    try:
+        return {"op": "select", "cols": _parse_select_cols(m.group(1))}
+    except ParseError:
+        return None  # "select rows where ..." style filter
+
+
+# The clause table: one row per clause shape, (pattern, builder), tried
+# in order, so order is precedence. A builder turns the match into the
+# clause's op (or ops), or returns None to let the next rows try. Most
+# rows are flat (``_op``: the pattern's named groups are the op's
+# fields); the rest run a sub-grammar or emit several ops. Every
+# pattern is anchored and case-insensitive.
+_CLAUSES: list[tuple[re.Pattern, _Build]] = [
+    (re.compile(pattern, re.IGNORECASE), build)
+    for pattern, build in (
+        (r"^(?:sample|keep)\s+(?P<fraction>\d+(?:\.\d+)?)\s*(?:%|percent)\s+of\s+"
+         r"(?:the\s+)?(?:rows|documents)\s+by\s+(?P<key>\w+)\s*$",
+         _op("sample", fraction=_pct, key=_raw)),
+        # "split text into words and count each word [showing top 50]":
+        # explode + groupby-count; the top-k sorts on (count desc, word
+        # asc) so the boundary is a total order
+        (r"^split\s+(\w+)\s+into\s+words\s+and\s+count\s+each\s+word"
+         r"(?:\s+showing\s+top\s+(\d+))?$", _word_count),
+        (r"^remove\s+duplicate\s+documents(?:\s+keeping\s+the\s+first)?\s*$", _dedup_docs),
+        # "pick 3 negatives per vector from a pool of 64": deterministic
+        # contrastive negative sampling (different-label, broadcast pool)
+        (r"^pick\s+(?P<k>\d+)\s+negatives\s+per\s+vector"
+         r"(?:\s+from\s+a\s+pool\s+of\s+(?P<pool>\d+))?\s*$",
+         _op("negatives", k=_int, pool=_int)),
+        # "chunk documents into 32-word chunks every 16 words": sliding
+        # windows (stride = the every-N phrase, else the size: no overlap)
+        (r"^chunk\s+documents\s+into\s+(?P<size>\d+)-word\s+chunks?"
+         r"(?:\s+every\s+(?P<stride>\d+)\s+words?)?\s*$",
+         _op("chunk", size=_int, stride=(_int, lambda op: op["size"]))),
+        # "resample value every 6 hours per user_id with linear
+        # interpolation": regular-grid resample (ts/id default to the
+        # events table's names)
+        (r"^resample\s+(?P<val>\w+)\s+every\s+(?P<step_hours>\d+(?:\.\d+)?)\s+hours?"
+         r"\s+per\s+(?P<key>\w+)(?:\s+with\s+linear\s+interpolation)?\s*$",
+         _op("resample", val=_resolve_col, step_hours=_float, key=_resolve_col)),
+        # "winsorize value at 5/95 within each event_type": per-group
+        # percentile clamp to the [p05, p95] band
+        (r"^winsorize\s+(?P<col>\w+)\s+at\s+(?P<lo>\d+(?:\.\d+)?)/(?P<hi>\d+(?:\.\d+)?)\s+"
+         r"within\s+each\s+(?P<keys>\w+)\s*$",
+         _op("winsorize", col=_resolve_col, keys=_cols, lo=_pct, hi=_pct)),
+        # text-analysis projections over the document table: each adds
+        # typed per-row columns with no shuffle
+        (r"^detect\s+the\s+language\s+of\s+each\s+(?:document|row)\s*$", _op("langid")),
+        # mask emails and long digit runs in the text column in place
+        (r"^redact\s+(?:emails?\s+and\s+(?:long\s+)?numbers?|pii)\s+"
+         r"in\s+each\s+(?:document|row)\s*$", _op("redact")),
+        # "remove documents containing the words 'x', 'y'": C4-style
+        # word-level blocklist screen, a pure per-row filter
+        (r"^remove\s+(?:documents|rows)\s+containing\s+(?:the\s+)?words?\s+"
+         r"(?P<words>'[^']*'(?:\s*,\s*'[^']*')*)\s*$", _op("blocklist", words=_quoted)),
+        # "check k-anonymity of user_id and event_type at 5": one-row
+        # report of quasi-identifier groups smaller than k
+        (r"^check\s+k-?anonymity\s+of\s+(?P<cols>\w+(?:(?:\s*,\s*|\s+and\s+)\w+)*)\s+"
+         r"at\s+(?P<k>\d+)\s*$", _op("kanon", cols=_cols, k=_int)),
+        # "compute the spearman [rank] correlation [matrix] of a, b and
+        # c" / "compute the correlation matrix of ...": one row per pair
+        (r"^(?:compute|show)\s+(?:the\s+)?spearman\s+(?:rank\s+)?correlation(?:\s+matrix)?"
+         r"\s+of\s+(?P<cols>\w+(?:(?:\s*,\s*|\s+and\s+)\w+)+)\s*$",
+         _op("spearman", cols=_cols)),
+        (r"^(?:compute|show)\s+(?:the\s+)?correlation(?:\s+matrix)?\s+of\s+"
+         r"(?P<cols>\w+(?:(?:\s*,\s*|\s+and\s+)\w+)+)\s*$", _op("correlate", cols=_cols)),
+        (r"^(?:compute|show)\s+(?:the\s+)?mutual\s+information\s+"
+         r"between\s+(?P<a>\w+)\s+and\s+(?P<b>\w+)\s*$",
+         _op("mutual_info", a=_resolve_col, b=_resolve_col)),
+        # "compute the [one-way] anova of <value> by|across <group>" /
+        # "compare the mean [of] <value> across <group>": F / eta^2 row
+        (r"^(?:compute|show)\s+(?:the\s+)?(?:one[- ]way\s+)?anova\s+of\s+"
+         r"(?P<value>\w+)\s+(?:by|across)\s+(?P<group>\w+)\s*$",
+         _op("anova", value=_resolve_col, group=_resolve_col)),
+        (r"^compare\s+(?:the\s+)?mean\s+(?:of\s+)?(?P<value>\w+)\s+across\s+(?P<group>\w+)\s*$",
+         _op("anova", value=_resolve_col, group=_resolve_col)),
+        # "compute the funnel of <type> steps <a> then <b> [then ...]
+        # per <user> ordered by <ts>": per-step reached users + conversion
+        (r"^(?:compute|show)\s+(?:the\s+)?funnel\s+of\s+(?P<type>\w+)\s+steps\s+"
+         r"(?P<steps>'?\w+'?(?:\s+then\s+'?\w+'?)+)\s+per\s+(?P<user>\w+)\s+"
+         r"ordered\s+by\s+(?P<ts>\w+)\s*$",
+         _op("funnel", type=_resolve_col, steps=_then, user=_resolve_col, ts=_resolve_col)),
+        # "score each document's 3-gram novelty": per-doc fraction of
+        # distinct n-grams first seen in that doc
+        (r"^(?:score|compute|show)\s+(?:each\s+document'?s?\s+)?"
+         r"(?P<n>\d+)-gram\s+novelty\s*$", _op("novelty", n=_int)),
+        # "audit the [source] concentration of the token mass [by <key>]":
+        # HHI / Gini / top-share report; "compute the hapax ratio [per
+        # <key>]": per-group share of the vocabulary occurring once
+        (r"^(?:audit|compute|show)\s+(?:the\s+)?(?:source\s+)?concentration"
+         r"\s+of\s+(?:the\s+)?token\s+mass(?:\s+by\s+(?P<key>\w+))?\s*$",
+         _op("concentration", key=(_resolve_col, "source"))),
+        (r"^(?:compute|show|score)\s+(?:the\s+)?hapax\s+ratio"
+         r"(?:\s+per\s+(?P<key>\w+))?\s*$", _op("hapax", key=(_resolve_col, "source"))),
+        # "flag anomalies in <col> over last <N> rows per <key> ordered by
+        # <o> [above z <t>]": rolling z-score flags
+        (r"^flag\s+anomalies\s+in\s+(?P<col>\w+)\s+over\s+last\s+(?P<n>\d+)\s+rows\s+"
+         r"per\s+(?P<key>\w+)\s+ordered\s+by\s+(?P<order_col>\w+)"
+         r"(?:\s+above\s+z\s+(?P<z>\d+(?:\.\d+)?))?\s*$",
+         _op("anomaly", col=_resolve_col, key=_resolve_col, order_col=_resolve_col,
+             n=_int, z=_float)),
+        # "compute the inter-annotator agreement of <label> per <key>":
+        # Krippendorff's alpha (nominal, varying ratings per item)
+        (r"^(?:compute|report|check)\s+(?:the\s+)?(?:inter-?annotator\s+)?"
+         r"agreement\s+(?:of|on)\s+(?P<label>\w+)\s+per\s+(?P<key>\w+)\s*$",
+         _op("agreement", label=_resolve_col, key=_resolve_col)),
+        (r"^(?:take|aggregate|compute)\s+(?:the\s+)?majority\s+vote\s+of\s+"
+         r"(?P<label>\w+)\s+per\s+(?P<key>\w+)\s*$",
+         _op("majority", label=_resolve_col, key=_resolve_col)),
+        # "compute retrieval NDCG at 10 for the first 8 queries": NDCG@k
+        # against the labels, queries = the first n vector ids
+        (r"^(?:compute|report|evaluate)\s+(?:the\s+)?retrieval\s+ndcg\s+"
+         r"at\s+(?P<k>\d+)\s+for\s+(?:the\s+first\s+)?(?P<n_queries>\d+)\s+queries\s*"
+         r"(?:against\s+the\s+labels\s*)?$", _op("ndcg", k=_int, n_queries=_int)),
+        # per-label centroid-form silhouette
+        (r"^(?:how\s+well\s+separated\s+are\s+(?:my|the)\s+labels"
+         r"|(?:compute|report|check|show)\s+(?:the\s+)?"
+         r"(?:label\s+)?(?:silhouette|separation)"
+         r"(?:\s+of\s+(?:my|the)\s+labels)?)\s*$", _op("silhouette")),
+        (r"^train\s+a\s+bpe\s+tokenizer\s+with\s+(?P<n>\d+)\s+merges?\s*$",
+         _op("bpe_merges", n=_int)),
+        # all-but-the-top audit: per vector, the projection onto the
+        # corpus top principal component
+        (r"^(?:audit\s+the\s+common\s+direction\s+of\s+(?:the\s+)?"
+         r"(?:embeddings|vectors)"
+         r"|which\s+(?:embeddings|vectors)\s+are\s+dominated\s+by\s+"
+         r"(?:the\s+)?common\s+direction)\s*$", _op("common_direction")),
+        # "allocate a training budget of 48000 tokens across sources with
+        # at most 2 epochs": UniMax epoch-capped allocation
+        (r"^allocate\s+a\s+(?:training\s+)?budget\s+of\s+(?P<budget>\d+)\s+tokens\s+"
+         r"across\s+(?P<key>\w+)(?:\s+with\s+at\s+most\s+(?P<epochs>\d+)\s+epochs?)?\s*$",
+         _op("unimax", budget=_int, key=_resolve_col, epochs=_int)),
+        # "bootstrap a 95% confidence interval for the mean value per
+        # event_type keyed by event_id [with 40 replicates]"
+        (r"^bootstrap\s+a\s+95%\s+confidence\s+interval\s+for\s+the\s+"
+         r"mean\s+(?P<col>\w+)\s+per\s+(?P<key>\w+)\s+keyed\s+by\s+(?P<id>\w+)"
+         r"(?:\s+with\s+(?P<n>\d+)\s+replicates?)?\s*$",
+         _op("bootstrap_mean", col=_resolve_col, key=_resolve_col, id=_resolve_col, n=_int)),
+        # CCNet-style head/middle/tail perplexity tertiles per language
+        (r"^bucket\s+(?:the\s+)?documents\s+by\s+perplexity"
+         r"(?:\s+against\s+the\s+(?P<ref_source>\w+)\s+slice)?\s*$",
+         _op("perplexity_buckets", ref_source=_raw)),
+        (r"^compute\s+(?:the\s+)?word\s+entropy\s+(?:of|for)\s+each\s+"
+         r"(?:document|row)\s*$", _op("word_entropy")),
+        # tokenizer coverage against the top-v corpus words
+        (r"^report\s+(?:the\s+)?out-of-vocabulary\s+rate\s+per\s+(?P<key>\w+)"
+         r"(?:\s+against\s+(?:the\s+)?top\s+(?P<v>\d+)\s+words)?\s*$",
+         _op("oov", key=_resolve_col, v=_int)),
+        # the Gopher heuristic rule battery, paper-default thresholds
+        (r"^apply\s+(?:the\s+)?gopher\s+quality\s+rules\s+to\s+each\s+"
+         r"(?:document|row)\s*$", _op("gopher")),
+        # "weight documents by importance to lang 'en'": DSIR hashed
+        # n-gram importance weights against the target slice
+        (r"^weight\s+(?:the\s+)?(?:documents|rows)\s+by\s+importance\s+to\s+"
+         r"(?P<target_col>\w+)\s+'(?P<target_val>[^']*)'\s*$",
+         _op("dsir", target_col=_resolve_col, target_val=_raw)),
+        (r"^compute\s+token\s+fertility\s+per\s+(?P<key>\w+)\s*$",
+         _op("fertility", key=_resolve_col)),
+        # "audit 5-gram duplication per source": n-gram occurrences
+        # duplicated across documents / shared across groups
+        (r"^(?:audit|report)\s+(?:(?P<n>\d+)-gram\s+)?duplication\s+(?:per|by)\s+(?P<key>\w+)\s*$",
+         _op("dup_by_source", key=_resolve_col, n=_int)),
+        # winnowing (MOSS) keep-first dedup by fingerprint-set overlap
+        (r"^remove\s+documents\s+sharing\s+fingerprinted\s+passages"
+         r"\s+above\s+(?P<overlap>0?\.\d+|1(?:\.0+)?)\s+overlap\s*$",
+         _op("winnow_dedup", overlap=_float)),
+        # what a corpus-wide lowest-id-keeper exact dedup removes per group
+        (r"^(?:report|price)\s+(?:the\s+)?dedup\s+savings\s+(?:per|by)\s+(?P<key>\w+)\s*$",
+         _op("dedup_savings", key=_resolve_col)),
+        # pairwise Jensen-Shannon divergence of per-group unigram
+        # distributions ("between sources" resolves to source)
+        (r"^(?:report|compare)\s+vocabulary\s+divergence\s+(?:per|by|between)"
+         r"\s+(?P<key>\w+)\s*$", _op("vocab_divergence", key=_resolve_col)),
+        # "check that doc_id is unique and text is not null and lang is
+        # in 'en', 'de' and at least 100 rows": the data-quality
+        # contract; value lists are quoted so "and" never splits them
+        (r"^check\s+that\s+(.+)$", _expect),
+        (r"^count\s+tokens\s+in\s+each\s+(?:document|row)\s*$", _op("token_counts")),
+        (r"^score\s+(?:the\s+)?quality\s+of\s+each\s+(?:document|row)\s*$",
+         _op("quality_score")),
+        # "split into 90/5/5 train/val/test by doc_id": N-way hash split
+        (r"^split\s+into\s+(?P<weights>\d+(?:\.\d+)?(?:/\d+(?:\.\d+)?)+)\s+"
+         r"(?P<labels>\w+(?:/\w+)+)\s+by\s+(?P<key>\w+)\s*$",
+         _op("split_assign", key=_resolve_col,
+             weights=lambda text, columns: [float(w) for w in text.split("/")],
+             labels=lambda text, columns: text.split("/"))),
+        # "extract the number k from props" / "extract the text field
+        # name from props as author": json_get ('number' casts to double,
+        # the portable numeric form)
+        (r"^extract\s+the\s+(number|text)\s+(?:field\s+)?(\w+)\s+from\s+(\w+)"
+         r"(?:\s+as\s+(\w+))?\s*$", _json_get),
+        # the corpus pipeline: LSH near-dup chain + greedy keep-first,
+        # MERGE upsert from a named table, 3-gram decontamination,
+        # sequence packing, exact cosine top-k
+        (r"^remove\s+near[- ]duplicate\s+documents?\s+above\s+"
+         r"(?P<threshold>0?\.\d+|1(?:\.0+)?)\s+similarity\s*$",
+         _op("neardup", threshold=_float)),
+        (r"^merge\s+(?P<right>\w+)\s+into\s+the\s+table\s+on\s+(?P<key>\w+)\s*$",
+         _op("merge", right=_raw, key=_resolve_col)),
+        (r"^drop\s+documents\s+that\s+appear\s+in\s+(?P<right>\w+)\s*$",
+         _op("decontaminate", right=_raw)),
+        (r"^pack\s+documents\s+into\s+sequences\s+of\s+(?P<budget>\d+)\s+tokens\s*$",
+         _op("pack", budget=_int)),
+        (r"^find\s+(?:the\s+)?(?P<k>\d+)\s+(?:most\s+similar|nearest|closest)\s+"
+         r"(?:vectors?|neighbou?rs?|embeddings?)\s+(?:to|of)\s+vector\s+(?P<query_id>\d+)\s*$",
+         _op("ann_topk", k=_int, query_id=_int)),
+        (r"^(?:deduplicate|drop\s+duplicates?|remove\s+duplicates?)(?:\s+rows)?"
+         r"(?:\s+by\s+(.+?))?"
+         r"(?:\s+keeping\s+the\s+(lowest|highest)\s+(\w+))?"
+         r"(?:\s+breaking\s+ties\s+by\s+(\w+))?$", _dedup),
+        (r"^select\s+distinct\s+(.*)$", _select_distinct),
+        # "pivot o_orderstatus by o_orderpriority counting rows for
+        # values F, O and P" / "... summing o_totalprice for values F, O"
+        (r"^pivot\s+(?P<col>\w+)\s+by\s+(?P<key>\w+)\s+counting\s+rows\s+for\s+values"
+         r"\s+(?P<values>.+?)\s*$", _pivot),
+        (r"^pivot\s+(?P<col>\w+)\s+by\s+(?P<key>\w+)\s+"
+         r"(?P<w>summing|averaging|taking\s+minimum\s+of|taking\s+maximum\s+of)\s+(?P<x>\w+)"
+         r"\s+for\s+values\s+(?P<values>.+?)\s*$", _pivot),
+        # "group by o_orderpriority then o_orderstatus with subtotals and
+        # count rows"
+        (r"^group\s+by\s+(\w+(?:\s+then\s+\w+)+)\s+with\s+subtotals"
+         r"\s+and\s+count\s+rows\s*$", _rollup),
+        (_AGGREGATE, _aggregate),
+        # "show most common o_orderpriority per o_orderstatus": per-group MODE
+        (r"^(?:show\s+)?most\s+common\s+(?P<col>\w+)\s+per\s+(?P<keys>\w+)\s*$",
+         _op("mode", keys=_names, col=_resolve_col)),
+        # "join nearest views on user_id by ts taking view_event_id
+        # [within 300 seconds|5 days|10 units]": as-of join (nearest,
+        # previous = backward, next = forward); 'taking' lists the right
+        # columns attached as asof_<name>; 'within' bounds the distance
+        (r"^join\s+(nearest|previous|next)\s+(\w+)\s+on\s+(\w+)\s+by\s+(\w+)"
+         r"\s+taking\s+(\w+(?:\s*,\s*\w+)*)"
+         r"(?:\s+within\s+(\d+(?:\.\d+)?)\s+(second|day|unit)s?)?\s*$", _asof),
+        (r"^sessionize\s+by\s+(?P<key>\w+)\s+with\s+"
+         r"(?P<gap_seconds>\d+\s+(?:second|minute|hour))s?\s+gap\s*$",
+         _op("sessionize", key=_raw, gap_seconds=_seconds)),
+        (r"^for\s+each\s+(\w+)\s+show\s+top\s+(\d+)\s+by\s+(\w+)\s*$", _group_top_k),
+        # "join with customer on custkey" / "broadcast join nation on
+        # n_nationkey" / "left join orders with customer on c_custkey":
+        # the left side is the clause pipeline's input; the right table
+        # resolves through the compiler's tables map
+        (r"^(?P<broadcast>broadcast\s+)?"
+         r"(?:(?P<how>inner|left_semi|left_anti|left|right|full|cross)\s+)?join\s+"
+         r"(?:\w+\s+with\s+|with\s+)?(?P<right>\w+)\s+on\s+(?P<on>\w+(?:\s*,\s*\w+)*)\s*$",
+         _op("join", right=_raw, on=_names, how=(lambda text, columns: text.lower(), "inner"),
+             broadcast=_const(True))),
+        # existence joins: "keep rows that exist in lineitem on
+        # l_orderkey" (semi) / "keep rows with no match in ..." (anti);
+        # only the left side's columns survive
+        (r"^keep\s+rows\s+(?:that\s+(?:exist|match|have\s+a\s+match)\s+in|"
+         r"with\s+a\s+match\s+in)\s+(?P<right>\w+)\s+on\s+(?P<on>\w+(?:\s*,\s*\w+)*)\s*$",
+         _op("join", right=_raw, on=_names, how=_const("left_semi"))),
+        (r"^keep\s+rows\s+with(?:\s+no|out\s+a?)\s+match\s+in\s+"
+         r"(?P<right>\w+)\s+on\s+(?P<on>\w+(?:\s*,\s*\w+)*)\s*$",
+         _op("join", right=_raw, on=_names, how=_const("left_anti"))),
+        # "append [distinct] rows from <table>": union all by column name
+        # (distinct: union + dedup)
+        (r"^append\s+(?P<distinct>distinct\s+)?rows\s+from\s+(?P<right>\w+)\s*$",
+         _op("union", right=_raw, distinct=_const(True))),
+        # "add running total of value per user_id ordered by ts": the
+        # default RANGE frame, so order ties accumulate together
+        (r"^add\s+running\s+(?P<w>total|sum|count|average|minimum|maximum)\s+of\s+(?P<x>\w+)"
+         r"\s+per\s+(?P<by>\w+)\s+ordered\s+by\s+(?P<o>\w+)\s*$",
+         _window(_AGG_FNS, "running_{fn}_{x}")),
+        # "add exponential moving average of value over last 5 rows per
+        # user_id ordered by ts [with smoothing 0.7]": a bounded weighted
+        # lag chain (a^j weights, renormalized over the available lags)
+        (r"^add\s+exponential\s+moving\s+average\s+of\s+(?P<x>\w+)"
+         r"\s+over\s+last\s+(?P<n>\d+)\s+rows\s+per\s+(?P<by>\w+)\s+ordered\s+by\s+(?P<o>\w+)"
+         r"(?:\s+with\s+smoothing\s+(?P<alpha>0?\.\d+))?\s*$",
+         _window("ewma", "ewma_{x}", 2, "exponential moving average needs at least 2 rows")),
+        # "add moving average of value over last 5 rows per user_id
+        # ordered by ts": a sliding ROWS frame
+        (r"^add\s+moving\s+(?P<w>total|sum|count|average|minimum|maximum|median)\s+of\s+"
+         r"(?P<x>\w+)\s+over\s+last\s+(?P<n>\d+)\s+rows\s+per\s+(?P<by>\w+)"
+         r"\s+ordered\s+by\s+(?P<o>\w+)\s*$",
+         _window(_AGG_FNS, "moving_{fn}_{x}", 1, "moving window needs at least 1 row")),
+        # "add row number ordered by event_id": a global ordinal; the
+        # compiler ranks numeric ascending orders in two phases, so no
+        # single-partition sort runs
+        (r"^add\s+row\s+number\s+ordered\s+by\s+(?P<x>\w+)(?P<desc>\s+descending)?\s*$",
+         _window("row_number", "row_num")),
+        (r"^add\s+(?P<w>previous|next)\s+(?P<x>\w+)\s+per\s+(?P<by>\w+)"
+         r"\s+ordered\s+by\s+(?P<o>\w+)\s*$",
+         _window({"previous": "lag", "next": "lead"}, "{w}_{x}")),
+        # "divide into 10 buckets by event_id per user_id": ntile; pick a
+        # tie-free ordering column (ntile splits ties arbitrarily)
+        (r"^divide\s+into\s+(?P<n>\d+)\s+buckets\s+by\s+(?P<x>\w+)\s+per\s+(?P<by>\w+)\s*$",
+         _window("ntile", "bucket_{x}", 1, "ntile needs at least 1 bucket")),
+        # rank- and count-based, so deterministic under order ties
+        (r"^add\s+(?P<w>percentile\s+rank|cumulative\s+distribution)\s+of\s+(?P<x>\w+)"
+         r"\s+per\s+(?P<by>\w+)\s*$",
+         _window({"percentile rank": "percent_rank", "cumulative distribution": "cume_dist"},
+                 "{fn}_{x}")),
+        # "add first value per user_id ordered by event_id [over last 3
+        # rows]": the rows suffix makes it a sliding frame
+        (r"^add\s+first\s+(?P<x>\w+)\s+per\s+(?P<by>\w+)\s+ordered\s+by\s+(?P<o>\w+)"
+         r"(?:\s+over\s+last\s+(?P<n>\d+)\s+rows)?\s*$",
+         _window("first_value", "first_{x}", 1, "first over last needs >= 1 row")),
+        (r"^add\s+(\w+)\s+column\s+as\s+(.+)$", _case_column),
+        (_ADD_COLUMN, _op("with_column", name=_raw, expr=_pred)),
+        # "fit l_extendedprice on l_quantity per p_brand": per-group OLS
+        (r"^fit\s+(?P<y>\w+)\s+on\s+(?P<x>\w+)\s+per\s+(?P<key>\w+)\s*$",
+         _op("ols", key=_raw, y=_resolve_col, x=_resolve_col)),
+        # "search for 'vector stream' and show top 10 matches": BM25 top-k
+        (r"^search\s+for\s+'(?P<terms>[^']+)'"
+         r"(?:\s+and\s+show\s+top\s+(?P<k>\d+)(?:\s+matches)?)?\s*$",
+         _op("bm25", terms=lambda text, columns: text.split(), k=(_int, 10))),
+        (r"^replace\s+missing\s+(?P<name>\w+)\s+with\s+(?P<fill>'[^']*'|-?\d+(?:\.\d+)?)\s*$",
+         _in_place),
+        (r"^convert\s+(?P<name>\w+)\s+to\s+"
+         r"(?P<type>integer|long|double|float|string|text|date|timestamp)\s*$", _in_place),
+        (r"^rename\s+(?:column\s+)?(?P<renames>\w+\s+to\s+\w+)\s*$",
+         _op("rename", renames=_renames)),
+        (r"^drop\s+(?:column\s+)?(?P<cols>\w+)(?:\s+column)?\s*$", _op("drop", cols=_names)),
+        (r"^sort\s+by\s+(.+)$", _sort),
+        (r"^keep\s+top\s+(?P<n>\d+)(?:\s+rows?)?\s*$", _op("limit", n=_int)),
+        (r"^select\s+(?:columns?\s+)?(.*)$", _select_cols),
+        (r"^(?:filter|select)\s+(?:rows\s+)?(?:where\s+)?(?P<expr>.*)$",
+         _op("filter", expr=_pred)),
+    )
+]
+
+
 def _parse_clause(clause: str, columns: list[str] | None) -> dict | list[dict]:
     clause = clause.strip().rstrip(".").strip()
-    if m := _SAMPLE.match(clause):
-        return {
-            "op": "sample",
-            "fraction": float(m.group(1)) / 100.0,
-            "key": m.group(2),
-        }
-    if m := _WORDCOUNT.match(clause):
-        ops: list[dict] = [
-            {"op": "explode", "col": _resolve_col(m.group(1), columns),
-             "alias": "word"},
-            {"op": "groupby_agg", "keys": ["word"],
-             "aggs": [{"fn": "count", "col": "*", "alias": "n"}]},
-        ]
-        if m.group(2):
-            ops += [
-                {"op": "sort", "keys": [{"col": "n", "asc": False},
-                                        {"col": "word", "asc": True}]},
-                {"op": "limit", "n": int(m.group(2))},
-            ]
-        return ops
-    if _DEDUP_DOCS.match(clause):
-        # exact dedup of the documents table: key on the text, keep
-        # the lowest doc_id — the deterministic keyed-dedup op, so the
-        # oracle renders for free
-        return {"op": "dedup", "keys": [_resolve_col("text", columns)],
-                "keep_col": _resolve_col("doc_id", columns), "keep": "min"}
-    if m := _NEGATIVES.match(clause):
-        op = {"op": "negatives", "k": int(m.group(1))}
-        if m.group(2):
-            op["pool"] = int(m.group(2))
-        return op
-    if m := _CHUNK.match(clause):
-        size = int(m.group(1))
-        return {
-            "op": "chunk",
-            "size": size,
-            "stride": int(m.group(2)) if m.group(2) else size,
-        }
-    if m := _RESAMPLE.match(clause):
-        return {
-            "op": "resample",
-            "val": _resolve_col(m.group(1), columns),
-            "step_hours": float(m.group(2)),
-            "key": _resolve_col(m.group(3), columns),
-        }
-    if m := _WINSORIZE.match(clause):
-        lo, hi = float(m.group(2)) / 100.0, float(m.group(3)) / 100.0
-        if not lo < hi:
-            raise ParseError(f"winsorize needs lo < hi: {clause!r}")
-        return {
-            "op": "winsorize",
-            "col": _resolve_col(m.group(1), columns),
-            "keys": [_resolve_col(m.group(4), columns)],
-            "lo": lo,
-            "hi": hi,
-        }
-    if _LANGID.match(clause):
-        return {"op": "langid"}
-    if _REDACT.match(clause):
-        return {"op": "redact"}
-    if m := _BLOCKLIST.match(clause):
-        return {
-            "op": "blocklist",
-            "words": [v[1:-1] for v in re.findall(r"'[^']*'", m.group(1))],
-        }
-    if m := _KANON.match(clause):
-        return {
-            "op": "kanon",
-            "cols": [
-                _resolve_col(c.strip(), columns)
-                for c in re.split(r",|\s+and\s+", m.group(1))
-            ],
-            "k": int(m.group(2)),
-        }
-    if m := _SPEARMAN.match(clause):
-        return {
-            "op": "spearman",
-            "cols": [
-                _resolve_col(c.strip(), columns)
-                for c in re.split(r",|\s+and\s+", m.group(1))
-                if c.strip()
-            ],
-        }
-    if m := _CORRELATE.match(clause):
-        return {
-            "op": "correlate",
-            "cols": [
-                _resolve_col(c.strip(), columns)
-                for c in re.split(r",|\s+and\s+", m.group(1))
-                if c.strip()
-            ],
-        }
-    if m := _MUTUAL_INFO.match(clause):
-        return {
-            "op": "mutual_info",
-            "a": _resolve_col(m.group(1), columns),
-            "b": _resolve_col(m.group(2), columns),
-        }
-    if m := (_ANOVA.match(clause) or _ANOVA_MEAN.match(clause)):
-        return {
-            "op": "anova",
-            "value": _resolve_col(m.group(1), columns),
-            "group": _resolve_col(m.group(2), columns),
-        }
-    if m := _FUNNEL.match(clause):
-        return {
-            "op": "funnel",
-            "type": _resolve_col(m.group(1), columns),
-            "steps": [
-                s.strip().strip("'")
-                for s in re.split(r"\s+then\s+", m.group(2), flags=re.I)
-            ],
-            "user": _resolve_col(m.group(3), columns),
-            "ts": _resolve_col(m.group(4), columns),
-        }
-    if m := _NOVELTY.match(clause):
-        return {"op": "novelty", "n": int(m.group(1))}
-    if m := _CONCENTRATION.match(clause):
-        return {
-            "op": "concentration",
-            "key": _resolve_col(m.group(1), columns) if m.group(1)
-            else "source",
-        }
-    if m := _HAPAX.match(clause):
-        return {
-            "op": "hapax",
-            "key": _resolve_col(m.group(1), columns) if m.group(1)
-            else "source",
-        }
-    if m := _ANOMALY.match(clause):
-        n = int(m.group(2))
-        if n < 3:
-            raise ParseError(
-                f"anomaly window needs at least 3 rows: {clause!r}"
-            )
-        op = {
-            "op": "anomaly",
-            "col": _resolve_col(m.group(1), columns),
-            "key": _resolve_col(m.group(3), columns),
-            "order_col": _resolve_col(m.group(4), columns),
-            "n": n,
-        }
-        if m.group(5):
-            op["z"] = float(m.group(5))
-        return op
-    if m := _AGREEMENT.match(clause):
-        return {
-            "op": "agreement",
-            "label": _resolve_col(m.group(1), columns),
-            "key": _resolve_col(m.group(2), columns),
-        }
-    if m := _MAJORITY.match(clause):
-        return {
-            "op": "majority",
-            "label": _resolve_col(m.group(1), columns),
-            "key": _resolve_col(m.group(2), columns),
-        }
-    if m := _NDCG.match(clause):
-        return {
-            "op": "ndcg",
-            "k": int(m.group(1)),
-            "n_queries": int(m.group(2)),
-        }
-    if _SILHOUETTE.match(clause):
-        return {"op": "silhouette"}
-    if m := _BPE_MERGES.match(clause):
-        return {"op": "bpe_merges", "n": int(m.group(1))}
-    if _COMMON_DIR.match(clause):
-        return {"op": "common_direction"}
-    if m := _UNIMAX.match(clause):
-        op = {
-            "op": "unimax",
-            "budget": int(m.group(1)),
-            "key": _resolve_col(m.group(2), columns),
-        }
-        if m.group(3):
-            op["epochs"] = int(m.group(3))
-        return op
-    if m := _BOOTSTRAP.match(clause):
-        op = {
-            "op": "bootstrap_mean",
-            "col": _resolve_col(m.group(1), columns),
-            "key": _resolve_col(m.group(2), columns),
-            "id": _resolve_col(m.group(3), columns),
-        }
-        if m.group(4):
-            op["n"] = int(m.group(4))
-        return op
-    if m := _PPL_BUCKETS.match(clause):
-        op = {"op": "perplexity_buckets"}
-        if m.group(1):
-            op["ref_source"] = m.group(1)
-        return op
-    if _WENTROPY.match(clause):
-        return {"op": "word_entropy"}
-    if m := _OOV.match(clause):
-        op = {"op": "oov", "key": _resolve_col(m.group(1), columns)}
-        if m.group(2):
-            op["v"] = int(m.group(2))
-        return op
-    if _GOPHER.match(clause):
-        return {"op": "gopher"}
-    if m := _DSIR.match(clause):
-        return {
-            "op": "dsir",
-            "target_col": _resolve_col(m.group(1), columns),
-            "target_val": m.group(2),
-        }
-    if m := _FERTILITY.match(clause):
-        return {"op": "fertility", "key": _resolve_col(m.group(1), columns)}
-    if m := _DUPAUDIT.match(clause):
-        op: dict = {"op": "dup_by_source",
-                    "key": _resolve_col(m.group(2), columns)}
-        if m.group(1):
-            op["n"] = int(m.group(1))
-        return op
-    if m := _WINNOWDEDUP.match(clause):
-        return {"op": "winnow_dedup", "overlap": float(m.group(1))}
-    if m := _DEDUPSAVINGS.match(clause):
-        return {"op": "dedup_savings", "key": _resolve_col(m.group(1), columns)}
-    if m := _VOCDIV.match(clause):
-        # accept the plural form ("between sources") for a singular
-        # column name
-        key = m.group(1)
-        if columns and key not in columns and key.endswith("s") \
-                and key[:-1] in columns:
-            key = key[:-1]
-        return {"op": "vocab_divergence", "key": _resolve_col(key, columns)}
-    if m := _EXPECT.match(clause):
-        exps: list[dict] = []
-        for part in re.split(r"\s+and\s+", m.group(1), flags=re.IGNORECASE):
-            part = part.strip()
-            if mm := _EXP_UNIQUE.match(part):
-                exps.append({"kind": "unique",
-                             "col": _resolve_col(mm.group(1), columns)})
-            elif mm := _EXP_NOT_NULL.match(part):
-                exps.append({"kind": "not_null",
-                             "col": _resolve_col(mm.group(1), columns)})
-            elif mm := _EXP_IN.match(part):
-                exps.append({
-                    "kind": "accepted_values",
-                    "col": _resolve_col(mm.group(1), columns),
-                    "values": [v[1:-1] for v in re.findall(r"'[^']*'", mm.group(2))],
-                })
-            elif mm := _EXP_MIN_ROWS.match(part):
-                exps.append({"kind": "min_rows", "n": int(mm.group(1))})
-            else:
-                raise ParseError(f"unknown expectation: {part!r}")
-        return {"op": "expect", "expectations": exps}
-    if _TOKEN_COUNTS.match(clause):
-        return {"op": "token_counts"}
-    if _QUALITY.match(clause):
-        return {"op": "quality_score"}
-    if m := _SPLIT_ASSIGN.match(clause):
-        weights = [float(w) for w in m.group(1).split("/")]
-        labels = m.group(2).split("/")
-        if len(labels) != len(weights):
-            raise ParseError(
-                f"split needs one label per weight: {clause!r}"
-            )
-        return {
-            "op": "split_assign",
-            "key": _resolve_col(m.group(3), columns),
-            "weights": weights,
-            "labels": labels,
-        }
-    if m := _JSON_GET.match(clause):
-        kind_, field, src, alias = m.groups()
-        expr: dict = {"json_get": [_resolve_col(src, columns), field]}
-        if kind_.lower() == "number":
-            expr = {"cast": [expr, "double"]}
-        name = alias or field
-        op = {"op": "with_column", "name": name, "expr": expr}
-        if columns and name in columns:
-            op["replace"] = True
-        return op
-    if m := _NEARDUP.match(clause):
-        return {"op": "neardup", "threshold": float(m.group(1))}
-    if m := _MERGE.match(clause):
-        return {
-            "op": "merge",
-            "right": m.group(1),
-            "key": _resolve_col(m.group(2), columns),
-        }
-    if m := _DECONTAM.match(clause):
-        return {"op": "decontaminate", "right": m.group(1)}
-    if m := _PACK.match(clause):
-        return {"op": "pack", "budget": int(m.group(1))}
-    if m := _ANN.match(clause):
-        return {"op": "ann_topk", "k": int(m.group(1)),
-                "query_id": int(m.group(2))}
-    if m := _DEDUP.match(clause):
-        if m.group(2):
-            # "keeping the lowest/highest <col>" makes the kept row
-            # deterministic -> the keyed dedup op (oracle-renderable),
-            # not arbitrary-row distinct-by-cols
-            if not m.group(1):
-                raise ParseError(
-                    "deduplicate ... keeping ... needs 'by <columns>'"
-                )
-            op = {
-                "op": "dedup",
-                "keys": _parse_select_cols(m.group(1)),
-                "keep_col": _resolve_col(m.group(3), columns),
-                "keep": "min" if m.group(2).lower() == "lowest" else "max",
-            }
-            if m.group(4):
-                # "breaking ties by <col>": deterministic winner when
-                # keep_col ties within a group (always ascending)
-                op["tiebreak"] = _resolve_col(m.group(4), columns)
-            return op
-        if m.group(4):
-            raise ParseError(
-                "deduplicate ... breaking ties ... needs 'keeping the "
-                "lowest/highest <col>'"
-            )
-        op: dict = {"op": "distinct"}
-        if m.group(1):
-            op["cols"] = _parse_select_cols(m.group(1))
-        return op
-    if m := _SELECT_DISTINCT.match(clause):
-        return [
-            {"op": "select", "cols": _parse_select_cols(m.group(1))},
-            {"op": "distinct"},
-        ]
-    if m := _PIVOT.match(clause):
-        pcol = _resolve_col(m.group(1), columns)
-        key = _resolve_col(m.group(2), columns)
-        vals = [
-            v.strip().strip("'\"")
-            for v in _VALUE_LIST_SPLIT.split(m.group(3))
-            if v.strip()
-        ]
-        return {
-            "op": "pivot",
-            "keys": [key],
-            "col": pcol,
-            "values": vals,
-            "agg": {"fn": "count", "col": "*"},
-            "aliases": [_slug_alias(v) for v in vals],
-        }
-    if m := _PIVOT_AGG.match(clause):
-        pcol = _resolve_col(m.group(1), columns)
-        key = _resolve_col(m.group(2), columns)
-        fn = _PIVOT_AGG_WORDS[re.sub(r"\s+", " ", m.group(3).lower())]
-        acol = _resolve_col(m.group(4), columns)
-        vals = [
-            v.strip().strip("'\"")
-            for v in _VALUE_LIST_SPLIT.split(m.group(5))
-            if v.strip()
-        ]
-        return {
-            "op": "pivot",
-            "keys": [key],
-            "col": pcol,
-            "values": vals,
-            "agg": {"fn": fn, "col": acol},
-            "aliases": [_slug_alias(v, prefix=f"{fn}_") for v in vals],
-        }
-    if m := _ROLLUP.match(clause):
-        keys = re.split(r"\s+then\s+", m.group(1), flags=re.IGNORECASE)
-        return {
-            "op": "rollup",
-            "keys": [_resolve_col(k, columns) for k in keys],
-            "aggs": [{"fn": "count", "col": "*", "alias": "n_rows"}],
-            "gid_alias": "gid",
-        }
-    if (ops := _parse_aggregate(clause, columns)) is not None:
-        return ops
-    if m := _MODE.match(clause):
-        col = _resolve_col(m.group(1), columns)
-        return {"op": "mode", "keys": [m.group(2)], "col": col}
-    if m := _ASOF.match(clause):
-        op = {
-            "op": "asof_join",
-            "right": m.group(2),
-            "on": m.group(3),
-            "ts": m.group(4),
-            "right_cols": [c.strip() for c in m.group(5).split(",")],
-            "direction": _ASOF_DIRECTIONS[m.group(1).lower()],
-        }
-        if m.group(6):
-            tol = float(m.group(6))
-            op["tolerance"] = int(tol) if tol.is_integer() else tol
-            op["tolerance_unit"] = _ASOF_UNITS[m.group(7).lower()]
-        return op
-    if m := _SESSIONIZE.match(clause):
-        mult = {"second": 1, "minute": 60, "hour": 3600}[m.group(3).lower()]
-        return {
-            "op": "sessionize",
-            "key": m.group(1),
-            "gap_seconds": int(m.group(2)) * mult,
-        }
-    if m := _GROUP_TOPK.match(clause):
-        g, n, v = m.group(1), int(m.group(2)), _resolve_col(m.group(3), columns)
-        # deterministic tie-break (determinism policy): append the
-        # table's first column (the star schema's primary key) so
-        # row_number's order is total even when top values tie. Marked
-        # _auto so parse_description can strip it if an earlier clause
-        # projected that column away (the marker never reaches the
-        # validated spec).
-        order = [{"col": v, "asc": False}]
-        if columns and columns[0] not in (v, g):
-            order.append({"col": columns[0], "asc": True, "_auto": True})
-        return [
-            {"op": "window", "partition_by": [g],
-             "order_by": order,
-             "exprs": [{"fn": "row_number", "alias": "_rn"}]},
-            {"op": "filter", "expr": {"le": [{"col": "_rn"}, n]}},
-            {"op": "drop", "cols": ["_rn"]},
-        ]
-    if m := _JOIN.match(clause):
-        op = {
-            "op": "join",
-            "right": m.group(3),
-            "on": [c.strip() for c in m.group(4).split(",")],
-            "how": (m.group(2) or "inner").lower(),
-        }
-        if m.group(1):
-            op["broadcast"] = True
-        return op
-    if m := _SEMI_JOIN.match(clause):
-        return {"op": "join", "right": m.group(1),
-                "on": [c.strip() for c in m.group(2).split(",")],
-                "how": "left_semi"}
-    if m := _ANTI_JOIN.match(clause):
-        return {"op": "join", "right": m.group(1),
-                "on": [c.strip() for c in m.group(2).split(",")],
-                "how": "left_anti"}
-    if m := _UNION.match(clause):
-        op = {"op": "union", "right": m.group(2)}
-        if m.group(1):
-            op["distinct"] = True
-        return op
-    if m := _RUNNING.match(clause):
-        fn = _AGG_FNS[m.group(1).lower()]
-        col = _resolve_col(m.group(2), columns)
-        return {
-            "op": "window",
-            "partition_by": [m.group(3)],
-            "order_by": [{"col": m.group(4), "asc": True}],
-            "exprs": [{"fn": fn, "col": col, "alias": f"running_{fn}_{col}"}],
-        }
-    if m := _EWMA.match(clause):
-        col = _resolve_col(m.group(1), columns)
-        n = int(m.group(2))
-        if n < 2:
-            raise ParseError(
-                f"exponential moving average needs at least 2 rows: {clause!r}"
-            )
-        return {
-            "op": "window",
-            "partition_by": [m.group(3)],
-            "order_by": [{"col": m.group(4), "asc": True}],
-            "exprs": [{
-                "fn": "ewma", "col": col, "alias": f"ewma_{col}",
-                "alpha": float(m.group(5)) if m.group(5) else 0.5,
-                "rows_preceding": n - 1,
-            }],
-        }
-    if m := _MOVING.match(clause):
-        fn = _AGG_FNS[m.group(1).lower()]
-        col = _resolve_col(m.group(2), columns)
-        n = int(m.group(3))
-        if n < 1:
-            raise ParseError(f"moving window needs at least 1 row: {clause!r}")
-        return {
-            "op": "window",
-            "partition_by": [m.group(4)],
-            "order_by": [{"col": m.group(5), "asc": True}],
-            "exprs": [{"fn": fn, "col": col, "alias": f"moving_{fn}_{col}",
-                       "rows_preceding": n - 1}],
-        }
-    if m := _GLOBAL_RN.match(clause):
-        return {
-            "op": "window",
-            "partition_by": [],
-            "order_by": [{"col": _resolve_col(m.group(1), columns),
-                          "asc": not m.group(2)}],
-            "exprs": [{"fn": "row_number", "alias": "row_num"}],
-        }
-    if m := _LAG_LEAD.match(clause):
-        fn = "lag" if m.group(1).lower() == "previous" else "lead"
-        col = _resolve_col(m.group(2), columns)
-        return {
-            "op": "window",
-            "partition_by": [m.group(3)],
-            "order_by": [{"col": m.group(4), "asc": True}],
-            "exprs": [{"fn": fn, "col": col, "alias": f"{m.group(1).lower()}_{col}"}],
-        }
-    if m := _NTILE.match(clause):
-        n = int(m.group(1))
-        if n < 1:
-            raise ParseError(f"ntile needs at least 1 bucket: {clause!r}")
-        col = _resolve_col(m.group(2), columns)
-        return {
-            "op": "window",
-            "partition_by": [m.group(3)],
-            "order_by": [{"col": col, "asc": True}],
-            "exprs": [{"fn": "ntile", "n": n, "alias": f"bucket_{col}"}],
-        }
-    if m := _PCT_RANK.match(clause):
-        fn = ("percent_rank" if m.group(1).lower().startswith("percentile")
-              else "cume_dist")
-        col = _resolve_col(m.group(2), columns)
-        return {
-            "op": "window",
-            "partition_by": [m.group(3)],
-            "order_by": [{"col": col, "asc": True}],
-            "exprs": [{"fn": fn, "alias": f"{fn}_{col}"}],
-        }
-    if m := _FIRST_VALUE.match(clause):
-        col = _resolve_col(m.group(1), columns)
-        expr = {"fn": "first_value", "col": col, "alias": f"first_{col}"}
-        if m.group(4):
-            n = int(m.group(4))
-            if n < 1:
-                raise ParseError(f"first over last needs >= 1 row: {clause!r}")
-            expr["rows_preceding"] = n - 1
-        return {
-            "op": "window",
-            "partition_by": [m.group(2)],
-            "order_by": [{"col": m.group(3), "asc": True}],
-            "exprs": [expr],
-        }
-    if (m := _CASE_COLUMN.match(clause)) and not _ADD_COLUMN.match(clause):
-        whens: list[list] = []
-        else_val = None
-        for part in _split_top_level_commas(m.group(2)):
-            if em := _CASE_ELSE.match(part):
-                if else_val is not None:
-                    raise ParseError(f"case column has two otherwise branches: {clause!r}")
-                else_val = _case_literal(em.group(1) or em.group(2))
-                continue
-            bm = _CASE_BRANCH.match(part)
-            if not bm:
-                raise ParseError(f"bad case branch {part!r} in {clause!r}")
-            if else_val is not None:
-                raise ParseError(f"case branch after otherwise: {clause!r}")
-            whens.append([parse_predicate(bm.group(2)), _case_literal(bm.group(1))])
-        if not whens:
-            raise ParseError(f"case column needs at least one when branch: {clause!r}")
-        case: dict = {"when": whens}
-        if else_val is not None:
-            case["else"] = else_val
-        return {"op": "with_column", "name": m.group(1), "expr": {"case": case}}
-    if m := _ADD_COLUMN.match(clause):
-        return {"op": "with_column", "name": m.group(1), "expr": parse_predicate(m.group(2))}
-    if m := _FIT_OLS.match(clause):
-        return {"op": "ols", "key": m.group(3),
-                "y": _resolve_col(m.group(1), columns),
-                "x": _resolve_col(m.group(2), columns)}
-    if m := _SEARCH.match(clause):
-        terms = m.group(1).split()
-        if not terms:
-            raise ParseError(f"search needs at least one term: {clause!r}")
-        return {"op": "bm25", "terms": terms,
-                "k": int(m.group(2)) if m.group(2) else 10}
-    if m := _FILL_MISSING.match(clause):
-        col = m.group(1)
-        return {"op": "with_column", "name": col, "replace": True,
-                "expr": {"coalesce": [{"col": col}, _case_literal(m.group(2))]}}
-    if m := _CONVERT.match(clause):
-        col = m.group(1)
-        return {"op": "with_column", "name": col, "replace": True,
-                "expr": {"cast": [{"col": col}, _CONVERT_TYPES[m.group(2).lower()]]}}
-    if m := _RENAME.match(clause):
-        return {"op": "rename", "renames": {m.group(1): m.group(2)}}
-    if m := _DROP.match(clause):
-        return {"op": "drop", "cols": [m.group(1)]}
-    if m := _SORT.match(clause):
-        keys = []
-        for part in re.split(r"\s*,\s*", m.group(1).strip()):
-            km = _SORT_KEY.fullmatch(part.strip())
-            if not km:
-                raise ParseError(f"bad sort key {part!r}")
-            keys.append({
-                "col": km.group(1),
-                "asc": not (km.group(2) or "").lower().startswith("desc"),
-            })
-        return {"op": "sort", "keys": keys}
-    if m := _LIMIT.match(clause):
-        return {"op": "limit", "n": int(m.group(1))}
-    # "select name, city" / "select columns name and age" — a projection
-    # iff the payload is a bare column list (no operators).
-    if (m := _SELECT_COLS.match(clause)) and "where" not in clause.lower():
-        try:
-            return {"op": "select", "cols": _parse_select_cols(m.group(1))}
-        except ParseError:
-            pass  # fall through: "select rows where ..." style filter
-    if m := _FILTER.match(clause):
-        return {"op": "filter", "expr": parse_predicate(m.group(1))}
+    for pattern, build in _CLAUSES:
+        if (m := pattern.match(clause)) and (ops := build(m, columns)) is not None:
+            return ops
     raise ParseError(f"unrecognized clause {clause!r}")
 
 
@@ -1583,10 +1104,13 @@ def parse_description(description: str, columns: list[str] | None = None) -> dic
 
 def _strip_unavailable_tiebreaks(ops: list[dict], columns: list[str] | None) -> None:
     """Drop auto-added top-k tie-break keys whose column an earlier
-    clause projected away (e.g. 'Select a and b and for each a show
-    top 1 by b' — the primary-key tie-break no longer resolves).
-    Tracks the frame's column set through the ops; the '_auto' marker
-    is removed in every case so it never reaches the validated spec."""
+    clause removed (e.g. 'Select a and b and for each a show top 1 by
+    b', or a pivot before the top-k: the primary-key tie-break no
+    longer resolves). Tracks the frame's column set through the ops:
+    the report ops below by their output columns, any other op by its
+    spec schema effect (a replacing op leaves no input column to break
+    ties on). The '_auto' marker is removed in every case so it never
+    reaches the validated spec."""
     cols: set[str] | None = set(columns) if columns else None
     for op in ops:
         kind = op["op"]
@@ -1598,28 +1122,20 @@ def _strip_unavailable_tiebreaks(ops: list[dict], columns: list[str] | None) -> 
                     continue
                 kept.append(k)
             op["order_by"] = kept
-            if cols is not None:
-                cols |= {e["alias"] for e in op.get("exprs", [])}
-        elif cols is None:
-            continue
-        elif kind == "select":
-            cols = set(op["cols"])
-        elif kind == "drop":
+        if cols is None or kind in ("join", "union", "asof_join", "merge"):
+            continue  # these keep the left side's columns
+        if kind == "drop":
             cols -= set(op["cols"])
         elif kind == "rename":
             for old, new in op["renames"].items():
                 cols.discard(old)
                 cols.add(new)
-        elif kind == "with_column":
-            cols.add(op["name"])
         elif kind == "groupby_agg":
             cols = set(op["keys"]) | {a["alias"] for a in op["aggs"]}
         elif kind == "bm25":
             cols = {op.get("id_col", "doc_id"), "bm25"}
         elif kind == "ols":
             cols = {op["key"], "n", "slope", "intercept", "r2"}
-        elif kind == "gopher":
-            cols |= set(_GOPHER_COLS)
         elif kind == "dsir":
             cols = {"doc_id", "n_feats", "log_weight", "avg_log_ratio"}
         elif kind == "fertility":
@@ -1637,7 +1153,11 @@ def _strip_unavailable_tiebreaks(ops: list[dict], columns: list[str] | None) -> 
                     "entropy", "evenness"}
         elif kind == "oov":
             cols = {op["key"], "n_tokens", "n_oov", "oov_rate"}
-        elif kind == "sessionize":
-            cols.add("session_id")
-        # filter/sort/limit/distinct/sample keep the column set;
-        # join/union only ever preserve the left side's columns
+        else:
+            effect, named = schema_effect(op)
+            if effect == "only":
+                cols = set(named)
+            elif effect == "replaces":
+                cols = set()
+            else:  # keeps, or writes the named columns
+                cols |= named

@@ -101,14 +101,21 @@ _MODULES = sorted(p.stem for p in _REGISTRY_DIR.glob("*.py") if p.stem != "__ini
 _FAMILIES = [m for m in _MODULES if not m.startswith("_")]
 
 
-@pytest.mark.parametrize("module", _MODULES)
+_FIRST_IMPORTS = [pytest.param(f"registry.{m}", id=m) for m in _MODULES] + [
+    pytest.param(f"operators.{p.stem}", id=f"operators.{p.stem}")
+    for p in sorted((_REGISTRY_DIR.parent / "operators").glob("*.py")) if p.stem != "__init__"
+]
+
+
+@pytest.mark.parametrize("module", _FIRST_IMPORTS)
 def test_registry_module_can_be_imported_first(module):
-    """Any registry module imported first in a fresh interpreter leaves
-    the whole registry registered: no module depends on import order."""
+    """Any registry or operators module imported first in a fresh
+    interpreter leaves the whole registry registered: no module depends
+    on import order, and no import cycle runs into a half-made module."""
     pkg = benchqueries.__name__.rpartition(".")[0]
     code = (
         "import importlib, json\n"
-        f"importlib.import_module('{pkg}.registry.{module}')\n"
+        f"importlib.import_module('{pkg}.{module}')\n"
         f"from {pkg}.benchqueries import queries\n"
         "print(json.dumps(sorted(queries())))\n"
     )

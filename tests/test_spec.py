@@ -494,6 +494,48 @@ def test_parse_grouped_topk():
     ]
 
 
+def test_grouped_topk_tiebreak_follows_the_key_column(people):
+    """The auto tie-break on the table's first column stays while that
+    column survives and goes once an earlier clause removed it: a
+    select that projects it away, or an op that replaces the schema."""
+    from agentic_workflow_for_data_transformation_spark.plans import parse_description
+
+    spec = parse_description("For each city show top 1 by age", people.columns)
+    assert spec["ops"][0]["order_by"] == [
+        {"col": "age", "asc": False}, {"col": "name", "asc": True}]
+    spec = parse_description(
+        "Select city and age and for each city show top 1 by age", people.columns)
+    assert spec["ops"][1]["order_by"] == [{"col": "age", "asc": False}]
+    spec = parse_description(
+        "Sessionize by user_id with 30 minute gap and for each user_id show top 1 by n_events",
+        ["event_id", "ts", "user_id", "event_type", "value", "props"])
+    assert spec["ops"][1]["order_by"] == [{"col": "n_events", "asc": False}]
+
+
+def test_grouped_topk_after_pivot_compiles(spark, sf_dir):
+    """A pivot keeps only its key and cells, so the o_orderkey
+    tie-break must not follow it into the top-k window."""
+    import duckdb
+
+    from agentic_workflow_for_data_transformation_spark.plans import (
+        compile_spec,
+        parse_description,
+    )
+    from agentic_workflow_for_data_transformation_spark.plans.sqlgen import spec_to_sql
+    from agentic_workflow_for_data_transformation_spark.sources import read_parquet_table
+
+    orders = read_parquet_table(spark, sf_dir, "orders")
+    spec = parse_description(
+        "pivot o_orderstatus by o_orderpriority counting rows for values F, O and P "
+        "and for each o_orderpriority show top 1 by n_f", orders.columns)
+    assert spec["ops"][1]["order_by"] == [{"col": "n_f", "asc": False}]
+    got = sorted(tuple(r) for r in compile_spec(orders, spec).collect())
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf_dir}/orders.parquet')")
+    assert got == sorted(con.sql(spec_to_sql(spec, "orders")).fetchall())
+    assert len(got) == 5  # one row per order priority
+
+
 def test_parse_sessionize():
     from agentic_workflow_for_data_transformation_spark.plans.parser import (
         parse_description,
@@ -542,6 +584,17 @@ def test_parse_pivot_and_rollup():
     )
     assert spec["ops"][0]["values"] == ["1-URGENT", "2-HIGH"]
     assert spec["ops"][0]["aliases"] == ["n_1_urgent", "n_2_high"]
+    # aggregate cells: summing|averaging|taking minimum/maximum of <col>
+    spec = parse_description(
+        "Pivot o_orderstatus by o_orderpriority taking maximum of o_orderkeys "
+        "for values F and O.",
+        columns=cols,
+    )
+    assert spec["ops"] == [{
+        "op": "pivot", "keys": ["o_orderpriority"], "col": "o_orderstatus",
+        "values": ["F", "O"], "agg": {"fn": "max", "col": "o_orderkey"},
+        "aliases": ["max_f", "max_o"],
+    }]
 
     spec = parse_description(
         "Group by o_orderpriority then o_orderstatus with subtotals "

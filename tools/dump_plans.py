@@ -2,13 +2,18 @@
 check that a change moves no plan.
 
 Each query is built (not executed) against SF_DIR; a builder may still
-run the jobs its artifacts need (checkpoints, memoized codebooks). The
-plan text is printed with no field truncation, its expression ids
-(``#123``) and RDD ids (``RDD[45]``) are renumbered in order of first
-appearance, and a directory a builder made under the temp dir (an
-index written and read back) becomes ``<tmp>``, so two dumps of the
-same plans compare equal across sessions. A query whose builder raises
-is recorded as ``ERROR <type>: <first line>``.
+run the jobs its artifacts need (checkpoints, memoized codebooks). A
+query's entry lists the optimized plan of every frame its builder
+checkpointed (``localCheckpoint``/``checkpoint``, in call order), which
+the returned plan shows only as a ``LogicalRDD``, then the returned
+plan. A frame memoized in the session is checkpointed once, so its plan
+sits under the first query that built it. Each plan's text is printed
+with no field truncation, its expression ids (``#123``) and RDD ids
+(``RDD[45]``) are renumbered in order of first appearance, and a
+directory a builder made under the temp dir (an index written and read
+back) becomes ``<tmp>``, so two dumps of the same plans compare equal
+across sessions. A query whose builder raises ends its list with
+``ERROR <type>: <first line>``.
 
 One difference survives normalization without being a plan change: a
 query with several DISTINCT aggregates is rewritten through an Expand
@@ -55,20 +60,40 @@ def normalize(plan: str) -> str:
     return _TMP.sub("<tmp>", _IDS.sub(renumber, plan))
 
 
+def _optimized(df) -> str:
+    return normalize(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def record_checkpoints(df_class: type) -> list[str]:
+    """Wrap ``df_class``'s ``localCheckpoint`` and ``checkpoint`` so that
+    each call first appends the frame's normalized optimized plan to the
+    returned list."""
+    seen: list[str] = []
+    for name in ("localCheckpoint", "checkpoint"):
+        def recording(self, *args, _method=getattr(df_class, name), **kwargs):
+            seen.append(_optimized(self))
+            return _method(self, *args, **kwargs)
+        setattr(df_class, name, recording)
+    return seen
+
+
 def main() -> None:
     sf_dir, out = sys.argv[1], Path(sys.argv[2])
     spark = get_spark(app_name="dump_plans")
     spark.conf.set("spark.sql.debug.maxToStringFields", str(2**31 - 1))
-    plans: dict[str, str] = {}
+    checkpointed = record_checkpoints(type(spark.range(0)))
+    plans: dict[str, list[str]] = {}
     for name, fn in benchqueries.queries().items():
+        checkpointed.clear()
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
-            plans[name] = normalize(plan)
+            plan = _optimized(fn(spark, sf_dir))
         except Exception as e:  # a failing builder is part of the dump
-            plans[name] = f"ERROR {type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+            plan = f"ERROR {type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+        plans[name] = [*checkpointed, plan]
     out.write_text(json.dumps(plans, indent=1, sort_keys=True) + "\n")
-    errors = sum(p.startswith("ERROR ") for p in plans.values())
-    print(f"{out}: {len(plans)} plans, {errors} errors")
+    errors = sum(p[-1].startswith("ERROR ") for p in plans.values())
+    frames = sum(len(p) - 1 for p in plans.values())
+    print(f"{out}: {len(plans)} plans, {frames} checkpointed frames, {errors} errors")
 
 
 if __name__ == "__main__":
