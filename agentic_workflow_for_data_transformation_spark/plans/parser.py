@@ -266,10 +266,10 @@ def parse_predicate(text: str) -> dict:
 
 def _resolve_col(name: str, columns: list[str] | None) -> str:
     """Resolve an NL column mention: 'names' -> 'name' when the table
-    has 'name' but not 'names' (the eval corpus says "count names")."""
-    if columns is None:
-        return name[:-1] if name.endswith("s") and len(name) > 1 and name not in ("status",) else name
-    if name in columns:
+    has 'name' but not 'names' (the eval corpus says "count names").
+    With no column list there is nothing to resolve against, so the
+    name stays as written."""
+    if columns is None or name in columns:
         return name
     if name.endswith("s") and name[:-1] in columns:
         return name[:-1]
@@ -383,7 +383,8 @@ def _pct(text: str, columns: list[str] | None) -> float:
 
 def _cols(text: str, columns: list[str] | None) -> list[str]:
     """'a, b and c' -> the plural-resolved columns."""
-    return [_resolve_col(c.strip(), columns) for c in re.split(r",|\s+and\s+", text)]
+    return [_resolve_col(c.strip(), columns)
+            for c in re.split(r",|\s+and\s+", text, flags=re.IGNORECASE)]
 
 
 def _names(text: str, columns: list[str] | None) -> list[str]:

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import threading
 from collections import OrderedDict
 from typing import Any, Callable, TypeVar
@@ -19,6 +20,27 @@ from pyspark.sql import DataFrame, SparkSession
 _T = TypeVar("_T")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# The driver heap G1 starts at and never shrinks below. Without it the
+# JVM starts at 1/64 of RAM, and every explicit full collection (the
+# benchmark runs one between a query's cold and steady runs) shrinks the
+# heap back, so the next query regrows it through dozens of young
+# collections.
+HEAP_FLOOR_MB = 2048
+
+_MEM_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def initial_heap_mb(driver_memory: str) -> int:
+    """The ``-Xms`` for a ``spark.driver.memory`` value, in MiB: the
+    floor, clamped to the maximum heap, since the JVM refuses to start
+    with ``-Xms`` above ``-Xmx``. The value takes Spark's size format
+    (``512m``, ``12g``, ``4gb``; a bare number is MiB)."""
+    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", driver_memory.strip().lower())
+    if m is None:
+        raise ValueError(f"spark.driver.memory {driver_memory!r} is not a size")
+    max_mb = int(int(m.group(1)) * _MEM_UNIT_MB[m.group(2) or "m"])
+    return min(HEAP_FLOOR_MB, max_mb)
 
 
 def get_spark(
@@ -41,6 +63,7 @@ def get_spark(
     except PySparkRuntimeError:  # no session yet
         pass
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -62,10 +85,12 @@ def get_spark(
         # block, which points into this package's own modules anyway.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # long benchmark/registry sessions accumulate checkpoint and
-        # shuffle blocks that only free on driver GC; with a large heap
-        # GC is rare, so ask the ContextCleaner to force one periodically
+        # shuffle blocks that only free once a driver GC reaches the old
+        # generation; with the heap at its floor (-Xms below) even young
+        # collections are rare, so ask the ContextCleaner to force a full
+        # one periodically
         .config("spark.cleaner.periodicGC.interval", "90s")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", driver_memory)
         # a long-lived engine compiles hundreds of codegen'd stages; the
         # JVM default 240m code cache fills up and the JIT silently stops
         # compiling, slowing later queries 5-10x. 512m still saturated at
@@ -77,9 +102,11 @@ def get_spark(
         # thread, which overflows the JVM default 1m stack on those
         # plans (round-8 ANN-serve rung). 32m is virtual reservation,
         # not resident memory.
+        # -Xms: see HEAP_FLOOR_MB. Spark refuses -Xmx here, not -Xms.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing -Xss32m",
+            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing -Xss32m"
+            f" -Xms{initial_heap_mb(driver_memory)}m",
         )
     )
     spark = builder.getOrCreate()

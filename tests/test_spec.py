@@ -2158,6 +2158,29 @@ def test_blocklist_spec_validation():
     validate_spec({"ops": [{"op": "blocklist", "words": ["x"]}]})
 
 
+def test_parse_column_lists_split_on_and_in_any_case():
+    from agentic_workflow_for_data_transformation_spark.plans import parse_description
+
+    spec = parse_description("Check k-anonymity of A AND B at 3")
+    assert spec["ops"] == [{"op": "kanon", "cols": ["A", "B"], "k": 3}]
+    spec = parse_description("Compute the correlation of a And b")
+    assert spec["ops"][0]["cols"] == ["a", "b"]
+
+
+def test_parse_without_columns_keeps_names_as_written():
+    """With no column list nothing says that 'ts' is a plural, so the
+    parser must not strip its 's'; a list still resolves plurals."""
+    from agentic_workflow_for_data_transformation_spark.plans import parse_description
+
+    spec = parse_description("Add row number ordered by ts")
+    assert spec["ops"][0]["order_by"] == [{"col": "ts", "asc": True}]
+    spec = parse_description("Compute the anova of values by lens")
+    assert spec["ops"][0]["value"] == "values"
+    assert spec["ops"][0]["group"] == "lens"
+    spec = parse_description("Group by city and count names.", ["name", "age", "city"])
+    assert spec["ops"][0]["aggs"][0]["col"] == "name"
+
+
 def test_kanon_spec_op_parse_compile_render(spark):
     import duckdb
 

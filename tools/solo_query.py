@@ -5,6 +5,12 @@ steady, min-of-2) on an otherwise idle session, and optionally dumps
 ``explain('formatted')`` to plans/<tag>/<query>_<suffix>.txt so plan
 claims in OPTIMIZATION_r*.md are checkable without running Spark.
 
+Beside ``cold`` and ``steady``, each query reports the driver JVM's
+collections during its timed runs, from the GarbageCollectorMXBeans:
+``young_gcs``/``young_gc_ms`` and ``full_gcs``/``full_gc_ms`` (the
+protocol's own ``System.gc()`` calls count as full), and
+``heap_committed_mb`` after them, from the MemoryMXBean.
+
 Usage:
     python tools/solo_query.py [--sf-dir DIR] [--plans TAG SUFFIX] \
         [--no-time] query [query ...]
@@ -27,6 +33,25 @@ sys.path.insert(0, str(ROOT))
 from agentic_workflow_for_data_transformation_spark import benchqueries
 from agentic_workflow_for_data_transformation_spark.benchutil import time_query, warmup
 from agentic_workflow_for_data_transformation_spark.session import get_spark
+
+
+def gc_totals(spark) -> dict[str, float]:
+    """Collections so far and their summed pause ms: young from the
+    "G1 Young Generation" bean, full from "G1 Old Generation"."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    out = {"young_gcs": 0, "young_gc_ms": 0, "full_gcs": 0, "full_gc_ms": 0}
+    for bean in mf.getGarbageCollectorMXBeans():
+        name = bean.getName()
+        kind = "young" if "Young" in name else "full" if "Old" in name else None
+        if kind is not None:
+            out[f"{kind}_gcs"] += bean.getCollectionCount()
+            out[f"{kind}_gc_ms"] += bean.getCollectionTime()
+    return out
+
+
+def heap_committed_mb(spark) -> float:
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted() / 2**20
 
 
 def main() -> int:
@@ -65,8 +90,12 @@ def main() -> int:
             (plan_dir / f"{name}_{suffix}.txt").write_text(buf.getvalue())
         if not args.no_time:
             spark.sparkContext.setJobDescription(f"solo:{name}")
+            gc0 = gc_totals(spark)
             cold, steady = time_query(spark, fn, args.sf_dir)
-            out[name] = {"cold": round(cold, 3), "steady": round(steady, 3)}
+            gc1 = gc_totals(spark)
+            out[name] = {"cold": round(cold, 3), "steady": round(steady, 3),
+                         **{k: gc1[k] - gc0[k] for k in gc0},
+                         "heap_committed_mb": round(heap_committed_mb(spark))}
             spark.sparkContext.setJobDescription(None)
     if out:
         print(json.dumps(out, indent=1))
